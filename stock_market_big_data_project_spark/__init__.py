@@ -4,9 +4,9 @@ ChathuniAmasha/Stock_Market_Big_Data_project (see SURVEY.md).
 Built from scratch, Spark-first: the reference's eager pandas dataflow
 (ingest -> clean -> integrate -> analyze -> dashboard reads) is re-expressed
 as lazy Catalyst plans over DataFrames, Structured Streaming for the
-append-only ingestion path, and Arrow-batched ``applyInPandas`` for the
-statistical operators. Designed for 100 TB / 1000-executor scale, tested on
-local[32].
+append-only ingestion path, and packed per-symbol series through
+Arrow-batched ``mapInPandas`` for the statistical operators. Designed for
+100 TB / 1000-executor scale, tested on local[32].
 
 Layout
 ------

@@ -231,10 +231,15 @@ def wedge_pairs(
     sf0.1 with an EMPTY hot set, so the threshold should be wired only
     on corpora whose part-degree tail is real (SCALE.md records the
     rule; AQE's skew-join split cannot divide a single hub key, which is
-    exactly what the salt does)."""
+    exactly what the salt does). ``n_salts`` must be ≥ 1 when the
+    threshold is set — with no salt bucket every hot-part pair would be
+    dropped, so that raises ValueError."""
+    if hot_part_threshold is not None and n_salts < 1:
+        raise ValueError(f"wedge_pairs: n_salts must be >= 1, got {n_salts}")
+    p = part_col
+    op = op.select(node_col, p)
     a = op.withColumnsRenamed({node_col: "c1"})
     b = op.withColumnsRenamed({node_col: "c2"})
-    p = part_col
     if hot_part_threshold is None:
         wpairs = a.join(b, p)
     else:

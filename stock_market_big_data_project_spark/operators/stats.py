@@ -1,33 +1,29 @@
 """Statistical operators (SURVEY.md §2.10): correlation matrix (OP-30/67),
-Granger-causality UDTF (OP-65), per-group recursive forecaster (OP-66).
+Granger causality (OP-65), per-symbol recursive forecaster (OP-66) and its
+model-artifact sink (OP-09).
 
 Spark-first split:
 - The correlation matrix is pure Catalyst — melt → per-hour self-join →
   decimal-exact moment sums → closed-form Pearson in double. One shuffle on
   (symbol, hour); bit-identical across engines, so it is oracle-checkable.
-- Granger and the recursive forecaster are inherently per-group sequential
-  (OLS fits / feedback loop), so they are Arrow-batched ``applyInPandas``
-  UDTFs keyed by symbol: the per-symbol loop of the reference
-  (analysis_part/main.py:150-166) becomes one shuffled stage that runs all
-  symbols in parallel.
+- Granger, the forecaster and the model sink are inherently per-series
+  sequential (OLS fits / feedback loop). All three use one pattern:
+  ``_pack_series`` packs each symbol's series into one row of arrays, and
+  ``mapInPandas`` runs the reference's per-symbol loop
+  (analysis_part/main.py:58-125) over whole Arrow batches of symbols.
 
 No scipy/statsmodels/xgboost in this container:
 - the F-distribution survival function is implemented here via the
   regularized incomplete beta (Lentz continued fraction — the standard
   published algorithm);
-- the forecaster's DEFAULT model is the in-repo histogram gradient-boosted
+- the forecaster's one model is the in-repo histogram gradient-boosted
   trees (operators/gbt.py) with the reference's hyperparameters — the same
-  model FAMILY as the reference's XGBRegressor (analysis_part/main.py:95-103)
-  without the blocked dependency; the true xgboost path stays gated behind
-  an import-try with the reference's exact settings, and the closed-form
-  ridge fallback survives as a last resort
-  (``SPARK_GRAFT_FORECAST_MODEL=ridge``).
+  model family as the reference's XGBRegressor (analysis_part/main.py:95-103).
 """
 
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import EXACT_DECIMAL
-from .gbt import GBTParams, train_forest_batch
+from .gbt import Forest, _seqsum, train_forest_batch
 
 # ---------------------------------------------------------------------------
 # F-distribution survival function (no scipy): p = I_x(d2/2, d1/2) with
@@ -108,7 +104,31 @@ def f_sf(f_stat: float, d1: float, d2: float) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Granger causality UDTF (OP-65, analysis_part/main.py:58-78)
+# Per-symbol packing: the one entry into the Python stages below
+# ---------------------------------------------------------------------------
+
+
+def _pack_series(df: DataFrame, key_col: str, ts_col: str, *val_cols: str) -> DataFrame:
+    """One row per series: ``key_col`` plus one array column per value
+    column, in (ts, values…) order — sorting whole structs breaks timestamp
+    ties by value, deterministically. Each array reaches ``mapInPandas`` as
+    a float64 ndarray with nulls as NaN.
+
+    The round-robin repartition deals the series over defaultParallelism
+    tasks regardless of key hashing. It is also what spreads the
+    compute-bound Python stage: AQE sizes the aggregate's shuffle by its
+    (tiny) bytes and folds it onto 1-2 partitions, but never coalesces a
+    repartition by number. Per-series results are partition-invariant
+    (per-series RNG seeding), so the deal is pure scheduling."""
+    obs = F.sort_array(F.collect_list(F.struct(ts_col, *val_cols)))
+    packed = df.groupBy(key_col).agg(obs.alias("obs"))
+    return packed.select(
+        key_col, *(F.col(f"obs.{c}").alias(c) for c in val_cols)
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+# ---------------------------------------------------------------------------
+# Granger causality (OP-65, analysis_part/main.py:58-78)
 # ---------------------------------------------------------------------------
 
 GRANGER_SCHEMA = "symbol bigint, predictor string, lag int, p_value double, error string"
@@ -146,62 +166,47 @@ def granger_causality(
     predictor_cols: list[str],
     maxlag: int = 5,
     ts_col: str = "hour_ts",
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """OP-65 — per (symbol, predictor): p-values for lags 1..maxlag.
-
-    ``pre_partitioned=True`` declares that the caller already placed a
-    user-specified hash repartition on ``key_col`` (e.g. before upstream
-    per-key windows) — the operator then skips its own, since two
-    REPARTITION_BY_NUM shuffles on the same key are both kept by Spark
-    (user-specified repartitions are never elided as redundant).
 
     Exact reference semantics (analysis_part/main.py:58-78): pairwise dropna
     with the target, min-rows guard ``len < maxlag + 2`` emits an error row
     (predictor, NULL lag, NaN p, message), p-values rounded to 5 dp
-    (analysis_part/main.py:68). applyInPandas keyed by symbol — Arrow
-    batches, all symbols in parallel. ``ts_col`` names the chronological
-    sort column inside each group (the input need not be pre-sorted).
-    """
+    (analysis_part/main.py:68). ``ts_col`` names the chronological order of
+    each series (the input need not be pre-sorted)."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sym = pdf[key_col].iloc[0]
-        pdf = pdf.sort_values(ts_col)
-        rows: list[tuple] = []
-        for pred in predictor_cols:
-            sub = pdf[[target_col, pred]].dropna()
-            if len(sub) < maxlag + 2:
-                rows.append(
-                    (sym, pred, None, float("nan"),
-                     f"insufficient data: {len(sub)} rows < {maxlag + 2}")
-                )
-                continue
-            y = sub[target_col].to_numpy(dtype=float)
-            x = sub[pred].to_numpy(dtype=float)
-            try:
-                for lag in range(1, maxlag + 1):
-                    p = _granger_pvalue(y, x, lag)
-                    rows.append((sym, pred, lag, round(p, 5), None))
-            except Exception as exc:  # mirror the reference's failure rows
-                rows.append((sym, pred, None, float("nan"), str(exc)))
-        return pd.DataFrame(
-            rows, columns=[key_col, "predictor", "lag", "p_value", "error"]
-        )
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for sym, y_all, *x_all in zip(
+                pdf[key_col], pdf[target_col], *(pdf[c] for c in predictor_cols)
+            ):
+                for pred, x_pred in zip(predictor_cols, x_all):
+                    keep = ~(np.isnan(y_all) | np.isnan(x_pred))
+                    n_pair = int(keep.sum())
+                    if n_pair < maxlag + 2:
+                        rows.append(
+                            (sym, pred, None, float("nan"),
+                             f"insufficient data: {n_pair} rows < {maxlag + 2}")
+                        )
+                        continue
+                    y, x = y_all[keep], x_pred[keep]
+                    try:
+                        for lag in range(1, maxlag + 1):
+                            p = _granger_pvalue(y, x, lag)
+                            rows.append((sym, pred, lag, round(p, 5), None))
+                    except Exception as exc:  # mirror the reference's failure rows
+                        rows.append((sym, pred, None, float("nan"), str(exc)))
+            yield pd.DataFrame(
+                rows, columns=[key_col, "predictor", "lag", "p_value", "error"]
+            )
 
-    # Explicit hash repartition BY NUM before the groupBy: it already
-    # satisfies the UDTF's ClusteredDistribution(key), so Spark inserts no
-    # second exchange — and unlike the implicit groupBy shuffle it is NOT
-    # AQE-coalescible. Without this, AQE sizes the exchange by shuffle
-    # BYTES (tiny here) and folds 1000+ symbol groups onto 2 partitions,
-    # serializing a compute-bound stage (measured 10 s → 1.4 s at sf0.1).
-    if not pre_partitioned:
-        target = wide.sparkSession.sparkContext.defaultParallelism
-        wide = wide.repartition(target, key_col)
-    return wide.groupBy(key_col).applyInPandas(fn, schema=GRANGER_SCHEMA)
+    packed = _pack_series(wide, key_col, ts_col, target_col, *predictor_cols)
+    return packed.mapInPandas(fn, schema=GRANGER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Per-group trainer + recursive forecaster (OP-66, analysis_part/main.py:81-125)
+# Per-symbol trainer + recursive forecaster (OP-66, analysis_part/main.py:81-125)
 # ---------------------------------------------------------------------------
 
 FORECAST_SCHEMA = (
@@ -209,108 +214,21 @@ FORECAST_SCHEMA = (
     "n_obs int, n_train int, n_test int"
 )
 
-# Reference hyperparameters (analysis_part/main.py:95-103), used verbatim
-# when xgboost is importable.
-XGB_PARAMS = dict(
-    n_estimators=300,
-    learning_rate=0.05,
-    max_depth=6,
-    subsample=0.8,
-    colsample_bytree=0.8,
-    random_state=42,
-    n_jobs=1,
-)
-
-def _fit_ridge(x_tr: np.ndarray, y_tr: np.ndarray) -> tuple[np.ndarray, float]:
-    """Closed-form ridge (λ=1e-3) via the augmented least-squares system;
-    returns (beta, intercept). Deterministic — no RNG, no iteration order."""
-    lam = 1e-3
-    n_feat = x_tr.shape[1]
-    xa = np.vstack([x_tr, np.sqrt(lam) * np.eye(n_feat)])
-    xa = np.hstack([xa, np.vstack([np.ones((len(x_tr), 1)), np.zeros((n_feat, 1))])])
-    ya = np.concatenate([y_tr, np.zeros(n_feat)])
-    coef = np.linalg.lstsq(xa, ya, rcond=None)[0]
-    return coef[:-1], float(coef[-1])
-
-
-try:  # pragma: no cover - xgboost not present in this container
-    from xgboost import XGBRegressor  # type: ignore
-
-    _HAVE_XGB = True
-
-    def _fit_predict(x_tr, y_tr):
-        model = XGBRegressor(**XGB_PARAMS)
-        model.fit(x_tr, y_tr)
-        return model.predict
-
-except Exception:  # in-repo GBT is the default tier instead
-    _HAVE_XGB = False
-
-    def _fit_predict(x_tr, y_tr):
-        beta, intercept = _fit_ridge(x_tr, y_tr)
-        return lambda x: x @ beta + intercept
-
-
-def _forecast_model() -> str:
-    """Model tier: true xgboost when importable, else the in-repo histogram
-    GBT (same family, reference hyperparameters); ridge only on request."""
-    forced = os.environ.get("SPARK_GRAFT_FORECAST_MODEL", "").lower()
-    if forced in ("gbt", "ridge"):
-        return forced
-    return "xgb" if _HAVE_XGB else "gbt"
-
-
-# the reference's XGB settings mapped onto the in-repo trainer
-# Cores-multiple for the packed-series repartition feeding the trainer
-# Arrow stage. Swept at sf0.1 (1500 series, local[32], r9, consecutive
-# best-of-3): ×3 (96 tasks à ~15 series) 5.69 s, ×2 5.28 s, ×1 (32 tasks
-# à ~47 series) 4.99 s — the level-synchronous trainer amortizes numpy
-# call overhead across every series in the task, so fewer, fuller tasks
-# win; the round-robin rebalance below then removes the hash-imbalance
-# tail that over-partitioning used to smooth (interleaved A/B at ×1:
-# rebalance 5.35 s vs hash-dealt 5.70 s). Results are partition-invariant
-# (per-series RNG), so both knobs are pure scheduling.
-_FORECAST_PARTITION_FACTOR = 1
-_FORECAST_REBALANCE = True
-
-GBT_FORECAST_PARAMS = GBTParams(
-    n_trees=XGB_PARAMS["n_estimators"],
-    learning_rate=XGB_PARAMS["learning_rate"],
-    max_depth=XGB_PARAMS["max_depth"],
-    subsample=XGB_PARAMS["subsample"],
-    colsample=XGB_PARAMS["colsample_bytree"],
-    seed=XGB_PARAMS["random_state"],
-)
-
-
-def _seqmean(a: np.ndarray) -> float:
-    """Index-order mean (matches a pure-Python running sum bitwise)."""
-    from .gbt import _seqsum
-
-    return _seqsum(a) / len(a)
-
-
-def _forecast_one(vals: np.ndarray, n_lags: int, horizon: int, train_frac: float):
-    """Fit + test RMSE + recursive horizon for one series; None if too short."""
-    if len(vals) < n_lags + 10:
-        return None
-    x = np.column_stack(
-        [vals[n_lags - k : len(vals) - k] for k in range(1, n_lags + 1)]
-    )
+def _lag_split(vals: np.ndarray, n_lags: int, train_frac: float):
+    """(lag features, targets, train/test split index) for one series."""
+    x = _lag_matrix(vals, n_lags)
     y = vals[n_lags:]
-    split = int(len(y) * train_frac)
-    predict = _fit_predict(x[:split], y[:split])
-    rmse = float("nan")
-    if split < len(y):
-        err = predict(x[split:]) - y[split:]
-        rmse = float(np.sqrt(np.mean(err**2)))
-    window = np.ascontiguousarray(vals[-n_lags:][::-1])  # [0] = most recent
-    preds = np.empty(horizon)
-    for step in range(horizon):
-        p = float(np.asarray(predict(window[None, :])).ravel()[0])
-        preds[step] = p
-        window = np.concatenate(([p], window[:-1]))
-    return preds, rmse
+    return x, y, int(len(y) * train_frac)
+
+
+def _test_rmse(forest: Forest, i: int, x_te: np.ndarray, y_te: np.ndarray) -> float:
+    """Test RMSE of the forest's series ``i``; the squared errors are summed
+    in index order (matches a pure-Python running sum bitwise). NaN when
+    the split leaves no test rows."""
+    if not len(y_te):
+        return float("nan")
+    err = forest.predict_rows(np.full(len(y_te), i), x_te) - y_te
+    return float(np.sqrt(_seqsum(err * err) / len(err)))
 
 
 def recursive_forecast(
@@ -328,155 +246,55 @@ def recursive_forecast(
     skeleton (n_obs, n_train, n_test) so the SQL-expressible projection of
     the operator — inclusion predicate, step coverage, split sizes, rmse
     finiteness — can be hash-certified against a relational oracle
-    (`forecast_structure`), the same pattern as granger_structure for the
-    Granger UDTF.
+    (`forecast_structure`), the same pattern as granger_structure for
+    Granger.
 
-    The per-group numpy work is ~1 ms, so per-group applyInPandas overhead
-    (Arrow batch + pandas frame per group) would dominate by 10×. Instead
-    each symbol's series is packed into ONE array row (sort_array of
-    (ts, value) structs — deterministic order), and ``mapInPandas`` runs the
-    sequential loop over whole Arrow batches of symbols: one Python
-    round-trip per partition, thousands of models per batch."""
-
-    # AQE coalesces the tiny packed-series shuffle by BYTES, which would
-    # serialize the compute-bound GBT training onto 1-2 tasks. Pin an
-    # explicit symbol-keyed repartition BEFORE the groupBy: it satisfies
-    # the aggregation's distribution requirement, so no coalescable
-    # ENSURE_REQUIREMENTS exchange is added — an explicit repartition
-    # placed AFTER the aggregate is optimized away as redundant with that
-    # exchange (measured: 12.6 s single-task vs spread, sf0.01).
-    # Per-series RNG seeding makes the result partition-invariant.
-    # One task per core (r9; see _FORECAST_PARTITION_FACTOR's sweep): the
-    # level-synchronous trainer amortizes numpy call overhead across the
-    # whole task's series, so fuller tasks beat the r8 3× over-partition
-    # strategy, and the round-robin rebalance below handles the hash-
-    # imbalance tail over-partitioning used to smooth.
-    sc = series.sparkSession.sparkContext
-    packed = (
-        series.repartition(sc.defaultParallelism * _FORECAST_PARTITION_FACTOR, key_col)
-        .groupBy(F.col(key_col).alias("symbol"))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(ts_col), F.col(val_col)))
-            ).alias("obs")
-        )
-    )
-    if _FORECAST_REBALANCE:
-        # Round-robin rebalance of the PACKED rows (one tiny row per
-        # series): deals exactly ⌈n/p⌉ series per task regardless of key
-        # hashing (Spark sorts round-robin input for retry-determinism,
-        # and the per-series RNG makes results partition-invariant).
-        packed = packed.repartition(
-            sc.defaultParallelism * _FORECAST_PARTITION_FACTOR
-        )
-    model = _forecast_model()
+    The per-symbol numpy work is ~1 ms, so a per-group pandas frame would
+    dominate it by 10×; over the packed series, one ``mapInPandas`` call
+    trains every symbol of an Arrow batch level-synchronously and runs the
+    168-step feedback loop once for the whole batch — each step is one
+    vectorized pass over (n_symbols × n_lags)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_syms: list = []
-            out_preds: list = []
-            out_rmses: list = []
-            out_skel: list = []  # (n_obs, n_train, n_test) per symbol
-            # gbt/ridge paths: fit per symbol, then run the 168-step
-            # feedback loop ONCE for the whole batch — each step is one
-            # vectorized pass over (n_symbols × n_lags) instead of
-            # n_symbols separate 1×n_lags predict calls.
-            xs_tr, ys_tr, x_te, y_te = [], [], [], []
-            betas, intercepts, windows, rmses, syms = [], [], [], [], []
-            skels = []
-            for sym, obs in zip(pdf["symbol"], pdf["obs"]):
-                vals = np.fromiter(
-                    (o[val_col] for o in obs), dtype=float, count=len(obs)
-                )
+            syms, xs_tr, ys_tr, x_te, y_te, windows, skels = ([] for _ in range(7))
+            for sym, vals in zip(pdf[key_col], pdf[val_col]):
                 if len(vals) < n_lags + 10:
                     continue
-                if model == "xgb":  # sequential per-symbol path (opaque)
-                    res = _forecast_one(vals, n_lags, horizon, train_frac)
-                    if res is not None:
-                        out_syms.append(sym)
-                        out_preds.append(res[0])
-                        out_rmses.append(res[1])
-                        n_y = len(vals) - n_lags
-                        sp = int(n_y * train_frac)
-                        out_skel.append((len(vals), sp, n_y - sp))
-                    continue
-                x = np.column_stack(
-                    [vals[n_lags - k : len(vals) - k] for k in range(1, n_lags + 1)]
-                )
-                y = vals[n_lags:]
-                split = int(len(y) * train_frac)
-                if model == "gbt":
-                    xs_tr.append(x[:split])
-                    ys_tr.append(y[:split])
-                    x_te.append(x[split:])
-                    y_te.append(y[split:])
-                else:
-                    beta, intercept = _fit_ridge(x[:split], y[:split])
-                    rmse = float("nan")
-                    if split < len(y):
-                        err = x[split:] @ beta + intercept - y[split:]
-                        rmse = float(np.sqrt(np.mean(err**2)))
-                    betas.append(beta)
-                    intercepts.append(intercept)
-                    rmses.append(rmse)
+                x, y, split = _lag_split(vals, n_lags, train_frac)
                 syms.append(sym)
+                xs_tr.append(x[:split])
+                ys_tr.append(y[:split])
+                x_te.append(x[split:])
+                y_te.append(y[split:])
                 windows.append(vals[-n_lags:][::-1])  # [0] = most recent
                 skels.append((len(vals), split, len(y) - split))
-            if model == "gbt" and syms:
-                forest = train_forest_batch(
-                    xs_tr, ys_tr, syms, GBT_FORECAST_PARAMS
-                )
-                for i, (xt, yt) in enumerate(zip(x_te, y_te)):
-                    if len(yt):
-                        err = (
-                            forest.predict_rows(np.full(len(yt), i), xt) - yt
-                        )
-                        rmses.append(float(np.sqrt(_seqmean(err * err))))
-                    else:
-                        rmses.append(float("nan"))
-                w_mat = np.stack(windows)
-                p_mat = np.empty((len(syms), horizon))
-                for step in range(horizon):
-                    p = forest.predict_step(w_mat)
-                    p_mat[:, step] = p
-                    w_mat = np.hstack([p[:, None], w_mat[:, :-1]])
-                out_syms.extend(syms)
-                out_preds.extend(p_mat)
-                out_rmses.extend(rmses)
-                out_skel.extend(skels)
-            elif betas:
-                b_mat = np.stack(betas)
-                c_vec = np.array(intercepts)
-                w_mat = np.stack(windows)
-                p_mat = np.empty((len(betas), horizon))
-                for step in range(horizon):
-                    p = (w_mat * b_mat).sum(axis=1) + c_vec
-                    p_mat[:, step] = p
-                    w_mat = np.hstack([p[:, None], w_mat[:, :-1]])
-                out_syms.extend(syms)
-                out_preds.extend(p_mat)
-                out_rmses.extend(rmses)
-                out_skel.extend(skels)
-            n = len(out_syms)
-            skel_arr = (
-                np.asarray(out_skel, dtype=np.int64).reshape(n, 3)
-                if n
-                else np.empty((0, 3), dtype=np.int64)
-            )
+            if not syms:
+                continue
+            # default GBTParams = the reference's XGBRegressor settings
+            # (analysis_part/main.py:95-103)
+            forest = train_forest_batch(xs_tr, ys_tr, syms)
+            rmses = [_test_rmse(forest, i, *te) for i, te in enumerate(zip(x_te, y_te))]
+            w_mat = np.stack(windows)
+            p_mat = np.empty((len(syms), horizon))
+            for step in range(horizon):
+                p = forest.predict_step(w_mat)
+                p_mat[:, step] = p
+                w_mat = np.hstack([p[:, None], w_mat[:, :-1]])
+            skel = np.asarray(skels, dtype=np.int64)
             yield pd.DataFrame(
                 {
-                    "symbol": np.repeat(np.asarray(out_syms, dtype=object), horizon)
-                    if n
-                    else [],
-                    "step": np.tile(np.arange(1, horizon + 1), n) if n else [],
-                    "forecast_c": np.concatenate(out_preds) if n else [],
-                    "rmse": np.repeat(np.asarray(out_rmses), horizon) if n else [],
-                    "n_obs": np.repeat(skel_arr[:, 0], horizon),
-                    "n_train": np.repeat(skel_arr[:, 1], horizon),
-                    "n_test": np.repeat(skel_arr[:, 2], horizon),
+                    "symbol": np.repeat(np.asarray(syms), horizon),
+                    "step": np.tile(np.arange(1, horizon + 1), len(syms)),
+                    "forecast_c": p_mat.ravel(),
+                    "rmse": np.repeat(rmses, horizon),
+                    "n_obs": np.repeat(skel[:, 0], horizon),
+                    "n_train": np.repeat(skel[:, 1], horizon),
+                    "n_test": np.repeat(skel[:, 2], horizon),
                 }
             )
 
+    packed = _pack_series(series, key_col, ts_col, val_col)
     return packed.mapInPandas(fn, schema=FORECAST_SCHEMA)
 
 
@@ -501,36 +319,9 @@ def fit_models(
     (analysis_part/main.py:39-48); here the artifact set is itself a
     DataFrame — write it with ``write_parquet`` and the binary column rides
     parquet like any other (at 100 TB: model registry as a table, pruned and
-    joined like data). The payload is a pickled dict, codec-agnostic:
-    xgboost boosters serialize the same way."""
+    joined like data). The payload is a pickled dict of the GBT's node
+    arrays; ``predict_from_blob`` reloads it."""
     import pickle
-
-    # same AQE shape as recursive_forecast: repartition BEFORE the groupBy
-    # so the compute-bound per-symbol training spreads instead of landing
-    # on the 1-2 tasks AQE coalesces the tiny packed shuffle onto
-    sc = series.sparkSession.sparkContext
-    packed = (
-        series.repartition(sc.defaultParallelism * _FORECAST_PARTITION_FACTOR, key_col)
-        .groupBy(F.col(key_col).alias("symbol"))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(ts_col), F.col(val_col)))
-            ).alias("obs")
-        )
-    )
-    if _FORECAST_REBALANCE:
-        # Round-robin rebalance of the PACKED rows (one tiny row per
-        # series): deals exactly ⌈n/p⌉ series per task regardless of key
-        # hashing (Spark sorts round-robin input for retry-determinism,
-        # and the per-series RNG makes results partition-invariant).
-        packed = packed.repartition(
-            sc.defaultParallelism * _FORECAST_PARTITION_FACTOR
-        )
-    # resolve the model tier ONCE, driver-side, and close over it — an
-    # executor-side _forecast_model() call would read the env var in the
-    # worker process, where a driver-only export is invisible, silently
-    # disagreeing with recursive_forecast's tier
-    model = _forecast_model()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -542,75 +333,45 @@ def fit_models(
             # to the one the batched trainer grows (the batch-invariance
             # differential) — slicing a symbol's reachable nodes out of
             # a batch forest would cost more than retraining it
-            for sym, obs in zip(pdf["symbol"], pdf["obs"]):
-                vals = np.fromiter(
-                    (o[val_col] for o in obs), dtype=float, count=len(obs)
-                )
+            for sym, vals in zip(pdf[key_col], pdf[val_col]):
                 if len(vals) < n_lags + 10:
                     continue
-                x = np.column_stack(
-                    [vals[n_lags - k : len(vals) - k] for k in range(1, n_lags + 1)]
-                )
-                y = vals[n_lags:]
-                split = int(len(y) * train_frac)
-                if model == "ridge":
-                    # closed-form ridge, coefficients pickled explicitly
-                    beta, intercept = _fit_ridge(x[:split], y[:split])
-                    rmse = float("nan")
-                    if split < len(y):
-                        err = x[split:] @ beta + intercept - y[split:]
-                        rmse = float(np.sqrt(np.mean(err**2)))
-                    payload = {"kind": "ridge", "n_lags": n_lags,
-                               "beta": beta, "intercept": intercept}
-                else:
-                    # in-repo GBT (same artifact whether xgboost imports or
-                    # not, so a registry written here reloads anywhere);
-                    # per-series seeding ⇒ identical to the forest this
-                    # symbol gets inside recursive_forecast's batch.
-                    forest = train_forest_batch(
-                        [x[:split]], [y[:split]], [sym], GBT_FORECAST_PARAMS
-                    )
-                    rmse = float("nan")
-                    if split < len(y):
-                        err = (
-                            forest.predict_rows(
-                                np.zeros(len(y) - split, dtype=np.int64),
-                                x[split:],
-                            )
-                            - y[split:]
-                        )
-                        rmse = float(np.sqrt(_seqmean(err * err)))
-                    payload = {
-                        "kind": "gbt", "n_lags": n_lags,
-                        "feat": forest.feat, "thr": forest.thr,
-                        "left": forest.left, "right": forest.right,
-                        "val": forest.val, "is_leaf": forest.is_leaf,
-                        "roots": forest.roots, "base": forest.base,
-                        "lr": forest.lr, "max_depth": forest.max_depth,
-                    }
+                x, y, split = _lag_split(vals, n_lags, train_frac)
+                forest = train_forest_batch([x[:split]], [y[:split]], [sym])
+                payload = {
+                    "kind": "gbt", "n_lags": n_lags,
+                    "feat": forest.feat, "thr": forest.thr,
+                    "left": forest.left, "right": forest.right,
+                    "val": forest.val, "is_leaf": forest.is_leaf,
+                    "roots": forest.roots, "base": forest.base,
+                    "lr": forest.lr, "max_depth": forest.max_depth,
+                }
+                rmse = _test_rmse(forest, 0, x[split:], y[split:])
                 rows.append((sym, pickle.dumps(payload), rmse))
             yield pd.DataFrame(rows, columns=["symbol", "model", "rmse"])
 
+    packed = _pack_series(series, key_col, ts_col, val_col)
     return packed.mapInPandas(fn, schema=MODEL_SCHEMA)
 
 
 def predict_from_blob(blob: bytes, window: np.ndarray) -> float:
-    """Reload a persisted model artifact and predict one step."""
+    """Reload a persisted GBT artifact and predict one step from ``window``
+    (lag values, [0] = most recent). Anything else raises ValueError — the
+    blob is input read back from storage."""
     import pickle
 
-    from .gbt import Forest
-
     m = pickle.loads(blob)
-    if m.get("kind") == "gbt":
-        forest = Forest(
-            feat=m["feat"], thr=m["thr"], left=m["left"], right=m["right"],
-            val=m["val"], is_leaf=m["is_leaf"], roots=m["roots"],
-            base=m["base"], learning_rate=m["lr"], max_depth=m["max_depth"],
-        )
-        return float(
-            forest.predict_rows(np.zeros(1, dtype=np.int64), window[None, :])[0]
-        )
-    return float(np.dot(m["beta"], window) + m["intercept"])
+    kind = m.get("kind") if isinstance(m, dict) else type(m).__name__
+    if kind != "gbt":
+        raise ValueError(f"not a GBT model artifact (kind={kind!r})")
+    forest = Forest(
+        feat=m["feat"], thr=m["thr"], left=m["left"], right=m["right"],
+        val=m["val"], is_leaf=m["is_leaf"], roots=m["roots"],
+        base=m["base"], learning_rate=m["lr"], max_depth=m["max_depth"],
+    )
+    return float(
+        forest.predict_rows(np.zeros(1, dtype=np.int64), window[None, :])[0]
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -54,7 +54,7 @@ EAGER_ITERATIVE: dict = {}
 
 # Queries whose plan legitimately contains Arrow/Python stages: every one
 # is an Arrow-batched mapInPandas/applyInPandas where no JVM primitive
-# expresses the semantics (vector matmul prescreens, per-group OLS/ridge,
+# expresses the semantics (vector matmul prescreens, per-symbol OLS/GBT,
 # stateful carry, codec plumbing). Per-row Python UDFs are NEVER on this
 # list — a PythonUDF node in any other query is a red flag.
 PYTHON_STAGE_OK = {
@@ -65,8 +65,8 @@ PYTHON_STAGE_OK = {
     "embedding_near_dup_pairs",      # band keys via BLAS matmul
     "embedding_dedup_clusters",      # same band-key matmul, via its audited
                                      # pre-checkpoint constituent
-    "granger_causality",             # per-symbol OLS UDTF
-    "granger_structure",             # projection of the Granger UDTF
+    "granger_causality",             # per-symbol OLS over packed series
+    "granger_structure",             # projection of the same Granger stage
     "recursive_forecast",            # per-symbol trainer/forecaster
     "forecast_structure",            # hash-checked projection of the same
                                      # forecaster Arrow stage
@@ -273,6 +273,8 @@ def plan_facts(df: DataFrame) -> dict:
             + n("FlatMapGroupsInPandasWithState")
             + n("BatchEvalPython")
         ),
+        "map_in_pandas": n("MapInPandas"),
+        "grouped_map_in_pandas": n("FlatMapGroupsInPandas"),
         "row_python_udfs": n("BatchEvalPython"),
         "pushed_filters": sorted(
             set(

@@ -222,10 +222,10 @@ def correlation_pairs_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_local("granger_causality")  # no oracle: iterative OLS + F-sf, rows-only check
 def granger_causality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-65 (analysis_part/main.py:58-78) — does each other event series
-    Granger-cause 'click', per symbol, lags 1..5? applyInPandas UDTF with
-    numpy OLS and an own-implementation F survival function (no statsmodels
-    here); reference knobs preserved: maxlag 5, min-rows guard maxlag+2,
-    5 dp rounding, error rows on failure.
+    Granger-cause 'click', per symbol, lags 1..5? Packed per-symbol series
+    through ``mapInPandas`` with numpy OLS and an own-implementation F
+    survival function (no statsmodels here); reference knobs preserved:
+    maxlag 5, min-rows guard maxlag+2, 5 dp rounding, error rows on failure.
 
     Input is the hourly wide table with per-symbol forward-fill (the
     reference Grangers the *integrated* table, whose macro columns are
@@ -234,17 +234,6 @@ def granger_causality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     wide = hourly_wide(spark, sf_dir)
-    # Non-coalescible hash repartition BEFORE the ffill windows: it
-    # satisfies both the windows' and the UDTF's ClusteredDistribution on
-    # symbol, so it is the ONLY exchange in the chain — and, being
-    # REPARTITION_BY_NUM, AQE cannot fold it down to 2 partitions the way
-    # it folds the implicit window shuffle (it sizes by shuffle BYTES,
-    # which are tiny, while the per-symbol OLS work is compute-bound:
-    # measured 10 s → ~1.5 s at sf0.1). A repartition placed after the
-    # window is eliminated as redundant; before it, it wins.
-    wide = wide.repartition(
-        spark.sparkContext.defaultParallelism, "symbol"
-    )
     w = (
         Window.partitionBy("symbol")
         .orderBy("hour_ts")
@@ -258,9 +247,6 @@ def granger_causality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_col="click",
         predictor_cols=["error", "purchase", "signup", "view"],
         maxlag=5,
-        # the repartition above already owns the symbol partitioning; the
-        # operator must not stack a second same-key REPARTITION_BY_NUM
-        pre_partitioned=True,
     )
 
 
@@ -315,24 +301,25 @@ def granger_causality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def granger_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL-expressible projection of the Granger UDTF (OP-65),
+    """The SQL-expressible projection of the Granger operator (OP-65),
     hash-checked: row structure per (symbol, predictor, lag 1..5), the
     reference's min-rows guard (`len < maxlag+2` ⇒ single error row with
     NULL lag, analysis_part/main.py:64-65), and p-value computability
     (`has_p` ⇔ the F-test dof n − 3·lag − 1 > 0 on the pairwise-complete
     series). The oracle re-derives all of it relationally from the same
-    ffilled hourly wide table, so the UDTF's branching — not its
-    numerics — gets a bitwise driver check; the p-values themselves stay
-    under tests/test_stats.py tolerances (not SQL-expressible).
+    ffilled hourly wide table, so the operator's branching — not its
+    numerics — gets a bitwise oracle check; the p-values themselves (not
+    SQL-expressible) are checked exactly against a pandas loop in
+    tests/test_stats.py.
 
     Oracle precondition: the dof rule predicts `has_p` only when the
     regression is non-degenerate — a perfectly-fit series (rss_u = 0,
     e.g. a constant target over the pairwise-complete window) or an
-    lstsq failure would make the UDTF emit NaN/error where the oracle
+    lstsq failure would make the operator emit NaN/error where the oracle
     predicts a p-value. Neither occurs on real-valued noisy series;
     verified bitwise at sf0.001/0.01/0.1 on the fixtures. If a future
     corpus trips it, the honest fix is extending the oracle's CASE, not
-    loosening the UDTF."""
+    loosening the operator."""
     g = granger_causality_q(spark, sf_dir)
     return g.select(
         "symbol",
@@ -347,11 +334,10 @@ def granger_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def recursive_forecast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-66 (analysis_part/main.py:81-125) — per symbol: 24 lag features,
     80/20 temporal split, fit, test RMSE, 168-step recursive forecast.
-    xgboost (reference's exact hyperparameters) behind an import-try; the
-    in-repo histogram GBT (operators/gbt.py — same model family, same
-    hyperparameters, pure-Python differential in tests/test_gbt.py)
-    otherwise; ridge only on SPARK_GRAFT_FORECAST_MODEL=ridge.
-    mapInPandas over packed series: all symbols train in parallel."""
+    The model is the in-repo histogram GBT (operators/gbt.py — the
+    reference's model family and hyperparameters, pure-Python differential
+    in tests/test_gbt.py). mapInPandas over packed series: all symbols
+    train in parallel."""
     ev = load_table(spark, sf_dir, "events")
     series = ev.select(
         F.col("user_id").alias("symbol"), F.col("ts").alias("hour_ts"), F.col("value")
@@ -402,8 +388,8 @@ def forecast_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive feedback); this query certifies everything else.
 
     Oracle precondition: forecast/rmse finiteness is a prediction, not a
-    tautology — a ridge fit whose recursive feedback overflowed float64
-    would flip forecast_finite and fail the hash. Holds on the fixtures at
+    tautology — a NaN or infinite input value would reach the GBT's leaves
+    and flip forecast_finite, failing the hash. Holds on the fixtures at
     sf0.001/0.01/0.1."""
     fc = recursive_forecast_q(spark, sf_dir)
     per = fc.groupBy("symbol").agg(

@@ -59,44 +59,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_events(spark: SparkSession, sf_dir: str, min_ts: str | None = None) -> DataFrame:
-    """events scan with nanos handling and pushdown-aware time filtering.
+    """events scan with pushdown-aware time filtering.
 
-    events.ts is parquet TIMESTAMP(NANOS). Two runtime behaviors exist:
-
-    - pyspark ≤ 4.1.1 cannot read it natively (SPARK-40819); with
-      ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as raw int64
-      nanos. The µs conversion is then an expression a later ``ts >=
-      cutoff`` filter cannot be pushed through — at 100 TB that forfeits
-      row-group and partition pruning — so ``min_ts`` applies the
-      equivalent predicate on the RAW int64 column *before* conversion.
-    - pyspark ≥ 4.1.2 reads nanos natively as ``timestamp_ntz`` (µs
-      truncation, identical to DuckDB's) and ignores the legacy conf; the
-      cutoff pushes straight onto the ntz column
-      (``PushedFilters: [GreaterThanOrEqual(ts, ...)]``).
-
-    The schema probe below handles both; either way the returned ``ts`` is
-    a session-zoned (UTC) microsecond timestamp.
+    events.ts is read as ``timestamp_ntz`` (parquet TIMESTAMP(NANOS) is
+    truncated to µs, identical to DuckDB's read). ``min_ts`` filters the
+    ntz column before the cast, so the cutoff pushes into the scan
+    (``PushedFilters: [GreaterThanOrEqual(ts, ...)]``) — at 100 TB that is
+    row-group and partition pruning. The cast to TimestampType is
+    wall-clock-preserving under the pinned UTC session, so the returned
+    ``ts`` is a session-zoned (UTC) microsecond timestamp.
     """
-    from datetime import datetime, timezone
-
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     _pin_session_confs(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        if min_ts is not None:
-            cutoff_ns = int(
-                datetime.fromisoformat(min_ts)
-                .replace(tzinfo=timezone.utc)
-                .timestamp()
-                * 1_000_000_000
-            )
-            df = df.filter(F.col("ts") >= F.lit(cutoff_ns))
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # native timestamp_ntz read: filter pushes down directly; the cast to
-    # TimestampType is wall-clock-preserving under the pinned UTC session
     if min_ts is not None:
         df = df.filter(F.col("ts") >= F.lit(min_ts).cast("timestamp_ntz"))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -36,12 +36,6 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-# Schema as stored on disk under pyspark ≤ 4.1.1: ts is int64 nanoseconds
-# (legacy nanosAsLong read — see sources/tables.py::load_events for the
-# two-runtime story).
-EVENTS_RAW_SCHEMA = _events_raw_schema(T.LongType())
-
-
 def read_events_stream(
     spark: SparkSession,
     dir_path: str,
@@ -55,42 +49,28 @@ def read_events_stream(
     harnesses that must prove cross-batch merge laws (None = source
     default: everything available in one batch under AvailableNow).
 
-    The fixture's ts is parquet TIMESTAMP(NANOS); a one-file batch probe
-    (footer read only) decides whether this runtime surfaces it as raw
-    int64 nanos (≤ 4.1.1 + legacy conf) or native timestamp_ntz (≥ 4.1.2),
-    and the stream schema follows suit.
+    A one-file batch probe (footer read only) takes the on-disk ts type
+    (timestamp_ntz or timestamp), so the stream schema matches the files;
+    either way the returned ``ts`` is a session-zoned timestamp.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         probe_type = spark.read.parquet(dir_path).schema["ts"].dataType
     except AnalysisException as exc:
         # ONLY the empty-directory case falls back (a normal initial state
-        # for a file-source stream — files arrive later): the runtime
-        # version decides how TIMESTAMP(NANOS) will surface once they do
-        # (≥ 4.1.2 native timestamp_ntz, older int64 under the legacy
-        # conf). Any other analysis failure — wrong path, corrupt footer,
-        # permissions — re-raises: guessing a schema there would just
-        # defer the error to an obscure stream-time mismatch.
+        # for a file-source stream — files arrive later) to the ntz type
+        # the fixtures' timestamps read as. Any other analysis failure —
+        # wrong path, corrupt footer, permissions — re-raises: guessing a
+        # schema there would just defer the error to an obscure
+        # stream-time mismatch.
         if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
             raise
-        import re as _re
-
-        import pyspark as _ps
-
-        ver = tuple(
-            int(x) for x in _re.findall(r"\d+", _ps.__version__)[:3]
-        )
-        probe_type = (
-            T.TimestampNTZType() if ver >= (4, 1, 2) else T.LongType()
-        )
+        probe_type = T.TimestampNTZType()
     reader = spark.readStream.schema(_events_raw_schema(probe_type)).format(
         "parquet"
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.load(dir_path)
-    if isinstance(probe_type, T.LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 

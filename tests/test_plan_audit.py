@@ -50,6 +50,31 @@ def test_no_red_flag_plans(spark):
     assert not flags, "\n".join(flags)
 
 
+def test_per_symbol_analysis_is_pack_then_map_in_pandas(spark):
+    """Granger, the forecaster and the model sink share one Python
+    pattern: packed series through MapInPandas, never a grouped-map
+    (FlatMapGroupsInPandas) stage that builds a pandas frame per group."""
+    from pyspark.sql import functions as F
+
+    from stock_market_big_data_project_spark.operators.stats import fit_models
+    from stock_market_big_data_project_spark.plans import get_query
+    from stock_market_big_data_project_spark.plans.audit import plan_facts
+    from stock_market_big_data_project_spark.sources.tables import load_table
+
+    plans = {
+        name: get_query(name)(spark, SF_DIR)
+        for name in ("granger_causality", "recursive_forecast")
+    }
+    series = load_table(spark, SF_DIR, "events").select(
+        F.col("user_id").alias("symbol"), "ts", "value"
+    )
+    plans["fit_models"] = fit_models(series, "symbol", "ts", "value")
+    for name, df in plans.items():
+        facts = plan_facts(df)
+        assert facts["map_in_pandas"] >= 1, name
+        assert facts["grouped_map_in_pandas"] == 0, name
+
+
 def test_streaming_harness_list_is_current(spark):
     """Every registered query skipped by the audit must actually be a
     streaming-harness query (guards against the skip list rotting into a

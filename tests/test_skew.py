@@ -288,6 +288,17 @@ def test_wedge_pairs_salted_matches_plain(spark):
     salted = wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=4)
     assert plain.exceptAll(salted).count() == 0
     assert salted.exceptAll(plain).count() == 0
+    # a wider input (extra columns, one named like an output column) gives
+    # the same pairs: only (node, part) take part in the self-join
+    wide = op.withColumn("w", F.lit(1.0)).withColumn("c2", F.col("c"))
+    for kw in ({}, {"hot_part_threshold": 10, "n_salts": 4}):
+        got = wedge_pairs(wide, "c", "p", **kw)
+        assert plain.exceptAll(got).count() == 0
+        assert got.exceptAll(plain).count() == 0
+    # no salt bucket would silently drop every hot-part pair: it raises
+    for n_salts in (0, -1):
+        with pytest.raises(ValueError, match="n_salts"):
+            wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=n_salts)
     # the hot leg really fired: the hub part's degree exceeds the cut
     deg = op.groupBy("p").count().filter(F.col("count") > 10).count()
     assert deg >= 1

@@ -89,62 +89,58 @@ def test_granger_query_shape(spark, sf_dir):
     assert set(ok["predictor"].unique()) <= {"error", "purchase", "signup", "view"}
 
 
-def test_xgboost_differential_parity_when_available(spark):
-    """OP-66 differential parity with the reference's model family
-    (analysis_part/main.py:95-103): when xgboost IS importable, the
-    engine's forecaster must use it with the reference's exact
-    hyperparameters and reproduce a single-node XGBRegressor run bitwise
-    (same lag matrix, same split, same recursive feedback). This
-    container has no xgboost, so the test self-skips — it activates
-    automatically the moment the environment gains the library, closing
-    the parity gap without code changes."""
-    import numpy as np
-    import pytest as _pytest
-
-    xgb = _pytest.importorskip("xgboost")
-
-    from stock_market_big_data_project_spark.operators.stats import (
-        XGB_PARAMS,
-        _HAVE_XGB,
-        recursive_forecast,
+def _pandas_granger(events: pd.DataFrame, maxlag: int = 5) -> pd.DataFrame:
+    """Reference loop for OP-65 (analysis_part/main.py:58-78) in plain
+    pandas: the hourly wide table (last value per (symbol, hour, type) by
+    (ts, event_id)), forward-filled per symbol, then per symbol and
+    predictor a pairwise dropna with the target, the maxlag + 2 guard and
+    ``_granger_pvalue`` for lags 1..maxlag rounded to 5 dp."""
+    ev = events.assign(hour_ts=events["ts"].dt.floor("h")).sort_values(
+        ["ts", "event_id"]
     )
+    cells = ev.groupby(["user_id", "hour_ts", "event_type"])["value"].last()
+    wide = (
+        cells.unstack("event_type")
+        .reindex(columns=["click", "error", "purchase", "signup", "view"])
+        .sort_index()
+    )
+    wide = wide.groupby(level="user_id").ffill()
+    rows = []
+    for sym, pdf in wide.groupby(level="user_id"):
+        for pred in ["error", "purchase", "signup", "view"]:
+            sub = pdf[["click", pred]].dropna()
+            if len(sub) < maxlag + 2:
+                rows.append((sym, pred, None, float("nan"),
+                             f"insufficient data: {len(sub)} rows < {maxlag + 2}"))
+                continue
+            y = sub["click"].to_numpy(dtype=float)
+            x = sub[pred].to_numpy(dtype=float)
+            try:
+                for lag in range(1, maxlag + 1):
+                    rows.append((sym, pred, lag, round(_granger_pvalue(y, x, lag), 5), None))
+            except Exception as exc:
+                rows.append((sym, pred, None, float("nan"), str(exc)))
+    return pd.DataFrame(rows, columns=["symbol", "predictor", "lag", "p_value", "error"])
 
-    assert _HAVE_XGB  # the operator must have taken the xgboost path
-    n_lags, horizon, train_frac = 4, 6, 0.8
-    rng = np.random.RandomState(3)
-    vals = np.cumsum(rng.randn(60)) + 50.0
 
-    # single-node reference computation, mirroring analysis_part/main.py
-    x = np.column_stack(
-        [vals[n_lags - k : len(vals) - k] for k in range(1, n_lags + 1)]
-    )
-    y = vals[n_lags:]
-    split = int(len(y) * train_frac)
-    model = xgb.XGBRegressor(**XGB_PARAMS)
-    model.fit(x[:split], y[:split])
-    rmse_ref = float(
-        np.sqrt(np.mean((model.predict(x[split:]) - y[split:]) ** 2))
-    )
-    window = np.ascontiguousarray(vals[-n_lags:][::-1])
-    preds_ref = []
-    for _ in range(horizon):
-        p = float(model.predict(window[None, :])[0])
-        preds_ref.append(p)
-        window = np.concatenate(([p], window[:-1]))
+def test_granger_engine_matches_pandas_loop(spark, sf_dir):
+    """Engine-level differential for OP-65: the registered
+    granger_causality query against the pure-pandas loop over the same
+    forward-filled hourly wide table — p_value and error match exactly
+    (granger_structure certifies only the row structure)."""
+    from stock_market_big_data_project_spark.plans import get_query
 
-    series = spark.createDataFrame(
-        [(1, float(i), float(v)) for i, v in enumerate(vals)],
-        "symbol long, hour_ts double, value double",
+    key = ["symbol", "predictor", "lag"]
+    got = get_query("granger_causality")(spark, sf_dir).toPandas()
+    want = _pandas_granger(pd.read_parquet(f"{sf_dir}/events.parquet"))
+    got = got.sort_values(key, na_position="first").reset_index(drop=True)
+    want = want.sort_values(key, na_position="first").reset_index(drop=True)
+    assert len(got) == len(want) > 0
+    assert (got["symbol"].to_numpy() == want["symbol"].to_numpy()).all()
+    assert got["predictor"].tolist() == want["predictor"].tolist()
+    assert got["lag"].fillna(-1).tolist() == want["lag"].fillna(-1).tolist()
+    assert np.array_equal(
+        got["p_value"].to_numpy(float), want["p_value"].to_numpy(float), equal_nan=True
     )
-    got = (
-        recursive_forecast(
-            series, "symbol", "hour_ts", "value",
-            n_lags=n_lags, horizon=horizon, train_frac=train_frac,
-        )
-        .orderBy("step")
-        .collect()
-    )
-    assert len(got) == horizon
-    for r, p in zip(got, preds_ref):
-        assert abs(r.forecast_c - p) < 1e-6, (r.step, r.forecast_c, p)
-        assert abs(r.rmse - rmse_ref) < 1e-6
+    assert got["error"].fillna("").tolist() == want["error"].fillna("").tolist()
+    assert got["p_value"].notna().any()  # non-vacuous: some lags fitted
