@@ -28,8 +28,6 @@ atol + exact final-prediction agreement + monotone loss.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -226,10 +224,6 @@ def reference_logreg(X, y, lr: float = 1.0, n_iter: int = 15):
         w = w - lr * (X.T @ err) / n
         b = b - lr * float(err.sum()) / n
     return w, b, losses
-
-
-def sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))
 
 
 def model_blob(w: list[float], bias: float) -> bytes:

@@ -1,4 +1,4 @@
-"""Cleaning operators (OP-11..OP-14, OP-17, OP-19).
+"""Cleaning operators (OP-11..OP-13, OP-15).
 
 Reference semantics (preprocess_function/main.py:13-15,21-23,29-31,38-40):
 ``pd.to_datetime(errors="coerce")`` then ``drop_duplicates()`` then
@@ -37,11 +37,6 @@ def dedup_exact(df: DataFrame) -> DataFrame:
     return df.dropDuplicates()
 
 
-def drop_null_rows(df: DataFrame, how: str = "any") -> DataFrame:
-    """OP-14 / OP-19 — ``dropna()`` (any) / ``dropna(how='all')``."""
-    return df.na.drop(how)
-
-
 def filter_cutoff(df: DataFrame, ts_col: str, cutoff: str) -> DataFrame:
     """OP-15 — history-window predicate (integrate/main.py:60-67).
 
@@ -50,13 +45,3 @@ def filter_cutoff(df: DataFrame, ts_col: str, cutoff: str) -> DataFrame:
     partition pruning — the 100 TB fast path.
     """
     return df.filter(F.col(ts_col) >= F.lit(cutoff).cast("timestamp"))
-
-
-def filter_not_null(df: DataFrame, col: str) -> DataFrame:
-    """OP-17 — ``merged[merged['c'].notnull()]`` (integrate/main.py:110-111)."""
-    return df.filter(F.col(col).isNotNull())
-
-
-def drop_columns(df: DataFrame, cols: list[str]) -> DataFrame:
-    """OP-18 — negative projection (analysis_part/main.py:146)."""
-    return df.drop(*[c for c in cols if c in df.columns])

@@ -285,6 +285,13 @@ def lsh_candidate_pairs(
     # shingle stream — the corpus-sized expansion, not a proxy — and
     # measured +44%; that chain keeps its unmaterialized form, see
     # ngram_jaccard_pairs.)
+    # Fault tolerance: localCheckpoint keeps its blocks only on the
+    # executors that computed them and drops the lineage, so on a cluster
+    # losing one of those executors makes `banded` unrecoverable and the
+    # query fails instead of recomputing. Accepted here because `banded`
+    # is a per-query intermediate: the cost is a rerun, never a wrong
+    # result. A deployment that cannot afford the rerun needs a reliable
+    # `checkpoint()` (checkpoint dir on shared storage) at this line.
     banded = minhash_banded(sig, id_col, bands, rows).localCheckpoint(
         eager=False
     )

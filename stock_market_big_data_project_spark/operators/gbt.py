@@ -93,17 +93,6 @@ def _seqsum(a: np.ndarray) -> float:
     )
 
 
-def _bin_edges(col_sorted: np.ndarray, bins: int) -> np.ndarray:
-    """Candidate split edges for one (series, feature): values at quantile
-    positions ceil(b·n/B)−1, deduplicated, padded to B−1 with +inf."""
-    n = col_sorted.size
-    pos = np.ceil(np.arange(1, bins) * n / bins).astype(np.intp) - 1
-    cand = np.unique(col_sorted[pos])
-    out = np.full(bins - 1, np.inf)
-    out[: cand.size] = cand
-    return out
-
-
 class Forest:
     """Flat-array forest for a BATCH of series: node arrays are shared,
     ``roots[s, t]`` points each (series, tree) at its root."""

@@ -49,20 +49,6 @@ def pivot_last(
     return pivoted.agg(F.expr(f"max_by({val_col}, {order})"))
 
 
-def hourly_grid(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
-    """Per-key dense hourly grid: sequence(min,max,1h) + explode."""
-    bounds = df.groupBy(key_col).agg(
-        F.date_trunc("hour", F.min(ts_col)).alias("_tmin"),
-        F.date_trunc("hour", F.max(ts_col)).alias("_tmax"),
-    )
-    return bounds.select(
-        key_col,
-        F.explode(
-            F.sequence("_tmin", "_tmax", F.expr("INTERVAL 1 HOUR"))
-        ).alias(ts_col),
-    )
-
-
 def resample_ffill(
     df: DataFrame,
     key_col: str,

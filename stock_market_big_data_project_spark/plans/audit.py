@@ -15,9 +15,10 @@ import re
 from pyspark.sql import DataFrame
 
 # Queries whose *registered callable* executes a streaming job at build
-# time and returns a memory-sink table: their physical plan is the trivial
-# memory scan, and building them costs a full stream replay — audited via
-# their batch twins + tests/test_streaming.py instead.
+# time and returns its materialized result (memory-sink rows, or the
+# checkpointed read-back of `streaming/ingest.py::replay`): their physical
+# plan is a trivial scan, and building them costs a full stream replay —
+# audited via their batch twins + tests/test_streaming.py instead.
 STREAMING_HARNESS = {
     "streaming_batch_parity",
     "streaming_stateful_ffill_parity",

@@ -192,73 +192,47 @@ def streaming_cohort_retention_parity(
     merge handles exactly: the three range-split micro-batches make
     most users span batches, so the bitwise hash match against the
     batch oracle proves the cross-batch (min, set-union) merge law."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_cohort_")
-    src_dir = f"{td}/src"
-    seen_dir = f"{td}/state_first_seen"
-    act_dir = f"{td}/state_activity"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy("user_id")
-                .agg(F.min("ts").alias("min_ts"))
-                .write.mode("overwrite")
-                .parquet(f"{seen_dir}/batch_id={batch_id}")
-            )
-            (
-                batch_df.select(
-                    "user_id",
-                    F.date_trunc("week", "ts").alias("act_week"),
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{act_dir}/batch_id={batch_id}")
-            )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy("user_id")
+            .agg(F.min("ts").alias("min_ts"))
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/state_first_seen/batch_id={batch_id}")
         )
-        q.awaitTermination()
+        (
+            batch_df.select("user_id", F.date_trunc("week", "ts").alias("act_week"))
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/state_activity/batch_id={batch_id}")
+        )
+
+    def finish(scratch: str) -> DataFrame:
         first_seen = (
-            spark.read.parquet(seen_dir)
+            spark.read.parquet(f"{scratch}/state_first_seen")
             .groupBy("user_id")
             .agg(F.date_trunc("week", F.min("min_ts")).alias("cohort_week"))
         )
         activity = (
-            spark.read.parquet(act_dir)
+            spark.read.parquet(f"{scratch}/state_activity")
             .select("user_id", "act_week")
             .distinct()
             .join(first_seen, "user_id")
             .select(
                 "user_id",
                 "cohort_week",
-                (
-                    F.datediff(F.col("act_week"), F.col("cohort_week")) / 7
-                )
+                (F.datediff(F.col("act_week"), F.col("cohort_week")) / 7)
                 .cast("int")
                 .alias("week_offset"),
             )
             .distinct()
         )
-        out = activity.groupBy("cohort_week", "week_offset").agg(
+        return activity.groupBy("cohort_week", "week_offset").agg(
             F.count(F.lit(1)).alias("n_active")
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(spark, load_events(spark, sf_dir), "event_id", per_batch, finish)
 
 
 # --------------------------------------------------------------------------

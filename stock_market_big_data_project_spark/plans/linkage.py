@@ -239,53 +239,25 @@ def streaming_pagerank_edges_parity(spark: SparkSession, sf_dir: str) -> DataFra
     three micro-batches, so the same (customer, part) edge arrives from
     multiple batches and the hash match proves the set-merge law.
     Per-tick work is delta-sized (one stream-static equi-join)."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    td = tempfile.mkdtemp(prefix="stream_pr_")
-    src_dir = f"{td}/src"
-    edges_dir = f"{td}/state_edges"
-    try:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        li.repartitionByRange(3, "l_orderkey").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
 
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.join(
-                    orders, batch_df.l_orderkey == orders.o_orderkey
-                )
-                .select(
-                    (2 * F.col("o_custkey")).alias("src"),
-                    (2 * F.col("l_partkey") + 1).alias("dst"),
-                )
-                .distinct()
-                .write.mode("append")
-                .parquet(edges_dir)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.join(orders, batch_df.l_orderkey == orders.o_orderkey)
+            .select(
+                (2 * F.col("o_custkey")).alias("src"),
+                (2 * F.col("l_partkey") + 1).alias("dst"),
             )
+            .distinct()
+            .write.mode("append")
+            .parquet(f"{scratch}/state_edges")
+        )
 
-        stream = (
-            spark.readStream.schema("l_orderkey long, l_partkey long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
-        )
-        q.awaitTermination()
-        e0 = spark.read.parquet(edges_dir).distinct()
+    def finish(scratch: str) -> DataFrame:
+        e0 = spark.read.parquet(f"{scratch}/state_edges").distinct()
         pr = pagerank_fixed_point(_symmetrize(e0), _PR_ITERATIONS)
-        # localCheckpoint inside pagerank_fixed_point already detaches the
-        # result from the temp-dir lineage
         return pr.select(
             F.when(F.col("node") % 2 == 0, F.lit("customer"))
             .otherwise(F.lit("part"))
@@ -294,8 +266,9 @@ def streaming_pagerank_edges_parity(spark: SparkSession, sf_dir: str) -> DataFra
             "rank_scaled",
             "deg",
         )
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return replay(spark, li, "l_orderkey", per_batch, finish)
 
 
 # --------------------------------------------------------------------------
@@ -504,60 +477,37 @@ def streaming_fuzzy_link_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     `symspell_fuzzy_join_dist1` checks.  Per-tick work is
     delta·(len+1) keys; the clean index is touched only by hash-join
     probes, never rebuilt."""
-    import shutil
-    import tempfile
-
     from ..operators.symspell import deletion_keys
+    from ..streaming.ingest import replay
 
-    td = tempfile.mkdtemp(prefix="stream_fuzzy_")
-    src_dir = f"{td}/src"
-    matches_dir = f"{td}/state_matches"
-    try:
-        clean, dirty = _clean_and_dirty(spark, sf_dir)
-        # the dirty FEED arrives as a stream, range-split by id into
-        # three micro-batches
-        dirty.repartitionByRange(3, "dirty_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-        # the at-rest index: clean-side deletion keys, built ONCE
-        clean_keys = deletion_keys(
-            clean, "clean_id", "clean_name"
-        ).withColumnsRenamed({"_id": "_cid", "_name": "_cname"}).localCheckpoint()
+    clean, dirty = _clean_and_dirty(spark, sf_dir)
+    # the at-rest index: clean-side deletion keys, built ONCE
+    clean_keys = (
+        deletion_keys(clean, "clean_id", "clean_name")
+        .withColumnsRenamed({"_id": "_cid", "_name": "_cname"})
+        .localCheckpoint()
+    )
 
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            dk = deletion_keys(
-                batch_df, "dirty_id", "dirty_name"
-            ).withColumnsRenamed({"_id": "_did", "_name": "_dname"})
-            (
-                dk.join(clean_keys, "_key")
-                .select("_cid", "_cname", "_did", "_dname")
-                .distinct()
-                .withColumn(
-                    "edit_distance",
-                    F.levenshtein("_cname", "_dname").cast("int"),
-                )
-                .filter(F.col("edit_distance") <= 1)
-                .write.mode("append")
-                .parquet(matches_dir)
-            )
-
-        stream = (
-            spark.readStream.schema("dirty_id long, dirty_name string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        dk = deletion_keys(batch_df, "dirty_id", "dirty_name").withColumnsRenamed(
+            {"_id": "_did", "_name": "_dname"}
         )
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+        (
+            dk.join(clean_keys, "_key")
+            .select("_cid", "_cname", "_did", "_dname")
+            .distinct()
+            .withColumn("edit_distance", F.levenshtein("_cname", "_dname").cast("int"))
+            .filter(F.col("edit_distance") <= 1)
+            .write.mode("append")
+            .parquet(f"{scratch}/state_matches")
         )
-        q.awaitTermination()
+
+    def finish(scratch: str) -> DataFrame:
         # distinct() guards foreachBatch's at-least-once semantics: a
         # retried batch re-appends its matches, and the set-merge at
         # rest must fold them (same guard as the edges parity)
-        out = (
-            spark.read.parquet(matches_dir)
+        return (
+            spark.read.parquet(f"{scratch}/state_matches")
             .distinct()
             .select(
                 F.col("_cid").alias("clean_id"),
@@ -567,7 +517,7 @@ def streaming_fuzzy_link_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "edit_distance",
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    # the dirty FEED arrives as a stream, range-split by id into
+    # three micro-batches
+    return replay(spark, dirty, "dirty_id", per_batch, finish)

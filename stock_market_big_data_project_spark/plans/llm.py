@@ -2029,38 +2029,18 @@ def streaming_ivf_index_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key aggregation is needed). At 100 TB the state dir is
     ``partitionBy(cell)`` so probes prune to n_probe/n_cells of the
     files; appends land inside the matching cell partitions."""
-    import shutil
-    import tempfile
-
     from ..operators.similarity import ivf_index, ivf_topk_from_index
-    from ..streaming.ingest import read_embeddings_stream
+    from ..streaming.ingest import replay
 
-    td = tempfile.mkdtemp(prefix="stream_ivf_")
-    src = f"{td}/src"
-    index_dir = f"{td}/state_index"
-    try:
-        _emb(spark, sf_dir).repartitionByRange(3, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(src)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        ivf_index(batch_df).write.mode("append").parquet(f"{scratch}/state_index")
 
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            ivf_index(batch_df).write.mode("append").parquet(index_dir)
-
-        q = (
-            read_embeddings_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
-        )
-        q.awaitTermination()
-        idx = spark.read.parquet(index_dir)
+    def finish(scratch: str) -> DataFrame:
+        idx = spark.read.parquet(f"{scratch}/state_index")
         queries = _emb(spark, sf_dir).filter(F.col("vec_id") < 10)
-        out = ivf_topk_from_index(idx, queries)
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return ivf_topk_from_index(idx, queries)
+
+    return replay(spark, _emb(spark, sf_dir), "vec_id", per_batch, finish)
 
 
 # --- deterministic stable sampling ----------------------------------------------
@@ -2682,9 +2662,6 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch batch path. At rest the assignment table lives
     cell-partitioned (the IVF layout), so the probe join is
     partition-pruned to the delta's cells."""
-    import shutil
-    import tempfile
-
     from ..operators._planes import hyperplanes
     from ..operators.graph import connected_components
     from ..operators.similarity import (
@@ -2692,80 +2669,67 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_assign,
         with_norm,
     )
-    from ..streaming.ingest import read_embeddings_stream
+    from ..streaming.ingest import replay
 
-    td = tempfile.mkdtemp(prefix="stream_semdedup_")
-    src = f"{td}/src"
-    state_dir = f"{td}/state_assigned"
-    pairs_dir = f"{td}/pairs_out"
-    try:
-        _emb(spark, sf_dir).repartitionByRange(3, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-        # seed the emission dir so a pair-free corpus still reads back
-        spark.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        ).write.mode("overwrite").parquet(pairs_dir)
-        cents = hyperplanes(8, 64, prefix="ivf:")
+    cents = hyperplanes(8, 64, prefix="ivf:")
 
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            delta = with_norm(
-                ivf_assign(
-                    batch_df.select("vec_id", "embedding"),
-                    cents,
-                    "vec_id",
-                    "embedding",
-                    with_dot=True,
-                    keep_emb=True,
-                ),
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        state_dir = f"{scratch}/state_assigned"
+        pairs_dir = f"{scratch}/pairs_out"
+        if batch_id == 0:
+            # seed the emission dir so a pair-free corpus still reads back
+            spark.createDataFrame(
+                [], "id_a long, id_b long, cosine double"
+            ).write.mode("overwrite").parquet(pairs_dir)
+        delta = with_norm(
+            ivf_assign(
+                batch_df.select("vec_id", "embedding"),
+                cents,
+                "vec_id",
                 "embedding",
-                64,
-            )
-            # append-then-probe: delta ⊆ at-rest, so the single probe
-            # join finds old-vs-new AND new-vs-new same-cell pairs
-            delta.write.mode("append").parquet(state_dir)
-            at_rest = spark.read.parquet(state_dir)
-            x = at_rest.select(
-                F.col("vec_id").alias("_xid"),
-                "cell",
-                F.col("embedding").alias("_xe"),
-                F.col("_norm2").alias("_xn"),
-            )
-            y = delta.select(
-                F.col("vec_id").alias("_yid"),
-                "cell",
-                F.col("embedding").alias("_ye"),
-                F.col("_norm2").alias("_yn"),
-            )
-            lo = F.col("_xid") < F.col("_yid")
-            cand = (
-                x.join(y, "cell")
-                .filter(F.col("_xid") != F.col("_yid"))
-                .select(
-                    F.when(lo, F.col("_xid")).otherwise(F.col("_yid")).alias("id_a"),
-                    F.when(lo, F.col("_yid")).otherwise(F.col("_xid")).alias("id_b"),
-                    F.when(lo, F.col("_xe")).otherwise(F.col("_ye")).alias("_ea"),
-                    F.when(lo, F.col("_ye")).otherwise(F.col("_xe")).alias("_eb"),
-                    F.when(lo, F.col("_xn")).otherwise(F.col("_yn")).alias("_na"),
-                    F.when(lo, F.col("_yn")).otherwise(F.col("_xn")).alias("_nb"),
-                )
-                .dropDuplicates(["id_a", "id_b"])
-            )
-            _prescreened_exact_cosine(cand, 0.35, 64).write.mode(
-                "append"
-            ).parquet(pairs_dir)
-
-        q = (
-            read_embeddings_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+                with_dot=True,
+                keep_emb=True,
+            ),
+            "embedding",
+            64,
         )
-        q.awaitTermination()
+        # append-then-probe: delta ⊆ at-rest, so the single probe
+        # join finds old-vs-new AND new-vs-new same-cell pairs
+        delta.write.mode("append").parquet(state_dir)
+        at_rest = spark.read.parquet(state_dir)
+        x = at_rest.select(
+            F.col("vec_id").alias("_xid"),
+            "cell",
+            F.col("embedding").alias("_xe"),
+            F.col("_norm2").alias("_xn"),
+        )
+        y = delta.select(
+            F.col("vec_id").alias("_yid"),
+            "cell",
+            F.col("embedding").alias("_ye"),
+            F.col("_norm2").alias("_yn"),
+        )
+        lo = F.col("_xid") < F.col("_yid")
+        cand = (
+            x.join(y, "cell")
+            .filter(F.col("_xid") != F.col("_yid"))
+            .select(
+                F.when(lo, F.col("_xid")).otherwise(F.col("_yid")).alias("id_a"),
+                F.when(lo, F.col("_yid")).otherwise(F.col("_xid")).alias("id_b"),
+                F.when(lo, F.col("_xe")).otherwise(F.col("_ye")).alias("_ea"),
+                F.when(lo, F.col("_ye")).otherwise(F.col("_xe")).alias("_eb"),
+                F.when(lo, F.col("_xn")).otherwise(F.col("_yn")).alias("_na"),
+                F.when(lo, F.col("_yn")).otherwise(F.col("_xn")).alias("_nb"),
+            )
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        _prescreened_exact_cosine(cand, 0.35, 64).write.mode("append").parquet(
+            pairs_dir
+        )
 
-        pairs = spark.read.parquet(pairs_dir).select("id_a", "id_b")
-        assigned = spark.read.parquet(state_dir).select(
+    def finish(scratch: str) -> DataFrame:
+        pairs = spark.read.parquet(f"{scratch}/pairs_out").select("id_a", "id_b")
+        assigned = spark.read.parquet(f"{scratch}/state_assigned").select(
             "vec_id", "cell", "cell_dot"
         )
         cc = connected_components(pairs)
@@ -2778,16 +2742,15 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("cluster_id").orderBy(
             F.asc("cell_dot"), F.asc("vec_id")
         )
-        # localCheckpoint: the result must outlive the temp dirs
         return labeled.select(
             "vec_id",
             "cell",
             "cell_dot",
             "cluster_id",
             (F.row_number().over(w) == 1).alias("kept"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        )
+
+    return replay(spark, _emb(spark, sf_dir), "vec_id", per_batch, finish)
 
 
 # The red-flag gate audits these constituents instead of the eager
@@ -3263,43 +3226,21 @@ def streaming_countmin_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats pattern with exact arithmetic (HLL's blob twin is
     sketch_merge_rollup, rows-only; CMS's integer cells make this one
     hash-certified)."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_documents_stream
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        delta_t = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        _cms_cells(delta_t).write.mode("append").parquet(f"{scratch}/state_cells")
 
-    td = tempfile.mkdtemp(prefix="stream_cms_")
-    src_dir = f"{td}/src"
-    state_dir = f"{td}/state_cells"
-    try:
-        _docs(spark, sf_dir).repartitionByRange(3, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            delta_t = batch_df.select(
-                F.explode(tokens(F.col("text"))).alias("tok")
-            )
-            _cms_cells(delta_t).write.mode("append").parquet(state_dir)
-
-        q = (
-            read_documents_stream(spark, src_dir)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
-        )
-        q.awaitTermination()
+    def finish(scratch: str) -> DataFrame:
         merged = (
-            spark.read.parquet(state_dir)
+            spark.read.parquet(f"{scratch}/state_cells")
             .groupBy("j", "b")
             .agg(F.sum("c").alias("c"))
         )
-        t = _cms_token_stream(_docs_spread(spark, sf_dir))
-        # localCheckpoint: the result must outlive the temp dirs
-        return _cms_report(merged, t).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _cms_report(merged, _cms_token_stream(_docs_spread(spark, sf_dir)))
+
+    return replay(spark, _docs(spark, sf_dir), "doc_id", per_batch, finish)
 
 
 # --- embedding covariance + PCA (r7) ---------------------------------------------------
@@ -3505,42 +3446,25 @@ def streaming_covariance_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed merge ≡ one-pass batch matrix, bit for bit. With
     `streaming_countmin_parity` and the stats-card parity, every
     mergeable statistic in the engine now has a live-path twin."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_embeddings_stream
-
-    td = tempfile.mkdtemp(prefix="stream_cov_")
-    src_dir = f"{td}/src"
-    cells_dir = f"{td}/state_cells"
-    dims_dir = f"{td}/state_dims"
-    try:
-        _emb(spark, sf_dir).repartitionByRange(3, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            _cov_moment_cells(batch_df).write.mode("append").parquet(
-                cells_dir
-            )
-            _cov_dim_sums(batch_df).write.mode("append").parquet(dims_dir)
-
-        q = (
-            read_embeddings_stream(spark, src_dir)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        _cov_moment_cells(batch_df).write.mode("append").parquet(
+            f"{scratch}/state_cells"
         )
-        q.awaitTermination()
+        _cov_dim_sums(batch_df).write.mode("append").parquet(
+            f"{scratch}/state_dims"
+        )
+
+    def finish(scratch: str) -> DataFrame:
         # `_cov_combine` accepts partials at any granularity (exact
         # integer merge), so the per-batch appends feed it directly
-        m = spark.read.parquet(cells_dir)
-        dims = spark.read.parquet(dims_dir)
-        # localCheckpoint: the result must outlive the temp dirs
-        return _cov_combine(m, dims).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _cov_combine(
+            spark.read.parquet(f"{scratch}/state_cells"),
+            spark.read.parquet(f"{scratch}/state_dims"),
+        )
+
+    return replay(spark, _emb(spark, sf_dir), "vec_id", per_batch, finish)
 
 
 @register_local("embedding_pca_project")  # no oracle BY DESIGN: the

@@ -1464,7 +1464,6 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
     import tempfile
-    import uuid
 
     from ..streaming.ingest import (
         hourly_tumbling_agg,
@@ -1472,7 +1471,6 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    name = f"stream_parity_{uuid.uuid4().hex[:8]}"
     td = tempfile.mkdtemp(prefix="stream_parity_")
     try:
         shutil.copy(
@@ -1481,10 +1479,9 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # memory sink materializes on the driver at run time, so the temp
         # source dir can be deleted as soon as the stream terminates
-        run_to_memory(hourly_tumbling_agg(read_events_stream(spark, td)), name)
+        return run_to_memory(hourly_tumbling_agg(read_events_stream(spark, td)))
     finally:
         shutil.rmtree(td, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -1540,7 +1537,6 @@ def streaming_stateful_ffill_parity(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
     import time as _time
-    import uuid
 
     from ..streaming.ingest import run_to_memory
     from ..streaming.stateful import stateful_ffill
@@ -1564,7 +1560,6 @@ def streaming_stateful_ffill_parity(spark: SparkSession, sf_dir: str) -> DataFra
         .select("indicator", F.col("hour").alias("ts"), F.col("value").cast("double"))
     )
 
-    name = f"stateful_ffill_{uuid.uuid4().hex[:8]}"
     td = tempfile.mkdtemp(prefix="stateful_ffill_")
     try:
         # Range-partitioned distributed write: part-00000..2 hold ascending
@@ -1585,10 +1580,9 @@ def streaming_stateful_ffill_parity(spark: SparkSession, sf_dir: str) -> DataFra
             .option("maxFilesPerTrigger", 1)
             .parquet(td)
         )
-        run_to_memory(stateful_ffill(stream), name)
+        return run_to_memory(stateful_ffill(stream))
     finally:
         shutil.rmtree(td, ignore_errors=True)
-    return spark.table(name)
 
 
 # --------------------------------------------------------------------------
@@ -2106,54 +2100,33 @@ def streaming_indicators_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans batches and a hash match proves the cross-batch MERGE law, not
     just per-batch aggregation.  Per-tick work is delta-sized; the bar
     state is bars-sized (hours × symbols), never ticks-sized."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_ti_")
-    src_dir = f"{td}/src"
-    bars_dir = f"{td}/state_bars"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            order_key = F.struct("ts", "event_id")
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.max_by("value", order_key).alias("close"),
-                    F.max(order_key).alias("okey"),
-                )
-                .write.mode("append")
-                .parquet(bars_dir)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        order_key = F.struct("ts", "event_id")
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.max_by("value", order_key).alias("close"),
+                F.max(order_key).alias("okey"),
+            )
+            .write.mode("append")
+            .parquet(f"{scratch}/state_bars")
         )
-        q.awaitTermination()
+
+    def finish(scratch: str) -> DataFrame:
         merged = (
-            spark.read.parquet(bars_dir)
+            spark.read.parquet(f"{scratch}/state_bars")
             .groupBy("symbol", "hour_ts")
             .agg(F.max_by("close", "okey").alias("close"))
-            .withColumn(
-                "close_fp", F.round(F.col("close") * 1000, 0).cast("long")
-            )
+            .withColumn("close_fp", F.round(F.col("close") * 1000, 0).cast("long"))
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return _indicators_from_bars(merged).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _indicators_from_bars(merged)
+
+    return replay(spark, load_events(spark, sf_dir), "event_id", per_batch, finish)
 
 
 # --------------------------------------------------------------------------
@@ -2322,50 +2295,30 @@ def streaming_hopping_volume_parity(
     under any batch split (three range-split micro-batches, so most
     windows span batches and the match proves the cross-batch merge
     law)."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_hopping_")
-    src_dir = f"{td}/src"
-    hours_dir = f"{td}/state_hours"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.sum(F.col("value").cast("decimal(38,6)")).alias(
-                        "sum_dec"
-                    ),
-                    F.count(F.lit(1)).alias("n_ticks"),
-                    # non-null value count, tracked separately so the
-                    # served average divides by count(value) like
-                    # exact_avg / the oracle — not count(*) — and the
-                    # parity holds even if the feed carries null values
-                    F.count("value").alias("n_vals"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{hours_dir}/batch_id={batch_id}")
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+                F.count(F.lit(1)).alias("n_ticks"),
+                # non-null value count, tracked separately so the
+                # served average divides by count(value) like
+                # exact_avg / the oracle — not count(*) — and the
+                # parity holds even if the feed carries null values
+                F.count("value").alias("n_vals"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/state_hours/batch_id={batch_id}")
         )
-        q.awaitTermination()
+
+    def finish(scratch: str) -> DataFrame:
         hours = (
-            spark.read.parquet(hours_dir)
+            spark.read.parquet(f"{scratch}/state_hours")
             .groupBy("symbol", "hour_ts")
             .agg(
                 F.sum("sum_dec").alias("sum_dec"),
@@ -2376,7 +2329,7 @@ def streaming_hopping_volume_parity(
         # each maintained hour bucket feeds exactly two hopping windows
         # (length/slide = 2) — the same Expand shape the batch query
         # plans over raw ticks, here over the tiny hour-state table
-        out = (
+        return (
             hours.select(
                 "symbol",
                 "sum_dec",
@@ -2406,10 +2359,8 @@ def streaming_hopping_volume_parity(
                 "avg_value",
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(spark, load_events(spark, sf_dir), "event_id", per_batch, finish)
 
 
 # --------------------------------------------------------------------------
@@ -2516,45 +2467,25 @@ def streaming_time_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces its own partials instead of double-counting them
     (exactly-once effect over at-least-once execution). State is
     buckets-sized (symbols × hours), never ticks-sized."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_rollup_")
-    src_dir = f"{td}/src"
-    hours_dir = f"{td}/state_hours"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.sum(F.col("value").cast("decimal(38,6)")).alias(
-                        "sum_dec"
-                    ),
-                    F.count(F.lit(1)).alias("n_events"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{hours_dir}/batch_id={batch_id}")
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+                F.count(F.lit(1)).alias("n_events"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/state_hours/batch_id={batch_id}")
         )
-        q.awaitTermination()
+
+    def finish(scratch: str) -> DataFrame:
         hours = (
-            spark.read.parquet(hours_dir)
+            spark.read.parquet(f"{scratch}/state_hours")
             .groupBy("symbol", "hour_ts")
             .agg(
                 F.sum("sum_dec").alias("sum_dec"),
@@ -2576,7 +2507,7 @@ def streaming_time_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
 
-        out = (
+        return (
             grain(hours, "hour", F.col("hour_ts"))
             .unionByName(
                 grain(hours, "day", F.date_trunc("day", "hour_ts"))
@@ -2585,7 +2516,5 @@ def streaming_time_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 grain(hours, "week", F.date_trunc("week", "hour_ts"))
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(spark, load_events(spark, sf_dir), "event_id", per_batch, finish)

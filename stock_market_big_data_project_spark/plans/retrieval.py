@@ -845,62 +845,46 @@ def streaming_bm25_index_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per doc — zero-token docs included, keeping N identical to
     the batch count(*). At 100 TB the postings state lives tok-bucketed
     so the query-token probe is a bucket-pruned equi-join."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_documents_stream
-
-    td = tempfile.mkdtemp(prefix="stream_bm25_")
-    src = f"{td}/src"
-    postings_dir = f"{td}/state_postings"
-    docstats_dir = f"{td}/state_docstats"
-    queries_dir = f"{td}/state_queries"
-    try:
-        _docs(spark, sf_dir).repartitionByRange(3, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-        # seed queries so a workload-free replay still reads back
-        spark.createDataFrame(
-            [], "query_id long, tok string"
-        ).write.mode("overwrite").parquet(queries_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            delta = batch_df.select("doc_id", "text")
-            toks = tokens(F.col("text"))
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        queries_dir = f"{scratch}/state_queries"
+        if batch_id == 0:
+            # seed queries so a workload-free replay still reads back
+            spark.createDataFrame([], "query_id long, tok string").write.mode(
+                "overwrite"
+            ).parquet(queries_dir)
+        delta = batch_df.select("doc_id", "text")
+        toks = tokens(F.col("text"))
+        (
             delta.select(
                 "doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("tok")
-            ).groupBy("doc_id", "dl", "tok").agg(
-                F.count(F.lit(1)).alias("tf")
-            ).write.mode("append").parquet(postings_dir)
-            delta.select("doc_id", F.size(toks).alias("dl")).write.mode(
-                "append"
-            ).parquet(docstats_dir)
-            _bm25_queries(delta).write.mode("append").parquet(queries_dir)
-
-        q = (
-            read_documents_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            )
+            .groupBy("doc_id", "dl", "tok")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .write.mode("append")
+            .parquet(f"{scratch}/state_postings")
         )
-        q.awaitTermination()
-        tf = spark.read.parquet(postings_dir)
-        queries = spark.read.parquet(queries_dir)
-        tot = spark.read.parquet(docstats_dir).agg(
+        delta.select("doc_id", F.size(toks).alias("dl")).write.mode(
+            "append"
+        ).parquet(f"{scratch}/state_docstats")
+        _bm25_queries(delta).write.mode("append").parquet(queries_dir)
+
+    def finish(scratch: str) -> DataFrame:
+        tf = spark.read.parquet(f"{scratch}/state_postings")
+        queries = spark.read.parquet(f"{scratch}/state_queries")
+        tot = spark.read.parquet(f"{scratch}/state_docstats").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("dl").cast("long").alias("sum_dl"),
         )
-        out = _bm25_from_index(tf, queries, tot, _BM25_K).select(
+        return _bm25_from_index(tf, queries, tot, _BM25_K).select(
             "query_id",
             F.col("rank").cast("int").alias("rank"),
             "doc_id",
             F.round(F.col("s_dec").cast("double"), 9).alias("bm25"),
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(spark, _docs(spark, sf_dir), "doc_id", per_batch, finish)
 
 
 # --- unigram-LM tokenizer (r7) ---------------------------------------------------------

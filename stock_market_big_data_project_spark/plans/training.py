@@ -665,7 +665,6 @@ def streaming_clean_corpus_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     batch recompute does."""
     import shutil
     import tempfile
-    import uuid
 
     from ..streaming.ingest import (
         clean_corpus_stream,
@@ -673,7 +672,6 @@ def streaming_clean_corpus_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         run_to_memory,
     )
 
-    name = f"stream_corpus_{uuid.uuid4().hex[:8]}"
     td = tempfile.mkdtemp(prefix="stream_corpus_")
     try:
         # 3 contiguous doc_id ranges, written Spark-side (no driver
@@ -682,12 +680,9 @@ def streaming_clean_corpus_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         _docs(spark, sf_dir).repartitionByRange(3, "doc_id").write.mode(
             "overwrite"
         ).parquet(td)
-        run_to_memory(
-            clean_corpus_stream(read_documents_stream(spark, td)), name
-        )
+        return run_to_memory(clean_corpus_stream(read_documents_stream(spark, td)))
     finally:
         shutil.rmtree(td, ignore_errors=True)
-    return spark.table(name)
 
 
 # --- streaming near-dup dedup (the LIVE append path) -------------------------------
@@ -745,9 +740,6 @@ def streaming_near_dup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-pruned (tests/test_incremental_bucketed.py proves the probe
     plans Exchange-free on that layout); the parquet-append dirs here are
     the harness stand-in for that layout."""
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (
         incremental_lsh_candidates,
         jaccard_on_candidates,
@@ -755,50 +747,40 @@ def streaming_near_dup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
     from ..operators.text import word_shingles
-    from ..streaming.ingest import read_documents_stream
+    from ..streaming.ingest import replay
 
-    td = tempfile.mkdtemp(prefix="stream_neardup_")
-    src = f"{td}/src"
-    banded_dir = f"{td}/state_banded"
-    shingle_dir = f"{td}/state_shingles"
-    out_dir = f"{td}/pairs_out"
-    try:
-        _docs(spark, sf_dir).repartitionByRange(3, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-        # seed the emission dir so a pair-free corpus still reads back
-        spark.createDataFrame(
-            [], "id_a long, id_b long, jaccard double"
-        ).write.mode("overwrite").parquet(out_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            delta = batch_df.select("doc_id", "text")
-            sig = minhash_signatures(delta, "doc_id", "text", n=3, k=16)
-            banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
-            sh = word_shingles(delta, "doc_id", "text", n=3)
-            # append-then-probe: delta ⊆ at-rest holds, so the single
-            # probe join finds old-vs-new AND new-vs-new pairs
-            banded.write.mode("append").parquet(banded_dir)
-            sh.write.mode("append").parquet(shingle_dir)
-            at_rest = spark.read.parquet(banded_dir)
-            cand = incremental_lsh_candidates(at_rest, banded, "doc_id")
-            pairs = jaccard_on_candidates(
-                spark.read.parquet(shingle_dir), cand, "doc_id", threshold=0.3
-            )
-            pairs.write.mode("append").parquet(out_dir)
-
-        q = (
-            read_documents_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        out_dir = f"{scratch}/pairs_out"
+        if batch_id == 0:
+            # seed the emission dir so a pair-free corpus still reads back
+            spark.createDataFrame(
+                [], "id_a long, id_b long, jaccard double"
+            ).write.mode("overwrite").parquet(out_dir)
+        delta = batch_df.select("doc_id", "text")
+        sig = minhash_signatures(delta, "doc_id", "text", n=3, k=16)
+        banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
+        sh = word_shingles(delta, "doc_id", "text", n=3)
+        # append-then-probe: delta ⊆ at-rest holds, so the single
+        # probe join finds old-vs-new AND new-vs-new pairs
+        banded.write.mode("append").parquet(f"{scratch}/state_banded")
+        sh.write.mode("append").parquet(f"{scratch}/state_shingles")
+        at_rest = spark.read.parquet(f"{scratch}/state_banded")
+        cand = incremental_lsh_candidates(at_rest, banded, "doc_id")
+        pairs = jaccard_on_candidates(
+            spark.read.parquet(f"{scratch}/state_shingles"),
+            cand,
+            "doc_id",
+            threshold=0.3,
         )
-        q.awaitTermination()
-        # localCheckpoint: the result must outlive the temp dirs
-        return spark.read.parquet(out_dir).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        pairs.write.mode("append").parquet(out_dir)
+
+    return replay(
+        spark,
+        _docs(spark, sf_dir),
+        "doc_id",
+        per_batch,
+        lambda scratch: spark.read.parquet(f"{scratch}/pairs_out"),
+    )
 
 
 # --- incremental near-dup dedup (the append path) ----------------------------------
@@ -2243,36 +2225,19 @@ def streaming_stats_card_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra. This is how a 100 TB pipeline keeps its release datasheet
     current while ingesting — the stats twin of the streaming near-dup
     and SemDeDup parities."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_documents_stream
+    names = ("state_source", "state_lang", "state_md5")
 
-    td = tempfile.mkdtemp(prefix="stream_card_")
-    src = f"{td}/src"
-    dirs = [f"{td}/state_source", f"{td}/state_lang", f"{td}/state_md5"]
-    try:
-        _docs(spark, sf_dir).repartitionByRange(3, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        for part, name in zip(_card_partials(batch_df), names):
+            part.write.mode("append").parquet(f"{scratch}/{name}")
 
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            for part, path in zip(_card_partials(batch_df), dirs):
-                part.write.mode("append").parquet(path)
+    def finish(scratch: str) -> DataFrame:
+        state = [tuple(spark.read.parquet(f"{scratch}/{n}") for n in names)]
+        return _card_from_partials(spark, state)
 
-        q = (
-            read_documents_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
-        )
-        q.awaitTermination()
-        state = [tuple(spark.read.parquet(p) for p in dirs)]
-        # localCheckpoint: the result must outlive the temp dirs
-        return _card_from_partials(spark, state).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+    return replay(spark, _docs(spark, sf_dir), "doc_id", per_batch, finish)
 
 
 # --- the training-data pipeline END TO END (r7) ---------------------------------------

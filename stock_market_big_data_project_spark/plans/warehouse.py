@@ -502,54 +502,31 @@ def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch query uses, under the SAME `_SCD2_SQL` oracle.  The replay
     is range-split by event_id into three micro-batches so days span
     batches; per-tick work is delta-sized, state is days × users."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_scd2_")
-    src_dir = f"{td}/src"
-    daily_dir = f"{td}/state_daily"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(
-            3, "event_id"
-        ).write.mode("overwrite").parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            order_key = F.struct("ts", "event_id")
-            (
-                batch_df.groupBy(
-                    "user_id", F.date_trunc("day", "ts").alias("day")
-                )
-                .agg(
-                    F.max_by("value", order_key).alias("close"),
-                    F.max(order_key).alias("okey"),
-                )
-                .write.mode("append")
-                .parquet(daily_dir)
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        order_key = F.struct("ts", "event_id")
+        (
+            batch_df.groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
+            .agg(
+                F.max_by("value", order_key).alias("close"),
+                F.max(order_key).alias("okey"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .write.mode("append")
+            .parquet(f"{scratch}/state_daily")
         )
-        q.awaitTermination()
+
+    def finish(scratch: str) -> DataFrame:
         merged = (
-            spark.read.parquet(daily_dir)
+            spark.read.parquet(f"{scratch}/state_daily")
             .groupBy("user_id", "day")
             .agg(F.max_by("close", "okey").alias("close"))
             .select(
                 "user_id",
                 "day",
-                F.round(F.col("close") * 1000, 0).cast("long").alias(
-                    "close_fp"
-                ),
+                F.round(F.col("close") * 1000, 0).cast("long").alias("close_fp"),
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return _scd2_from_daily(merged).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _scd2_from_daily(merged)
+
+    return replay(spark, load_events(spark, sf_dir), "event_id", per_batch, finish)

@@ -21,14 +21,12 @@ equi-join.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_lsh_candidates
 from ..operators.imagehash import attach_near_dup_png_payload, dhash_images
+from .ingest import replay
 
 _BITS, _BANDS = 64, 4
 
@@ -60,71 +58,46 @@ def dhash_banded(fp: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def streaming_image_dhash_pairs(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_batches: int = 3,
-    max_dist: int = 3,
+    spark: SparkSession, docs: DataFrame, max_dist: int = 3
 ) -> DataFrame:
-    """Replay ``docs`` as ``n_batches`` doc_id-range micro-batches of
-    image payloads through the incremental dedup chain; returns the union
-    of per-batch emissions, (id_a, id_b, hamming_dist) — localCheckpointed
-    so it outlives the temp state dirs."""
-    from .ingest import read_documents_stream
+    """Replay ``docs`` as doc_id-range micro-batches of image payloads
+    through the incremental dedup chain (`ingest.replay`); returns the
+    union of per-batch emissions, (id_a, id_b, hamming_dist)."""
 
-    td = tempfile.mkdtemp(prefix="stream_imgdedup_")
-    src = f"{td}/src"
-    bands_dir = f"{td}/state_bands"
-    out_dir = f"{td}/out_pairs"
-    try:
-        docs.repartitionByRange(n_batches, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            fp = dhash_images(attach_near_dup_png_payload(batch_df))
-            delta = dhash_banded(fp).localCheckpoint()
-            try:
-                old = spark.read.parquet(bands_dir)
-            except Exception:  # first batch: no at-rest state yet
-                old = spark.createDataFrame(
-                    [], "doc_id bigint, dhash bigint, band int, band_hash bigint"
-                )
-            cand = incremental_lsh_candidates(
-                old, delta, "doc_id", delta_in_full=False
-            )
-            hashes = (
-                old.select("doc_id", "dhash")
-                .unionByName(delta.select("doc_id", "dhash"))
-                .distinct()
-            )
-            ha = hashes.select(
-                F.col("doc_id").alias("id_a"), F.col("dhash").alias("_ha")
-            )
-            hb = hashes.select(
-                F.col("doc_id").alias("id_b"), F.col("dhash").alias("_hb")
-            )
-            dist = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast(
-                "int"
-            )
-            (
-                cand.join(ha, "id_a")
-                .join(hb, "id_b")
-                .withColumn("hamming_dist", dist)
-                .filter(F.col("hamming_dist") <= max_dist)
-                .select("id_a", "id_b", "hamming_dist")
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-            delta.write.mode("append").parquet(bands_dir)
-
-        q = (
-            read_documents_stream(spark, src)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+    def per_batch(scratch: str, batch_df: DataFrame, batch_id: int) -> None:
+        bands_dir = f"{scratch}/state_bands"
+        if batch_id == 0:
+            # the first probe reads an empty, typed at-rest table
+            spark.createDataFrame(
+                [], "doc_id bigint, dhash bigint, band int, band_hash bigint"
+            ).write.mode("overwrite").parquet(bands_dir)
+        fp = dhash_images(attach_near_dup_png_payload(batch_df))
+        delta = dhash_banded(fp).localCheckpoint()
+        old = spark.read.parquet(bands_dir)
+        cand = incremental_lsh_candidates(old, delta, "doc_id", delta_in_full=False)
+        hashes = (
+            old.select("doc_id", "dhash")
+            .unionByName(delta.select("doc_id", "dhash"))
+            .distinct()
         )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        ha = hashes.select(F.col("doc_id").alias("id_a"), F.col("dhash").alias("_ha"))
+        hb = hashes.select(F.col("doc_id").alias("id_b"), F.col("dhash").alias("_hb"))
+        dist = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("int")
+        (
+            cand.join(ha, "id_a")
+            .join(hb, "id_b")
+            .withColumn("hamming_dist", dist)
+            .filter(F.col("hamming_dist") <= max_dist)
+            .select("id_a", "id_b", "hamming_dist")
+            .write.mode("append")
+            .parquet(f"{scratch}/out_pairs")
+        )
+        delta.write.mode("append").parquet(bands_dir)
+
+    return replay(
+        spark,
+        docs,
+        "doc_id",
+        per_batch,
+        lambda scratch: spark.read.parquet(f"{scratch}/out_pairs"),
+    )

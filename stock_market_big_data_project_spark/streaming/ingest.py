@@ -14,9 +14,25 @@ recomputes everything (README.md:23). Natively:
 
 Tests replay the events fixture through a file source and assert
 batch ≡ streaming on the same input (tests/test_streaming.py).
+
+Incremental operators prove themselves against their batch twins through
+ONE replay harness, `replay`: the input is range-split on a key into
+three parquet files and read back as a stream, one file per micro-batch,
+so nearly every group spans batches and a bitwise match against the batch
+oracle proves the cross-batch merge law. Each caller supplies only its
+``per_batch(scratch, batch_df, batch_id)`` body (the delta-sized state
+write into the scratch dir) and its ``finish(scratch)`` read-back (the
+serving query over the merged state). `run_to_memory` is the other
+harness shape, for queries whose state lives in the streaming query
+itself (watermarks, ``dropDuplicates``, ``applyInPandasWithState``).
 """
 
 from __future__ import annotations
+
+import shutil
+import tempfile
+import uuid
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -127,29 +143,6 @@ def read_documents_stream(
     )
 
 
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-
-def read_embeddings_stream(
-    spark: SparkSession, dir_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source replay of a live embedding append feed (vectors arrive
-    as documents are embedded) — the ingest side of the streaming
-    SemDeDup / incremental IVF-assignment path."""
-    return (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format("parquet")
-        .load(dir_path)
-    )
-
-
 def clean_corpus_stream(stream: DataFrame) -> DataFrame:
     """The C4-style cleaning chain on a LIVE stream: language-ID → quality
     score → threshold filter (identical expressions to the batch
@@ -186,9 +179,13 @@ def clean_corpus_stream(stream: DataFrame) -> DataFrame:
     return f.dropDuplicates(["text_md5"])
 
 
-def run_to_memory(df: DataFrame, name: str) -> None:
+def run_to_memory(df: DataFrame) -> DataFrame:
     """Drive a streaming DataFrame to completion against an in-memory sink
-    (the harness for batch≡streaming assertions)."""
+    (the harness for batch≡streaming assertions) and return the sink's
+    rows. The sink's temp view is dropped before returning: the returned
+    frame's analyzed plan holds the sink buffer itself, so the buffer
+    lives exactly as long as the result and nothing stays in the catalog."""
+    name = f"memory_sink_{uuid.uuid4().hex}"
     q = (
         df.writeStream.outputMode("append")
         .format("memory")
@@ -196,7 +193,53 @@ def run_to_memory(df: DataFrame, name: str) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+        return df.sparkSession.table(name)
+    finally:
+        df.sparkSession.catalog.dropTempView(name)
+
+
+def replay(
+    spark: SparkSession,
+    source: DataFrame,
+    split_col: str,
+    per_batch: Callable[[str, DataFrame, int], None],
+    finish: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Replay ``source`` as three ``split_col``-range micro-batches through
+    ``foreachBatch`` and return ``finish(scratch)``, materialized.
+
+    ``per_batch(scratch, batch_df, batch_id)`` runs once per micro-batch
+    and keeps its state as parquet under ``scratch``; a site that must
+    find an (empty, typed) state dir on its first read writes it when
+    ``batch_id == 0`` — the replay always runs batch 0, even for an empty
+    source, whose one range file holds no rows. ``finish(scratch)``
+    builds the served result from that state. The scratch dir is removed
+    on every exit path."""
+    scratch = tempfile.mkdtemp(prefix="replay_")
+    try:
+        src = f"{scratch}/src"
+        source.repartitionByRange(3, split_col).write.parquet(src)
+        (
+            spark.readStream.schema(source.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(lambda df, i: per_batch(scratch, df, i))
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{scratch}/_ckpt")
+            .start()
+            .awaitTermination()
+        )
+        # localCheckpoint: the served result reads state files under
+        # ``scratch``, which the finally-block deletes, so the result must
+        # be materialized first. Losing its lineage is acceptable here:
+        # the inputs it would recompute from are gone either way. On a
+        # cluster, losing an executor loses its checkpointed blocks, so a
+        # replayed result is only as durable as the executors holding it.
+        return finish(scratch).localCheckpoint()
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def session_window_agg(

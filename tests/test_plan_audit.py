@@ -75,6 +75,55 @@ def test_per_symbol_analysis_is_pack_then_map_in_pandas(spark):
         assert facts["grouped_map_in_pandas"] == 0, name
 
 
+# Top-level definitions that may still drive a stream or make a scratch
+# dir themselves. Shrink only: a new entry means a hand-rolled harness
+# where `streaming/ingest.py::replay` belongs.
+_OWN_SCRATCH_OR_STREAM = {
+    # memory-sink parities: their state lives in the streaming query
+    ("market.py", "streaming_batch_parity"),
+    ("market.py", "streaming_stateful_ffill_parity"),
+    ("training.py", "streaming_clean_corpus_parity"),
+    # feed-tick queries: a Python data source into a streaming sink
+    ("market.py", "streaming_pysource_ticks_parity"),
+    ("market.py", "streaming_manifest_export_parity"),
+    # write-then-read batch sites
+    ("market.py", "manifest_export_roundtrip"),
+    ("relational.py", "compacted_scan_pricing"),
+    ("relational.py", "zorder_compacted_scan"),
+    ("relational.py", "_zorder_scan_plan"),
+    ("relational.py", "schema_evolution_read"),
+    ("relational.py", "_schema_evolution_plan"),
+}
+
+
+def test_streaming_replays_go_through_one_helper():
+    """No plan module (nor the image-dedup stream) calls foreachBatch,
+    writeStream or tempfile.mkdtemp outside the allow-list: every
+    foreachBatch parity replays through `ingest.replay`."""
+    import ast
+    from pathlib import Path
+
+    import stock_market_big_data_project_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted((root / "plans").glob("*.py")) + [
+        root / "streaming" / "image_dedup.py"
+    ]
+    found = set()
+    for path in files:
+        for node in ast.parse(path.read_text()).body:
+            if any(
+                isinstance(n, ast.Attribute)
+                and n.attr in ("foreachBatch", "writeStream", "mkdtemp")
+                for n in ast.walk(node)
+            ):
+                found.add((path.name, getattr(node, "name", None)))
+    assert found == _OWN_SCRATCH_OR_STREAM, (
+        f"new: {sorted(found - _OWN_SCRATCH_OR_STREAM)}; "
+        f"gone (drop from the list): {sorted(_OWN_SCRATCH_OR_STREAM - found)}"
+    )
+
+
 def test_streaming_harness_list_is_current(spark):
     """Every registered query skipped by the audit must actually be a
     streaming-harness query (guards against the skip list rotting into a

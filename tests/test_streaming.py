@@ -30,8 +30,7 @@ def events_stream_dir(spark, sf_dir, tmp_path_factory):
 
 def test_streaming_hourly_agg_equals_batch(spark, sf_dir, events_stream_dir):
     stream = read_events_stream(spark, events_stream_dir)
-    run_to_memory(hourly_tumbling_agg(stream), "hourly_out")
-    got = spark.sql("SELECT * FROM hourly_out").toPandas()
+    got = run_to_memory(hourly_tumbling_agg(stream)).toPandas()
 
     ev = load_table(spark, sf_dir, "events")
     want = (
@@ -60,8 +59,7 @@ def test_streaming_hourly_agg_equals_batch(spark, sf_dir, events_stream_dir):
 
 def test_streaming_dedup(spark, events_stream_dir):
     stream = read_events_stream(spark, events_stream_dir)
-    run_to_memory(dedup_within_watermark(stream), "dedup_out")
-    got = spark.sql("SELECT * FROM dedup_out").toPandas()
+    got = run_to_memory(dedup_within_watermark(stream)).toPandas()
     assert got["event_id"].is_unique
     assert len(got) > 0
 
@@ -94,9 +92,8 @@ def test_stateful_ffill_carries_last_value(spark, tmp_path):
         .format("parquet")
         .load(str(src))
     )
-    run_to_memory(stateful_ffill(stream), "ffill_out")
     got = (
-        spark.sql("SELECT * FROM ffill_out")
+        run_to_memory(stateful_ffill(stream))
         .toPandas()
         .sort_values(["indicator", "ts"])
         .reset_index(drop=True)
@@ -115,8 +112,7 @@ def test_streaming_session_window_equals_batch(spark, sf_dir, events_stream_dir)
     )
 
     stream = read_events_stream(spark, events_stream_dir)
-    run_to_memory(session_window_agg(stream), "sessions_out")
-    got = spark.sql("SELECT * FROM sessions_out").toPandas()
+    got = run_to_memory(session_window_agg(stream)).toPandas()
 
     ev = load_table(spark, sf_dir, "events")
     want = (
@@ -157,10 +153,9 @@ def test_streaming_interval_join_equals_batch(spark, sf_dir, events_stream_dir):
 
     load_all_plans()
     stream = read_events_stream(spark, events_stream_dir)
-    run_to_memory(interval_join_streams(stream), "ij_out")
     got = {
         (r["user_id"], r["purchase_id"], r["click_id"], r["gap_micros"])
-        for r in spark.table("ij_out").collect()
+        for r in run_to_memory(interval_join_streams(stream)).collect()
     }
     want = {
         (r["user_id"], r["purchase_id"], r["click_id"], r["gap_micros"])
@@ -169,3 +164,48 @@ def test_streaming_interval_join_equals_batch(spark, sf_dir, events_stream_dir):
         ).collect()
     }
     assert got == want and len(want) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_batch_parity",
+        "streaming_stateful_ffill_parity",
+        "streaming_clean_corpus_parity",
+    ],
+)
+def test_memory_sink_queries_leave_no_catalog_views(spark, sf_dir, name):
+    """A memory-sink parity query returns its rows without leaving the
+    sink's temp view (and with it the sink buffer) in the catalog."""
+    from stock_market_big_data_project_spark.plans import get_query
+
+    before = spark.catalog.listTables()
+    out = get_query(name)(spark, sf_dir)
+    assert spark.catalog.listTables() == before
+    assert out.count() > 0
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_pagerank_edges_parity", "streaming_image_dhash_parity"]
+)
+def test_replay_removes_scratch_and_result_still_collects(
+    spark, sf_dir, monkeypatch, name
+):
+    """`ingest.replay` deletes its scratch dir before returning, and the
+    returned frame reads nothing from it."""
+    import os
+    import tempfile
+
+    from stock_market_big_data_project_spark.plans import get_query
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    out = get_query(name)(spark, sf_dir)
+    assert made and not any(os.path.exists(d) for d in made)
+    assert len(out.collect()) > 0
