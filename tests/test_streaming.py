@@ -209,3 +209,89 @@ def test_replay_removes_scratch_and_result_still_collects(
     out = get_query(name)(spark, sf_dir)
     assert made and not any(os.path.exists(d) for d in made)
     assert len(out.collect()) > 0
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """`get_spark` pins the FileSystem-API checkpoint manager for local
+    paths, and that manager still refuses to overwrite an existing log
+    entry: the offset and commit logs rely on a no-overwrite create
+    failing when the batch id is already taken."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark.sparkContext._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()), hconf
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    entry = jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+    out = manager.createAtomic(entry, False)
+    out.write(1)
+    out.close()
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH"):
+        out = manager.createAtomic(entry, False)
+        out.write(2)
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+
+
+def test_hourly_agg_restarts_from_checkpoint(spark, sf_dir, tmp_path):
+    """Stop the hourly aggregate after half of the files and restart it on
+    the same checkpoint once the rest have arrived: the sink must equal an
+    uninterrupted run over the same files, and the restarted query must
+    read only the new files' rows (offsets, commits and the window state
+    are all recovered from the checkpoint)."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from .oracle_utils import compare
+
+    events = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
+    # ts-ordered parts: windows straddle the part boundaries, so the state
+    # carried across the restart is exercised, not just the offsets
+    bounds = np.linspace(0, events.num_rows, 5).astype(int)
+    parts = [events.slice(a, b - a) for a, b in zip(bounds[:-1], bounds[1:])]
+
+    def stage(src, lo, hi):
+        src.mkdir(exist_ok=True)
+        for k in range(lo, hi):
+            path = src / f"part-{k:04d}.parquet"
+            pq.write_table(parts[k], path)
+            # the file source orders new files by modification time
+            os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))
+
+    def run(src, out):
+        q = (
+            hourly_tumbling_agg(read_events_stream(spark, str(src), max_files_per_trigger=1))
+            .writeStream.format("parquet")
+            .option("checkpointLocation", str(out / "ckpt"))
+            .option("path", str(out / "sink"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    stage(tmp_path / "whole_src", 0, len(parts))
+    assert run(tmp_path / "whole_src", tmp_path / "whole") == events.num_rows
+
+    half = len(parts) // 2
+    src, out = tmp_path / "split_src", tmp_path / "split"
+    stage(src, 0, half)
+    first = run(src, out)
+    stage(src, half, len(parts))
+    second = run(src, out)
+    assert first == sum(p.num_rows for p in parts[:half])
+    assert second == sum(p.num_rows for p in parts[half:])
+
+    want = spark.read.parquet(str(tmp_path / "whole" / "sink")).toPandas()
+    assert len(want) > 0
+    got = spark.read.parquet(str(out / "sink"))
+    assert compare(got, want, "hourly_agg_restart") == []
