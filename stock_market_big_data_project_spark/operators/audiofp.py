@@ -28,6 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 
 from .wav import decode_wav, encode_wav
@@ -78,19 +79,17 @@ def _near_dup_fixture_samples(doc_id: int) -> np.ndarray:
     return (k * s).astype(np.int16)
 
 
-def attach_near_dup_wav_payload(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_near_dup_wav_payload(df: DataFrame) -> DataFrame:
     """Real RIFF/WAVE payloads carrying the planted near-dup structure."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_wav(_near_dup_fixture_samples(int(d)), 8000)
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
@@ -101,9 +100,7 @@ def attach_near_dup_wav_payload(
     # extra exchange cost more than it saved (measured 1.21 s -> 1.64 s
     # WITH the spread; reverted). The image/video codecs are 20-40x more
     # expensive per row and do pay for spreading.
-    return df.select(id_col).mapInPandas(
-        gen, schema="doc_id bigint, payload binary"
-    )
+    return df.select(DOC_ID).mapInPandas(gen, schema="doc_id bigint, payload binary")
 
 
 def audio_fingerprints(df: DataFrame) -> DataFrame:

@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _EOW = "</w>"
+# Merge rounds between two lineage-truncating checkpoints in `train_bpe`.
+CHECKPOINT_EVERY = 4
 
 
 def _merge_pair(col: Column, pair: str, merged: str) -> Column:
@@ -50,12 +52,12 @@ def _merge_pair(col: Column, pair: str, merged: str) -> Column:
     return F.regexp_replace(col, pat, repl)
 
 
-def word_symbol_table(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_symbol_table(df: DataFrame) -> DataFrame:
     """(word, n, syms) — corpus word counts with each word exploded into
     its initial character symbols + end-of-word marker, space-joined with
     sentinel spaces. This is the one corpus-size shuffle of BPE training."""
     words = (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"))
+        df.select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -87,22 +89,17 @@ def pair_counts(words: DataFrame) -> DataFrame:
     return pairs.groupBy("pair").agg(F.sum("n").alias("total"))
 
 
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 12,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def train_bpe(df: DataFrame, n_merges: int = 12) -> DataFrame:
     """Learn `n_merges` BPE merges; returns the merge table
     (round, pair, merged, total) — 1-indexed, in learned order.
 
     Each round shuffles only the word table (vocabulary-bounded); the
     argmax row is the single driver collect. Lineage is truncated with
-    localCheckpoint every `checkpoint_every` rounds, the same idiom as
+    localCheckpoint every `CHECKPOINT_EVERY` rounds, the same idiom as
     operators/graph.py::connected_components — without it the plan nests
     `n_merges` regexp_replace calls.
     """
-    words = word_symbol_table(df, text_col).localCheckpoint()
+    words = word_symbol_table(df).localCheckpoint()
     merges = []
     for r in range(1, n_merges + 1):
         top = (
@@ -117,7 +114,7 @@ def train_bpe(
         merged = pair.replace(" ", "")
         merges.append((r, pair, merged, total))
         words = words.withColumn("syms", _merge_pair(F.col("syms"), pair, merged))
-        if r % checkpoint_every == 0:
+        if r % CHECKPOINT_EVERY == 0:
             words = words.localCheckpoint()
     spark = df.sparkSession
     return spark.createDataFrame(
@@ -125,9 +122,7 @@ def train_bpe(
     )
 
 
-def apply_bpe(
-    df: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
-) -> DataFrame:
+def apply_bpe(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Segment with a learned merge list: (doc_id, word, bpe_tokens) via
     explode — per-word char split + the merges replayed in learned order
     as a chained regexp_replace, which stays inside codegen (a transform-lambda
@@ -136,14 +131,12 @@ def apply_bpe(
     ships in the plan as literals."""
     w = df.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     return w.withColumn("bpe_tokens", _segment_col(F.col("word"), merges))
 
 
-def segment_words(
-    words: DataFrame, merges: list[tuple[str, str]], word_col: str = "word"
-) -> DataFrame:
+def segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """(word, bpe_tokens) over a word TABLE — the r12 vocabulary-scoped
     apply path (guide §1.2 "don't compute things you throw away"). The
     merge chain is a pure function of the word, so callers that only need
@@ -153,8 +146,8 @@ def segment_words(
     scales with |vocab|, not with corpus word instances (measured at
     sf0.1: 270,704 instances vs 31 distinct words)."""
     return words.select(
-        F.col(word_col).alias("word"),
-        _segment_col(F.col(word_col), merges).alias("bpe_tokens"),
+        F.col("word").alias("word"),
+        _segment_col(F.col("word"), merges).alias("bpe_tokens"),
     )
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import DOC_ID
 from .text import STOPWORDS, md5_hash64, tokens
 
 N_HASH = 64
@@ -40,14 +41,9 @@ N_HASH = 64
 N_DIMS = N_HASH + 2
 
 
-def hashed_dense_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hash: int = N_HASH,
-) -> DataFrame:
+def hashed_dense_features(df: DataFrame) -> DataFrame:
     """Dense hashing-trick features + engineered stats: the
-    `doc_feature_hashing` signed-hash aggregate (L1-normalized, n_hash
+    `doc_feature_hashing` signed-hash aggregate (L1-normalized, N_HASH
     dims) assembled to a fixed-width array<double>, with two appended
     engineered dimensions — length saturation `min(n_tokens/50, 1)` and
     stopword ratio — because a pure bag-of-hashes vector cancels exactly
@@ -55,29 +51,25 @@ def hashed_dense_features(
     the per-iteration dot product is array indexing (codegen), not a
     join; the map→array assembly is an interpreted per-doc transform but
     is paid ONCE in the staged featurization pass, never per iteration.
-    Output: (id, features[n_hash + 2])."""
+    Output: (id, features[N_HASH + 2])."""
     sc = df.sparkSession.sparkContext
-    d = df.repartition(sc.defaultParallelism, id_col)
-    tt = d.select(id_col, F.explode(tokens(F.col(text_col))).alias("tok"))
-    dim = (md5_hash64(F.concat(F.lit("fh:"), F.col("tok"))) % n_hash).cast(
-        "int"
-    )
+    d = df.repartition(sc.defaultParallelism, DOC_ID)
+    tt = d.select(DOC_ID, F.explode(tokens(F.col("text"))).alias("tok"))
+    dim = (md5_hash64(F.concat(F.lit("fh:"), F.col("tok"))) % N_HASH).cast("int")
     sgn = F.when(
         md5_hash64(F.concat(F.lit("fhs:"), F.col("tok"))) % 2 == 0, 1
     ).otherwise(-1)
     is_stop = F.col("tok").isin(*STOPWORDS).cast("long")
     agg = (
-        tt.select(
-            id_col, dim.alias("dim"), sgn.alias("sgn"), is_stop.alias("st")
-        )
-        .groupBy(id_col, "dim")
+        tt.select(DOC_ID, dim.alias("dim"), sgn.alias("sgn"), is_stop.alias("st"))
+        .groupBy(DOC_ID, "dim")
         .agg(
             F.sum("sgn").alias("s"),
             F.count(F.lit(1)).alias("cnt"),
             F.sum("st").alias("nst"),
         )
     )
-    wdoc = Window.partitionBy(id_col)
+    wdoc = Window.partitionBy(DOC_ID)
     n_tokens = F.sum("cnt").over(wdoc)
     n_stop = F.sum("nst").over(wdoc)
     sparse = (
@@ -89,7 +81,7 @@ def hashed_dense_features(
             "stop_feat", F.try_divide(n_stop.cast("double"), n_tokens)
         )
     )
-    m = sparse.groupBy(id_col).agg(
+    m = sparse.groupBy(DOC_ID).agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("dim"), F.col("w")))
         ).alias("_m"),
@@ -98,19 +90,19 @@ def hashed_dense_features(
     )
     feat = F.concat(
         F.transform(
-            F.sequence(F.lit(0), F.lit(n_hash - 1)),
+            F.sequence(F.lit(0), F.lit(N_HASH - 1)),
             lambda i: F.coalesce(F.col("_m")[i], F.lit(0.0)),
         ),
         F.array(F.col("_lf"), F.coalesce(F.col("_sf"), F.lit(0.0))),
     )
-    return m.select(id_col, feat.alias("features"))
+    return m.select(DOC_ID, feat.alias("features"))
 
 
-def _dot(col: str, w: list[float], bias: float):
+def _dot(w: list[float], bias: float):
     """w·x + b as a balanced tree of codegen multiply-adds (plan
     literals — no HOF interpretation, no join)."""
     terms = [
-        F.col(col)[i] * F.lit(w[i]) for i in range(len(w)) if w[i] != 0.0
+        F.col("features")[i] * F.lit(w[i]) for i in range(len(w)) if w[i] != 0.0
     ] or [F.lit(0.0)]
     while len(terms) > 1:
         terms = [
@@ -120,9 +112,7 @@ def _dot(col: str, w: list[float], bias: float):
     return terms[0] + F.lit(bias)
 
 
-def gradient_partials(
-    staged: DataFrame, w, b: float, n_dims: int = N_DIMS
-) -> DataFrame:
+def gradient_partials(staged: DataFrame, w, b: float) -> DataFrame:
     """One-iteration gradient as an Arrow-batched matmul pass: each batch
     emits ONE row [g_0..g_{d-1}, g_bias, loss_sum] — the per-partition
     partial gradients a distributed GD step sums. The (n × d) error
@@ -162,9 +152,6 @@ def gradient_partials(
 
 def train_logreg(
     features: DataFrame,
-    label_col: str,
-    feat_col: str = "features",
-    n_dims: int = N_DIMS,
     lr: float = 1.0,
     n_iter: int = 15,
 ) -> tuple[list[float], float, list[float]]:
@@ -177,32 +164,30 @@ def train_logreg(
     import numpy as np
 
     staged = features.select(
-        F.col(feat_col).alias("x"), F.col(label_col).cast("double").alias("y")
+        F.col("features").alias("x"), F.col("label").cast("double").alias("y")
     ).localCheckpoint(eager=True)
     n = staged.count()
-    w = [0.0] * n_dims
+    w = [0.0] * N_DIMS
     b = 0.0
     losses: list[float] = []
     for _ in range(n_iter):
-        parts = gradient_partials(staged, w, b, n_dims).collect()
+        parts = gradient_partials(staged, w, b).collect()
         tot = np.sum(
             [np.asarray(r["part"], dtype=np.float64) for r in parts], axis=0
         )
-        w = [w[i] - lr * float(tot[i]) / n for i in range(n_dims)]
-        b = b - lr * float(tot[n_dims]) / n
-        losses.append(float(tot[n_dims + 1]) / n)
+        w = [w[i] - lr * float(tot[i]) / n for i in range(N_DIMS)]
+        b = b - lr * float(tot[N_DIMS]) / n
+        losses.append(float(tot[N_DIMS + 1]) / n)
     return w, b, losses
 
 
-def predict_proba(
-    df: DataFrame, w: list[float], bias: float, feat_col: str = "features"
-):
+def predict_proba(df: DataFrame, w: list[float], bias: float):
     """Score column from trained weights — one narrow codegen map."""
-    z = _dot(feat_col, w, bias)
+    z = _dot(w, bias)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def reference_logreg(X, y, lr: float = 1.0, n_iter: int = 15):
+def reference_logreg(X, y):
     """Pure-numpy twin of train_logreg for the differential test."""
     import numpy as np
 
@@ -211,7 +196,7 @@ def reference_logreg(X, y, lr: float = 1.0, n_iter: int = 15):
     b = 0.0
     losses = []
     eps = 1e-12
-    for _ in range(n_iter):
+    for _ in range(10):
         p = 1.0 / (1.0 + np.exp(-(X @ w + b)))
         err = p - y
         losses.append(
@@ -221,8 +206,8 @@ def reference_logreg(X, y, lr: float = 1.0, n_iter: int = 15):
                 )
             )
         )
-        w = w - lr * (X.T @ err) / n
-        b = b - lr * float(err.sum()) / n
+        w = w - (X.T @ err) / n
+        b = b - float(err.sum()) / n
     return w, b, losses
 
 

@@ -13,13 +13,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def normalize_timestamp(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
+def normalize_timestamp(df: DataFrame) -> DataFrame:
     """OP-11 — ``pd.to_datetime(ts, errors='coerce')``: unparseable -> NULL.
 
     ``try_to_timestamp`` is exactly the coerce semantics (non-ANSI cast);
     invalid strings become NULL instead of raising.
     """
-    return df.withColumn(out or col, F.try_to_timestamp(F.col(col)))
+    return df.withColumn("parsed_ts", F.try_to_timestamp(F.col("ts_str")))
 
 
 def hour_floor(col: str | Column) -> Column:

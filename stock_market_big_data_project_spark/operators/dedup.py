@@ -20,24 +20,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sources.tables import DOC_ID
 from .text import exploded_tokens, md5_hash64, word_shingles
 
 MOD = 1_000_000_007  # permutation modulus: keeps a_i * h + b_i inside int64
 
+# Near-dup settings of every dedup query: word 3-gram shingles cut at
+# Jaccard 0.3, and 60-bit SimHash fingerprints matched within Hamming
+# distance 3 through 4 bands (a pair 3 bits apart agrees on some band).
+JACCARD_NGRAM = 3
+JACCARD_THRESHOLD = 0.3
+SIMHASH_BITS = 60
+SIMHASH_BANDS = 4
+SIMHASH_MAX_DIST = 3
 
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: (md5(text), kept=min(id), n_copies). One hash aggregate
     with map-side combine — the cheapest possible dedup at any scale."""
-    return df.groupBy(F.md5(F.col(text_col)).alias("text_md5")).agg(
-        F.min(id_col).alias("kept_id"), F.count(F.lit(1)).alias("n_copies")
+    return df.groupBy(F.md5(F.col("text")).alias("text_md5")).agg(
+        F.min(DOC_ID).alias("kept_id"), F.count(F.lit(1)).alias("n_copies")
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
     threshold: float = 0.5,
     max_doc_frac: float | None = None,
 ) -> DataFrame:
@@ -63,7 +70,7 @@ def ngram_jaccard_pairs(
     corpus with no hot shingles the output is row-identical to the
     unfiltered form (tests/test_skew.py).
     """
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, JACCARD_NGRAM)
     if max_doc_frac is not None:
         ndocs = df.select(F.count(F.lit(1)).alias("_ndocs"))
         hot = (
@@ -74,18 +81,16 @@ def ngram_jaccard_pairs(
             .select("shingle_hash")
         )
         sh = sh.join(F.broadcast(hot), "shingle_hash", "left_anti")
-    sh = sh.withColumn(
-        "n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
+    sh = sh.withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy(DOC_ID)))
     # No checkpoint here: the a/b branches are identical subtrees below
     # their exchanges, so Spark's ReuseExchange computes the shingle
     # pipeline once already — measured: a localCheckpoint only ADDS its
     # materialization cost (2.0 s → 2.5 s warm, +1.8 s cold at sf0.1).
     a = sh.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"), "shingle_hash"
+        F.col(DOC_ID).alias("id_a"), F.col("n_sh").alias("n_a"), "shingle_hash"
     )
     b = sh.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"), "shingle_hash"
+        F.col(DOC_ID).alias("id_b"), F.col("n_sh").alias("n_b"), "shingle_hash"
     )
     shared = (
         a.join(b, on="shingle_hash")
@@ -105,12 +110,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def jaccard_on_candidates(
-    sh: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
+def jaccard_on_candidates(sh: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact set-Jaccard restricted to a candidate pair list — the verify
     step of the LSH dedup chain (candidates → exact rescore → clusters).
 
@@ -122,14 +122,12 @@ def jaccard_on_candidates(
     thing that ever meets the shingle stream. Pairs with zero shared
     shingles drop out of the join — Jaccard 0, below any threshold.
     """
-    sized = sh.withColumn(
-        "n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
+    sized = sh.withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy(DOC_ID)))
     a = sized.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"), "shingle_hash"
+        F.col(DOC_ID).alias("id_a"), F.col("n_sh").alias("n_a"), "shingle_hash"
     )
     b = sized.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"), "shingle_hash"
+        F.col(DOC_ID).alias("id_b"), F.col("n_sh").alias("n_b"), "shingle_hash"
     )
     shared = (
         # distinct is a correctness precondition, enforced here rather than
@@ -148,14 +146,12 @@ def jaccard_on_candidates(
     )
     return (
         shared.withColumn("jaccard", F.round(jac, 6))
-        .filter(jac >= threshold)
+        .filter(jac >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5, k: int = 32
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, n: int = 5, k: int = 32) -> DataFrame:
     """(id, i, mh): k permutation minima per doc.
 
     h_i(s) = ((2i+1)·(s mod M) + 7919·i) mod M over shingle hashes s —
@@ -167,14 +163,14 @@ def minhash_signatures(
     the k-wide row into the (id, i, mh) long format — k× less data through
     the wire than permuting after an explode.
     """
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
 
     def perm(i: int):
         return F.min(
             ((2 * i + 1) * (F.col("shingle_hash") % MOD) + 7919 * i) % MOD
         ).alias(f"_mh_{i}")
 
-    wide = sh.groupBy(id_col).agg(*[perm(i) for i in range(k)])
+    wide = sh.groupBy(DOC_ID).agg(*[perm(i) for i in range(k)])
     stacked = F.explode(
         F.array(
             *[
@@ -183,8 +179,8 @@ def minhash_signatures(
             ]
         )
     ).alias("s")
-    return wide.select(id_col, stacked).select(
-        id_col, F.col("s.i").alias("i"), F.col("s.mh").alias("mh")
+    return wide.select(DOC_ID, stacked).select(
+        DOC_ID, F.col("s.i").alias("i"), F.col("s.mh").alias("mh")
     )
 
 
@@ -230,9 +226,7 @@ def _drop_hot_buckets(
     return banded.join(F.broadcast(hot), bucket_cols, "left_anti")
 
 
-def minhash_banded(
-    sig: DataFrame, id_col: str, bands: int = 8, rows: int = 4
-) -> DataFrame:
+def minhash_banded(sig: DataFrame, bands: int = 8, rows: int = 4) -> DataFrame:
     """(id, band, band_hash): the banded MinHash signature. band_hash
     folds the band's `rows` minima positionally (Σ mh·31^(i mod r) — exact
     in int64 since mh < 1e9+7 and 31³ < 3e4); the positional weights are
@@ -243,13 +237,12 @@ def minhash_banded(
     for r in range(1, rows):
         weight = weight.when(F.col("i") % rows == r, 31**r)
     return sig.groupBy(
-        id_col, (F.col("i") / rows).cast("int").alias("band")
+        DOC_ID, (F.col("i") / rows).cast("int").alias("band")
     ).agg(F.sum(F.col("mh") * weight.cast("bigint")).alias("band_hash"))
 
 
 def lsh_candidate_pairs(
     sig: DataFrame,
-    id_col: str,
     bands: int = 8,
     rows: int = 4,
     max_bucket: int | None = None,
@@ -292,18 +285,16 @@ def lsh_candidate_pairs(
     # is a per-query intermediate: the cost is a rerun, never a wrong
     # result. A deployment that cannot afford the rerun needs a reliable
     # `checkpoint()` (checkpoint dir on shared storage) at this line.
-    banded = minhash_banded(sig, id_col, bands, rows).localCheckpoint(
-        eager=False
-    )
+    banded = minhash_banded(sig, bands, rows).localCheckpoint(eager=False)
     if max_bucket is not None:
         banded = _drop_hot_buckets(banded, ["band", "band_hash"], max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
         a.join(b, on=["band", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col(f"a.{DOC_ID}") < F.col(f"b.{DOC_ID}"))
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{DOC_ID}").alias("id_a"), F.col(f"b.{DOC_ID}").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("shared_bands"))
     )
@@ -312,7 +303,6 @@ def lsh_candidate_pairs(
 def incremental_lsh_candidates(
     banded_full: DataFrame,
     banded_delta: DataFrame,
-    id_col: str,
     delta_in_full: bool = True,
 ) -> DataFrame:
     """Candidate pairs TOUCHING a corpus delta: the incremental form of
@@ -343,21 +333,21 @@ def incremental_lsh_candidates(
     count is identical — and the union of probe + self-join terms can
     never double-count a band)."""
     a, b = banded_full.alias("a"), banded_delta.alias("d")
-    lo = F.least(F.col(f"a.{id_col}"), F.col(f"d.{id_col}"))
-    hi = F.greatest(F.col(f"a.{id_col}"), F.col(f"d.{id_col}"))
+    lo = F.least(F.col(f"a.{DOC_ID}"), F.col(f"d.{DOC_ID}"))
+    hi = F.greatest(F.col(f"a.{DOC_ID}"), F.col(f"d.{DOC_ID}"))
     pairs = (
         b.join(a, ["band", "band_hash"])
-        .filter(F.col(f"a.{id_col}") != F.col(f"d.{id_col}"))
+        .filter(F.col(f"a.{DOC_ID}") != F.col(f"d.{DOC_ID}"))
         .select(lo.alias("id_a"), hi.alias("id_b"), "band")
     )
     if not delta_in_full:
         d1, d2 = banded_delta.alias("a"), banded_delta.alias("d")
         self_pairs = (
             d1.join(d2, ["band", "band_hash"])
-            .filter(F.col(f"a.{id_col}") < F.col(f"d.{id_col}"))
+            .filter(F.col(f"a.{DOC_ID}") < F.col(f"d.{DOC_ID}"))
             .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"d.{id_col}").alias("id_b"),
+                F.col(f"a.{DOC_ID}").alias("id_a"),
+                F.col(f"d.{DOC_ID}").alias("id_b"),
                 "band",
             )
         )
@@ -373,19 +363,17 @@ def simhash_hamming_pairs(
     id_col: str,
     fp_col: str = "simhash",
     bits: int = 60,
-    bands: int = 4,
-    max_dist: int = 3,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs from SimHash fingerprints via a banded hamming join.
 
-    The 60-bit fingerprint is split into ``bands`` disjoint prefixes
+    The 60-bit fingerprint is split into ``SIMHASH_BANDS`` disjoint prefixes
     (4×15 bits). By pigeonhole, two fingerprints within hamming distance
-    ``max_dist`` < ``bands`` agree on at least one whole band, so an
+    ``SIMHASH_MAX_DIST`` < ``SIMHASH_BANDS`` agree on at least one whole band, so an
     equi-join on (band, band_key) finds EVERY qualifying pair — recall is
     exact, not probabilistic — while candidates meet in hash buckets
     instead of an O(n²) cross join. Survivors are verified with
-    ``bit_count(a XOR b) <= max_dist``.
+    ``bit_count(a XOR b) <= SIMHASH_MAX_DIST``.
 
     The differential oracle is the brute-force all-pairs hamming join —
     equality proves the banding loses nothing.
@@ -397,12 +385,7 @@ def simhash_hamming_pairs(
     pigeonhole exactness for pairs whose every agreeing band is hot (run
     `exact_dedup_groups` first; `band_bucket_histogram` shows the tail).
     """
-    if max_dist >= bands:
-        raise ValueError(
-            f"pigeonhole completeness needs max_dist < bands, got "
-            f"{max_dist} >= {bands}"
-        )
-    width = bits // bands
+    width = bits // SIMHASH_BANDS
     mask = (1 << width) - 1
     banded = fp.select(
         F.col(id_col),
@@ -416,7 +399,7 @@ def simhash_hamming_pairs(
                         .bitwiseAND(F.lit(mask))
                         .alias("band_key"),
                     )
-                    for t in range(bands)
+                    for t in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -446,14 +429,14 @@ def simhash_hamming_pairs(
         # the row-local rule would change WHICH capped pairs survive.)
         no_earlier = F.lit(True)
         first_band = F.when(F.col("band") == 0, F.lit(True))
-        for t in range(1, bands):
+        for t in range(1, SIMHASH_BANDS):
             prev_window_nonzero = (
                 F.shiftright(xor, (t - 1) * width).bitwiseAND(F.lit(mask)) != 0
             )
             no_earlier = no_earlier & prev_window_nonzero
             first_band = first_band.when(F.col("band") == t, no_earlier)
         return (
-            joined.filter(first_band & (dist <= max_dist))
+            joined.filter(first_band & (dist <= SIMHASH_MAX_DIST))
             .select("id_a", "id_b", dist.alias("hamming_dist"))
         )
     cand = (
@@ -463,19 +446,17 @@ def simhash_hamming_pairs(
     )
     return (
         cand.withColumn("hamming_dist", dist)
-        .filter(F.col("hamming_dist") <= max_dist)
+        .filter(F.col("hamming_dist") <= SIMHASH_MAX_DIST)
         .select("id_a", "id_b", "hamming_dist")
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 60
-) -> DataFrame:
+def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """60-bit SimHash: per bit position j, documents vote sign((h>>j)&1);
     fingerprint sets bit j when the vote is positive. 60 bits (not 64) keeps
     the fingerprint a positive bigint in both engines.
 
-    One groupBy(doc) with `bits` conditional-sum aggregates (map-side
+    One groupBy(doc) with `SIMHASH_BITS` conditional-sum aggregates (map-side
     combinable) instead of exploding every token ×bits — the shuffle carries
     one partial-agg row per doc, not tokens×bits vote rows."""
     # Non-coalescible doc-keyed repartition BEFORE the tokenize explode
@@ -486,22 +467,20 @@ def simhash_fingerprints(
     # task a single-split source produces (measured 1.48 s -> spread at
     # sf0.1; the exchange moves (id, text) rows once either way).
     sc = df.sparkSession.sparkContext
-    df = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(df, id_col, text_col).select(
-        id_col, md5_hash64(F.col("tok")).alias("h")
-    )
+    df = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(df).select(DOC_ID, md5_hash64(F.col("tok")).alias("h"))
     vote = [
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)
             .otherwise(-1)
         ).alias(f"_s{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
-    bit_sums = toks.groupBy(id_col).agg(*vote)
+    bit_sums = toks.groupBy(DOC_ID).agg(*vote)
     fingerprint = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         bit = F.when(F.col(f"_s{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
         fingerprint = bit if fingerprint is None else fingerprint + bit
-    return bit_sums.select(F.col(id_col), fingerprint.alias("simhash"))
+    return bit_sums.select(F.col(DOC_ID), fingerprint.alias("simhash"))

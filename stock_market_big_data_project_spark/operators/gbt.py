@@ -61,25 +61,19 @@ __all__ = ["GBTParams", "Forest", "train_forest_batch"]
 
 
 class GBTParams:
-    """Hyperparameters; defaults mirror the reference's XGB settings."""
+    """Hyperparameters; defaults mirror the reference's XGB settings. The
+    tree count, depth and bin count are set per instance (the differential
+    tests shrink them); the rest are the reference's fixed values."""
 
-    def __init__(
-        self,
-        n_trees: int = 300,
-        learning_rate: float = 0.05,
-        max_depth: int = 6,
-        subsample: float = 0.8,
-        colsample: float = 0.8,
-        bins: int = 16,
-        seed: int = 42,
-    ) -> None:
+    learning_rate = 0.05
+    subsample = 0.8
+    colsample = 0.8
+    seed = 42
+
+    def __init__(self, n_trees: int = 300, max_depth: int = 6, bins: int = 16) -> None:
         self.n_trees = n_trees
-        self.learning_rate = learning_rate
         self.max_depth = max_depth
-        self.subsample = subsample
-        self.colsample = colsample
         self.bins = bins
-        self.seed = seed
 
 
 def _seqsum(a: np.ndarray) -> float:

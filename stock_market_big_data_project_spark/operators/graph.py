@@ -20,18 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Label-propagation rounds before `connected_components` gives up.
+CC_MAX_ITER = 50
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component =
     the min node id reachable through the undirected pair graph."""
     edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct()
         .localCheckpoint()
     )
@@ -41,7 +39,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # each node hears the labels of its neighbors, keeps the min
         msgs = edges.join(
             labels.withColumnRenamed("node", "v"), "v"
@@ -208,8 +206,6 @@ def label_propagation_oracle_sql(edges_cte: str, rounds: int) -> str:
 
 def wedge_pairs(
     op: DataFrame,
-    node_col: str,
-    part_col: str,
     hot_part_threshold: int | None = None,
     n_salts: int = 8,
 ) -> DataFrame:
@@ -236,10 +232,10 @@ def wedge_pairs(
     dropped, so that raises ValueError."""
     if hot_part_threshold is not None and n_salts < 1:
         raise ValueError(f"wedge_pairs: n_salts must be >= 1, got {n_salts}")
-    p = part_col
-    op = op.select(node_col, p)
-    a = op.withColumnsRenamed({node_col: "c1"})
-    b = op.withColumnsRenamed({node_col: "c2"})
+    p = "p"
+    op = op.select("c", p)
+    a = op.withColumnsRenamed({"c": "c1"})
+    b = op.withColumnsRenamed({"c": "c2"})
     if hot_part_threshold is None:
         wpairs = a.join(b, p)
     else:

@@ -37,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 
 from .png import decode_png, encode_png
@@ -130,29 +131,27 @@ def _near_dup_fixture_pixels(doc_id: int) -> np.ndarray:
     ).astype(np.uint8)
 
 
-def attach_near_dup_png_payload(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_near_dup_png_payload(df: DataFrame) -> DataFrame:
     """REAL PNG payloads carrying the planted near-dup structure."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_png(_near_dup_fixture_pixels(int(d)))
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 
 
-def dhash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dhash_images(df: DataFrame) -> DataFrame:
     """Fused decode→dHash Arrow stage: PNG payload in, (id, dhash) out.
     The payload column never leaves the stage — 64 bits per image shuffle
     onward, not the pixels."""
@@ -161,7 +160,7 @@ def dhash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "dhash": [
                         dhash_from_pixels(decode_png(bytes(p)))
                         for p in pdf["payload"]
@@ -169,4 +168,4 @@ def dhash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return df.mapInPandas(run, schema=f"{id_col} bigint, dhash bigint")
+    return df.mapInPandas(run, schema=f"{DOC_ID} bigint, dhash bigint")

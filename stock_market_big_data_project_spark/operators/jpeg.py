@@ -35,6 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 
 __all__ = [
@@ -618,22 +619,22 @@ def _jpeg_fixture_pixels(doc_id: int):
     ).astype(np.uint8)
 
 
-def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_jpeg_payload(df: DataFrame) -> DataFrame:
     """Real baseline-JPEG payloads for the fixture ids."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_jpeg(_jpeg_fixture_pixels(int(d)))
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 

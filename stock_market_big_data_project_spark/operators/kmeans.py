@@ -31,16 +31,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import EMB_DIMS, EMBEDDING, VEC_ID
 from ._planes import hyperplanes
 
 
-def _dist2(emb_col: str, cent: tuple[float, ...]):
+def _dist2(cent: tuple[float, ...]):
     """float64 ‖x − c‖² as a HOF fold (unrolled k×d Adds would exceed a
     janino method for the larger grids, see similarity.py::_ivf_best)."""
     cent_lit = F.array(*[F.lit(v) for v in cent])
     return F.aggregate(
         F.zip_with(
-            F.col(emb_col),
+            F.col(EMBEDDING),
             cent_lit,
             lambda x, v: (x.cast("double") - v) * (x.cast("double") - v),
         ),
@@ -49,45 +50,30 @@ def _dist2(emb_col: str, cent: tuple[float, ...]):
     )
 
 
-def _best(emb_col: str, centroids: list[tuple[float, ...]]):
+def _best(centroids: list[tuple[float, ...]]):
     """(dist2, cell) struct of the nearest centroid — argmin with ties →
     lowest cell, as a narrow expression usable in any projection."""
     return F.array_min(
         F.array(
             *[
-                F.struct(
-                    _dist2(emb_col, c).alias("dist2"),
-                    F.lit(i).alias("cell"),
-                )
+                F.struct(_dist2(c).alias("dist2"), F.lit(i).alias("cell"))
                 for i, c in enumerate(centroids)
             ]
         )
     )
 
 
-def assign_cells(
-    df: DataFrame,
-    centroids: list[tuple[float, ...]],
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(df: DataFrame, centroids: list[tuple[float, ...]]) -> DataFrame:
     """(id, cell, dist2) — nearest centroid per vector. Pure narrow map;
     centroids are plan literals."""
-    best = _best(emb_col, centroids)
-    return df.select(
-        id_col,
-        best["cell"].alias("cell"),
-        best["dist2"].alias("dist2"),
-    )
+    best = _best(centroids)
+    return df.select(VEC_ID, best["cell"].alias("cell"), best["dist2"].alias("dist2"))
 
 
 def kmeans_train(
     df: DataFrame,
     k: int = 8,
     n_iter: int = 5,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_dims: int = 64,
 ) -> tuple[list[tuple[float, ...]], DataFrame]:
     """Train k centroids (md5-deterministic init = the untrained IVF
     codebook, prefix 'ivf:'); returns (centroids, summary DataFrame of
@@ -96,7 +82,7 @@ def kmeans_train(
     Per iteration: one narrow assignment + ONE aggregate shuffling k×d
     rows + a k×d driver collect. The summary is computed from the final
     centroids with the same assignment expression."""
-    cents = [tuple(c) for c in hyperplanes(k, n_dims, prefix="ivf:")]
+    cents = [tuple(c) for c in hyperplanes(k, EMB_DIMS, prefix="ivf:")]
     for _ in range(n_iter):
         # Assignment is a narrow expression, so it rides the SAME
         # (collapsed) projection as the explode — no join back to the
@@ -105,11 +91,8 @@ def kmeans_train(
         # (FIELD_NOT_FOUND col1/col2); Catalyst CollapseProject merges
         # them back into one node.
         stats = (
-            df.select(
-                _best(emb_col, cents)["cell"].alias("cell"),
-                F.col(emb_col),
-            )
-            .select("cell", F.posexplode(F.col(emb_col)).alias("d", "val"))
+            df.select(_best(cents)["cell"].alias("cell"), F.col(EMBEDDING))
+            .select("cell", F.posexplode(F.col(EMBEDDING)).alias("d", "val"))
             .groupBy("cell", "d")
             .agg(
                 F.sum(F.col("val").cast("double")).alias("s"),
@@ -120,13 +103,13 @@ def kmeans_train(
         sums: dict[int, list[float]] = {}
         counts: dict[int, int] = {}
         for r in stats:
-            sums.setdefault(r["cell"], [0.0] * n_dims)[r["d"]] = r["s"]
+            sums.setdefault(r["cell"], [0.0] * EMB_DIMS)[r["d"]] = r["s"]
             counts[r["cell"]] = r["n"]
         cents = [
             tuple(v / counts[c] for v in sums[c]) if c in counts else cents[c]
             for c in range(k)
         ]
-    final = assign_cells(df, cents, id_col, emb_col)
+    final = assign_cells(df, cents)
     summary = final.groupBy("cell").agg(
         F.count(F.lit(1)).alias("size"),
         F.round(F.sum("dist2"), 6).alias("inertia"),
@@ -163,14 +146,14 @@ _DEC = "decimal(18,15)"
 _DEC_ACC = "decimal(28,15)"  # 64 terms ≤ 4.0 each — 13 integer digits spare
 
 
-def _dist2_exact(emb_col: str, cent: tuple[float, ...]):
+def _dist2_exact(cent: tuple[float, ...]):
     """Exact decimal ‖x − c‖²: per-dim squared diff in double (IEEE-
     identical cross-engine), quantized to decimal(18,15), summed exactly
     in dim order (exact ⇒ order-free)."""
     cent_lit = F.array(*[F.lit(v) for v in cent])
     return F.aggregate(
         F.zip_with(
-            F.col(emb_col),
+            F.col(EMBEDDING),
             cent_lit,
             lambda x, v: (
                 (x.cast("double") - v) * (x.cast("double") - v)
@@ -181,16 +164,13 @@ def _dist2_exact(emb_col: str, cent: tuple[float, ...]):
     )
 
 
-def _best_exact(emb_col: str, centroids: list[tuple[float, ...]]):
+def _best_exact(centroids: list[tuple[float, ...]]):
     """(dist2 decimal, cell) of the nearest centroid, ties → lowest cell;
     decimal comparison makes the argmin bit-deterministic."""
     return F.array_min(
         F.array(
             *[
-                F.struct(
-                    _dist2_exact(emb_col, c).alias("dist2"),
-                    F.lit(i).alias("cell"),
-                )
+                F.struct(_dist2_exact(c).alias("dist2"), F.lit(i).alias("cell"))
                 for i, c in enumerate(centroids)
             ]
         )
@@ -201,9 +181,6 @@ def kmeans_train_exact(
     df: DataFrame,
     k: int = 8,
     n_iter: int = 5,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_dims: int = 64,
 ) -> tuple[list[tuple[float, ...]], DataFrame]:
     """kmeans_train's decimal-exact twin; returns the same
     (centroids, summary) shape with a bit-deterministic summary
@@ -225,14 +202,11 @@ def kmeans_train_exact(
     from .spread import rebalance_for_compute
 
     df = rebalance_for_compute(df)
-    cents = [tuple(c) for c in hyperplanes(k, n_dims, prefix="ivf:")]
+    cents = [tuple(c) for c in hyperplanes(k, EMB_DIMS, prefix="ivf:")]
     for _ in range(n_iter):
         stats = (
-            df.select(
-                _best_exact(emb_col, cents)["cell"].alias("cell"),
-                F.col(emb_col),
-            )
-            .select("cell", F.posexplode(F.col(emb_col)).alias("d", "val"))
+            df.select(_best_exact(cents)["cell"].alias("cell"), F.col(EMBEDDING))
+            .select("cell", F.posexplode(F.col(EMBEDDING)).alias("d", "val"))
             .groupBy("cell", "d")
             .agg(
                 F.round(
@@ -248,12 +222,12 @@ def kmeans_train_exact(
         new = {(r["cell"], r["d"]): r["m"] for r in stats}
         # empty cells keep their previous centroid, dim for dim
         cents = [
-            tuple(new.get((c, d), cents[c][d]) for d in range(n_dims))
+            tuple(new.get((c, d), cents[c][d]) for d in range(EMB_DIMS))
             for c in range(k)
         ]
-    best = _best_exact(emb_col, cents)
+    best = _best_exact(cents)
     final = df.select(
-        F.col(id_col),
+        F.col(VEC_ID),
         best["cell"].alias("cell"),
         best["dist2"].alias("dist2"),
     )
@@ -264,7 +238,7 @@ def kmeans_train_exact(
         [
             (c, d, float(cents[c][d]))
             for c in range(k)
-            for d in range(n_dims)
+            for d in range(EMB_DIMS)
         ],
         "cell int, d int, comp double",
     )

@@ -27,13 +27,12 @@ def merge_upsert(
     base: DataFrame,
     updates: DataFrame,
     keys: Sequence[str],
-    ts_col: str,
     delete_col: str | None = None,
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Latest-version-per-key MERGE of `updates` into `base`.
 
-    - A key present in both sides keeps the row with the highest `ts_col`;
+    - A key present in both sides keeps the row with the highest `ts`;
       on an exact timestamp tie the update wins (source tag is the
       tie-break), matching MERGE's "update overrides existing" contract.
       `tiebreak` columns (e.g. a unique row id, descending) make the order
@@ -57,7 +56,7 @@ def merge_upsert(
         )
     )
     w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col).desc(),
+        F.col("ts").desc(),
         F.col("_src").desc(),
         *[F.col(c).desc() for c in tiebreak],
     )

@@ -33,16 +33,15 @@ from pyspark.sql import functions as F
 def unimax_waterfill(
     counts: DataFrame,
     key_col: str,
-    n_col: str,
     budget,
     epochs: int = 1,
 ) -> DataFrame:
     """Allocate `budget` tokens across sources, capping each at
-    `epochs * n_col`, as uniformly as possible (UniMax waterfilling).
+    `epochs * n_tokens`, as uniformly as possible (UniMax waterfilling).
 
     `budget` is a Column expression evaluated against the counts table
     (so it can be derived from the corpus itself, e.g.
-    ``(19 * F.sum(n_col).over(whole)) DIV 20`` — no 1-row join needed)
+    ``(19 * F.sum("n_tokens").over(whole)) DIV 20`` — no 1-row join needed)
     or a plain integer literal.
 
     Output: (key, n, cap, alloc) with SUM(alloc) == min(budget, SUM(cap))
@@ -59,8 +58,8 @@ def unimax_waterfill(
     # caller's column names
     base = counts.select(
         F.col(key_col).alias("key"),
-        F.col(n_col).cast("long").alias("n"),
-        (F.col(n_col).cast("long") * epochs).alias("cap"),
+        F.col("n_tokens").cast("long").alias("n"),
+        (F.col("n_tokens").cast("long") * epochs).alias("cap"),
         b.cast("long").alias("t"),
     )
     o = base.select(
@@ -107,7 +106,7 @@ def unimax_waterfill(
     )
     return fin.select(
         F.col("key").alias(key_col),
-        F.col("n").alias(n_col),
+        F.col("n").alias("n_tokens"),
         "cap",
         alloc.cast("long").alias("alloc"),
     )

@@ -28,6 +28,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 from pyspark.sql import functions as F
 
@@ -36,17 +37,16 @@ DECODED_SCHEMA = (
 )
 
 
-def attach_binary_payload(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Manufacture an OPAQUE binary column from the documents fixture (the
     utf-8 bytes of ``text``) with a typed metadata struct — the input
     shape for format-agnostic byte-level stages like
     `byte_histogram_features`. Real pipelines read (path, bytes,
     metadata) from parquet the same way; for format-DECODING stages use
     `attach_media_payload`, whose payloads are real encoded media."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         payload.alias("payload"),
         F.struct(
             F.lit("application/octet-stream").alias("mime"),
@@ -78,8 +78,13 @@ def attach_binary_payload(df: DataFrame, id_col: str = "doc_id",
 
 MEDIA_MIMES = ("image/bmp", "image/png", "audio/wav", "video/y4m")
 
+# Equal segments each decoded media payload is split into.
+SEGMENT_K = 2
+# Byte-histogram buckets: one per high nibble of a byte.
+HIST_BUCKETS = 16
 
-def attach_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+
+def attach_media_payload(df: DataFrame) -> DataFrame:
     """Mixed-mime REAL payloads for the fixture ids: doc_id % 4 selects the
     format, and the payload is genuinely encoded by that format's encoder
     (encode_bmp below / png.encode_png / wav.encode_wav / y4m.encode_y4m)
@@ -94,7 +99,7 @@ def attach_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             ids, payloads, mimes = [], [], []
-            for d in pdf[id_col]:
+            for d in pdf[DOC_ID]:
                 d = int(d)
                 mime = MEDIA_MIMES[d % 4]
                 if mime == "image/bmp":
@@ -116,7 +121,7 @@ def attach_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 {"doc_id": ids, "payload": payloads, "mime": mimes}
             )
 
-    out = spread_keys(df, id_col).mapInPandas(
+    out = spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary, mime string"
     )
     return out.select(
@@ -265,8 +270,8 @@ SEGMENTS_SCHEMA = (
 )
 
 
-def segment_media(df: DataFrame, k: int = 2) -> DataFrame:
-    """1→k segment-sampling stage over the DECODED content (not raw
+def segment_media(df: DataFrame) -> DataFrame:
+    """1→SEGMENT_K segment-sampling stage over the DECODED content (not raw
     bytes): segment j covers leading-axis units [⌊j·n/k⌋, ⌊(j+1)·n/k⌋) —
     full pixel-row bands for images, sample blocks for audio, frame
     ranges for video (the generic form of keyframe sampling). The
@@ -285,8 +290,8 @@ def segment_media(df: DataFrame, k: int = 2) -> DataFrame:
             ):
                 mime = meta["mime"]
                 _w, _h, n, arr = _decode_media(mime, payload)
-                for j in range(k):
-                    lo, hi = j * n // k, (j + 1) * n // k
+                for j in range(SEGMENT_K):
+                    lo, hi = j * n // SEGMENT_K, (j + 1) * n // SEGMENT_K
                     rows["doc_id"].append(doc_id)
                     rows["mime"].append(mime)
                     rows["seg_no"].append(j)
@@ -304,7 +309,7 @@ PIPELINE_SCHEMA = (
 )
 
 
-def multimodal_pipeline(df: DataFrame, k: int = 2) -> DataFrame:
+def multimodal_pipeline(df: DataFrame) -> DataFrame:
     """Decode → downsample → segment-sample FUSED into ONE mapInPandas
     pass, mime-dispatching every payload to its format's REAL decoder
     (BMP/PNG/WAV/y4m — no placeholder decode anywhere as of r12): per
@@ -340,8 +345,8 @@ def multimodal_pipeline(df: DataFrame, k: int = 2) -> DataFrame:
                 else:
                     ow, oh = small.shape[1], small.shape[0]
                 out_md5 = _hex_md5(small)
-                for j in range(k):
-                    lo, hi = j * n // k, (j + 1) * n // k
+                for j in range(SEGMENT_K):
+                    lo, hi = j * n // SEGMENT_K, (j + 1) * n // SEGMENT_K
                     rows["doc_id"].append(doc_id)
                     rows["mime"].append(mime)
                     rows["width"].append(w)
@@ -447,22 +452,22 @@ def _fixture_pixels(doc_id: int):
     return np.stack([r, g, b], axis=2).astype(np.uint8)
 
 
-def attach_bmp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_bmp_payload(df: DataFrame) -> DataFrame:
     """Real BMP payloads for the fixture ids (mapInPandas encode stage)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_bmp(_fixture_pixels(int(d)))
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(gen, schema="doc_id bigint, payload binary")
+    return spread_keys(df, DOC_ID).mapInPandas(gen, schema="doc_id bigint, payload binary")
 
 
 def decode_resize_bmp(df: DataFrame) -> DataFrame:
@@ -510,7 +515,7 @@ def decode_resize_bmp(df: DataFrame) -> DataFrame:
 FEATURES_SCHEMA = "doc_id bigint, bucket int, frac double"
 
 
-def byte_histogram_features(df: DataFrame, n_buckets: int = 16) -> DataFrame:
+def byte_histogram_features(df: DataFrame) -> DataFrame:
     """Feature-extraction stage — and NOT a stub: a 16-bucket byte
     histogram (bucket = high nibble) computed with one vectorized
     numpy.bincount per document, the batch shape a real embedding model
@@ -525,9 +530,9 @@ def byte_histogram_features(df: DataFrame, n_buckets: int = 16) -> DataFrame:
             ids, buckets, fracs = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 arr = np.frombuffer(payload, dtype=np.uint8)
-                counts = np.bincount(arr >> 4, minlength=n_buckets)
+                counts = np.bincount(arr >> 4, minlength=HIST_BUCKETS)
                 n = len(arr)
-                for b in range(n_buckets):
+                for b in range(HIST_BUCKETS):
                     ids.append(doc_id)
                     buckets.append(b)
                     fracs.append(counts[b] / n if n else 0.0)

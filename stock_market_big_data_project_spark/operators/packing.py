@@ -39,7 +39,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import DOC_ID
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+# Tokens per shard in `pack_token_shards`.
+SHARD_TOKEN_BUDGET = 4096
 
 
 def prefix_sum(
@@ -115,34 +120,26 @@ def prefix_sum(
     )
 
 
-def pack_token_shards(
-    df: DataFrame,
-    id_col: str,
-    count_col: str,
-    budget: int,
-) -> DataFrame:
+def pack_token_shards(df: DataFrame) -> DataFrame:
     """Assign each document to a shard by cumulative token count in
-    `id_col` order: shard k holds the docs whose cumulative-start offset
-    falls in [k·budget, (k+1)·budget). A document never splits; a shard
-    can exceed the budget by at most one document's tokens — the standard
-    greedy packing a sequential writer would produce, reproduced
-    deterministically and in parallel."""
-    cum = prefix_sum(df, id_col, count_col, out_col="cum_tokens")
+    `doc_id` order: shard k holds the docs whose cumulative-start offset
+    falls in [k·B, (k+1)·B) for B = SHARD_TOKEN_BUDGET. A document never
+    splits; a shard can exceed the budget by at most one document's
+    tokens — the standard greedy packing a sequential writer would
+    produce, reproduced deterministically and in parallel."""
+    cum = prefix_sum(df, DOC_ID, "n_tokens", out_col="cum_tokens")
     return cum.withColumn(
         "shard_id",
-        F.floor((F.col("cum_tokens") - F.col(count_col)) / F.lit(budget)).cast(
-            "int"
-        ),
+        F.floor(
+            (F.col("cum_tokens") - F.col("n_tokens")) / F.lit(SHARD_TOKEN_BUDGET)
+        ).cast("int"),
     )
 
 
 def pack_sequences_ffd(
     df: DataFrame,
-    id_col: str,
-    len_col: str,
     capacity: int = 512,
     n_shards: int = 64,
-    salt: str = "seqpack:",
 ) -> DataFrame:
     """Pack variable-length documents into fixed-`capacity` training
     sequences with first-fit-decreasing bin packing — the padding-
@@ -185,7 +182,7 @@ def pack_sequences_ffd(
     in_schema = df.schema
     out_schema = StructType(
         [
-            in_schema[id_col],
+            in_schema[DOC_ID],
             StructField("len", LongType(), False),
             StructField("shard", IntegerType(), False),
             StructField("seq", LongType(), False),
@@ -195,10 +192,10 @@ def pack_sequences_ffd(
     )
 
     sharded = df.select(
-        F.col(id_col),
-        F.col(len_col).cast("long").alias("_len"),
+        F.col(DOC_ID),
+        F.col("n_tokens").cast("long").alias("_len"),
         F.pmod(
-            md5_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
+            md5_hash64(F.concat(F.lit("seqpack:"), F.col(DOC_ID).cast("string"))),
             F.lit(n_shards),
         )
         .cast("int")
@@ -208,7 +205,7 @@ def pack_sequences_ffd(
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
         rows = sorted(
-            zip(pdf[id_col].tolist(), pdf["_len"].tolist()),
+            zip(pdf[DOC_ID].tolist(), pdf["_len"].tolist()),
             key=lambda r: (-min(r[1], capacity), r[0]),
         )
         bins: list[int] = []  # remaining capacity per bin
@@ -241,7 +238,7 @@ def pack_sequences_ffd(
             bins[placed] -= use
         return pd.DataFrame(
             out,
-            columns=[id_col, "len", "shard", "seq", "offset", "truncated"],
+            columns=[DOC_ID, "len", "shard", "seq", "offset", "truncated"],
         )
 
     return sharded.groupBy("shard").applyInPandas(pack, schema=out_schema)

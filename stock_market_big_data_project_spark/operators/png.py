@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 from pyspark.sql import functions as F
 
@@ -245,22 +246,22 @@ def _png_fixture_pixels(doc_id: int):
     return ((9 * doc_id + 5 * x + 7 * y) % 256).astype(np.uint8)
 
 
-def attach_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_png_payload(df: DataFrame) -> DataFrame:
     """Real PNG payloads for the fixture ids (mapInPandas encode stage)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_png(_png_fixture_pixels(int(d)))
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 

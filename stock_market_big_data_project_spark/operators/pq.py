@@ -28,8 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import EMB_DIMS, EMBEDDING, VEC_ID
 from ._planes import hyperplanes
 from .rounding import ambiguous_round9
+from .similarity import IVF_CELLS, IVF_PROBES, TOP_K
 
 DIST_DECIMAL = "decimal(18,15)"
 
@@ -39,21 +41,18 @@ N_CENTROIDS = 16
 _PREFIX = "pq:"
 
 
-def _codebook(
-    n_centroids: int = N_CENTROIDS,
-    n_dims: int = N_SUBSPACES * SUB_DIM,
-):
+def _codebook():
     """(centroid, global-dim) component grid; subspace j's centroid c is
     the slice [j*SUB_DIM, (j+1)*SUB_DIM)."""
-    return hyperplanes(n_centroids, n_dims, prefix=_PREFIX)
+    return hyperplanes(N_CENTROIDS, EMB_DIMS, prefix=_PREFIX)
 
 
-def _sub_dist(emb_col: str, j: int, cent_slice: tuple[float, ...]):
+def _sub_dist(j: int, cent_slice: tuple[float, ...]):
     """Exact decimal ‖x_j − c‖² over subspace j's slice: the (x−v)² terms
     are deterministic IEEE doubles, summed as decimals (HOF fold — the
     unrolled form's codegen would not fit a janino method, see
     similarity.py::_ivf_best)."""
-    subemb = F.slice(F.col(emb_col), j * SUB_DIM + 1, SUB_DIM)
+    subemb = F.slice(F.col(EMBEDDING), j * SUB_DIM + 1, SUB_DIM)
     cent_lit = F.array(*[F.lit(v) for v in cent_slice])
     return F.aggregate(
         F.zip_with(
@@ -68,8 +67,6 @@ def _sub_dist(emb_col: str, j: int, cent_slice: tuple[float, ...]):
 
 def pq_encode(
     df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
     exact: bool = False,
 ) -> DataFrame:
@@ -96,7 +93,7 @@ def pq_encode(
     differential twin the fast path is tested against
     (tests/test_pq.py::test_fast_path_equals_exact_path)."""
     if not exact:
-        return _pq_encode_arrow(df, id_col, emb_col, extra_cols)
+        return _pq_encode_arrow(df, extra_cols)
     cb = _codebook()
     per_j = F.array(
         *[
@@ -107,7 +104,6 @@ def pq_encode(
                         *[
                             F.struct(
                                 _sub_dist(
-                                    emb_col,
                                     j,
                                     cb[c][j * SUB_DIM : (j + 1) * SUB_DIM],
                                 ).alias("dist"),
@@ -122,9 +118,9 @@ def pq_encode(
         ]
     )
     return (
-        df.select(F.col(id_col), *extra_cols, F.explode(per_j).alias("s"))
+        df.select(F.col(VEC_ID), *extra_cols, F.explode(per_j).alias("s"))
         .select(
-            id_col,
+            VEC_ID,
             *extra_cols,
             F.col("s.subspace").alias("subspace"),
             F.col("s.best.code").alias("code"),
@@ -133,12 +129,7 @@ def pq_encode(
     )
 
 
-def _pq_encode_arrow(
-    df: DataFrame,
-    id_col: str,
-    emb_col: str,
-    extra_cols: tuple[str, ...],
-) -> DataFrame:
+def _pq_encode_arrow(df: DataFrame, extra_cols: tuple[str, ...]) -> DataFrame:
     """Vectorized encode fast path (see pq_encode). Guard bands:
     - argmin margin < 1e-9  → the float winner could differ from the
       decimal winner (bound ~5e-15 ≪ guard);
@@ -160,7 +151,7 @@ def _pq_encode_arrow(
     cb = np.array(_codebook(), dtype=np.float64)  # (16, 64)
     in_schema = df.schema
     out_schema = StructType(
-        [in_schema[id_col]]
+        [in_schema[VEC_ID]]
         + [in_schema[c] for c in extra_cols]
         + [
             StructField("subspace", IntegerType(), False),
@@ -174,9 +165,7 @@ def _pq_encode_arrow(
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
+            X = np.stack([np.asarray(e, dtype=np.float64) for e in pdf[EMBEDDING]])
             codes = np.empty((n, N_SUBSPACES), dtype=np.int32)
             dists = np.empty((n, N_SUBSPACES), dtype=np.float64)
             for j in range(N_SUBSPACES):
@@ -194,9 +183,7 @@ def _pq_encode_arrow(
                     code[i], out_d[i] = _exact_sub(sq[i])
                 codes[:, j] = code
                 dists[:, j] = out_d
-            out = {
-                id_col: np.repeat(pdf[id_col].to_numpy(), N_SUBSPACES),
-            }
+            out = {VEC_ID: np.repeat(pdf[VEC_ID].to_numpy(), N_SUBSPACES)}
             for c in extra_cols:
                 out[c] = np.repeat(pdf[c].to_numpy(), N_SUBSPACES)
             out["subspace"] = np.tile(
@@ -206,9 +193,7 @@ def _pq_encode_arrow(
             out["dist"] = dists.reshape(-1)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, *extra_cols, emb_col).mapInPandas(
-        gen, schema=out_schema
-    )
+    return df.select(VEC_ID, *extra_cols, EMBEDDING).mapInPandas(gen, schema=out_schema)
 
 
 def _exact_sub(sq_terms) -> tuple[int, float]:
@@ -246,9 +231,7 @@ def _exact_sub(sq_terms) -> tuple[int, float]:
     return c, rounded
 
 
-def pq_lut(
-    queries: DataFrame, id_col: str = "vec_id", emb_col: str = "embedding"
-) -> DataFrame:
+def pq_lut(queries: DataFrame) -> DataFrame:
     """Query-side ADC lookup table: (query_id, subspace, code, qdist) —
     ‖q_j − c‖² for every (subspace, centroid). |queries|×8×16 rows, built
     in one projection and small enough to broadcast."""
@@ -258,29 +241,19 @@ def pq_lut(
             F.struct(
                 F.lit(j).alias("subspace"),
                 F.lit(c).alias("code"),
-                _sub_dist(
-                    emb_col, j, cb[c][j * SUB_DIM : (j + 1) * SUB_DIM]
-                ).alias("qdist"),
+                _sub_dist(j, cb[c][j * SUB_DIM : (j + 1) * SUB_DIM]).alias("qdist"),
             )
             for j in range(N_SUBSPACES)
             for c in range(N_CENTROIDS)
         ]
     )
     return (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.explode(cells).alias("s")
-        )
+        queries.select(F.col(VEC_ID).alias("query_id"), F.explode(cells).alias("s"))
         .select("query_id", "s.subspace", "s.code", "s.qdist")
     )
 
 
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
+def pq_adc_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Asymmetric-distance top-k: (query_id, neighbor_id, adc_dist, rank).
 
     The corpus side joins its codes against the BROADCAST lookup table on
@@ -288,9 +261,9 @@ def pq_adc_topk(
     is the PQ contract at scale: the corpus scan reads 4-byte codes, never
     floats, and all float work is query-side and tiny. Ranking is
     ascending approximate L2, ties by neighbor id."""
-    lut = pq_lut(queries, id_col, emb_col)
-    codes = pq_encode(corpus, id_col, emb_col).select(
-        F.col(id_col).alias("neighbor_id"), "subspace", "code"
+    lut = pq_lut(queries)
+    codes = pq_encode(corpus).select(
+        F.col(VEC_ID).alias("neighbor_id"), "subspace", "code"
     )
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
@@ -298,10 +271,10 @@ def pq_adc_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("qdist").alias("adc"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored)
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+def _rank_topk(scored: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, adc) → top-k rows with rounded distance and
     rank (ascending approximate L2, ties by neighbor id)."""
     w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
@@ -312,41 +285,32 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
             F.round(F.col("adc").cast("double"), 9).alias("adc_dist"),
             F.row_number().over(w).alias("rank"),
         )
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
     )
 
 
-def ivfpq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    n_probe: int = 2,
-    k: int = 5,
-    n_dims: int = 64,
-) -> DataFrame:
+def ivfpq_adc_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """The composed FAISS-style index — IVF prunes WHICH vectors are read,
-    PQ compresses WHAT is read: each query probes its `n_probe` best IVF
+    PQ compresses WHAT is read: each query probes its `IVF_PROBES` best IVF
     cells and ADC-scores ONLY those cells' 4-byte codes.
 
     Corpus side stays one narrow projection: the IVF cell id (same
     expression as similarity.py::ivf_cells — never a join back to its
     output) rides along the PQ code explode, so at rest this is the
     `partitionBy(cell)` code table and a probe is partition pruning over
-    4-byte rows. Query side: (probe cells × full LUT) ≈ n_probe×8×16 rows
+    4-byte rows. Query side: (probe cells × full LUT) ≈ IVF_PROBES×8×16 rows
     per query, broadcast; the corpus-side join key (cell, subspace, code)
     restricts candidates to probed cells with zero extra plan nodes.
-    Candidate volume ≈ n·n_probe/n_cells, bytes read ≈ 1/64 of the float
+    Candidate volume ≈ n·IVF_PROBES/IVF_CELLS, bytes read ≈ 1/64 of the float
     corpus — multiplicative with the IVF pruning."""
     from ._planes import hyperplanes
     from .similarity import _exact_dot, ivf_assign
 
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
 
     def dot_c(c: int):
         cent = F.array(*[F.lit(v) for v in cents[c]])
-        return _exact_dot(F.col(emb_col), cent, None)
+        return _exact_dot(F.col(EMBEDDING), cent, None)
 
     # ascending sort on (−dot, cell) ≡ dot desc, ties → lowest cell id —
     # identical probe rule to ivf_probe_topk.
@@ -357,29 +321,26 @@ def ivfpq_adc_topk(
                     F.struct(
                         (-dot_c(c)).alias("negdot"), F.lit(c).alias("c")
                     )
-                    for c in range(n_cells)
+                    for c in range(IVF_CELLS)
                 ]
             )
         ),
         1,
-        n_probe,
+        IVF_PROBES,
     )
     q_probe = queries.select(
-        F.col(id_col).alias("query_id"), F.explode(probes).alias("_p")
+        F.col(VEC_ID).alias("query_id"), F.explode(probes).alias("_p")
     ).select("query_id", F.col("_p.c").alias("cell"))
-    qside = q_probe.join(pq_lut(queries, id_col, emb_col), "query_id")
+    qside = q_probe.join(pq_lut(queries), "query_id")
 
-    assigned = ivf_assign(corpus, cents, id_col, emb_col, keep_emb=True)
-    codes = pq_encode(
-        assigned,
-        id_col,
-        emb_col,
-        extra_cols=("cell",),
-    ).select(F.col(id_col).alias("neighbor_id"), "cell", "subspace", "code")
+    assigned = ivf_assign(corpus, cents, keep_emb=True)
+    codes = pq_encode(assigned, extra_cols=("cell",)).select(
+        F.col(VEC_ID).alias("neighbor_id"), "cell", "subspace", "code"
+    )
     scored = (
         codes.join(F.broadcast(qside), ["cell", "subspace", "code"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("qdist").alias("adc"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored)

@@ -1,5 +1,9 @@
 """Similarity search over embedding columns (SURVEY.md §7 Phase 5).
 
+Every operator reads the embeddings layout of sources/tables.py
+(``VEC_ID``, ``EMBEDDING``, ``EMB_DIMS``); the IVF, LSH and SemDeDup
+settings are the module constants below.
+
 Two tiers, as a 100 TB pipeline needs:
 
 - **brute-force cosine top-k** (the correctness baseline): broadcast the
@@ -40,9 +44,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import EMB_DIMS, EMBEDDING, VEC_ID
 from .rounding import ambiguous_round9
 
 DOT_DECIMAL = "decimal(18,15)"
+
+# IVF layout and search: md5-derived centroids, cells probed per query,
+# neighbours kept per query.
+IVF_CELLS = 8
+IVF_PROBES = 2
+TOP_K = 5
+# Sign bits packed into one `lsh_bucket` id (at most 62 fit a BIGINT).
+LSH_BUCKET_PLANES = 16
+# Banded LSH near-dups: 96 planes in 8 bands gives 12-bit band keys.
+LSH_PLANES = 96
+LSH_BANDS = 8
+LSH_THRESHOLD = 0.4
+SEMDEDUP_THRESHOLD = 0.35
 
 
 def _tree_sum(terms):
@@ -95,19 +113,15 @@ def _exact_dot(a, b, n_dims: int | None = None):
 from .spread import rebalance_for_compute as _rebalance_for_compute  # noqa: E402
 
 
-def with_norm(
-    df: DataFrame, emb_col: str = "embedding", n_dims: int | None = 64
-) -> DataFrame:
+def with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        "_norm2", _exact_dot(F.col(emb_col), F.col(emb_col), n_dims)
+        "_norm2", _exact_dot(F.col(EMBEDDING), F.col(EMBEDDING), EMB_DIMS)
     )
 
 
 def ivf_assign(
     df: DataFrame,
     cents,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
     with_dot: bool = False,
     keep_emb: bool = False,
@@ -138,9 +152,9 @@ def ivf_assign(
 
     C = np.array([list(c) for c in cents], dtype=np.float64)  # (k, d)
     in_schema = df.schema
-    fields = [in_schema[id_col]] + [in_schema[c] for c in extra_cols]
+    fields = [in_schema[VEC_ID]] + [in_schema[c] for c in extra_cols]
     if keep_emb:
-        fields.append(in_schema[emb_col])
+        fields.append(in_schema[EMBEDDING])
     fields.append(StructField("cell", IntegerType(), False))
     if with_dot:
         fields.append(StructField("cell_dot", DoubleType(), True))
@@ -176,9 +190,7 @@ def ivf_assign(
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
+            X = np.stack([np.asarray(e, dtype=np.float64) for e in pdf[EMBEDDING]])
             dots = X @ C.T  # (n, k)
             cell = dots.argmax(axis=1)  # first occurrence = lowest cell
             best = dots[np.arange(n), cell]
@@ -190,23 +202,21 @@ def ivf_assign(
                 amb = amb | ambiguous_round9(best)
             for i in np.nonzero(amb)[0]:
                 cell[i], out_dot[i] = exact_row(X[i])
-            out = {id_col: pdf[id_col].to_numpy()}
+            out = {VEC_ID: pdf[VEC_ID].to_numpy()}
             for c in extra_cols:
                 out[c] = pdf[c].to_numpy()
             if keep_emb:
-                out[emb_col] = pdf[emb_col].to_numpy()
+                out[EMBEDDING] = pdf[EMBEDDING].to_numpy()
             out["cell"] = cell.astype(np.int32)
             if with_dot:
                 out["cell_dot"] = out_dot
             yield pd.DataFrame(out)
 
-    cols = [id_col, *extra_cols, emb_col]
+    cols = [VEC_ID, *extra_cols, EMBEDDING]
     return df.select(*cols).mapInPandas(gen, schema=out_schema)
 
 
-def _collect_matrix(
-    df: DataFrame, id_col: str, emb_col: str, max_rows: int | None = None
-):
+def _collect_matrix(df: DataFrame, max_rows: int | None = None):
     """Driver-side (ids, float64 matrix) of the *small* comparison side —
     the same data volume the pure-Catalyst form would `F.broadcast`.
 
@@ -215,7 +225,7 @@ def _collect_matrix(
     memory is capped at n+1 rows, and the upstream plan executes exactly
     once — no separate `count()` pre-pass.
     """
-    sel = df.select(id_col, emb_col)
+    sel = df.select(VEC_ID, EMBEDDING)
     if max_rows is not None:
         rows = sel.limit(max_rows + 1).collect()
         if len(rows) > max_rows:
@@ -231,14 +241,7 @@ def _collect_matrix(
     return ids, mat
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-    n_dims: int | None = 64,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Top-k cosine neighbors per query (self excluded).
 
     Phase 1 — candidates: the query matrix is broadcast; each corpus Arrow
@@ -252,8 +255,8 @@ def cosine_topk(
     with ties broken by neighbor id. Output: (query_id, neighbor_id,
     cosine, rank).
     """
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    q_ids, q_mat = _collect_matrix(queries, id_col, emb_col)
+    id_t = corpus.schema[VEC_ID].dataType.simpleString()
+    q_ids, q_mat = _collect_matrix(queries)
     q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_unit))
 
@@ -262,8 +265,8 @@ def cosine_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            a_ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            a_ids = pdf[VEC_ID].to_numpy()
+            mat = np.stack(pdf[EMBEDDING].to_numpy()).astype(np.float64)
             unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
             sims = unit @ qu.T  # (batch, n_queries)
             self_mask = a_ids[:, None] == qi[None, :]
@@ -277,14 +280,14 @@ def cosine_topk(
     cand = _rebalance_for_compute(corpus).mapInPandas(
         gen, schema=f"query_id {id_t}, neighbor_id {id_t}"
     )
-    q = with_norm(queries, emb_col, n_dims).select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("_qe"),
+    q = with_norm(queries).select(
+        F.col(VEC_ID).alias("query_id"),
+        F.col(EMBEDDING).alias("_qe"),
         F.col("_norm2").alias("_qn"),
     )
-    c = with_norm(corpus, emb_col, n_dims).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("_ce"),
+    c = with_norm(corpus).select(
+        F.col(VEC_ID).alias("neighbor_id"),
+        F.col(EMBEDDING).alias("_ce"),
         F.col("_norm2").alias("_cn"),
     )
     pairs = (
@@ -293,7 +296,7 @@ def cosine_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
     cos = F.try_divide(
-        _exact_dot(F.col("_qe"), F.col("_ce"), n_dims),
+        _exact_dot(F.col("_qe"), F.col("_ce"), EMB_DIMS),
         F.sqrt(F.col("_qn")) * F.sqrt(F.col("_cn")),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -309,10 +312,7 @@ def cosine_topk(
 
 def near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     threshold: float = 0.95,
-    n_dims: int | None = 64,
     max_rows: int = 100_000,
 ) -> DataFrame:
     """All embedding pairs (a<b) with cosine ≥ threshold — the
@@ -331,8 +331,8 @@ def near_dup_pairs(
     own formula — makes the final ≥ threshold call. Bit-exact output on
     any partitioning.
     """
-    id_t = df.schema[id_col].dataType.simpleString()
-    b_ids, b_mat = _collect_matrix(df, id_col, emb_col, max_rows=max_rows)
+    id_t = df.schema[VEC_ID].dataType.simpleString()
+    b_ids, b_mat = _collect_matrix(df, max_rows=max_rows)
     b_unit = b_mat / np.linalg.norm(b_mat, axis=1, keepdims=True)
     bc = df.sparkSession.sparkContext.broadcast((b_ids, b_unit))
 
@@ -341,8 +341,8 @@ def near_dup_pairs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            a_ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            a_ids = pdf[VEC_ID].to_numpy()
+            mat = np.stack(pdf[EMBEDDING].to_numpy()).astype(np.float64)
             unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
             sims = unit @ bu.T
             keep = (sims >= threshold - 1e-6) & (a_ids[:, None] < bi[None, :])
@@ -352,17 +352,17 @@ def near_dup_pairs(
     cand = _rebalance_for_compute(df).mapInPandas(
         gen, schema=f"id_a {id_t}, id_b {id_t}"
     )
-    a = with_norm(df, emb_col, n_dims).select(
-        F.col(id_col).alias("id_a"), F.col(emb_col).alias("_ea"), F.col("_norm2").alias("_na")
+    a = with_norm(df).select(
+        F.col(VEC_ID).alias("id_a"), F.col(EMBEDDING).alias("_ea"), F.col("_norm2").alias("_na")
     )
-    b = with_norm(df, emb_col, n_dims).select(
-        F.col(id_col).alias("id_b"), F.col(emb_col).alias("_eb"), F.col("_norm2").alias("_nb")
+    b = with_norm(df).select(
+        F.col(VEC_ID).alias("id_b"), F.col(EMBEDDING).alias("_eb"), F.col("_norm2").alias("_nb")
     )
     # each join broadcasts the tiny side (candidates, then candidates+A
     # embeddings) so the corpus scan stays shuffle-free at any scale
     pairs = b.join(F.broadcast(a.join(F.broadcast(cand), "id_a")), "id_b")
     cos = F.try_divide(
-        _exact_dot(F.col("_ea"), F.col("_eb"), n_dims),
+        _exact_dot(F.col("_ea"), F.col("_eb"), EMB_DIMS),
         F.sqrt(F.col("_na")) * F.sqrt(F.col("_nb")),
     )
     return (
@@ -372,45 +372,36 @@ def near_dup_pairs(
     )
 
 
-def lsh_bucket(df: DataFrame, id_col: str = "vec_id", emb_col: str = "embedding",
-               n_planes: int = 16, n_dims: int = 64) -> DataFrame:
+def lsh_bucket(df: DataFrame) -> DataFrame:
     """Sign-bit bucket id per vector: bit p = [⟨emb, plane_p⟩ > 0].
 
     The md5-derived hyperplanes are deterministic constants, so they are
     materialized driver-side (operators/_planes.py — identical values to the
     SQL md5 formula the oracle uses) and shipped as array literals: the
-    runtime cost per vector is n_planes exact dot products, no hashing.
+    runtime cost per vector is LSH_BUCKET_PLANES exact dot products, no hashing.
     The whole thing is a narrow map — no shuffle until the final per-id sum,
     and the downstream candidate join is an equi-join on the bucket id.
     """
     from ._planes import hyperplanes
 
-    if n_planes > 62:
-        raise ValueError(
-            f"lsh_bucket packs all sign bits into one BIGINT — {n_planes} "
-            f"planes would overflow it. Use lsh_band_keys, which assembles "
-            f"band keys directly and has no width limit."
-        )
-    planes = hyperplanes(n_planes, n_dims)
+    planes = hyperplanes(LSH_BUCKET_PLANES, EMB_DIMS)
     df = _rebalance_for_compute(df)
     bucket = None
-    for p in range(n_planes):
-        bit = F.when(_plane_proj(emb_col, planes[p]) > 0,
+    for p in range(LSH_BUCKET_PLANES):
+        bit = F.when(_plane_proj(planes[p]) > 0,
                      F.lit(1 << p).cast("bigint")).otherwise(0)
         bucket = bit if bucket is None else bucket + bit
-    return df.select(id_col, bucket.alias("bucket"))
+    return df.select(VEC_ID, bucket.alias("bucket"))
 
 
-def _plane_proj(emb_col: str, components) -> "F.Column":
+def _plane_proj(components) -> "F.Column":
     """Exact decimal ⟨emb, plane⟩ as a HOF fold, NOT an unrolled Add-tree:
     n_planes × 64 terms in one Project exceeds janino's limits → codegen
     falls back to a far slower interpreted Add-tree. The fold is interpreted
     too, but compact, and _rebalance_for_compute supplies the parallelism."""
     plane_lit = F.array(*[F.lit(c) for c in components])
     return F.aggregate(
-        F.zip_with(
-            F.col(emb_col), plane_lit, lambda x, c: x.cast("double") * c
-        ),
+        F.zip_with(F.col(EMBEDDING), plane_lit, lambda x, c: x.cast("double") * c),
         F.lit(0).cast(DOT_DECIMAL),
         lambda acc, x: (acc + x.cast(DOT_DECIMAL)).cast(DOT_DECIMAL),
     ).cast("double")
@@ -431,14 +422,7 @@ def _plane_proj(emb_col: str, components) -> "F.Column":
 _SIGN_MARGIN = 1e-9
 
 
-def lsh_band_keys(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_planes: int = 96,
-    bands: int = 8,
-    n_dims: int = 64,
-) -> DataFrame:
+def lsh_band_keys(df: DataFrame, n_planes: int = 96, bands: int = 8) -> DataFrame:
     """(id, band, band_key) rows: the `n_planes` sign bits split into
     ``bands`` disjoint keys of n_planes/bands bits each.
 
@@ -458,9 +442,9 @@ def lsh_band_keys(
             f"n_planes ({n_planes}) must be a multiple of bands ({bands}): "
             f"a remainder would silently discard the high-order planes"
         )
-    planes = hyperplanes(n_planes, n_dims)
+    planes = hyperplanes(n_planes, EMB_DIMS)
     df = _rebalance_for_compute(df)
-    id_t = df.schema[id_col].dataType.simpleString()
+    id_t = df.schema[VEC_ID].dataType.simpleString()
     rows = n_planes // bands
     p_mat = np.asarray(planes, dtype=np.float64).T  # (n_dims, n_planes)
     bc = df.sparkSession.sparkContext.broadcast(p_mat)
@@ -471,7 +455,7 @@ def lsh_band_keys(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf[EMBEDDING].to_numpy()).astype(np.float64)
             proj = mat @ pm  # (batch, n_planes) — one BLAS matmul
             # projections within the sign margin of zero can't be decided
             # in float64 (see _SIGN_MARGIN proof above) — recompute JUST
@@ -484,7 +468,7 @@ def lsh_band_keys(
             n = len(pdf)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), bands),
+                    VEC_ID: np.repeat(pdf[VEC_ID].to_numpy(), bands),
                     "band": np.tile(np.arange(bands, dtype=np.int32), n),
                     "band_key": keys.reshape(-1),
                 }
@@ -494,9 +478,7 @@ def lsh_band_keys(
     # mapInPandas subtrees, so ReuseExchange runs the scan + matmul once —
     # measured: a localCheckpoint only added its materialization cost
     # (+8 s cold, +0.3 s warm at sf0.1).
-    return df.mapInPandas(
-        gen, schema=f"{id_col} {id_t}, band int, band_key bigint"
-    )
+    return df.mapInPandas(gen, schema=f"{VEC_ID} {id_t}, band int, band_key bigint")
 
 
 def _decimal_dot_positive(x_row, plane_col) -> bool:
@@ -515,21 +497,19 @@ def _decimal_dot_positive(x_row, plane_col) -> bool:
     return total > 0
 
 
-def _band_keys_decimal(
-    df: DataFrame, id_col: str, emb_col: str, planes, bands: int
-) -> DataFrame:
+def _band_keys_decimal(df: DataFrame, planes) -> DataFrame:
     """Pure-Catalyst exact-decimal band keys: one interpreted HOF fold per
     plane. The reference implementation the vectorized `lsh_band_keys` fast
     path must equal (tests cross-check them); too expensive to analyze and
     run for wide signatures, which is exactly why the fast path exists."""
     n_planes = len(planes)
-    rows = n_planes // bands
+    rows = n_planes // 4
     keys = []
-    for t in range(bands):
+    for t in range(4):
         key = None
         for j in range(rows):
             bit = F.when(
-                _plane_proj(emb_col, planes[t * rows + j]) > 0,
+                _plane_proj(planes[t * rows + j]) > 0,
                 F.lit(1 << j).cast("bigint"),
             ).otherwise(0)
             key = bit if key is None else key + bit
@@ -537,18 +517,15 @@ def _band_keys_decimal(
             F.struct(F.lit(t).cast("int").alias("band"), key.alias("band_key"))
         )
     return (
-        df.select(id_col, F.explode(F.array(*keys)).alias("bk"))
-        .select(id_col, "bk.band", "bk.band_key")
+        df.select(VEC_ID, F.explode(F.array(*keys)).alias("bk"))
+        .select(VEC_ID, "bk.band", "bk.band_key")
     )
 
 
 def lsh_band_candidates(
     df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     n_planes: int = 96,
     bands: int = 8,
-    n_dims: int = 64,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs agreeing on ≥1 whole band — the
@@ -569,11 +546,11 @@ def lsh_band_candidates(
     tail so the cap can be chosen from data."""
     from .dedup import _drop_hot_buckets
 
-    banded = lsh_band_keys(df, id_col, emb_col, n_planes, bands, n_dims)
+    banded = lsh_band_keys(df, n_planes, bands)
     if max_bucket is not None:
         banded = _drop_hot_buckets(banded, ["band", "band_key"], max_bucket)
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
+    left = banded.select(F.col(VEC_ID).alias("id_a"), "band", "band_key")
+    right = banded.select(F.col(VEC_ID).alias("id_b"), "band", "band_key")
     return (
         left.join(right, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -583,16 +560,7 @@ def lsh_band_candidates(
     )
 
 
-def lsh_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 96,
-    bands: int = 8,
-    n_dims: int = 64,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def lsh_near_dup_pairs(df: DataFrame) -> DataFrame:
     """Embedding near-dup pairs at scale: banded hyperplane-LSH candidates
     → double-precision prescreen → exact decimal rescore. No driver-side
     collect anywhere — this is the 100 TB path the brute-force
@@ -601,7 +569,7 @@ def lsh_near_dup_pairs(
     Candidates come from `lsh_band_candidates`: two vectors are candidates
     when they agree on ANY whole band of sign bits (the OR-of-ANDs LSH
     amplification — the same banding scheme MinHash-LSH uses on Jaccard).
-    The default 96 planes / 8 bands gives 12-bit band keys (4096 values
+    LSH_PLANES = 96 planes in LSH_BANDS = 8 bands give 12-bit band keys (4096 values
     per band), so bulk-pair collisions are ~(collision_prob)¹² per band —
     at 12 bits the fixture's candidate set is ~80× smaller than the old
     4-bit parameterization, whose 16 keys/band made the equi-join a
@@ -626,26 +594,22 @@ def lsh_near_dup_pairs(
     # the per-side decimal norms (otherwise each join side computes its
     # 64-term decimal norm on however few splits the scan produced)
     src = _rebalance_for_compute(df)
-    cand = lsh_band_candidates(
-        src, id_col, emb_col, n_planes, bands, n_dims, max_bucket=max_bucket
-    )
-    a = with_norm(src, emb_col, n_dims).select(
-        F.col(id_col).alias("id_a"),
-        F.col(emb_col).alias("_ea"),
+    cand = lsh_band_candidates(src, LSH_PLANES, LSH_BANDS)
+    a = with_norm(src).select(
+        F.col(VEC_ID).alias("id_a"),
+        F.col(EMBEDDING).alias("_ea"),
         F.col("_norm2").alias("_na"),
     )
-    b = with_norm(src, emb_col, n_dims).select(
-        F.col(id_col).alias("id_b"),
-        F.col(emb_col).alias("_eb"),
+    b = with_norm(src).select(
+        F.col(VEC_ID).alias("id_b"),
+        F.col(EMBEDDING).alias("_eb"),
         F.col("_norm2").alias("_nb"),
     )
     pairs = cand.join(a, "id_a").join(b, "id_b")
-    return _prescreened_exact_cosine(pairs, threshold, n_dims)
+    return _prescreened_exact_cosine(pairs, LSH_THRESHOLD)
 
 
-def _prescreened_exact_cosine(
-    pairs: DataFrame, threshold: float, n_dims: int
-) -> DataFrame:
+def _prescreened_exact_cosine(pairs: DataFrame, threshold: float) -> DataFrame:
     """(id_a, id_b, cosine ≥ threshold) from candidate pairs carrying
     `_ea`/`_eb` embedding arrays and `_na`/`_nb` decimal norms — the
     shared verify half of every two-phase near-dup operator (banded LSH,
@@ -665,14 +629,14 @@ def _prescreened_exact_cosine(
     dot64 = _tree_sum(
         [
             F.col("_ea")[i].cast("double") * F.col("_eb")[i].cast("double")
-            for i in range(n_dims)
+            for i in range(EMB_DIMS)
         ]
     )
     norm_prod = F.sqrt(F.col("_na")) * F.sqrt(F.col("_nb"))
     prescreen = dot64 >= F.lit(threshold) * norm_prod - (
         F.lit(1e-12) + F.lit(1e-9) * norm_prod
     )
-    cos = F.try_divide(_exact_dot(F.col("_ea"), F.col("_eb"), n_dims), norm_prod)
+    cos = F.try_divide(_exact_dot(F.col("_ea"), F.col("_eb"), EMB_DIMS), norm_prod)
     return (
         pairs.filter(prescreen)
         .withColumn("cosine", cos)
@@ -681,14 +645,7 @@ def _prescreened_exact_cosine(
     )
 
 
-def ivf_cells(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    n_dims: int = 64,
-    exact: bool = False,
-) -> DataFrame:
+def ivf_cells(df: DataFrame, exact: bool = False) -> DataFrame:
     """IVF coarse-quantizer assignment: cell = argmax⟨emb, centroid_c⟩.
 
     The inverted-file ANN layout: vectors land in the cell of their best
@@ -704,19 +661,19 @@ def ivf_cells(
     differential twin the fast path is tested against."""
     from ._planes import hyperplanes
 
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
     df = _rebalance_for_compute(df)
     if exact:
-        best = _ivf_best(emb_col, cents)
+        best = _ivf_best(cents)
         return df.select(
-            id_col,
+            VEC_ID,
             (-best["negc"]).cast("int").alias("cell"),
             F.round(best["dot"], 9).alias("cell_dot"),
         )
-    return ivf_assign(df, cents, id_col, emb_col, with_dot=True)
+    return ivf_assign(df, cents, with_dot=True)
 
 
-def _ivf_best(emb_col: str, cents) -> "F.Column":
+def _ivf_best(cents) -> "F.Column":
     """(best dot, −cell) struct for the IVF argmax — array_max over
     (dot, −cell) structs: lexicographic max picks the highest dot, then —
     on exact ties — the smallest cell id. The dots use the HOF decimal
@@ -727,9 +684,7 @@ def _ivf_best(emb_col: str, cents) -> "F.Column":
     def dot_c(c: int):
         cent_lit = F.array(*[F.lit(v) for v in cents[c]])
         return F.aggregate(
-            F.zip_with(
-                F.col(emb_col), cent_lit, lambda x, v: x.cast("double") * v
-            ),
+            F.zip_with(F.col(EMBEDDING), cent_lit, lambda x, v: x.cast("double") * v),
             F.lit(0).cast(DOT_DECIMAL),
             lambda acc, x: (acc + x.cast(DOT_DECIMAL)).cast(DOT_DECIMAL),
         ).cast("double")
@@ -744,17 +699,8 @@ def _ivf_best(emb_col: str, cents) -> "F.Column":
     )
 
 
-def ivf_probe_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    n_probe: int = 2,
-    k: int = 5,
-    n_dims: int = 64,
-) -> DataFrame:
-    """IVF search: probe each query's `n_probe` best cells, exact top-k
+def ivf_probe_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF search: probe each query's `IVF_PROBES` best cells, exact top-`TOP_K`
     cosine inside them only.
 
     The inverted-file read path that pairs with `ivf_cells`' write path:
@@ -762,8 +708,8 @@ def ivf_probe_topk(
     query probes its best cells by centroid inner product, and only those
     cells' vectors are scored — an equi-join on `cell` with the tiny probe
     list broadcast, so the corpus NEVER shuffles and, on a cell-partitioned
-    layout, never even scans the unprobed ~(1 − n_probe/n_cells) of its
-    partitions. Candidate volume is ≈ n·n_probe/n_cells per query vs n for
+    layout, never even scans the unprobed ~(1 − IVF_PROBES/IVF_CELLS) of its
+    partitions. Candidate volume is ≈ n·IVF_PROBES/IVF_CELLS per query vs n for
     brute force. Everything is deterministic (md5 centroids, exact decimal
     dots, ties → lowest cell / lowest neighbor id), so the approximate
     search still has a bit-exact oracle.
@@ -772,19 +718,10 @@ def ivf_probe_topk(
     appends) + `ivf_topk_from_index` (the serving path) so the batch
     search and the streaming index-maintenance parity score through ONE
     definition."""
-    return ivf_topk_from_index(
-        ivf_index(corpus, id_col, emb_col, n_cells, n_dims),
-        queries, id_col, emb_col, n_cells, n_probe, k, n_dims,
-    )
+    return ivf_topk_from_index(ivf_index(corpus), queries)
 
 
-def ivf_index(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    n_dims: int = 64,
-) -> DataFrame:
+def ivf_index(corpus: DataFrame) -> DataFrame:
     """The at-rest IVF index rows: (neighbor_id, _ce, _cn, cell).
 
     Cell assigned inline (same semantics as ivf_cells, via the guarded
@@ -798,38 +735,27 @@ def ivf_index(
     lives ``partitionBy(cell)`` so probes become partition pruning."""
     from ._planes import hyperplanes
 
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
     return ivf_assign(
-        with_norm(_rebalance_for_compute(corpus), emb_col, n_dims),
+        with_norm(_rebalance_for_compute(corpus)),
         cents,
-        id_col,
-        emb_col,
         extra_cols=("_norm2",),
         keep_emb=True,
     ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("_ce"),
+        F.col(VEC_ID).alias("neighbor_id"),
+        F.col(EMBEDDING).alias("_ce"),
         F.col("_norm2").alias("_cn"),
         "cell",
     )
 
 
-def ivf_topk_from_index(
-    index: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    n_probe: int = 2,
-    k: int = 5,
-    n_dims: int = 64,
-) -> DataFrame:
+def ivf_topk_from_index(index: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF serving path: probe the queries' best cells against an
     ALREADY-BUILT index frame (`ivf_index`'s columns) and exact-rescore
     only the probed cells' vectors."""
     from ._planes import hyperplanes
 
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
 
     # HOF (not unrolled) dots on the 10-row query side: interpreted eval is
     # irrelevant at that cardinality, and the compact expression tree keeps
@@ -837,7 +763,7 @@ def ivf_topk_from_index(
     # time for zero execution gain.
     def dot_c(c: int):
         cent = F.array(*[F.lit(v) for v in cents[c]])
-        return _exact_dot(F.col(emb_col), cent, None)
+        return _exact_dot(F.col(EMBEDDING), cent, None)
 
     # ascending sort on (−dot, cell) ≡ dot desc, ties → lowest cell id
     probes = F.slice(
@@ -845,19 +771,19 @@ def ivf_topk_from_index(
             F.array(
                 *[
                     F.struct((-dot_c(c)).alias("negdot"), F.lit(c).alias("c"))
-                    for c in range(n_cells)
+                    for c in range(IVF_CELLS)
                 ]
             )
         ),
         1,
-        n_probe,
+        IVF_PROBES,
     )
     q_probe = (
-        with_norm(queries.select(id_col, emb_col), emb_col, n_dims)
+        with_norm(queries.select(VEC_ID, EMBEDDING))
         .withColumn("_p", F.explode(probes))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("_qe"),
+            F.col(VEC_ID).alias("query_id"),
+            F.col(EMBEDDING).alias("_qe"),
             F.col("_norm2").alias("_qn"),
             F.col("_p.c").alias("cell"),
         )
@@ -875,7 +801,7 @@ def ivf_topk_from_index(
         _tree_sum(
             [
                 F.col("_qe")[i].cast("double") * F.col("_ce")[i].cast("double")
-                for i in range(n_dims)
+                for i in range(EMB_DIMS)
             ]
         ),
         F.sqrt(F.col("_qn")) * F.sqrt(F.col("_cn")),
@@ -885,7 +811,7 @@ def ivf_topk_from_index(
         .orderBy(F.desc("_acos"), F.col("neighbor_id"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    kth = F.nth_value(F.col("_acos"), k).over(w_approx)
+    kth = F.nth_value(F.col("_acos"), TOP_K).over(w_approx)
     survivors = (
         pairs.select("query_id", "neighbor_id", "_qe", "_qn", "_ce", "_cn",
                      approx.alias("_acos"))
@@ -893,26 +819,19 @@ def ivf_topk_from_index(
         .filter(F.col("_kth").isNull() | (F.col("_acos") >= F.col("_kth") - F.lit(1e-9)))
     )
     cos = F.try_divide(
-        _exact_dot(F.col("_qe"), F.col("_ce"), n_dims),
+        _exact_dot(F.col("_qe"), F.col("_ce"), EMB_DIMS),
         F.sqrt(F.col("_qn")) * F.sqrt(F.col("_cn")),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
         survivors.select("query_id", "neighbor_id", cos.alias("cosine"))
         .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"), "rank")
     )
 
 
-def semdedup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    threshold: float = 0.35,
-    n_dims: int = 64,
-) -> DataFrame:
+def semdedup_pairs(df: DataFrame) -> DataFrame:
     """Within-cluster semantic-duplicate pairs — the pair half of SemDeDup
     (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
     through semantic deduplication"): vectors are bucketed by their
@@ -933,36 +852,25 @@ def semdedup_pairs(
     from ._planes import hyperplanes
 
     src = _rebalance_for_compute(df)
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
-    assigned = with_norm(
-        ivf_assign(src, cents, id_col, emb_col, keep_emb=True),
-        emb_col,
-        n_dims,
-    )
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
+    assigned = with_norm(ivf_assign(src, cents, keep_emb=True))
     a = assigned.select(
-        F.col(id_col).alias("id_a"),
+        F.col(VEC_ID).alias("id_a"),
         "cell",
-        F.col(emb_col).alias("_ea"),
+        F.col(EMBEDDING).alias("_ea"),
         F.col("_norm2").alias("_na"),
     )
     b = assigned.select(
-        F.col(id_col).alias("id_b"),
+        F.col(VEC_ID).alias("id_b"),
         "cell",
-        F.col(emb_col).alias("_eb"),
+        F.col(EMBEDDING).alias("_eb"),
         F.col("_norm2").alias("_nb"),
     )
     pairs = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
-    return _prescreened_exact_cosine(pairs, threshold, n_dims)
+    return _prescreened_exact_cosine(pairs, SEMDEDUP_THRESHOLD)
 
 
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 8,
-    threshold: float = 0.35,
-    n_dims: int = 64,
-) -> DataFrame:
+def semantic_dedup(df: DataFrame) -> DataFrame:
     """Full SemDeDup: within-cell semantic-dup pairs → connected
     components → keep ONE representative per duplicate group — the
     member with the LOWEST similarity to its cell centroid (the paper's
@@ -979,22 +887,22 @@ def semantic_dedup(
     from .graph import connected_components
 
     src = _rebalance_for_compute(df)
-    cents = hyperplanes(n_cells, n_dims, prefix="ivf:")
-    assigned = ivf_assign(src, cents, id_col, emb_col, with_dot=True)
-    pairs = semdedup_pairs(df, id_col, emb_col, n_cells, threshold, n_dims)
+    cents = hyperplanes(IVF_CELLS, EMB_DIMS, prefix="ivf:")
+    assigned = ivf_assign(src, cents, with_dot=True)
+    pairs = semdedup_pairs(df)
     cc = connected_components(pairs)
     labeled = (
-        assigned.join(cc, assigned[id_col] == cc.node, "left")
+        assigned.join(cc, assigned[VEC_ID] == cc.node, "left")
         .select(
-            id_col,
+            VEC_ID,
             "cell",
             "cell_dot",
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
+            F.coalesce("component", F.col(VEC_ID)).alias("cluster_id"),
         )
     )
-    w = Window.partitionBy("cluster_id").orderBy(F.asc("cell_dot"), F.asc(id_col))
+    w = Window.partitionBy("cluster_id").orderBy(F.asc("cell_dot"), F.asc(VEC_ID))
     return labeled.select(
-        id_col,
+        VEC_ID,
         "cell",
         "cell_dot",
         "cluster_id",
@@ -1003,7 +911,7 @@ def semantic_dedup(
 
 
 def pca_power_components(
-    cov_rows: list, dim: int = 64, n_components: int = 2, n_iter: int = 50_000
+    cov_rows: list, n_components: int = 2, n_iter: int = 50_000
 ) -> "np.ndarray":
     """Top-k principal components by power iteration with deflation, from
     the COLLECTED upper-triangle covariance rows (d1, d2, cov) — the
@@ -1017,7 +925,7 @@ def pca_power_components(
     made positive (eigenvectors are sign-ambiguous)."""
     from ._planes import hyperplane_component
 
-    c = np.zeros((dim, dim))
+    c = np.zeros((EMB_DIMS, EMB_DIMS))
     for r in cov_rows:
         # cov is NULL when the corpus has a single vector (sample
         # covariance undefined at n=1) — treat as the zero matrix so the
@@ -1027,9 +935,7 @@ def pca_power_components(
         c[r["d2"], r["d1"]] = v
     comps = []
     for k in range(n_components):
-        v = np.array(
-            [hyperplane_component(k, d, "pca:") for d in range(dim)]
-        )
+        v = np.array([hyperplane_component(k, d, "pca:") for d in range(EMB_DIMS)])
         v /= np.linalg.norm(v)
         for _ in range(n_iter):
             w = c @ v
@@ -1062,8 +968,6 @@ def pca_project(
     emb: DataFrame,
     components: "np.ndarray",
     mean: "np.ndarray | None" = None,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Project every embedding onto the given components — one Arrow
     matmul pass ((batch − mean) @ compsᵀ), the XᵀX-partials production
@@ -1072,11 +976,11 @@ def pca_project(
     covariance, so true PCA scores require subtracting the same mean —
     omit it only when you want raw projections. Output: (id, pc1..pck)
     rounded to 6dp."""
-    id_t = emb.schema[id_col].dataType.simpleString()
+    id_t = emb.schema[VEC_ID].dataType.simpleString()
     k = components.shape[0]
     comps = components.copy()
     mu = None if mean is None else np.asarray(mean, dtype=np.float64)
-    out_schema = f"{id_col} {id_t}, " + ", ".join(
+    out_schema = f"{VEC_ID} {id_t}, " + ", ".join(
         f"pc{i + 1} double" for i in range(k)
     )
 
@@ -1084,15 +988,15 @@ def pca_project(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf[EMBEDDING].to_numpy()).astype(np.float64)
             if mu is not None:
                 mat = mat - mu[None, :]
             proj = np.round(mat @ comps.T, 6)
-            out = {id_col: pdf[id_col].to_numpy()}
+            out = {VEC_ID: pdf[VEC_ID].to_numpy()}
             for i in range(k):
                 out[f"pc{i + 1}"] = proj[:, i]
             yield pd.DataFrame(out)
 
-    return _rebalance_for_compute(emb.select(id_col, emb_col)).mapInPandas(
+    return _rebalance_for_compute(emb.select(VEC_ID, EMBEDDING)).mapInPandas(
         gen, schema=out_schema
     )

@@ -47,19 +47,6 @@ def spread_keys(df: DataFrame, *cols: str) -> DataFrame:
     return df.select(*cols).repartition(sc.defaultParallelism)
 
 
-def _parse_bytes(v: str) -> int:
-    """Spark byte-size conf string → bytes ('64m', '128k', '134217728')."""
-    s = str(v).strip().lower()
-    for suffix, mult in (
-        ("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),
-        ("kb", 1 << 10), ("p", 1 << 50), ("t", 1 << 40), ("g", 1 << 30),
-        ("m", 1 << 20), ("k", 1 << 10), ("b", 1),
-    ):
-        if s.endswith(suffix):
-            return int(s[: -len(suffix)]) * mult
-    return int(s)
-
-
 def rebalance_for_compute(df: DataFrame) -> DataFrame:
     """Ensure a compute-bound operator gets cluster-wide parallelism.
 
@@ -80,17 +67,13 @@ def rebalance_for_compute(df: DataFrame) -> DataFrame:
     # logical plan's file index (no physical planning, no RDD
     # materialization); sizes come from one listStatus per parent
     # directory — the same metadata the scan's own file index already
-    # holds. A plan with no file source (post-shuffle input) is left
-    # alone: its width is already governed by shuffle.partitions.
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
+    # holds. A plan with no file source (post-shuffle input) lists no
+    # files and is left alone: its width is already governed by
+    # shuffle.partitions.
+    files = df.inputFiles()
     if not files:
         return df
-    max_pb = _parse_bytes(
-        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
+    max_pb = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     from collections import defaultdict
     from urllib.parse import urlparse
 

@@ -156,19 +156,17 @@ def fuzzy_join_dist1(
     )
 
 
-def oracle_deletion_keys_cte(
-    src_cte: str, id_col: str, name_col: str
-) -> str:
+def oracle_deletion_keys_cte(src_cte: str) -> str:
     """DuckDB twin of `deletion_keys`: a SELECT body producing
     (id, name, key) from CTE `src_cte` — kept in lockstep with the Spark
     helper so oracles replay the identical blocking."""
     return f"""
-      SELECT {id_col} AS id, {name_col} AS name,
-             CASE WHEN i = 0 THEN {name_col}
-                  ELSE substr({name_col}, 1, i - 1) || substr({name_col}, i + 1)
+      SELECT id AS id, name AS name,
+             CASE WHEN i = 0 THEN name
+                  ELSE substr(name, 1, i - 1) || substr(name, i + 1)
              END AS key
       FROM {src_cte},
-           LATERAL unnest(generate_series(0, length({name_col}))) AS _t(i)
+           LATERAL unnest(generate_series(0, length(name))) AS _t(i)
     """
 
 
@@ -228,9 +226,7 @@ def fuzzy_join_dist2(
     )
 
 
-def oracle_deletion_keys_depth2_cte(
-    src_cte: str, id_col: str, name_col: str
-) -> str:
+def oracle_deletion_keys_depth2_cte(src_cte: str) -> str:
     """DuckDB twin of `deletion_keys_depth2` — (i, j) pairs with the
     identical (0,0)/(i,0)/(i,j>i) encoding and delete formulas."""
     return f"""
@@ -242,8 +238,8 @@ def oracle_deletion_keys_depth2_cte(
                        || substr(name, j + 1)
              END AS key
       FROM (
-        SELECT {id_col} AS id, {name_col} AS name,
-               unnest(generate_series(0, length({name_col}))) AS i
+        SELECT id AS id, name AS name,
+               unnest(generate_series(0, length(name))) AS i
         FROM {src_cte}
       ), LATERAL unnest(
         generate_series(0, CASE WHEN i = 0 THEN 0 ELSE length(name) END)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import DOC_ID
+
 # Deterministic marker vocabularies for the n-gram/stopword language-ID
 # heuristic. The fixture corpus shares one vocabulary, so markers are chosen
 # for determinism, not linguistic truth.
@@ -27,6 +29,9 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "on")
+
+# Tokens per chunk in `token_chunks`.
+CHUNK_TOKENS = 16
 
 
 def md5_hash64(col: Column | str) -> Column:
@@ -46,18 +51,16 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
 
 
-def exploded_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def exploded_tokens(df: DataFrame) -> DataFrame:
     """(id, pos, tok) — position is 1-based so the DuckDB mirror can zip
     ``unnest(toks)`` with ``unnest(range(1, len+1))``."""
     return df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col)).alias("pos0", "tok"),
-    ).select(id_col, (F.col("pos0") + 1).alias("pos"), "tok")
+        F.col(DOC_ID),
+        F.posexplode(tokens("text")).alias("pos0", "tok"),
+    ).select(DOC_ID, (F.col("pos0") + 1).alias("pos"), "tok")
 
 
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5
-) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 5) -> DataFrame:
     """Distinct word n-gram shingles per document, pre-hashed to 60-bit ints.
 
     Relational formulation (posexplode + lead window) instead of array
@@ -78,28 +81,28 @@ def word_shingles(
     # serializes it; measured 2.7 s → 1.5 s on dedup_ngram_jaccard at
     # sf0.1 (same pattern as the Granger UDTF chain).
     sc = df.sparkSession.sparkContext
-    docs = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(docs, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    docs = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(docs)
+    w = Window.partitionBy(DOC_ID).orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
     shingle = F.concat_ws(" ", *parts)
     out = toks.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.when(F.lead("tok", n - 1).over(w).isNotNull(), shingle).alias("shingle"),
     ).filter(F.col("shingle").isNotNull())
     return out.select(
-        id_col, md5_hash64(F.col("shingle")).alias("shingle_hash")
+        DOC_ID, md5_hash64(F.col("shingle")).alias("shingle_hash")
     ).distinct()
 
 
-def oracle_word_shingles(n: int = 5, source: str = "documents") -> str:
+def oracle_word_shingles(n: int = 5) -> str:
     """DuckDB mirror of word_shingles → (doc_id, shingle_hash)."""
     parts = ", ".join(["tok"] + [f"lead(tok, {k}) OVER w" for k in range(1, n)])
     return f"""
     WITH toks AS (
       SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok,
              unnest(range(1, len(string_split_regex(trim(text), '\\s+')) + 1)) AS pos
-      FROM {source}
+      FROM documents
     ), sh AS (
       SELECT doc_id,
              CASE WHEN lead(tok, {n - 1}) OVER w IS NOT NULL
@@ -148,7 +151,7 @@ def quality_score(text_col: Column) -> Column:
     )
 
 
-def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition/diversity signals per document (Rae et al.
     2021 §A1.1 adapted to the whitespace-token surface): type-token ratio,
     fraction of tokens covered by the most frequent bigram, and fraction of
@@ -163,12 +166,12 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # Same compute-bound-stage idiom as word_shingles: a non-coalescible
     # hash repartition on the doc id feeds the gram window AND (by the
     # subset rule) every downstream (doc)/(doc, gram) aggregation.
-    docs = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(docs, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    docs = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(docs)
+    w = Window.partitionBy(DOC_ID).orderBy("pos")
     nxt1, nxt2 = F.lead("tok", 1).over(w), F.lead("tok", 2).over(w)
     grams = toks.select(
-        id_col,
+        DOC_ID,
         "tok",
         F.when(nxt1.isNotNull(), F.concat_ws(" ", F.col("tok"), nxt1)).alias(
             "bigram"
@@ -177,22 +180,22 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             nxt2.isNotNull(), F.concat_ws(" ", F.col("tok"), nxt1, nxt2)
         ).alias("trigram"),
     )
-    tok_stats = grams.groupBy(id_col).agg(
+    tok_stats = grams.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.countDistinct("tok").alias("n_distinct"),
     )
     bi = (
         grams.filter(F.col("bigram").isNotNull())
-        .groupBy(id_col, "bigram")
+        .groupBy(DOC_ID, "bigram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.max("c").alias("top_bi"))
     )
     tri = (
         grams.filter(F.col("trigram").isNotNull())
-        .groupBy(id_col, "trigram")
+        .groupBy(DOC_ID, "trigram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.sum(
                 F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0))
@@ -201,10 +204,10 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
     )
     return (
-        tok_stats.join(bi, id_col, "left")
-        .join(tri, id_col, "left")
+        tok_stats.join(bi, DOC_ID, "left")
+        .join(tri, DOC_ID, "left")
         .select(
-            id_col,
+            DOC_ID,
             "n_tokens",
             F.round(F.col("n_distinct") / F.col("n_tokens"), 6).alias("ttr"),
             # 2·top_bi can exceed n_tokens on overlapping repeated runs
@@ -224,22 +227,20 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def token_chunks(
-    df: DataFrame, id_col: str, text_col: str, size: int = 16
-) -> DataFrame:
-    """Split each document into disjoint `size`-token chunks — the unit of
+def token_chunks(df: DataFrame) -> DataFrame:
+    """Split each document into disjoint `CHUNK_TOKENS`-token chunks — the unit of
     C4-style sub-document dedup (Raffel et al. 2020 dedupe three-sentence
     spans; this corpus has no sentence marks, so spans are fixed token
     windows). Returns (id, chunk_idx, chunk, chunk_hash); reassembly order
     is chunk_idx. One shuffle (the doc-id repartition feeding both the
     position window and the chunk aggregate)."""
     sc = df.sparkSession.sparkContext
-    docs = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(docs, id_col, text_col)
+    docs = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(docs)
     chunked = toks.withColumn(
-        "chunk_idx", F.expr(f"CAST((pos - 1) DIV {size} AS INT)")
+        "chunk_idx", F.expr(f"CAST((pos - 1) DIV {CHUNK_TOKENS} AS INT)")
     )
-    chunks = chunked.groupBy(id_col, "chunk_idx").agg(
+    chunks = chunked.groupBy(DOC_ID, "chunk_idx").agg(
         F.concat_ws(
             " ",
             F.transform(
@@ -251,13 +252,7 @@ def token_chunks(
     return chunks.withColumn("chunk_hash", md5_hash64(F.col("chunk")))
 
 
-def context_windows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    size: int = 32,
-    stride: int = 24,
-) -> DataFrame:
+def context_windows(df: DataFrame, size: int = 32, stride: int = 24) -> DataFrame:
     """Split documents into overlapping `size`-token context windows at
     `stride` (the over-length-document preparation step before sequence
     packing: window w covers 1-based token positions
@@ -285,19 +280,19 @@ def context_windows(
     if stride <= 0 or size <= 0:
         raise ValueError("context_windows requires positive size and stride")
     sc = df.sparkSession.sparkContext
-    docs = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(docs, id_col, text_col)
+    docs = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(docs)
     w_hi = F.expr(f"CAST((pos - 1) DIV {stride} AS INT)")
     w_lo = F.when(F.col("pos") <= size, F.lit(0)).otherwise(
         F.expr(f"CAST((pos - {size} + {stride} - 1) DIV {stride} AS INT)")
     )
     fanned = toks.select(
-        id_col,
+        DOC_ID,
         "pos",
         "tok",
         F.explode(F.sequence(w_lo, w_hi)).alias("window_id"),
     )
-    return fanned.groupBy(id_col, "window_id").agg(
+    return fanned.groupBy(DOC_ID, "window_id").agg(
         F.min(F.col("window_id") * stride + 1).alias("win_start"),
         F.count(F.lit(1)).cast("int").alias("n_win_tokens"),
         F.concat_ws(
@@ -310,12 +305,7 @@ def context_windows(
     )
 
 
-def duplicated_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-) -> DataFrame:
+def duplicated_spans(df: DataFrame, k: int = 8) -> DataFrame:
     """Maximal duplicated token spans (the span form of exact substring
     dedup, Lee et al. 2021 "Deduplicating Training Data Makes Language
     Models Better", adapted from suffix arrays to the relational
@@ -332,19 +322,19 @@ def duplicated_spans(
     last token INDEX covered (start of last dup gram + k - 1).
     """
     sc = df.sparkSession.sparkContext
-    docs = df.repartition(sc.defaultParallelism, id_col)
-    toks = exploded_tokens(docs, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    docs = df.repartition(sc.defaultParallelism, DOC_ID)
+    toks = exploded_tokens(docs)
+    w = Window.partitionBy(DOC_ID).orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
     gram = F.when(
         F.lead("tok", k - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)
     )
     grams = toks.select(
-        id_col, "pos", md5_hash64(gram).alias("gh")
+        DOC_ID, "pos", md5_hash64(gram).alias("gh")
     ).filter(F.col("gh").isNotNull())
     freq = grams.groupBy("gh").agg(F.count(F.lit(1)).alias("n"))
-    dup = grams.join(freq.filter(F.col("n") > 1), "gh").select(id_col, "pos")
-    wd = Window.partitionBy(id_col).orderBy("pos")
+    dup = grams.join(freq.filter(F.col("n") > 1), "gh").select(DOC_ID, "pos")
+    wd = Window.partitionBy(DOC_ID).orderBy("pos")
     islands = dup.withColumn("prev", F.lag("pos").over(wd)).withColumn(
         "new_span",
         F.when(
@@ -356,11 +346,11 @@ def duplicated_spans(
     )
     return (
         islands.withColumn("span", span_id)
-        .groupBy(id_col, "span")
+        .groupBy(DOC_ID, "span")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + (k - 1)).alias("span_end"),
             F.count(F.lit(1)).alias("n_grams"),
         )
-        .select(id_col, "span_start", "span_end", "n_grams")
+        .select(DOC_ID, "span_start", "span_end", "n_grams")
     )

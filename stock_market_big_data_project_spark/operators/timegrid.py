@@ -27,10 +27,7 @@ from .cleaning import hour_floor
 def pivot_last(
     df: DataFrame,
     ts_col: str | list[str],
-    key_col: str,
-    val_col: str,
     keys: list[str] | None = None,
-    order_col: str | None = None,
 ) -> DataFrame:
     """OP-27 — long->wide with positional-last tie-breaking.
 
@@ -43,16 +40,15 @@ def pivot_last(
     ONE shuffle — the integrate chain's long→wide at scale.
     """
     group_cols = [ts_col] if isinstance(ts_col, str) else list(ts_col)
-    order = order_col or group_cols[-1]
+    order = "struct(ts, event_id)"
     grouped = df.groupBy(*group_cols)
-    pivoted = grouped.pivot(key_col, keys) if keys else grouped.pivot(key_col)
-    return pivoted.agg(F.expr(f"max_by({val_col}, {order})"))
+    pivoted = grouped.pivot("event_type", keys) if keys else grouped.pivot("event_type")
+    return pivoted.agg(F.expr(f"max_by(value, {order})"))
 
 
 def resample_ffill(
     df: DataFrame,
     key_col: str,
-    ts_col: str,
     val_cols: list[str],
     order_col: str | None = None,
 ) -> DataFrame:
@@ -69,9 +65,9 @@ def resample_ffill(
     forward-fill can never break at a partition boundary because each row
     carries its own value.
     """
-    order = order_col or ts_col
+    order = order_col or "ts"
     hourly = (
-        df.withColumn("_h", hour_floor(ts_col))
+        df.withColumn("_h", hour_floor("ts"))
         .groupBy(key_col, "_h")
         .agg(*[F.expr(f"max_by({v}, {order})").alias(v) for v in val_cols])
     )
@@ -88,7 +84,7 @@ def resample_ffill(
             )
         ),
     )
-    out = expanded.select(key_col, F.col("_grid_h").alias(ts_col), *val_cols)
+    out = expanded.select(key_col, F.col("_grid_h").alias("ts"), *val_cols)
     # pandas ffill is per-column independent: a column unobserved (NULL) at
     # this observation hour still carries ITS last non-null value — one more
     # window on the same key partitioning (no extra shuffle). Applied
@@ -96,7 +92,7 @@ def resample_ffill(
     # must fill from the previous non-null, matching resample().ffill().
     wff = (
         Window.partitionBy(key_col)
-        .orderBy(ts_col)
+        .orderBy("ts")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     for v in val_cols:
@@ -108,7 +104,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key_col: str,
-    ts_col: str,
     val_cols: list[str],
     right_ts_alias: str = "_asof_ts",
 ) -> DataFrame:
@@ -128,16 +123,16 @@ def asof_join(
         (v, right.schema[v].dataType.simpleString()) for v in val_cols
     ]:
         lt = lt.withColumn(c, F.lit(None).cast(typ))
-    rt = right.select(key_col, ts_col, *val_cols).withColumn(
+    rt = right.select(key_col, "ts", *val_cols).withColumn(
         "_side", F.lit(0)
-    ).withColumn(right_ts_alias, F.col(ts_col))
+    ).withColumn(right_ts_alias, F.col("ts"))
     for c in left.columns:
-        if c not in (key_col, ts_col):
+        if c not in (key_col, "ts"):
             rt = rt.withColumn(c, F.lit(None).cast(left.schema[c].dataType.simpleString()))
     unioned = lt.select(*lt.columns).unionByName(rt.select(*lt.columns))
     w = (
         Window.partitionBy(key_col)
-        .orderBy(F.col(ts_col), F.col("_side"))
+        .orderBy(F.col("ts"), F.col("_side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     for c in payload:

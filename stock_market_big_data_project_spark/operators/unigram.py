@@ -40,13 +40,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _NEG_INF = float("-inf")
+# Longest piece, in characters, the seed vocabulary and the EM consider.
+MAX_PIECE_LEN = 4
 
 
-def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(df: DataFrame) -> DataFrame:
     """(word, n) — the one corpus-size aggregate of unigram training."""
     return (
         df.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -121,7 +123,7 @@ def _logsumexp2(a: float, b: float) -> float:
 
 
 def forward_backward(
-    word: str, logp: dict[str, float], max_piece_len: int
+    word: str, logp: dict[str, float]
 ) -> tuple[dict[str, float], float]:
     """Expected piece counts for ONE occurrence of `word` under the
     current unigram LM, plus the word's log marginal likelihood.
@@ -131,7 +133,7 @@ def forward_backward(
     alpha = [_NEG_INF] * (n + 1)
     alpha[0] = 0.0
     for i in range(1, n + 1):
-        for l in range(1, min(max_piece_len, i) + 1):
+        for l in range(1, min(MAX_PIECE_LEN, i) + 1):
             piece = word[i - l : i]
             lp = logp.get(piece)
             if lp is not None and alpha[i - l] != _NEG_INF:
@@ -143,7 +145,7 @@ def forward_backward(
     beta = [_NEG_INF] * (n + 1)
     beta[n] = 0.0
     for j in range(n - 1, -1, -1):
-        for l in range(1, min(max_piece_len, n - j) + 1):
+        for l in range(1, min(MAX_PIECE_LEN, n - j) + 1):
             piece = word[j : j + l]
             lp = logp.get(piece)
             if lp is not None and beta[j + l] != _NEG_INF:
@@ -151,7 +153,7 @@ def forward_backward(
     for j in range(n):
         if alpha[j] == _NEG_INF:
             continue
-        for l in range(1, min(max_piece_len, n - j) + 1):
+        for l in range(1, min(MAX_PIECE_LEN, n - j) + 1):
             piece = word[j : j + l]
             lp = logp.get(piece)
             if lp is not None and beta[j + l] != _NEG_INF:
@@ -168,7 +170,7 @@ def _round12(x: float) -> Decimal:
 
 
 def em_expected_counts(
-    words: DataFrame, logp: dict[str, float], max_piece_len: int
+    words: DataFrame, logp: dict[str, float]
 ) -> tuple[list[tuple[str, Decimal]], Decimal]:
     """One distributed E-step: Arrow pass over the word table emitting
     per-word expected counts (rounded to 12dp) and per-word log-
@@ -176,7 +178,6 @@ def em_expected_counts(
     collected (piece, count) list (vocab-bounded) and the corpus log-
     likelihood Σ n·ln P(word) (12dp-rounded terms — exact sum)."""
     lp = dict(logp)
-    mpl = max_piece_len
 
     def gen(batches):
         # The 12dp quantization happens HERE, on the Python side of the
@@ -192,7 +193,7 @@ def em_expected_counts(
                 continue
             pieces_out, counts_out, ll_out = [], [], []
             for word, n in zip(pdf["word"], pdf["n"]):
-                ec, z = forward_backward(word, lp, mpl)
+                ec, z = forward_backward(word, lp)
                 for piece, c in ec.items():
                     pieces_out.append(piece)
                     counts_out.append(str(_round12(c * float(n))))
@@ -244,11 +245,9 @@ def m_step(
 
 def train_unigram(
     df: DataFrame,
-    text_col: str = "text",
     seed_size: int = 60,
     vocab_size: int = 48,
     n_iters: int = 4,
-    max_piece_len: int = 4,
     words: DataFrame | None = None,
 ) -> tuple[dict[str, float], list[Decimal]]:
     """Full unigram-LM training: seed → `n_iters` EM rounds → prune to
@@ -262,19 +261,19 @@ def train_unigram(
     it — otherwise the trainer would rebuild the one corpus-sized
     aggregate the caller already paid for."""
     if words is None:
-        words = word_counts(df, text_col).localCheckpoint(eager=True)
-    seed = seed_pieces(words, max_piece_len, seed_size)
+        words = word_counts(df).localCheckpoint(eager=True)
+    seed = seed_pieces(words, MAX_PIECE_LEN, seed_size)
     alphabet = {p for p, _ in seed if len(p) == 1}
     total = sum(c for _, c in seed)
     logp = {p: math.log(c / total) for p, c in seed}
     lls: list[Decimal] = []
     for _ in range(n_iters):
-        counts, ll = em_expected_counts(words, logp, max_piece_len)
+        counts, ll = em_expected_counts(words, logp)
         logp = m_step(counts, alphabet)
         lls.append(ll)
     # prune: keep all single chars + the best multi-char pieces by
     # expected count (count desc, piece asc — deterministic)
-    counts, _ = em_expected_counts(words, logp, max_piece_len)
+    counts, _ = em_expected_counts(words, logp)
     chars = [(p, c) for p, c in counts if len(p) == 1]
     multi = sorted(
         ((p, c) for p, c in counts if len(p) > 1),
@@ -283,7 +282,7 @@ def train_unigram(
     n_multi = max(0, vocab_size - len(alphabet))
     pruned = chars + multi[:n_multi]
     logp = m_step(pruned, alphabet)
-    counts, ll = em_expected_counts(words, logp, max_piece_len)
+    counts, ll = em_expected_counts(words, logp)
     logp = m_step(counts, alphabet)
     lls.append(ll)
     return logp, lls

@@ -34,8 +34,9 @@ from pyspark.sql import DataFrame
 from .spread import spread_keys
 from pyspark.sql import functions as F
 
+from ..sources.tables import DOC_ID
 from .imagehash import dhash_from_pixels
-from .y4m import decode_y4m, encode_y4m
+from .y4m import FRAME_EVERY, decode_y4m, encode_y4m
 
 __all__ = [
     "attach_near_dup_y4m_payload",
@@ -74,31 +75,29 @@ def _video_near_dup_frames(doc_id: int) -> np.ndarray:
     return np.stack([luma, u, vv], axis=1).astype(np.uint8)
 
 
-def attach_near_dup_y4m_payload(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_near_dup_y4m_payload(df: DataFrame) -> DataFrame:
     """Real y4m payloads carrying the planted near-dup structure."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_y4m(_video_near_dup_frames(int(d)))
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 
 
-def video_keyframe_hashes(df: DataFrame, every: int = 3) -> DataFrame:
+def video_keyframe_hashes(df: DataFrame) -> DataFrame:
     """Fused parse→sample→dHash Arrow stage: (doc_id, frame, fid, dhash)
-    for every ``every``-th frame's luma plane."""
+    for every ``FRAME_EVERY``-th frame's luma plane."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -107,7 +106,7 @@ def video_keyframe_hashes(df: DataFrame, every: int = 3) -> DataFrame:
             }
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 frames, _ = decode_y4m(bytes(payload))
-                for f in range(0, frames.shape[0], every):
+                for f in range(0, frames.shape[0], FRAME_EVERY):
                     out["doc_id"].append(doc_id)
                     out["frame"].append(f)
                     out["fid"].append(int(doc_id) * _FID_BASE + f)
@@ -119,11 +118,9 @@ def video_keyframe_hashes(df: DataFrame, every: int = 3) -> DataFrame:
     )
 
 
-def video_near_dup_pairs(
-    hashes: DataFrame, max_dist: int = 3
-) -> DataFrame:
+def video_near_dup_pairs(hashes: DataFrame) -> DataFrame:
     """Cross-video near-dup pairs from keyframe hashes: the SimHash
-    banded join (reused verbatim, pigeonhole-complete at max_dist <
+    banded join (reused verbatim, pigeonhole-complete at SIMHASH_MAX_DIST <
     bands) pairs individual keyframes; the rollup counts matching
     keyframe pairs per (video, video) and keeps the closest distance —
     (id_a, id_b, n_frame_matches, min_hamming), id_a < id_b."""
@@ -135,9 +132,7 @@ def video_near_dup_pairs(
     # a BroadcastExchange). Lazy: executes inside the timed region.
     # Measured at sf0.1: 1.84 s → 1.34 s (−28%), same rows.
     fp = hashes.select("fid", "dhash").localCheckpoint(eager=False)
-    pairs = simhash_hamming_pairs(
-        fp, "fid", fp_col="dhash", bits=64, bands=4, max_dist=max_dist
-    )
+    pairs = simhash_hamming_pairs(fp, "fid", fp_col="dhash", bits=64)
     a_doc = (F.col("id_a") / _FID_BASE).cast("bigint")
     b_doc = (F.col("id_b") / _FID_BASE).cast("bigint")
     return (

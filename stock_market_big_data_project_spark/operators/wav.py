@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 
 __all__ = [
@@ -121,25 +122,25 @@ def _wav_fixture_rate(doc_id: int) -> int:
     return 8000 + (doc_id % 3) * 4000
 
 
-def attach_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_wav_payload(df: DataFrame) -> DataFrame:
     """Real RIFF/WAVE payloads for the fixture ids."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_wav(
                             _wav_fixture_samples(int(d)),
                             _wav_fixture_rate(int(d)),
                         )
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 

@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+# The reference's forecaster settings (analysis_part/main.py:83-93): 24 lag
+# features and an 80/20 temporal train/test split.
+N_LAGS = 24
+TRAIN_FRAC = 0.8
+
 
 def key_window(key_col: str, ts_col: str, tiebreak: str | None = None) -> WindowSpec:
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
@@ -38,54 +43,45 @@ def pct_change(
 
 
 def lead_col(
-    df: DataFrame, key_col: str, ts_col: str, val_col: str, out: str,
+    df: DataFrame, key_col: str, ts_col: str,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """OP-39 — ``shift(-1)`` next-period label."""
-    return df.withColumn(out, F.lead(val_col, 1).over(key_window(key_col, ts_col, tiebreak)))
+    w = key_window(key_col, ts_col, tiebreak)
+    return df.withColumn("ret_1h_next", F.lead("ret_1h", 1).over(w))
 
 
-def lag_features(
-    df: DataFrame, key_col: str, ts_col: str, val_col: str, n_lags: int = 24,
-    tiebreak: str | None = None, drop_warmup: bool = True,
-) -> DataFrame:
+def lag_features(df: DataFrame) -> DataFrame:
     """OP-40 — lag-feature fan-out ``c.shift(k) for k in 1..n`` then drop
     warm-up rows (analysis_part/main.py:83-85). All lags share one window
     spec -> single shuffle + single sort, however many features.
     """
-    w = key_window(key_col, ts_col, tiebreak)
+    w = key_window("user_id", "ts", "event_id")
     out = df.select(
-        "*", *[F.lag(val_col, k).over(w).alias(f"{val_col}_lag{k}") for k in range(1, n_lags + 1)]
+        "*", *[F.lag("value", k).over(w).alias(f"value_lag{k}") for k in range(1, N_LAGS + 1)]
     )
-    if drop_warmup:
-        out = out.na.drop(subset=[f"{val_col}_lag{n_lags}"])
-    return out
+    return out.na.drop(subset=[f"value_lag{N_LAGS}"])
 
 
-def latest_per_key(df: DataFrame, key_col: str, ts_col: str, tiebreak: str | None = None) -> DataFrame:
+def latest_per_key(df: DataFrame) -> DataFrame:
     """OP-32/OP-41 — argmax-per-group (latest row per symbol,
     dashboard/app.py:173-174) via ``max_by`` on a struct: one hash aggregate
     with map-side partial combine — cheaper than row_number's full sort at
     scale.
     """
-    order = (
-        F.struct(F.col(ts_col), F.col(tiebreak)) if tiebreak else F.col(ts_col)
-    )
-    others = [c for c in df.columns if c != key_col]
+    order = F.struct(F.col("ts"), F.col("event_id"))
+    others = [c for c in df.columns if c != "user_id"]
     agg = [F.max_by(F.col(c), order).alias(c) for c in others]
-    return df.groupBy(key_col).agg(*agg)
+    return df.groupBy("user_id").agg(*agg)
 
 
-def temporal_split_flag(
-    df: DataFrame, key_col: str, ts_col: str, frac: float = 0.8,
-    tiebreak: str | None = None, out: str = "is_train",
-) -> DataFrame:
+def temporal_split_flag(df: DataFrame) -> DataFrame:
     """OP-44 — 80/20 positional split on time-sorted rows per key
     (analysis_part/main.py:91-93): first floor(0.8*n) rows are train (int
     truncation), exactly pandas' ``iloc[:int(len*0.8)]`` boundary.
     """
-    w = key_window(key_col, ts_col, tiebreak)
-    cnt = Window.partitionBy(key_col)
+    w = key_window("user_id", "ts", "event_id")
+    cnt = Window.partitionBy("user_id")
     rn = F.row_number().over(w)
     n = F.count(F.lit(1)).over(cnt)
-    return df.withColumn(out, rn <= F.floor(n * F.lit(frac)).cast("int"))
+    return df.withColumn("is_train", rn <= F.floor(n * F.lit(TRAIN_FRAC)).cast("int"))

@@ -28,6 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.tables import DOC_ID
 from .spread import spread_keys
 
 __all__ = [
@@ -106,6 +107,9 @@ def decode_y4m(payload: bytes):
 # Fixture + query stages.
 # ---------------------------------------------------------------------------
 
+# Every FRAME_EVERY-th frame of a video is sampled as a keyframe.
+FRAME_EVERY = 3
+
 VIDEO_FRAMES_SCHEMA = (
     "doc_id bigint, n_frames int, width int, height int, fps_n int, "
     "frame int, y_sum bigint, y_plane_md5 string"
@@ -125,35 +129,35 @@ def _y4m_fixture_frames(doc_id: int):
     ).astype(np.uint8)
 
 
-def attach_y4m_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_y4m_payload(df: DataFrame) -> DataFrame:
     """Real y4m payloads for the fixture ids."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[DOC_ID],
                     "payload": [
                         encode_y4m(
                             _y4m_fixture_frames(int(d)),
                             fps=(24 + int(d) % 2, 1),
                         )
-                        for d in pdf[id_col]
+                        for d in pdf[DOC_ID]
                     ],
                 }
             )
 
-    return spread_keys(df, id_col).mapInPandas(
+    return spread_keys(df, DOC_ID).mapInPandas(
         gen, schema="doc_id bigint, payload binary"
     )
 
 
-def sample_video_frames(df: DataFrame, every: int = 3) -> DataFrame:
-    """Fused parse→frame-sample Arrow stage: keep every ``every``-th frame
-    (0, every, 2·every, …) and emit its luma-plane integer sum plus the
-    md5 of its uppercase hex — the training-data shape for video: a
-    bounded number of keyframes per clip, fingerprinted for dedup and
-    contamination checks, pixels never shuffled."""
+def sample_video_frames(df: DataFrame) -> DataFrame:
+    """Fused parse→frame-sample Arrow stage: keep every ``FRAME_EVERY``-th
+    frame (0, FRAME_EVERY, 2·FRAME_EVERY, …) and emit its luma-plane
+    integer sum plus the md5 of its uppercase hex — the training-data
+    shape for video: a bounded number of keyframes per clip, fingerprinted
+    for dedup and contamination checks, pixels never shuffled."""
     import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -168,7 +172,7 @@ def sample_video_frames(df: DataFrame, every: int = 3) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 frames, (fps_n, _) = decode_y4m(bytes(payload))
                 n, _, h, w = frames.shape
-                for f in range(0, n, every):
+                for f in range(0, n, FRAME_EVERY):
                     yplane = frames[f, 0]
                     out["doc_id"].append(doc_id)
                     out["n_frames"].append(n)

@@ -50,10 +50,7 @@ def build_integrated(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hour_ts", "event_type", "value", "ts", "event_id",
         ),
         ts_col=["symbol", "hour_ts"],
-        key_col="event_type",
-        val_col="value",
         keys=["click", "view", "signup"],
-        order_col="struct(ts, event_id)",
     )
     quotes = wide.select(
         "symbol", "hour_ts",
@@ -101,7 +98,7 @@ def build_integrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     merged = pct_change(merged, "symbol", "hour_ts", "c", out="ret_1h")
-    merged = lead_col(merged, "symbol", "hour_ts", "ret_1h", out="ret_1h_next")
+    merged = lead_col(merged, "symbol", "hour_ts")
     return merged.select(
         "symbol", "hour_ts", "c", "close", "trend_score", "macro_purchase",
         "ret_1h", "ret_1h_next",

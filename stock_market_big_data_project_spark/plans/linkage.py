@@ -65,8 +65,8 @@ def _clean_and_dirty(spark: SparkSession, sf_dir: str):
       SELECT c_custkey AS id, c_name AS name FROM customer
     ), dirty AS (
       SELECT c_custkey AS id, {_DIRTY_NAME_SQL} AS name FROM customer
-    ), ck AS ({oracle_deletion_keys_cte('clean', 'id', 'name')}
-    ), dk AS ({oracle_deletion_keys_cte('dirty', 'id', 'name')}
+    ), ck AS ({oracle_deletion_keys_cte('clean')}
+    ), dk AS ({oracle_deletion_keys_cte('dirty')}
     ), cand AS (
       SELECT DISTINCT ck.id AS clean_id, ck.name AS clean_name,
                       dk.id AS dirty_id, dk.name AS dirty_name
@@ -367,7 +367,7 @@ def bipartite_butterfly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deployments with hub parts — tests/test_skew.py proves
     # result-identity on a skewed fixture; SCALE.md records the
     # decision rule.
-    w = wedge_pairs(op, "c", "p")
+    w = wedge_pairs(op)
     return w.agg(
         F.count(F.lit(1)).alias("n_copurchase_pairs"),
         F.sum("shared").alias("n_wedges"),
@@ -407,8 +407,8 @@ _D2_NAME_SQL = _overlay_sql(
       SELECT c_custkey AS id, c_name AS name FROM customer
     ), dirty AS (
       SELECT c_custkey AS id, {_D2_NAME_SQL} AS name FROM customer
-    ), ck AS ({oracle_deletion_keys_depth2_cte('clean', 'id', 'name')}
-    ), dk AS ({oracle_deletion_keys_depth2_cte('dirty', 'id', 'name')}
+    ), ck AS ({oracle_deletion_keys_depth2_cte('clean')}
+    ), dk AS ({oracle_deletion_keys_depth2_cte('dirty')}
     ), cand AS (
       SELECT DISTINCT ck.id AS clean_id, ck.name AS clean_name,
                       dk.id AS dirty_id, dk.name AS dirty_name
@@ -453,8 +453,8 @@ def symspell_fuzzy_join_dist2(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c_custkey AS id, c_name AS name FROM customer
     ), dirty AS (
       SELECT c_custkey AS id, {_DIRTY_NAME_SQL} AS name FROM customer
-    ), ck AS ({oracle_deletion_keys_cte('clean', 'id', 'name')}
-    ), dk AS ({oracle_deletion_keys_cte('dirty', 'id', 'name')}
+    ), ck AS ({oracle_deletion_keys_cte('clean')}
+    ), dk AS ({oracle_deletion_keys_cte('dirty')}
     ), cand AS (
       SELECT DISTINCT ck.id AS clean_id, ck.name AS clean_name,
                       dk.id AS dirty_id, dk.name AS dirty_name

@@ -40,6 +40,9 @@ from ..operators.multimodal import (
     segment_media,
 )
 from ..operators.similarity import (
+    LSH_BANDS,
+    LSH_PLANES,
+    SEMDEDUP_THRESHOLD,
     cosine_topk,
     ivf_cells,
     ivf_probe_topk,
@@ -103,7 +106,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup — one hash aggregate; at 100 TB this is a map-side-combined
     shuffle on a 128-bit key, nothing else."""
-    return exact_dedup_groups(_docs(spark, sf_dir), "doc_id", "text")
+    return exact_dedup_groups(_docs(spark, sf_dir))
 
 
 # --- normalized-key near-exact dedup (r8) ----------------------------------
@@ -198,10 +201,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stop-shingles (doc frequency > 5% of the corpus) are cut before the
     self-join so a common phrase can never make a quadratic bucket; the
     oracle mirrors the cut."""
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.3,
-        max_doc_frac=0.05,
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3, max_doc_frac=0.05)
 
 
 # --- MinHash + LSH ----------------------------------------------------------
@@ -231,8 +231,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate step is an equi-join on (band, band_hash) — the O(n²)
     cross join never exists. Affine md5-derived permutations keep the whole
     pipeline deterministic (same buckets on any cluster)."""
-    sig = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n=3, k=16)
-    return lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4)
+    sig = minhash_signatures(_docs(spark, sf_dir), n=3, k=16)
+    return lsh_candidate_pairs(sig, bands=4, rows=4)
 
 
 # --- the full scale dedup chain: LSH candidates → verify → clusters ----------
@@ -303,10 +303,10 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rescore) — the plan the red-flag gate audits (audit.py
     EAGER_ITERATIVE)."""
     docs = _docs(spark, sf_dir)
-    sig = minhash_signatures(docs, "doc_id", "text", n=3, k=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4)
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-    return jaccard_on_candidates(sh, cand, "doc_id", threshold=0.3)
+    sig = minhash_signatures(docs, n=3, k=16)
+    cand = lsh_candidate_pairs(sig, bands=4, rows=4)
+    sh = word_shingles(docs, n=3)
+    return jaccard_on_candidates(sh, cand)
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -342,10 +342,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall is exact by pigeonhole (3 < 4 bands); the oracle is the
     brute-force all-pairs join, so a hash-match proves the banded plan
     loses nothing while never materializing O(n²)."""
-    fps = simhash_fingerprints(_docs(spark, sf_dir), "doc_id", "text", bits=60)
-    return simhash_hamming_pairs(
-        fps, "doc_id", bits=60, bands=4, max_dist=3
-    )
+    fps = simhash_fingerprints(_docs(spark, sf_dir))
+    return simhash_hamming_pairs(fps, "doc_id", bits=60)
 
 
 # --- text stats / quality scoring ---------------------------------------------
@@ -739,15 +737,15 @@ _EMB_CAND_DOTS = """
 """
 
 
-def _lsh_banded_sql(n_planes: int, bands: int) -> str:
-    rows = n_planes // bands
+def _lsh_banded_sql() -> str:
+    rows = LSH_PLANES // LSH_BANDS
     return f"""
     planes AS (
       SELECT p, d,
              (CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || ',' ||
                                        CAST(d AS VARCHAR)), 1, 15)) AS BIGINT)
               % 1000000) / 1000000.0 - 0.5 AS comp
-      FROM (SELECT unnest(range(0, {n_planes})) AS p),
+      FROM (SELECT unnest(range(0, {LSH_PLANES})) AS p),
            (SELECT unnest(range(0, 64)) AS d)
     ), proj AS (
       SELECT x.vec_id, pl.p,
@@ -769,7 +767,7 @@ def _lsh_banded_sql(n_planes: int, bands: int) -> str:
     "embedding_near_dup_pairs",
     oracle=f"""
     WITH {_VECS},
-    {_lsh_banded_sql(96, 8)},
+    {_lsh_banded_sql()},
     {_EMB_CAND_DOTS}
     SELECT id_a, id_b,
            round(dot / (sqrt(na.norm2) * sqrt(nb.norm2)), 9) AS cosine
@@ -794,9 +792,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the banded-LSH curve's thin tail (by design — near-dup LSH is
     tuned for ≥0.9 cosine; tests/test_similarity_bounds.py shows ≥90%
     recall with bounded candidates on a planted near-dup corpus)."""
-    return lsh_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.4, n_planes=96, bands=8
-    )
+    return lsh_near_dup_pairs(_emb(spark, sf_dir))
 
 
 @register_local(
@@ -839,7 +835,7 @@ def embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the identical md5 hyperplanes in SQL. Local-only: the
     registered `embedding_near_dup_pairs` exercises this bucketing
     end-to-end."""
-    return lsh_bucket(_emb(spark, sf_dir), n_planes=16)
+    return lsh_bucket(_emb(spark, sf_dir))
 
 
 # --- multimodal mime-dispatch surface (r12: real codecs, no placeholder) ----------
@@ -1419,9 +1415,7 @@ def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-run caching) and both join sides read it. Measured at sf0.1:
     # 1.62 s → 0.87 s (−46%), same rows (checksum-asserted A/B).
     fp = fp.localCheckpoint(eager=False)
-    return simhash_hamming_pairs(
-        fp, "doc_id", fp_col="dhash", bits=64, bands=4, max_dist=3
-    )
+    return simhash_hamming_pairs(fp, "doc_id", fp_col="dhash", bits=64)
 
 
 
@@ -1710,9 +1704,7 @@ def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BroadcastExchange). Lazy: executes inside the timed region.
     # Measured at sf0.1: 1.24 s → 0.61 s (−51%), same rows.
     fp = fp.localCheckpoint(eager=False)
-    return simhash_hamming_pairs(
-        fp, "doc_id", fp_col="afp", bits=64, bands=4, max_dist=3
-    )
+    return simhash_hamming_pairs(fp, "doc_id", fp_col="afp", bits=64)
 
 
 # --- streaming incremental image dedup (r9) ----------------------------------------
@@ -1773,7 +1765,7 @@ def embedding_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lowest cell id) matches the oracle bit for bit. Local-only: the
     registered `embedding_ivf_topk` runs this same assignment expression
     inline as its write-path half."""
-    return ivf_cells(_emb(spark, sf_dir), n_cells=8)
+    return ivf_cells(_emb(spark, sf_dir))
 
 
 # --- multimodal: resize / frame-sample / feature-extract stages -------------------
@@ -1814,7 +1806,7 @@ def multimodal_segment_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     for audio, frame ranges for video (the generic form of keyframe
     sampling). The mapInPandas UDTF shape (one binary row in, k typed
     rows out) is the real contract a frame sampler has at scale."""
-    return segment_media(attach_media_payload(_docs(spark, sf_dir)), k=2)
+    return segment_media(attach_media_payload(_docs(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -1846,9 +1838,7 @@ def multimodal_pipeline_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     one dispatch."""
     from ..operators.multimodal import multimodal_pipeline
 
-    return multimodal_pipeline(
-        attach_media_payload(_docs(spark, sf_dir)), k=2
-    )
+    return multimodal_pipeline(attach_media_payload(_docs(spark, sf_dir)))
 
 
 @register_local(
@@ -1930,9 +1920,7 @@ def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ngram_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-clustering constituent of dedup_clusters_ngram (exact 3-gram
     Jaccard pairs) — audited in place of the checkpoint scan."""
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.3
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
 
 
 _IVF_TOPK_ORACLE = f"""
@@ -2180,7 +2168,7 @@ def token_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = d.select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
-    return pack_token_shards(counts, "doc_id", "n_tokens", budget=4096).select(
+    return pack_token_shards(counts).select(
         "doc_id", "n_tokens", "cum_tokens", "shard_id"
     )
 
@@ -2210,7 +2198,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate. `word_shingles` already dedups per doc,
     so count(*) after the join is exact distinct-shared-shingles."""
     d = _docs_spread(spark, sf_dir)
-    sh = word_shingles(d, "doc_id", "text", 5)
+    sh = word_shingles(d, 5)
     bench = (
         sh.filter(F.col("doc_id") % 50 == 0).select("shingle_hash").distinct()
     )
@@ -2506,7 +2494,7 @@ def unicode_cleanup_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE {_VECS},
-    {_lsh_banded_sql(96, 8)},
+    {_lsh_banded_sql()},
     {_EMB_CAND_DOTS},
     pairs AS (
       SELECT id_a, id_b
@@ -2539,7 +2527,7 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     pairs = _embedding_cluster_pairs(spark, sf_dir)
-    cc = connected_components(pairs, "id_a", "id_b")
+    cc = connected_components(pairs)
     return cc.select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
@@ -2549,9 +2537,7 @@ def _embedding_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-clustering constituent of embedding_dedup_clusters (banded
     hyperplane-LSH candidates → exact decimal rescore) — audited in place
     of the checkpoint scan."""
-    return lsh_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.4, n_planes=96, bands=8
-    ).select("id_a", "id_b")
+    return lsh_near_dup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
 
 
 # --- SemDeDup: cluster-scoped semantic deduplication (r5) -------------------------
@@ -2630,14 +2616,14 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation — the oracle recomputes everything including the
     recursive-CTE fixpoint, so the kept set is hash-checked, not assumed.
     See operators/similarity.py::semantic_dedup."""
-    return semantic_dedup(_emb(spark, sf_dir), threshold=0.35, n_cells=8)
+    return semantic_dedup(_emb(spark, sf_dir))
 
 
 def _semdedup_pair_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-clustering constituent of embedding_semantic_dedup (within-cell
     prescreened exact-cosine pairs) — audited in place of the checkpoint
     scan."""
-    return semdedup_pairs(_emb(spark, sf_dir), threshold=0.35, n_cells=8)
+    return semdedup_pairs(_emb(spark, sf_dir))
 
 
 @register_local("streaming_semdedup_parity", oracle=_SEMDEDUP_ORACLE)
@@ -2685,13 +2671,9 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ivf_assign(
                 batch_df.select("vec_id", "embedding"),
                 cents,
-                "vec_id",
-                "embedding",
                 with_dot=True,
                 keep_emb=True,
             ),
-            "embedding",
-            64,
         )
         # append-then-probe: delta ⊆ at-rest, so the single probe
         # join finds old-vs-new AND new-vs-new same-cell pairs
@@ -2723,7 +2705,7 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        _prescreened_exact_cosine(cand, 0.35, 64).write.mode("append").parquet(
+        _prescreened_exact_cosine(cand, SEMDEDUP_THRESHOLD).write.mode("append").parquet(
             pairs_dir
         )
 
@@ -2856,11 +2838,9 @@ def dedup_multi_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir)
     text_pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.3, max_doc_frac=0.05
+        d, threshold=0.3, max_doc_frac=0.05
     ).select("id_a", "id_b")
-    sem_pairs = semdedup_pairs(
-        _emb(spark, sf_dir), threshold=0.35, n_cells=8
-    ).select("id_a", "id_b")
+    sem_pairs = semdedup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
     fused = text_pairs.unionByName(sem_pairs).distinct()
     cc = connected_components(fused)
     scored = d.select(
@@ -2886,12 +2866,10 @@ def _multi_signal_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-clustering constituent of dedup_multi_signal (text ∪ semantic
     pair union) — audited in place of the checkpoint scan."""
     text_pairs = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.3,
+        _docs(spark, sf_dir), threshold=0.3,
         max_doc_frac=0.05,
     ).select("id_a", "id_b")
-    sem_pairs = semdedup_pairs(
-        _emb(spark, sf_dir), threshold=0.35, n_cells=8
-    ).select("id_a", "id_b")
+    sem_pairs = semdedup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
     return text_pairs.unionByName(sem_pairs).distinct()
 
 
@@ -3008,18 +2986,14 @@ def lsh_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-stage join structure is audited via _lsh_recall_plan."""
     d = _docs(spark, sf_dir)
     truth = (
-        ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.3, max_doc_frac=0.05
-        )
+        ngram_jaccard_pairs(d, threshold=0.3, max_doc_frac=0.05)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    sig = minhash_signatures(d, "doc_id", "text", n=3, k=16).localCheckpoint(
-        eager=True
-    )
+    sig = minhash_signatures(d, n=3, k=16).localCheckpoint(eager=True)
     cands = None
     for bands, rows in ((4, 4), (8, 2)):
-        c = lsh_candidate_pairs(sig, "doc_id", bands=bands, rows=rows).select(
+        c = lsh_candidate_pairs(sig, bands=bands, rows=rows).select(
             F.lit(f"{bands}x{rows}").alias("lsh_config"), "id_a", "id_b"
         )
         cands = c if cands is None else cands.unionByName(c)
@@ -3050,12 +3024,12 @@ def _lsh_recall_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     would hide the candidate-join structure from the plan gate."""
     d = _docs(spark, sf_dir)
     truth = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.3, max_doc_frac=0.05
+        d, threshold=0.3, max_doc_frac=0.05
     ).select("id_a", "id_b")
-    sig = minhash_signatures(d, "doc_id", "text", n=3, k=16)
+    sig = minhash_signatures(d, n=3, k=16)
     cands = None
     for bands, rows in ((4, 4), (8, 2)):
-        c = lsh_candidate_pairs(sig, "doc_id", bands=bands, rows=rows).select(
+        c = lsh_candidate_pairs(sig, bands=bands, rows=rows).select(
             F.lit(f"{bands}x{rows}").alias("lsh_config"), "id_a", "id_b"
         )
         cands = c if cands is None else cands.unionByName(c)
@@ -3501,7 +3475,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     cov_rows = embedding_covariance(spark, sf_dir).collect()
-    comps = pca_power_components(cov_rows, dim=64, n_components=2)
+    comps = pca_power_components(cov_rows, n_components=2)
     n_vecs = emb.count()
     # accumulate the scaled-long chunk partials as PYTHON INTS (exact,
     # order-free — collect() row order is not deterministic and the
@@ -3548,19 +3522,19 @@ _PI_VSCALE = 10**9
 _PI_DIM = 64
 
 
-def _pi_chain_sql(prefix: str, mat: str, rounds: int) -> str:
-    """The CTE chain of one fixed-point power iteration (rounds × {matvec,
+def _pi_chain_sql(prefix: str, mat: str) -> str:
+    """The CTE chain of one fixed-point power iteration (_PI_ROUNDS × {matvec,
     trunc-rescale, corrected-isqrt, trunc-renormalize}) over a symmetric
     matrix CTE `mat` (columns i, j, c). CTE names are `{prefix}`-scoped
     so two chains (e.g. the deflated second component) compose in one
-    WITH. Emits `{prefix}v0 .. {prefix}v{rounds}` and
-    `{prefix}s1 .. {prefix}s{rounds}`; the caller selects from them."""
+    WITH. Emits `{prefix}v0 .. {prefix}v{_PI_ROUNDS}` and
+    `{prefix}s1 .. {prefix}s{_PI_ROUNDS}`; the caller selects from them."""
     parts = [f"""
     {prefix}v0 AS (
       SELECT j, CAST({_PI_VSCALE} AS HUGEINT) AS v
       FROM range(0, {_PI_DIM}) t(j)
     )"""]
-    for r in range(1, rounds + 1):
+    for r in range(1, _PI_ROUNDS + 1):
         parts.append(f"""
     , {prefix}w{r} AS MATERIALIZED (
       SELECT i, sum(CAST(c AS HUGEINT) * v) AS w
@@ -3585,7 +3559,7 @@ def _pi_chain_sql(prefix: str, mat: str, rounds: int) -> str:
     return "".join(parts)
 
 
-def _power_iteration_oracle(rounds: int = _PI_ROUNDS) -> str:
+def _power_iteration_oracle() -> str:
     """DuckDB replay of the WHOLE fixed-point power iteration: quantized
     covariance from the certified _COV_ORACLE, then one matvec + trunc
     rescale + corrected-isqrt normalize per round as materialized CTEs,
@@ -3603,9 +3577,9 @@ def _power_iteration_oracle(rounds: int = _PI_ROUNDS) -> str:
         f"SELECT {r} AS round, CAST(j AS INT) AS d, "
         f"CAST(v AS BIGINT) AS v_scaled, "
         f"(SELECT CAST(s AS BIGINT) FROM s{r}) AS norm_scaled FROM v{r}"
-        for r in range(1, rounds + 1)
+        for r in range(1, _PI_ROUNDS + 1)
     )
-    return head + _pi_chain_sql("", "sym", rounds) + "\n" + tail
+    return head + _pi_chain_sql("", "sym") + "\n" + tail
 
 
 @register(  # promoted r12 (VERDICT r11 #4): the fixed-point eigensolve
@@ -3661,7 +3635,7 @@ def _pi_tz(a: int, b: int) -> int:
     return a // b if a >= 0 else -((-a) // b)
 
 
-def _pi_fixed_run(c_q: list[list[int]], rounds: int = _PI_ROUNDS):
+def _pi_fixed_run(c_q: list[list[int]]):
     """The driver-side fixed-point power iteration shared by the
     trajectory query and the PCA deflation: returns (trajectory rows,
     final vector, final norm). Exact Python-integer replica of the
@@ -3686,7 +3660,7 @@ def _pi_fixed_run(c_q: list[list[int]], rounds: int = _PI_ROUNDS):
     v = [_PI_VSCALE] * _PI_DIM
     rows = []
     s = 0
-    for rnd in range(1, rounds + 1):
+    for rnd in range(1, _PI_ROUNDS + 1):
         w = [
             sum(c_q[i][j] * v[j] for j in range(_PI_DIM))
             for i in range(_PI_DIM)
@@ -3742,7 +3716,7 @@ EAGER_ITERATIVE.update(
 # Overflow audit for the deflated chain: |λ1| ≤ trace ≤ 64 ⇒ s1 ≤ 6.4e10
 # ⇒ |C2_q| ≤ 6.5e10; |w| ≤ 64·6.5e10·1e9 ≈ 4.2e21 (HUGEINT/Python int);
 # Σw2² ≤ ~1.1e27 — inside the corrected-isqrt exactness bound (~2e31).
-def _pca_fixed_oracle(rounds: int = _PI_ROUNDS) -> str:
+def _pca_fixed_oracle() -> str:
     d18 = 10**18
     return f"""
     WITH cq AS MATERIALIZED (
@@ -3752,7 +3726,7 @@ def _pca_fixed_oracle(rounds: int = _PI_ROUNDS) -> str:
       SELECT d1 AS i, d2 AS j, c FROM cq
       UNION ALL
       SELECT d2, d1, c FROM cq WHERE d1 <> d2
-    ),{_pi_chain_sql("a", "sym", rounds)}
+    ),{_pi_chain_sql("a", "sym")}
     , defl AS MATERIALIZED (
       SELECT a.i, a.j,
              CAST(a.c AS HUGEINT)
@@ -3760,10 +3734,10 @@ def _pca_fixed_oracle(rounds: int = _PI_ROUNDS) -> str:
                      THEN (s1.s * va.v * vb.v) // {d18}
                      ELSE -((s1.s * (-(va.v * vb.v))) // {d18}) END) AS c
       FROM sym a
-      JOIN av{rounds} va ON va.j = a.i
-      JOIN av{rounds} vb ON vb.j = a.j
-      CROSS JOIN as{rounds} s1
-    ),{_pi_chain_sql("b", "defl", rounds)}
+      JOIN av{_PI_ROUNDS} va ON va.j = a.i
+      JOIN av{_PI_ROUNDS} vb ON vb.j = a.j
+      CROSS JOIN as{_PI_ROUNDS} s1
+    ),{_pi_chain_sql("b", "defl")}
     , pv AS (
       SELECT vec_id, unnest(embedding) AS val,
              unnest(range(0, len(embedding))) AS d
@@ -3785,8 +3759,8 @@ def _pca_fixed_oracle(rounds: int = _PI_ROUNDS) -> str:
                  * (CAST(x.x AS HUGEINT) * nv.n - pdims.s_i)) AS p2
       FROM xq x
       JOIN pdims ON pdims.d = x.d
-      JOIN av{rounds} va ON va.j = x.d
-      JOIN bv{rounds} vb ON vb.j = x.d
+      JOIN av{_PI_ROUNDS} va ON va.j = x.d
+      JOIN bv{_PI_ROUNDS} vb ON vb.j = x.d
       CROSS JOIN nv
       GROUP BY x.vec_id
     )

@@ -383,7 +383,7 @@ def preprocess_integrate_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         ),
     )
-    c = normalize_timestamp(ev, "ts_str", out="parsed_ts").select(
+    c = normalize_timestamp(ev).select(
         "user_id",
         "event_type",
         "parsed_ts",
@@ -418,7 +418,7 @@ def ts_normalize_coerce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         ),
     )
-    return normalize_timestamp(ev, "ts_str", out="parsed_ts").select("event_id", "parsed_ts")
+    return normalize_timestamp(ev).select("event_id", "parsed_ts")
 
 
 # --- OP-13: exact dedup on a projection that actually has duplicates -------
@@ -519,10 +519,7 @@ def hourly_pivot_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pivot_last(
         ev.select("hour_ts", "event_type", "value", "ts", "event_id"),
         ts_col="hour_ts",
-        key_col="event_type",
-        val_col="value",
         keys=EVENT_TYPES,
-        order_col="struct(ts, event_id)",
     )
 
 
@@ -556,7 +553,7 @@ def resample_ffill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-boundary hazard SURVEY.md §7 flags). DuckDB checks it with
     LAST_VALUE IGNORE NULLS."""
     ev = _events(spark, sf_dir)
-    out = resample_ffill(ev, key_col="user_id", ts_col="ts", val_cols=["value"],
+    out = resample_ffill(ev, key_col="user_id", val_cols=["value"],
                          order_col="struct(ts, event_id)")
     return out.select(
         F.col("user_id").alias("symbol"),
@@ -595,7 +592,7 @@ def asof_purchases_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", F.col("value").alias("click_value")
     )
     joined = asof_join(
-        purchases, clicks, key_col="user_id", ts_col="ts",
+        purchases, clicks, key_col="user_id",
         val_cols=["click_value"], right_ts_alias="last_click_ts",
     )
     return joined.select(
@@ -670,7 +667,7 @@ def returns_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by symbol; (ts, event_id) ordering makes ties deterministic."""
     ev = _events(spark, sf_dir)
     ret = pct_change(ev, "user_id", "ts", "value", out="ret_1h", tiebreak="event_id")
-    ret = lead_col(ret, "user_id", "ts", "ret_1h", out="ret_1h_next", tiebreak="event_id")
+    ret = lead_col(ret, "user_id", "ts", tiebreak="event_id")
     return ret.select(
         "event_id", F.col("user_id").alias("symbol"), "ts", "ret_1h", "ret_1h_next"
     )
@@ -701,7 +698,7 @@ def lag_features_24(spark: SparkSession, sf_dir: str) -> DataFrame:
     single shuffle + single per-key sort regardless of feature count; warm-up
     rows dropped like the reference's dropna()."""
     ev = _events(spark, sf_dir)
-    feats = lag_features(ev, "user_id", "ts", "value", n_lags=24, tiebreak="event_id")
+    feats = lag_features(ev)
     return feats.select(
         "event_id",
         F.col("user_id").alias("symbol"),
@@ -729,7 +726,7 @@ def latest_per_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dashboard/app.py:173-174 — argmax-per-group via max_by: hash aggregate
     with map-side combine (no full sort, unlike row_number)."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type", "value")
-    out = latest_per_key(ev, key_col="user_id", ts_col="ts", tiebreak="event_id")
+    out = latest_per_key(ev)
     return out.select(
         F.col("user_id").alias("symbol"), "ts", "event_id", "event_type", "value"
     )
@@ -797,7 +794,7 @@ def temporal_split_80_20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """analysis_part/main.py:91-93 — first 80% of time-sorted rows per key
     are train; returned as per-key split counts."""
     ev = _events(spark, sf_dir)
-    flagged = temporal_split_flag(ev, "user_id", "ts", frac=0.8, tiebreak="event_id")
+    flagged = temporal_split_flag(ev)
     return flagged.groupBy(F.col("user_id").alias("symbol"), "is_train").agg(
         F.count(F.lit(1)).alias("n_rows")
     )
@@ -980,10 +977,7 @@ def melt_wide_to_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = pivot_last(
         ev.select("hour_ts", "event_type", "value", "ts", "event_id"),
         ts_col="hour_ts",
-        key_col="event_type",
-        val_col="value",
         keys=["click", "purchase"],
-        order_col="struct(ts, event_id)",
     )
     long = wide.selectExpr(
         "hour_ts",
@@ -1055,9 +1049,9 @@ def lag_lead_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (user_id | ts, event_id) sort across every window expression."""
     ev = _events(spark, sf_dir)
     ret = pct_change(ev, "user_id", "ts", "value", out="ret_1h", tiebreak="event_id")
-    ret = lead_col(ret, "user_id", "ts", "ret_1h", out="ret_1h_next", tiebreak="event_id")
-    ret = temporal_split_flag(ret, "user_id", "ts", frac=0.8, tiebreak="event_id")
-    feats = lag_features(ret, "user_id", "ts", "value", n_lags=24, tiebreak="event_id")
+    ret = lead_col(ret, "user_id", "ts", tiebreak="event_id")
+    ret = temporal_split_flag(ret)
+    feats = lag_features(ret)
     return feats.select(
         "event_id",
         F.col("user_id").alias("symbol"),
@@ -1216,10 +1210,7 @@ def melt_union_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = pivot_last(
         ev.select("hour_ts", "event_type", "value", "ts", "event_id"),
         ts_col="hour_ts",
-        key_col="event_type",
-        val_col="value",
         keys=["click", "purchase"],
-        order_col="struct(ts, event_id)",
     )
     a = wide.select(
         "hour_ts", F.lit("click").alias("series"), F.col("click").alias("trend_score")
@@ -1374,7 +1365,6 @@ def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("user_id", "event_type", "ts", "value", "event_id", "_tomb"),
         updates,
         keys=["user_id", "event_type"],
-        ts_col="ts",
         delete_col="_tomb",
         tiebreak=["event_id"],
     )

@@ -942,8 +942,8 @@ def bucketed_join_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    write_bucketed(li, "li_bkt_q", ("l_orderkey",), 8, ("l_orderkey",))
-    write_bucketed(o, "o_bkt_q", ("o_orderkey",), 8, ("o_orderkey",))
+    write_bucketed(li, "li_bkt_q", ("l_orderkey",), ("l_orderkey",))
+    write_bucketed(o, "o_bkt_q", ("o_orderkey",), ("o_orderkey",))
     lib, ob = spark.table("li_bkt_q"), spark.table("o_bkt_q")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = (
@@ -1068,12 +1068,12 @@ def compacted_scan_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Z_BITS = 10  # 10+10-bit grid → 20-bit z-value
 
 
-def _zvalue(a, b, bits: int = _Z_BITS):
-    """Morton interleave of two `bits`-bit nonnegative ints — a fixed
-    2·bits-term codegen expression (shift/mask/or), integer-exact and
+def _zvalue(a, b):
+    """Morton interleave of two `_Z_BITS`-bit nonnegative ints — a fixed
+    2·_Z_BITS-term codegen expression (shift/mask/or), integer-exact and
     SQL-expressible on both engines."""
     z = F.lit(0).cast("bigint")
-    for i in range(bits):
+    for i in range(_Z_BITS):
         z = z + F.shiftleft(
             F.shiftright(a, i).bitwiseAND(F.lit(1)).cast("bigint"), 2 * i
         )

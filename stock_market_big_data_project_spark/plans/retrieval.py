@@ -321,7 +321,7 @@ def perplexity_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoffs broadcast back as a 1-row cross join — the corpus itself is
     never globally sorted."""
     r = _ppl_scores(spark, sf_dir)
-    th = _exact_percentile_cutoffs(r, "avg_nll", (33, 67))
+    th = _exact_percentile_cutoffs(r)
     return _ppl_bucketed(r, th)
 
 
@@ -403,17 +403,13 @@ def _ppl_bucketed(r: DataFrame, th: DataFrame) -> DataFrame:
     )
 
 
-def _exact_percentile_cutoffs(
-    df: DataFrame, col: str, pcts: tuple
-) -> DataFrame:
+def _exact_percentile_cutoffs(df: DataFrame) -> DataFrame:
     """Exact percentile cutoffs as a 1-row frame (th1, th2, …): the
     smallest value whose ascending cumulative count reaches
     ceil(p·N/100), integer arithmetic throughout. The ECDF window runs
     over the DISTINCT value grid (one aggregate + a grid-sized window),
     never the corpus — the ks_drift_matrix pattern."""
-    grid = df.groupBy(F.col(col).alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
+    grid = df.groupBy(F.col("avg_nll").alias("v")).agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     n1 = df.agg(F.count(F.lit(1)).alias("n"))
     ecdf = (
@@ -426,7 +422,7 @@ def _exact_percentile_cutoffs(
                 F.col("cum") >= F.expr(f"({p} * n + 99) DIV 100"), F.col("v")
             )
         ).alias(f"th{i + 1}")
-        for i, p in enumerate(pcts)
+        for i, p in enumerate((33, 67))
     ]
     return ecdf.agg(*aggs)
 
@@ -535,8 +531,8 @@ def _bpe_oracle(n_merges: int = 12) -> str:
     though the merge list is data-derived (and therefore different at
     every SF; it cannot be interpolated as constants).
 
-    `_bpe_merges_oracle` composes the same trainer rounds into the merge
-    TABLE (round, pair, merged, total) — the r9 oracle for the
+    plans/training.py::_bpe_merges_oracle composes the same trainer rounds
+    into the merge TABLE (round, pair, merged, total) — the r9 oracle for the
     previously rows-only `bpe_learn_merges` (VERDICT r8 #5).
 
     The trainer unrolls as n_merges chained CTE rounds: pair counts over
@@ -605,22 +601,6 @@ def _bpe_oracle(n_merges: int = 12) -> str:
     return "".join(parts)
 
 
-def _bpe_merges_oracle(n_merges: int = 8) -> str:
-    """The trainer rounds alone, emitted as the merge table — the exact
-    shape `operators/bpe.py::train_bpe` returns. Each round's argmax CTE
-    (b{r}) already carries (pair, total); a round with no pairs left
-    yields an empty b{r}, exactly matching the trainer's early break."""
-    ctes = _bpe_oracle(n_merges)
-    ctes = ctes[: ctes.index(", vocab AS MATERIALIZED")]
-    rounds = "\n    UNION ALL ".join(
-        f"SELECT CAST({r} AS INT) AS round, pair,"
-        f" replace(pair, ' ', '') AS merged,"
-        f" CAST(total AS BIGINT) AS total FROM b{r}"
-        for r in range(1, n_merges + 1)
-    )
-    return f"{ctes}\n    {rounds}"
-
-
 @register("bpe_apply_encode", oracle=_bpe_oracle(12))
 def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLY — the other half of the BPE loop: learn 12 merges
@@ -643,7 +623,7 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     merges = [
         (r["pair"], r["merged"])
-        for r in train_bpe(d, "text", n_merges=12).collect()
+        for r in train_bpe(d, n_merges=12).collect()
     ]
     # r12: spread the single-split scan before the positional explode +
     # per-doc rollup (guide §2.5 unsplittable input) — the 270k-row word
@@ -917,10 +897,8 @@ def unigram_lm_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _docs(spark, sf_dir)
-    wc = word_counts(d, "text").localCheckpoint(eager=True)
-    logp, _ = train_unigram(
-        d, "text", seed_size=60, vocab_size=48, n_iters=3, words=wc
-    )
+    wc = word_counts(d).localCheckpoint(eager=True)
+    logp, _ = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3, words=wc)
     seg = unigram_segment_words(wc, logp)
     wp = d.select(
         "doc_id",
@@ -954,7 +932,7 @@ def _unigram_segment_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir)
     seg = unigram_segment_words(
-        word_counts(d, "text"), {"t": -1.0, "h": -2.0}, max_piece_len=2
+        word_counts(d), {"t": -1.0, "h": -2.0}, max_piece_len=2
     )
     wp = d.select(
         "doc_id",
@@ -995,10 +973,10 @@ def tokenizer_fertility_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _docs(spark, sf_dir)
-    wc = word_counts(d, "text").localCheckpoint(eager=True)
+    wc = word_counts(d).localCheckpoint(eager=True)
     merges = [
         (r["pair"], r["merged"])
-        for r in train_bpe(d, "text", n_merges=12).collect()
+        for r in train_bpe(d, n_merges=12).collect()
     ]
     # r12: the docstring's "re-segments only the DISTINCT word table" is
     # now literal for BPE too — the merge chain runs over wc's words
@@ -1008,9 +986,7 @@ def tokenizer_fertility_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_seg = segment_words(wc, merges).select(
         "word", F.size("bpe_tokens").alias("n_units")
     )
-    logp, _ = train_unigram(
-        d, "text", seed_size=60, vocab_size=48, n_iters=3, words=wc
-    )
+    logp, _ = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3, words=wc)
     uni_seg = unigram_segment_words(wc, logp).select(
         "word", F.col("n_pieces").alias("n_units")
     )

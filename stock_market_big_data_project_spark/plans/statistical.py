@@ -213,10 +213,7 @@ def correlation_pairs_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The long (symbol, f1, f2, n, corr) pairwise form via the reusable
     `corr_pairs_exact` operator. Local-only: the registered
     `correlation_matrix` covers the same moments in artifact shape."""
-    return corr_pairs_exact(
-        daily_long(spark, sf_dir), "symbol", "day_ts", "feature", "value",
-        min_n=3,
-    )
+    return corr_pairs_exact(daily_long(spark, sf_dir))
 
 
 @register_local("granger_causality")  # no oracle: iterative OLS + F-sf, rows-only check
@@ -241,13 +238,7 @@ def granger_causality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for c in EVENT_TYPES:
         wide = wide.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return granger_causality(
-        wide,
-        key_col="symbol",
-        target_col="click",
-        predictor_cols=["error", "purchase", "signup", "view"],
-        maxlag=5,
-    )
+    return granger_causality(wide)
 
 
 @register(
@@ -342,10 +333,7 @@ def recursive_forecast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = ev.select(
         F.col("user_id").alias("symbol"), F.col("ts").alias("hour_ts"), F.col("value")
     )
-    return recursive_forecast(
-        series, key_col="symbol", ts_col="hour_ts", val_col="value",
-        n_lags=24, horizon=168, train_frac=0.8,
-    )
+    return recursive_forecast(series, ts_col="hour_ts", horizon=168)
 
 
 @register(

@@ -36,6 +36,7 @@ from ..sources.tables import load_table
 from .audit import EAGER_ITERATIVE
 from ..operators.text import LANG_MARKERS
 from .llm import _STOP_SQL, _TOKS, _lang_score_sql
+from .retrieval import _bpe_oracle
 from .registry import register, register_local
 
 
@@ -126,7 +127,7 @@ def gopher_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, gram) hash aggregates fed by one doc-keyed repartition, all
     map-side-combinable, no per-doc state. See
     operators/text.py::repetition_stats."""
-    return repetition_stats(_docs_spread(spark, sf_dir), "doc_id", "text")
+    return repetition_stats(_docs_spread(spark, sf_dir))
 
 
 # --- C4-style sub-document chunk dedup --------------------------------------------
@@ -163,7 +164,7 @@ def chunk_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     (skew-safe — see inline comment), then one shuffle back to doc_id
     reassembles. The kept text is fingerprinted (md5) so the oracle
     verifies reassembly order, not just counts."""
-    chunks = token_chunks(_docs(spark, sf_dir), "doc_id", "text", size=16)
+    chunks = token_chunks(_docs(spark, sf_dir))
     # Winner per chunk_hash via a map-side-combinable min-struct aggregate,
     # NOT row_number over a chunk_hash window: a boilerplate chunk repeated
     # corpus-wide is a guaranteed hot key at 100 TB, and a window partition
@@ -339,7 +340,7 @@ def _keep_best_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-clustering constituent of cluster_keep_best (exact 3-gram
     Jaccard pairs) — audited in place of the checkpoint scan."""
     return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.3
+        _docs(spark, sf_dir), threshold=0.3
     ).select("id_a", "id_b")
 
 
@@ -757,20 +758,18 @@ def streaming_near_dup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [], "id_a long, id_b long, jaccard double"
             ).write.mode("overwrite").parquet(out_dir)
         delta = batch_df.select("doc_id", "text")
-        sig = minhash_signatures(delta, "doc_id", "text", n=3, k=16)
-        banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
-        sh = word_shingles(delta, "doc_id", "text", n=3)
+        sig = minhash_signatures(delta, n=3, k=16)
+        banded = minhash_banded(sig, bands=4, rows=4)
+        sh = word_shingles(delta, n=3)
         # append-then-probe: delta ⊆ at-rest holds, so the single
         # probe join finds old-vs-new AND new-vs-new pairs
         banded.write.mode("append").parquet(f"{scratch}/state_banded")
         sh.write.mode("append").parquet(f"{scratch}/state_shingles")
         at_rest = spark.read.parquet(f"{scratch}/state_banded")
-        cand = incremental_lsh_candidates(at_rest, banded, "doc_id")
+        cand = incremental_lsh_candidates(at_rest, banded)
         pairs = jaccard_on_candidates(
             spark.read.parquet(f"{scratch}/state_shingles"),
             cand,
-            "doc_id",
-            threshold=0.3,
         )
         pairs.write.mode("append").parquet(out_dir)
 
@@ -838,7 +837,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import word_shingles
 
     d = _docs(spark, sf_dir)
-    sig = minhash_signatures(d, "doc_id", "text", n=3, k=16)
+    sig = minhash_signatures(d, n=3, k=16)
     # r13 (guide §3.3 plan truncation): the full and delta sides of the
     # incremental probe join both derive from `banded`, and runtime
     # exchange reuse does not dedup them — the shingle→signature→banding
@@ -847,15 +846,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # region; 0.83 → 0.64 s at sf0.1 (4-round alternating A/B,
     # row-identical). A shingle-leg checkpoint on top measured neutral
     # and was not taken.
-    banded = minhash_banded(sig, "doc_id", bands=4, rows=4).localCheckpoint(
-        eager=False
-    )
+    banded = minhash_banded(sig, bands=4, rows=4).localCheckpoint(eager=False)
     delta = banded.filter(F.col("doc_id") % 5 == 4)
-    cand = incremental_lsh_candidates(banded, delta, "doc_id")
-    sh = word_shingles(d, "doc_id", "text", n=3)
+    cand = incremental_lsh_candidates(banded, delta)
+    sh = word_shingles(d, n=3)
     from ..operators.dedup import jaccard_on_candidates
 
-    return jaccard_on_candidates(sh, cand, "doc_id", threshold=0.3)
+    return jaccard_on_candidates(sh, cand)
 
 
 # --- product quantization (the memory side of ANN) ---------------------------------
@@ -1029,7 +1026,11 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- distributed k-means (trains the IVF/PQ codebooks) -----------------------------
-def _kmeans_oracle(k: int = 8, n_iter: int = 5) -> str:
+# Centroids and Lloyd rounds of `embedding_kmeans_train` and its oracle.
+_KMEANS_K, _KMEANS_ITERS = 8, 5
+
+
+def _kmeans_oracle() -> str:
     """DuckDB replay of the WHOLE exact-Lloyd trainer (r9, VERDICT r8 #5
     — the `bpe_apply_encode` trainer-replay pattern): md5-init centroids,
     then per round one materialized assignment CTE (exact decimal
@@ -1052,11 +1053,11 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 5) -> str:
              (CAST(('0x' || substr(md5('ivf:' || CAST(c AS VARCHAR) || ','
                      || CAST(d AS VARCHAR)), 1, 15)) AS BIGINT)
               % 1000000) / 1000000.0 - 0.5 AS comp
-      FROM (SELECT unnest(range(0, {k})) AS c),
+      FROM (SELECT unnest(range(0, {_KMEANS_K})) AS c),
            (SELECT unnest(range(0, 64)) AS d)
     )"""
     ]
-    for r in range(1, n_iter + 1):
+    for r in range(1, _KMEANS_ITERS + 1):
         parts.append(f"""
     , a{r} AS MATERIALIZED (
       SELECT vec_id, cell FROM (
@@ -1093,7 +1094,7 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 5) -> str:
                  sum(CAST((CAST(x.val AS DOUBLE) - ce.comp)
                           * (CAST(x.val AS DOUBLE) - ce.comp)
                           AS DECIMAL(18,15))) AS dist2
-          FROM v x JOIN c{n_iter} ce ON ce.d = x.d
+          FROM v x JOIN c{_KMEANS_ITERS} ce ON ce.d = x.d
           GROUP BY 1, 2
         )
       ) WHERE rn = 1
@@ -1101,7 +1102,7 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 5) -> str:
       SELECT cell,
              round(CAST(sum(CAST(comp * comp AS DECIMAL(18,15)))
                         AS DOUBLE), 9) AS centroid_norm2
-      FROM c{n_iter} GROUP BY 1
+      FROM c{_KMEANS_ITERS} GROUP BY 1
     )
     SELECT CAST(a.cell AS INT) AS cell, count(*) AS size,
            round(CAST(sum(a.dist2) AS DOUBLE), 9) AS inertia,
@@ -1111,7 +1112,7 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 5) -> str:
     return "".join(parts)
 
 
-@register_local("embedding_kmeans_train", oracle=_kmeans_oracle(8, 5))
+@register_local("embedding_kmeans_train", oracle=_kmeans_oracle())
 def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 Lloyd iterations, k=8, from the deterministic md5 init (the
     untrained IVF codebook): per iteration the corpus pays one narrow
@@ -1129,7 +1130,9 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tested in tests/test_kmeans.py alongside the exact tier."""
     from ..operators.kmeans import kmeans_train_exact
 
-    _, summary = kmeans_train_exact(_emb(spark, sf_dir), k=8, n_iter=5)
+    _, summary = kmeans_train_exact(
+        _emb(spark, sf_dir), k=_KMEANS_K, n_iter=_KMEANS_ITERS
+    )
     return summary
 
 
@@ -1145,7 +1148,7 @@ def _kmeans_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _emb(spark, sf_dir)
         .select(
-            _best_exact("embedding", cents)["cell"].alias("cell"),
+            _best_exact(cents)["cell"].alias("cell"),
             F.col("embedding"),
         )
         .select("cell", F.posexplode(F.col("embedding")).alias("d", "val"))
@@ -1161,15 +1164,27 @@ def _kmeans_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- distributed BPE vocabulary training -------------------------------------------
-def _bpe_merges_oracle_8() -> str:
-    # local import: retrieval.py owns the shared trainer-CTE generator
-    # (no cycle — retrieval imports llm/audit, never training)
-    from .retrieval import _bpe_merges_oracle
-
-    return _bpe_merges_oracle(8)
+# Merge rounds `bpe_learn_merges` learns.
+_LEARN_MERGES = 8
 
 
-@register_local("bpe_learn_merges", oracle=_bpe_merges_oracle_8())
+def _bpe_merges_oracle() -> str:
+    """The trainer rounds alone, emitted as the merge table — the exact
+    shape `operators/bpe.py::train_bpe` returns. Each round's argmax CTE
+    (b{r}) already carries (pair, total); a round with no pairs left
+    yields an empty b{r}, exactly matching the trainer's early break."""
+    ctes = _bpe_oracle(_LEARN_MERGES)
+    ctes = ctes[: ctes.index(", vocab AS MATERIALIZED")]
+    rounds = "\n    UNION ALL ".join(
+        f"SELECT CAST({r} AS INT) AS round, pair,"
+        f" replace(pair, ' ', '') AS merged,"
+        f" CAST(total AS BIGINT) AS total FROM b{r}"
+        for r in range(1, _LEARN_MERGES + 1)
+    )
+    return f"{ctes}\n    {rounds}"
+
+
+@register_local("bpe_learn_merges", oracle=_bpe_merges_oracle())
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 8 BPE merges over the corpus (operators/bpe.py::train_bpe):
     the corpus-size work is ONE word-count aggregate; the 8 iterative
@@ -1182,13 +1197,13 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     retired): the DuckDB oracle replays the trainer as 8 materialized
     CTE rounds (pair counts → argmax with the exact tie rule →
     double-space merge pass — the `bpe_apply_encode` machinery,
-    plans/retrieval.py::_bpe_merges_oracle) and emits the merge table
+    `_bpe_merges_oracle` above) and emits the merge table
     itself, so the learned sequence is hash-certified round by round.
     The pure-Python differential in tests/test_bpe.py stays as the
     second, independent check."""
     from ..operators.bpe import train_bpe
 
-    return train_bpe(_docs(spark, sf_dir), n_merges=8)
+    return train_bpe(_docs(spark, sf_dir), n_merges=_LEARN_MERGES)
 
 
 def _bpe_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1465,9 +1480,7 @@ def sequence_packing_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
-    return pack_sequences_ffd(
-        d, "doc_id", "n_tokens", capacity=128, n_shards=16
-    )
+    return pack_sequences_ffd(d, capacity=128, n_shards=16)
 
 
 # --- mergeable-sketch rollup (r5) ---------------------------------------------------
@@ -1688,7 +1701,7 @@ def corpus_stats_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured at sf0.1 (5-round alternating A/B, row-identical):
     # 1.90 s → 1.01 s for the full card.
     pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.3, max_doc_frac=0.05
+        d, threshold=0.3, max_doc_frac=0.05
     ).localCheckpoint(eager=False)
     near_ids = (
         pairs.select(F.col("id_a").alias("doc_id"))
@@ -1701,7 +1714,7 @@ def corpus_stats_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contamination_ngram_overlap). The benchmark shingle set is the one
     # justified broadcast: a real benchmark is fixed-size (MBs),
     # independent of corpus SF.
-    sh5 = word_shingles(d, "doc_id", "text", 5)
+    sh5 = word_shingles(d, 5)
     bench = (
         sh5.filter(F.col("doc_id") % 50 == 0).select("shingle_hash").distinct()
     )
@@ -1793,7 +1806,7 @@ def unimax_source_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size(tokens(F.col("text")))).cast("long").alias("n_tokens")
     )
     budget = F.expr("(19 * sum(n_tokens) over ()) div 20")
-    return unimax_waterfill(counts, "source", "n_tokens", budget, epochs=1)
+    return unimax_waterfill(counts, "source", budget, epochs=1)
 
 
 # --- in-engine quality classifier (r6) ---------------------------------------------
@@ -1826,10 +1839,10 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         (quality_score(F.col("text")) >= 0.9).cast("int").alias("label"),
     )
-    feats = hashed_dense_features(labeled, "doc_id", "text").join(
+    feats = hashed_dense_features(labeled).join(
         labeled.select("doc_id", "label"), "doc_id"
     )
-    w, b, losses = train_logreg(feats, "label", lr=8.0, n_iter=8)
+    w, b, losses = train_logreg(feats, lr=8.0, n_iter=8)
     rows = (
         [(-2, float(losses[-1])), (-1, float(b))]
         + [(i, float(w[i])) for i in range(len(w))]
@@ -1853,7 +1866,7 @@ def _logreg_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         (quality_score(F.col("text")) >= 0.9).cast("int").alias("label"),
     )
-    feats = hashed_dense_features(labeled, "doc_id", "text").join(
+    feats = hashed_dense_features(labeled).join(
         labeled.select("doc_id", "label"), "doc_id"
     )
     staged = feats.select(
@@ -1904,7 +1917,7 @@ def doc_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import context_windows
 
     d = _docs(spark, sf_dir)
-    return context_windows(d, "doc_id", "text", size=32, stride=24).select(
+    return context_windows(d, size=32, stride=24).select(
         "doc_id",
         F.col("window_id").cast("int").alias("window_id"),
         F.col("win_start").cast("int").alias("win_start"),
@@ -1970,7 +1983,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import duplicated_spans
 
     d = _docs_spread(spark, sf_dir)
-    return duplicated_spans(d, "doc_id", "text", k=_SPAN_K).select(
+    return duplicated_spans(d, k=_SPAN_K).select(
         "doc_id",
         F.col("span_start").cast("int").alias("span_start"),
         F.col("span_end").cast("int").alias("span_end"),
@@ -2022,7 +2035,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 A/B: _docs_spread measured neutral here (word_shingles spreads
     # the shingle pipeline itself) - plain scan kept.
     d = _docs(spark, sf_dir)
-    sh = word_shingles(d, "doc_id", "text", 5)
+    sh = word_shingles(d, 5)
     ss = (
         sh.join(d.select("doc_id", "source"), "doc_id")
         .select("source", "shingle_hash")
@@ -2384,9 +2397,7 @@ def training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     sampled = kept.join(sel, "doc_id")
-    return context_windows(
-        sampled, "doc_id", "text", size=32, stride=24
-    ).select(
+    return context_windows(sampled, size=32, stride=24).select(
         "doc_id",
         F.col("window_id").cast("int").alias("window_id"),
         F.col("win_start").cast("int").alias("win_start"),

@@ -27,6 +27,16 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+# The embeddings table: one unit-normalized float vector of EMB_DIMS
+# components per id. Every similarity, PQ and k-means operator reads this
+# layout.
+VEC_ID = "vec_id"
+EMBEDDING = "embedding"
+EMB_DIMS = 64
+
+# The documents table's key.
+DOC_ID = "doc_id"
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -52,9 +62,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    _pin_session_confs(spark)
     if name == "events":
         return load_events(spark, sf_dir)
+    _pin_session_confs(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
@@ -115,22 +125,25 @@ def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) 
     writer.parquet(path)
 
 
+# Hash buckets of every bucketed table.
+N_BUCKETS = 8
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
     bucket_cols: tuple[str, ...],
-    n_buckets: int = 32,
     sort_cols: tuple[str, ...] = (),
 ) -> None:
     """Bucketed parquet table (catalog-managed): pre-shuffles data into
-    `n_buckets` hash buckets on the join/agg key so later equi-joins and
+    `N_BUCKETS` hash buckets on the join/agg key so later equi-joins and
     aggregations on that key are co-located — Catalyst drops the Exchange
     entirely (proved in tests/test_bucketing.py). This is the storage-side
     answer to the 100 TB fact⋈fact join: pay the shuffle once at write
     time, never again per query. `sort_cols` additionally orders within
     buckets so sort-merge joins skip their sort."""
     writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *bucket_cols
+        N_BUCKETS, *bucket_cols
     )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
@@ -214,18 +227,13 @@ def read_jsonl(
     return reader.json(path)
 
 
-def write_jsonl(
-    df: DataFrame, path: str, compression: str | None = "gzip", **options
-) -> None:
-    """JSON-Lines sink. Compressed by default: JSONL is ~4-10× larger than
-    parquet for the same rows, and gzip parts keep the export shippable;
-    pass compression=None for line-seekable plain text. Not a storage
-    format — an interchange/export step at the pipeline edge (parquet
-    remains the at-rest format). Like CSV, Spark's default JSON
+def write_jsonl(df: DataFrame, path: str, **options) -> None:
+    """JSON-Lines sink, gzip-compressed: JSONL is ~4-10× larger than
+    parquet for the same rows, and gzip parts keep the export shippable.
+    Not a storage format — an interchange/export step at the pipeline
+    edge (parquet remains the at-rest format). Like CSV, Spark's default JSON
     timestampFormat keeps milliseconds only — pass
     ``timestampFormat="yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"`` to round-trip µs
     timestamps losslessly."""
     writer = df.write.mode("overwrite").options(**options)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+    writer.option("compression", "gzip").json(path)

@@ -24,14 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import incremental_lsh_candidates
+from ..operators.dedup import SIMHASH_MAX_DIST, incremental_lsh_candidates
 from ..operators.imagehash import attach_near_dup_png_payload, dhash_images
+from ..sources.tables import DOC_ID
 from .ingest import replay
 
 _BITS, _BANDS = 64, 4
 
 
-def dhash_banded(fp: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dhash_banded(fp: DataFrame) -> DataFrame:
     """(id, dhash, band, band_hash): the SimHash band split applied to a
     dHash column — 4 disjoint 16-bit prefixes, the pigeonhole-complete
     candidate index for Hamming ≤ 3 (same arithmetic as
@@ -39,7 +40,7 @@ def dhash_banded(fp: DataFrame, id_col: str = "doc_id") -> DataFrame:
     width = _BITS // _BANDS
     mask = (1 << width) - 1
     return fp.select(
-        id_col,
+        DOC_ID,
         "dhash",
         F.explode(
             F.array(
@@ -54,12 +55,10 @@ def dhash_banded(fp: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, "dhash", "bk.band", "bk.band_hash")
+    ).select(DOC_ID, "dhash", "bk.band", "bk.band_hash")
 
 
-def streaming_image_dhash_pairs(
-    spark: SparkSession, docs: DataFrame, max_dist: int = 3
-) -> DataFrame:
+def streaming_image_dhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Replay ``docs`` as doc_id-range micro-batches of image payloads
     through the incremental dedup chain (`ingest.replay`); returns the
     union of per-batch emissions, (id_a, id_b, hamming_dist)."""
@@ -74,7 +73,7 @@ def streaming_image_dhash_pairs(
         fp = dhash_images(attach_near_dup_png_payload(batch_df))
         delta = dhash_banded(fp).localCheckpoint()
         old = spark.read.parquet(bands_dir)
-        cand = incremental_lsh_candidates(old, delta, "doc_id", delta_in_full=False)
+        cand = incremental_lsh_candidates(old, delta, delta_in_full=False)
         hashes = (
             old.select("doc_id", "dhash")
             .unionByName(delta.select("doc_id", "dhash"))
@@ -87,7 +86,7 @@ def streaming_image_dhash_pairs(
             cand.join(ha, "id_a")
             .join(hb, "id_b")
             .withColumn("hamming_dist", dist)
-            .filter(F.col("hamming_dist") <= max_dist)
+            .filter(F.col("hamming_dist") <= SIMHASH_MAX_DIST)
             .select("id_a", "id_b", "hamming_dist")
             .write.mode("append")
             .parquet(f"{scratch}/out_pairs")

@@ -8,7 +8,7 @@ recomputes everything (README.md:23). Natively:
   (``trigger(processingTime=...)`` or ``Trigger.AvailableNow`` replaces the
   external scheduler).
 - OP-62 tumbling hourly alignment → ``window(ts, '1 hour')``.
-- OP-63 late/duplicate handling → ``withWatermark`` +
+- OP-63 late/duplicate handling → ``withWatermark`` (``WATERMARK``) +
   ``dropDuplicatesWithinWatermark`` (instead of full recompute).
 - OP-64 stateful last-value carry-forward → ``applyInPandasWithState``.
 
@@ -39,6 +39,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Event-time settings shared by the stateful streaming operators: rows more
+# than WATERMARK behind the latest event are late, sessions close after
+# SESSION_GAP of inactivity, and the interval join pairs rows JOIN_WITHIN
+# apart.
+WATERMARK = "2 hours"
+SESSION_GAP = "30 minutes"
+JOIN_WITHIN = "1 hour"
+
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -65,9 +73,10 @@ def read_events_stream(
     harnesses that must prove cross-batch merge laws (None = source
     default: everything available in one batch under AvailableNow).
 
-    A one-file batch probe (footer read only) takes the on-disk ts type
+    A batch read of the directory probes the on-disk ts type
     (timestamp_ntz or timestamp), so the stream schema matches the files;
-    either way the returned ``ts`` is a session-zoned timestamp.
+    either way the returned ``ts`` is a session-zoned timestamp. The probe
+    infers the parquet schema, which submits a Spark job on every call.
     """
     try:
         probe_type = spark.read.parquet(dir_path).schema["ts"].dataType
@@ -90,12 +99,12 @@ def read_events_stream(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def hourly_tumbling_agg(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_tumbling_agg(stream: DataFrame) -> DataFrame:
     """OP-62 + OP-63 — watermarked tumbling hourly aggregate per symbol:
     the streaming twin of the batch hour-floor + last-value pivot. State is
-    bounded by the watermark; keys are (symbol, hour) so skew stays per-key."""
+    bounded by WATERMARK; keys are (symbol, hour) so skew stays per-key."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(
             F.window("ts", "1 hour").alias("w"),
             F.col("user_id").alias("symbol"),
@@ -108,11 +117,11 @@ def hourly_tumbling_agg(stream: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
-def dedup_within_watermark(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_within_watermark(stream: DataFrame) -> DataFrame:
     """OP-63 — the reference handles duplicates by full recompute +
     drop_duplicates (preprocess_function/main.py:14); natively: bounded-state
-    streaming dedup on the event key within the watermark."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    streaming dedup on the event key within WATERMARK."""
+    return stream.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -128,16 +137,14 @@ DOCUMENTS_SCHEMA = T.StructType(
 )
 
 
-def read_documents_stream(
-    spark: SparkSession, dir_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_documents_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     """File-source replay of a continuously-crawled document corpus (the
     LLM-pipeline twin of `read_events_stream`): new files = new
-    micro-batch; `max_files_per_trigger=1` forces one batch per file so
+    micro-batch; one file per trigger forces one batch per file so
     replay tests exercise cross-batch state."""
     return (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .format("parquet")
         .load(dir_path)
     )
@@ -242,17 +249,15 @@ def replay(
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def session_window_agg(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def session_window_agg(stream: DataFrame) -> DataFrame:
     """OP-62 family — native streaming sessionization: the same
     ``session_window`` expression as the batch `session_window_native`
-    query, under a watermark. Sessions merge while the event gap ≤ `gap`;
+    query, under a watermark. Sessions merge while the event gap ≤ SESSION_GAP;
     a session finalizes (and leaves state) once the watermark passes its
     close — unbounded sessions cannot pin state forever."""
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("user_id"), F.session_window("ts", gap).alias("sw"))
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy(F.col("user_id"), F.session_window("ts", SESSION_GAP).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -263,13 +268,9 @@ def session_window_agg(
     )
 
 
-def interval_join_streams(
-    events_stream: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def interval_join_streams(events_stream: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same user's
-    clicks in the preceding `within` window.
+    clicks in the preceding JOIN_WITHIN window.
 
     Both sides carry watermarks and the join condition bounds c.ts relative
     to p.ts, so Spark can compute exactly how long a click must be buffered
@@ -286,7 +287,7 @@ def interval_join_streams(
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", WATERMARK)
     )
     c = (
         events_stream.filter(F.col("event_type") == "click")
@@ -295,12 +296,12 @@ def interval_join_streams(
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", WATERMARK)
     )
     joined = p.join(
         c,
         F.expr(
-            f"p_user = c_user AND c_ts >= p_ts - INTERVAL {within}"
+            f"p_user = c_user AND c_ts >= p_ts - INTERVAL {JOIN_WITHIN}"
             " AND c_ts <= p_ts"
         ),
     )

@@ -84,9 +84,7 @@ def test_planted_recall_on_spark(spark):
     fp = audio_fingerprints(attach_near_dup_wav_payload(ids))
     got = {
         (r.id_a, r.id_b): r.hamming_dist
-        for r in simhash_hamming_pairs(
-            fp, "doc_id", fp_col="afp", bits=64, bands=4, max_dist=3
-        ).collect()
+        for r in simhash_hamming_pairs(fp, "doc_id", fp_col="afp", bits=64).collect()
     }
     planted = {
         (b * 4 + i, b * 4 + j)

@@ -24,8 +24,8 @@ def bucketed_tables(spark):
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "li_bucketed", ("l_orderkey",), 8, ("l_orderkey",))
-    write_bucketed(o, "o_bucketed", ("o_orderkey",), 8, ("o_orderkey",))
+    write_bucketed(li, "li_bucketed", ("l_orderkey",), ("l_orderkey",))
+    write_bucketed(o, "o_bucketed", ("o_orderkey",), ("o_orderkey",))
     yield
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS o_bucketed")

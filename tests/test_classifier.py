@@ -27,21 +27,19 @@ def _featurized(spark):
         "text",
         (quality_score(F.col("text")) >= 0.9).cast("int").alias("label"),
     )
-    feats = hashed_dense_features(d, "doc_id", "text").join(
-        d.select("doc_id", "label"), "doc_id"
-    )
+    feats = hashed_dense_features(d).join(d.select("doc_id", "label"), "doc_id")
     return feats
 
 
 def test_logreg_matches_numpy(spark):
     feats = _featurized(spark)
-    w, b, losses = train_logreg(feats, "label", n_iter=10)
+    w, b, losses = train_logreg(feats, n_iter=10)
 
     rows = feats.select("doc_id", "features", "label").collect()
     rows.sort(key=lambda r: r["doc_id"])
     X = np.array([list(r["features"]) for r in rows])
     y = np.array([float(r["label"]) for r in rows])
-    w_ref, b_ref, losses_ref = reference_logreg(X, y, n_iter=10)
+    w_ref, b_ref, losses_ref = reference_logreg(X, y)
 
     # float sums run in engine-dependent order; tolerance, not bitwise
     assert np.allclose(w, w_ref, atol=1e-7)
@@ -54,7 +52,7 @@ def test_logreg_matches_numpy(spark):
 
 def test_predictions_agree_and_beat_chance(spark):
     feats = _featurized(spark)
-    w, b, _ = train_logreg(feats, "label", lr=4.0, n_iter=40)
+    w, b, _ = train_logreg(feats, lr=4.0, n_iter=40)
 
     scored = feats.select(
         "doc_id", "label", predict_proba(feats, w, b).alias("p")
@@ -92,7 +90,7 @@ def test_model_blob_roundtrip_through_parquet(spark, tmp_path):
     )
 
     feats = _featurized(spark)
-    w, b, _ = train_logreg(feats, "label", n_iter=5)
+    w, b, _ = train_logreg(feats, n_iter=5)
 
     path = str(tmp_path / "model")
     spark.createDataFrame(

@@ -48,7 +48,7 @@ def test_tokens_on_null_and_blank(spark):
 
 
 def test_repetition_stats_skips_tokenless_docs(spark):
-    got = {r.doc_id: r for r in repetition_stats(_docs(spark), "doc_id", "text").collect()}
+    got = {r.doc_id: r for r in repetition_stats(_docs(spark)).collect()}
     # tokenless docs contribute no gram rows → absent, not crashed
     assert set(got) == {4}
     assert got[4].n_tokens == 4
@@ -56,15 +56,15 @@ def test_repetition_stats_skips_tokenless_docs(spark):
 
 def test_minhash_chain_on_sparse_corpus(spark):
     # doc 4 has 4 tokens → 3-shingles exist; the rest contribute nothing
-    sig = minhash_signatures(_docs(spark), "doc_id", "text", n=3, k=16)
-    banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
-    pairs = lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4).collect()
+    sig = minhash_signatures(_docs(spark), n=3, k=16)
+    banded = minhash_banded(sig, bands=4, rows=4)
+    pairs = lsh_candidate_pairs(sig, bands=4, rows=4).collect()
     assert pairs == []  # a single signed doc can't pair with itself
     assert banded.filter(F.col("doc_id") != 4).count() == 0
 
 
 def test_exact_dedup_handles_null_text(spark):
-    out = exact_dedup_groups(_docs(spark), "doc_id", "text").collect()
+    out = exact_dedup_groups(_docs(spark)).collect()
     # md5(NULL) is NULL → the NULL-text doc forms its own group; blank
     # and whitespace texts hash distinctly; nothing crashes
     groups = {r.text_md5: (r.kept_id, r.n_copies) for r in out}
@@ -74,7 +74,7 @@ def test_exact_dedup_handles_null_text(spark):
 
 def test_ffd_packing_empty_input(spark):
     df = spark.createDataFrame([], "doc_id long, n_tokens long")
-    assert pack_sequences_ffd(df, "doc_id", "n_tokens", capacity=64).count() == 0
+    assert pack_sequences_ffd(df, capacity=64).count() == 0
 
 
 # --- round-6 operators --------------------------------------------------------------
@@ -94,7 +94,7 @@ def test_context_windows_short_and_degenerate_docs(spark):
         ],
         "doc_id long, text string",
     )
-    rows = context_windows(d, "doc_id", "text", size=32, stride=24).collect()
+    rows = context_windows(d, size=32, stride=24).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -119,13 +119,13 @@ def test_duplicated_spans_no_dups_and_exact_copies(spark):
         [(i, " ".join(f"w{i}_{j}" for j in range(20))) for i in range(4)],
         "doc_id long, text string",
     )
-    assert duplicated_spans(uniq, "doc_id", "text", k=8).count() == 0
+    assert duplicated_spans(uniq, k=8).count() == 0
 
     body = " ".join(f"x{j}" for j in range(20))
     copies = spark.createDataFrame(
         [(1, body), (2, body)], "doc_id long, text string"
     )
-    spans = duplicated_spans(copies, "doc_id", "text", k=8).collect()
+    spans = duplicated_spans(copies, k=8).collect()
     # each full copy is one maximal span covering the whole doc
     assert len(spans) == 2
     for r in spans:
@@ -142,10 +142,8 @@ def test_classifier_single_class_labels(spark):
         [(i, f"alpha beta gamma{i}", 1) for i in range(6)],
         "doc_id long, text string, label int",
     )
-    feats = hashed_dense_features(d, "doc_id", "text").join(
-        d.select("doc_id", "label"), "doc_id"
-    )
-    w, b, losses = train_logreg(feats, "label", n_iter=5)
+    feats = hashed_dense_features(d).join(d.select("doc_id", "label"), "doc_id")
+    w, b, losses = train_logreg(feats, n_iter=5)
     # all-positive labels: loss decreases toward 0, nothing NaNs
     assert all(x == x for x in w) and b == b
     assert losses[-1] < losses[0]
@@ -161,6 +159,6 @@ def test_waterfill_zero_budget_and_zero_sources(spark):
     )
     got = {
         r["src"]: r["alloc"]
-        for r in unimax_waterfill(d, "src", "n_tokens", 0).collect()
+        for r in unimax_waterfill(d, "src", 0).collect()
     }
     assert got == {"a": 0, "b": 0}

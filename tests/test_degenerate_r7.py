@@ -111,7 +111,6 @@ def test_covariance_single_vector_is_null(spark):
 def test_pca_components_on_zero_matrix():
     comps = pca_power_components(
         [{"d1": i, "d2": i, "cov": 0.0} for i in range(64)],
-        dim=64,
         n_components=2,
     )
     # zero covariance: power iteration breaks on the zero vector and
@@ -122,7 +121,7 @@ def test_pca_components_on_zero_matrix():
 
 def test_unigram_trains_on_tiny_messy_corpus(spark):
     logp, lls = train_unigram(
-        _messy_docs(spark), "text", seed_size=10, vocab_size=12, n_iters=2
+        _messy_docs(spark), seed_size=10, vocab_size=12, n_iters=2
     )
     assert logp and all(math.isfinite(v) and v < 0 for v in logp.values())
     for word in ("real", "words", "here", "now", "more", "too"):
@@ -189,7 +188,7 @@ def test_seed_pieces_max_len_one(spark):
     d = spark.createDataFrame(
         [(1, "ab ab ba")], "doc_id long, text string"
     )
-    seed = seed_pieces(word_counts(d, "text"), max_piece_len=1)
+    seed = seed_pieces(word_counts(d), max_piece_len=1)
     assert {p for p, _ in seed} == {"a", "b"}
 
 

@@ -122,9 +122,7 @@ def test_planted_recall_on_spark(spark):
 
     ids = spark.range(0, 80).withColumnRenamed("id", "doc_id")
     fp = dhash_images(attach_near_dup_png_payload(ids))
-    pairs = simhash_hamming_pairs(
-        fp, "doc_id", fp_col="dhash", bits=64, bands=4, max_dist=3
-    )
+    pairs = simhash_hamming_pairs(fp, "doc_id", fp_col="dhash", bits=64)
     got = {(r.id_a, r.id_b): r.hamming_dist for r in pairs.collect()}
     planted = {
         (base * 4 + i, base * 4 + j)

@@ -29,11 +29,11 @@ _KEYS = ("band", "band_hash")
 @pytest.fixture(scope="module")
 def banded_tables(spark):
     d = load_table(spark, SF_DIR, "documents")
-    sig = minhash_signatures(d, "doc_id", "text", n=3, k=16)
-    banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
-    write_bucketed(banded, "banded_at_rest", _KEYS, 8, _KEYS)
+    sig = minhash_signatures(d, n=3, k=16)
+    banded = minhash_banded(sig, bands=4, rows=4)
+    write_bucketed(banded, "banded_at_rest", _KEYS, _KEYS)
     write_bucketed(
-        banded.filter(F.col("doc_id") % 5 == 4), "banded_delta", _KEYS, 8, _KEYS
+        banded.filter(F.col("doc_id") % 5 == 4), "banded_delta", _KEYS, _KEYS
     )
     yield banded
     spark.sql("DROP TABLE IF EXISTS banded_at_rest")
@@ -44,7 +44,7 @@ def test_bucketed_incremental_probe_has_no_shuffle(spark, banded_tables):
     full = spark.table("banded_at_rest")
     delta = spark.table("banded_delta").hint("merge")  # SMJ: no broadcast
     # can mask the Exchange question
-    cand = incremental_lsh_candidates(full, delta, "doc_id")
+    cand = incremental_lsh_candidates(full, delta)
     plan = cand._sc._jvm.PythonSQLUtils.explainString(
         cand._jdf.queryExecution(), "formatted"
     )
@@ -58,13 +58,13 @@ def test_bucketed_incremental_probe_has_no_shuffle(spark, banded_tables):
     want = {
         (r.id_a, r.id_b): r.shared_bands
         for r in incremental_lsh_candidates(
-            banded, banded.filter(F.col("doc_id") % 5 == 4), "doc_id"
+            banded, banded.filter(F.col("doc_id") % 5 == 4)
         ).collect()
     }
     got = {
         (r.id_a, r.id_b): r.shared_bands
         for r in incremental_lsh_candidates(
-            spark.table("banded_at_rest"), spark.table("banded_delta"), "doc_id"
+            spark.table("banded_at_rest"), spark.table("banded_delta")
         ).collect()
     }
     assert got == want

@@ -24,8 +24,8 @@ from stock_market_big_data_project_spark.operators.dedup import (
 
 def _banded(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signatures(df, "doc_id", "text", n=2, k=16)
-    return minhash_banded(sig, "doc_id", bands=4, rows=4)
+    sig = minhash_signatures(df, n=2, k=16)
+    return minhash_banded(sig, bands=4, rows=4)
 
 
 def test_delta_delta_pair_counts_bands_once(spark):
@@ -40,7 +40,7 @@ def test_delta_delta_pair_counts_bands_once(spark):
     delta = banded.filter(F.col("doc_id") % 5 == 4)
     got = {
         (r.id_a, r.id_b): r.shared_bands
-        for r in incremental_lsh_candidates(banded, delta, "doc_id").collect()
+        for r in incremental_lsh_candidates(banded, delta).collect()
     }
     assert got == {(4, 9): 4}
 
@@ -54,18 +54,16 @@ def test_incremental_equals_filtered_full_join(spark):
     delta = banded.filter(F.col("doc_id") % 5 == 4)
     inc = {
         (r.id_a, r.id_b): r.shared_bands
-        for r in incremental_lsh_candidates(banded, delta, "doc_id").collect()
+        for r in incremental_lsh_candidates(banded, delta).collect()
     }
     sig = minhash_signatures(
         spark.createDataFrame(rows, "doc_id long, text string"),
-        "doc_id",
-        "text",
         n=2,
         k=16,
     )
     full = {
         (r.id_a, r.id_b): r.shared_bands
-        for r in lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4).collect()
+        for r in lsh_candidate_pairs(sig, bands=4, rows=4).collect()
         if r.id_a % 5 == 4 or r.id_b % 5 == 4
     }
     assert inc == full
@@ -86,15 +84,13 @@ def test_unmerged_delta_finds_new_vs_new_pairs(spark):
     delta = _banded(spark, rows_delta)
 
     # probe-only (precondition violated): the new-vs-new pair is missed
-    probe_only = incremental_lsh_candidates(
-        at_rest, delta, "doc_id"
-    ).collect()
+    probe_only = incremental_lsh_candidates(at_rest, delta).collect()
     assert probe_only == []
 
     got = {
         (r.id_a, r.id_b): r.shared_bands
         for r in incremental_lsh_candidates(
-            at_rest, delta, "doc_id", delta_in_full=False
+            at_rest, delta, delta_in_full=False
         ).collect()
     }
     assert got == {(14, 19): 4}
@@ -115,7 +111,7 @@ def test_unmerged_delta_never_double_counts_merged_rows(spark):
     got = {
         (r.id_a, r.id_b): r.shared_bands
         for r in incremental_lsh_candidates(
-            banded, delta, "doc_id", delta_in_full=False
+            banded, delta, delta_in_full=False
         ).collect()
     }
     assert got == {(4, 9): 4}

@@ -52,14 +52,14 @@ def planted(spark):
 
 
 def test_band_refinement_subset(planted):
-    sig = minhash_signatures(planted, "doc_id", "text", n=3, k=16)
+    sig = minhash_signatures(planted, n=3, k=16)
     c44 = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4).collect()
+        for r in lsh_candidate_pairs(sig, bands=4, rows=4).collect()
     }
     c82 = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sig, "doc_id", bands=8, rows=2).collect()
+        for r in lsh_candidate_pairs(sig, bands=8, rows=2).collect()
     }
     assert c44 <= c82
     # exact-copy pairs agree on every minimum -> found by both bandings

@@ -36,7 +36,7 @@ def test_merge_upsert_semantics(spark):
     out = {
         r["k"]: (r["v"], r["rid"])
         for r in merge_upsert(
-            base, upd, keys=["k"], ts_col="ts", delete_col="tomb", tiebreak=["rid"]
+            base, upd, keys=["k"], delete_col="tomb", tiebreak=["rid"]
         ).collect()
     }
     assert out == {
@@ -51,5 +51,5 @@ def test_merge_upsert_without_tombstones(spark):
     cols = ["k", "ts", "v"]
     base = spark.createDataFrame([("a", _ts(1), 1.0)], cols)
     upd = spark.createDataFrame([("a", _ts(2), 2.0), ("b", _ts(1), 9.0)], cols)
-    rows = merge_upsert(base, upd, keys=["k"], ts_col="ts").collect()
+    rows = merge_upsert(base, upd, keys=["k"]).collect()
     assert {(r["k"], r["v"]) for r in rows} == {("a", 2.0), ("b", 9.0)}

@@ -56,9 +56,7 @@ def test_waterfill_matches_reference(spark, sizes, budget, epochs):
     )
     got = {
         r["src"]: r["alloc"]
-        for r in unimax_waterfill(
-            df, "src", "n_tokens", budget, epochs
-        ).collect()
+        for r in unimax_waterfill(df, "src", budget, epochs).collect()
     }
     want = _reference_waterfill(sizes, budget, epochs)
     assert got == want
@@ -79,14 +77,12 @@ def test_waterfill_partitioning_invariant(spark):
     )
     base = {
         r["src"]: r["alloc"]
-        for r in unimax_waterfill(df, "src", "n_tokens", 900).collect()
+        for r in unimax_waterfill(df, "src", 900).collect()
     }
     for parts in (1, 7):
         got = {
             r["src"]: r["alloc"]
-            for r in unimax_waterfill(
-                df.repartition(parts), "src", "n_tokens", 900
-            ).collect()
+            for r in unimax_waterfill(df.repartition(parts), "src", 900).collect()
         }
         assert got == base
 
@@ -122,9 +118,7 @@ def test_waterfill_matches_reference_random(spark, sizes, budget, epochs):
     )
     got = {
         r["src"]: r["alloc"]
-        for r in unimax_waterfill(
-            df, "src", "n_tokens", budget, epochs
-        ).collect()
+        for r in unimax_waterfill(df, "src", budget, epochs).collect()
     }
     want = _reference_waterfill(sizes, budget, epochs)
     assert got == want

@@ -24,7 +24,7 @@ def test_model_sink_roundtrip(spark, sf_dir, tmp_path):
     series = ev.select(
         F.col("user_id").alias("symbol"), F.col("ts"), F.col("value")
     )
-    models = fit_models(series, "symbol", "ts", "value", n_lags=24)
+    models = fit_models(series)
     path = str(tmp_path / "models")
     models.write.mode("overwrite").parquet(path)
 
@@ -45,7 +45,7 @@ def test_model_sink_roundtrip(spark, sf_dir, tmp_path):
     # reloaded artifact, fed the symbol's last 24 values (most recent
     # first), reproduces the forecaster's step-1 prediction bitwise
     step1 = (
-        recursive_forecast(series, "symbol", "ts", "value", n_lags=24, horizon=1)
+        recursive_forecast(series, "ts", horizon=1)
         .toPandas()
         .set_index("symbol")["forecast_c"]
     )

@@ -33,7 +33,7 @@ def _emb_matrix(sf_dir: str) -> np.ndarray:
 
 def test_power_iteration_matches_numpy_eigh(spark):
     cov_rows = get_query("embedding_covariance")(spark, SF_DIR).collect()
-    comps = pca_power_components(cov_rows, dim=64, n_components=2)
+    comps = pca_power_components(cov_rows, n_components=2)
     c = np.zeros((64, 64))
     for r in cov_rows:
         c[r["d1"], r["d2"]] = r["cov"]
@@ -57,7 +57,7 @@ def test_projection_matches_numpy(spark):
     covariance was centered on (the dim-sum/n mean the query collects),
     so per-component score means are ~0."""
     cov_rows = get_query("embedding_covariance")(spark, SF_DIR).collect()
-    comps = pca_power_components(cov_rows, dim=64, n_components=2)
+    comps = pca_power_components(cov_rows, n_components=2)
     mat, ids = _emb_matrix(SF_DIR)
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -93,7 +93,7 @@ def test_projection_partitioning_invariance(spark):
     """Same projections regardless of physical layout — the Arrow matmul
     is per-row arithmetic, so repartitioning cannot change values."""
     cov_rows = get_query("embedding_covariance")(spark, SF_DIR).collect()
-    comps = pca_power_components(cov_rows, dim=64, n_components=2)
+    comps = pca_power_components(cov_rows, n_components=2)
     from stock_market_big_data_project_spark.sources.tables import load_table
 
     import numpy as np
@@ -156,7 +156,7 @@ def test_power_iteration_negative_dominant_eigenvalue():
         for i in range(64)
         for j in range(i, 64)
     ]
-    comps = pca_power_components(rows, dim=64, n_components=1, n_iter=3000)
+    comps = pca_power_components(rows, n_components=1, n_iter=3000)
     align = abs(float(comps[0] @ q[:, 0]))
     assert align > 1.0 - 1e-9, align
 

@@ -65,7 +65,7 @@ def _spark_df(spark, obs, extra_key=0):
 def test_resample_ffill_matches_pandas(spark, obs):
     df, pdf = _spark_df(spark, obs)
     got = (
-        resample_ffill(df, "k", "ts", ["v"])
+        resample_ffill(df, "k", ["v"])
         .toPandas()
         .sort_values("ts")
         .reset_index(drop=True)
@@ -106,7 +106,7 @@ def test_asof_join_matches_merge_asof(spark, left_obs, right_obs):
     rdf, rpdf = _spark_df(spark, right_obs)
     rdf = rdf.withColumnRenamed("v", "rv")
     got = (
-        asof_join(ldf, rdf, "k", "ts", ["rv"])
+        asof_join(ldf, rdf, "k", ["rv"])
         .toPandas()
         .sort_values("ts")
         .reset_index(drop=True)
@@ -136,10 +136,9 @@ def test_resample_ffill_single_col_null_obs(spark):
     )
     df = spark.createDataFrame(pdf)
     got = (
-        resample_ffill(df, "k", "ts", ["v"])
+        resample_ffill(df, "k", ["v"])
         .toPandas()
-        .sort_values("ts")["v"]
-        .tolist()
+        .sort_values("ts")["v"] .tolist()
     )
     assert got == [5.0, 5.0, 5.0]
 
@@ -148,7 +147,7 @@ def test_resample_ffill_single_col_null_obs(spark):
 def test_asof_join_empty_right(spark, how):
     ldf, _ = _spark_df(spark, [(0, 1.0), (60, 2.0)])
     rdf = spark.createDataFrame([], "k bigint, ts timestamp, rv double")
-    got = asof_join(ldf, rdf, "k", "ts", ["rv"]).toPandas()
+    got = asof_join(ldf, rdf, "k", ["rv"]).toPandas()
     assert len(got) == 2
     assert got["rv"].isna().all()
 
@@ -195,7 +194,6 @@ def test_merge_upsert_matches_pandas_model(spark, base_rows, upd_rows):
             spark.createDataFrame(base_pd[cols], schema=schema),
             spark.createDataFrame(upd_pd[cols], schema=schema),
             keys=["k"],
-            ts_col="ts",
             delete_col="tomb",
             tiebreak=["rid"],
         ).collect()

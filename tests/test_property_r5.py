@@ -44,9 +44,7 @@ packing_rows_st = st.lists(
 def test_ffd_invariants_random_shapes(spark, rows):
     CAP = 128
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    got = pack_sequences_ffd(
-        df, "doc_id", "n_tokens", capacity=CAP, n_shards=4
-    ).collect()
+    got = pack_sequences_ffd(df, capacity=CAP, n_shards=4).collect()
     # exactly-once, faithful lengths
     assert {(r.doc_id, r.len) for r in got} == set(rows)
     by_seq: dict[int, list] = {}
@@ -89,8 +87,8 @@ def test_unmerged_delta_equals_merged_probe(spark, rows, cut):
     must produce exactly the same candidates as the default probe
     against the merged table."""
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signatures(df, "doc_id", "text", n=2, k=16)
-    banded = minhash_banded(sig, "doc_id", bands=4, rows=4)
+    sig = minhash_signatures(df, n=2, k=16)
+    banded = minhash_banded(sig, bands=4, rows=4)
     is_delta = F.col("doc_id") % cut == 0
     delta = banded.filter(is_delta)
     at_rest_only = banded.filter(~is_delta)
@@ -98,19 +96,19 @@ def test_unmerged_delta_equals_merged_probe(spark, rows, cut):
     unmerged = {
         (r.id_a, r.id_b): r.shared_bands
         for r in incremental_lsh_candidates(
-            at_rest_only, delta, "doc_id", delta_in_full=False
+            at_rest_only, delta, delta_in_full=False
         ).collect()
     }
     merged = {
         (r.id_a, r.id_b): r.shared_bands
-        for r in incremental_lsh_candidates(banded, delta, "doc_id").collect()
+        for r in incremental_lsh_candidates(banded, delta).collect()
     }
     assert unmerged == merged
 
     # and both equal the full self-join filtered to delta-touching pairs
     full = {
         (r.id_a, r.id_b): r.shared_bands
-        for r in lsh_candidate_pairs(sig, "doc_id", bands=4, rows=4).collect()
+        for r in lsh_candidate_pairs(sig, bands=4, rows=4).collect()
         if r.id_a % cut == 0 or r.id_b % cut == 0
     }
     assert unmerged == full

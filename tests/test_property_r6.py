@@ -76,7 +76,7 @@ def test_context_windows_match_reference(spark, docs, size, stride):
     rows = [(i, " ".join(t)) for i, t in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {}
-    for r in context_windows(df, "doc_id", "text", size, stride).collect():
+    for r in context_windows(df, size, stride).collect():
         got.setdefault(r["doc_id"], {})[r["window_id"]] = (
             r["win_start"],
             r["n_win_tokens"],
@@ -93,7 +93,7 @@ def test_duplicated_spans_match_reference(spark, docs, k):
     rows = [(i, " ".join(t)) for i, t in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {}
-    for r in duplicated_spans(df, "doc_id", "text", k).collect():
+    for r in duplicated_spans(df, k).collect():
         got.setdefault(r["doc_id"], []).append(
             (r["span_start"], r["span_end"], r["n_grams"])
         )
@@ -110,6 +110,6 @@ def test_context_windows_rejects_gap_strides(spark):
 
     df = spark.createDataFrame([(0, "a b c d e")], "doc_id long, text string")
     with pytest.raises(ValueError, match="stride"):
-        context_windows(df, "doc_id", "text", size=4, stride=5)
+        context_windows(df, size=4, stride=5)
     with pytest.raises(ValueError):
-        context_windows(df, "doc_id", "text", size=0, stride=1)
+        context_windows(df, size=0, stride=1)

@@ -365,7 +365,7 @@ def test_fertility_matches_reference_segmenters(spark):
     sdf = load_table(spark, SF_DIR, "documents")
     merges = _ref_train(wc, 12)
     bpe_units = sum(n * len(_ref_segment(w, merges)) for w, n in wc.items())
-    logp, _ = train_unigram(sdf, "text", seed_size=60, vocab_size=48, n_iters=3)
+    logp, _ = train_unigram(sdf, seed_size=60, vocab_size=48, n_iters=3)
     uni_units = sum(n * len(viterbi_segment(w, logp)) for w, n in wc.items())
 
     got = {

@@ -28,9 +28,7 @@ def _corpus(spark):
 
 def _packed(spark, df=None):
     d = df if df is not None else _corpus(spark)
-    return pack_sequences_ffd(
-        d, "doc_id", "n_tokens", capacity=CAP, n_shards=SHARDS
-    ).collect()
+    return pack_sequences_ffd(d, capacity=CAP, n_shards=SHARDS).collect()
 
 
 def _reference_ffd(rows, capacity):
@@ -128,9 +126,7 @@ def test_oversize_doc_truncated_alone(spark):
     )
     got = {
         r.doc_id: r
-        for r in pack_sequences_ffd(
-            df, "doc_id", "n_tokens", capacity=CAP, n_shards=1
-        ).collect()
+        for r in pack_sequences_ffd(df, capacity=CAP, n_shards=1).collect()
     }
     assert got[1].truncated and got[1].offset == 0
     # the oversize doc fills its bin completely — nothing joins it

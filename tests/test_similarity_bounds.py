@@ -168,9 +168,7 @@ def test_lsh_fast_path_equals_decimal_reference(spark):
     )
     exact = sorted(
         (r.vec_id, r.band, r.band_key)
-        for r in _band_keys_decimal(
-            emb, "vec_id", "embedding", hyperplanes(16, 64), 4
-        ).collect()
+        for r in _band_keys_decimal(emb, hyperplanes(16, 64)).collect()
     )
     assert fast == exact
 

@@ -72,10 +72,8 @@ def test_ngram_stop_shingle_cut_identity_when_no_hot(spark):
         ],
         "doc_id long, text string",
     )
-    plain = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.1)
-    cut = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.1, max_doc_frac=0.9
-    )
+    plain = ngram_jaccard_pairs(docs, threshold=0.1)
+    cut = ngram_jaccard_pairs(docs, threshold=0.1, max_doc_frac=0.9)
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, cut.collect()))
     assert plain.count() > 0  # non-vacuous
 
@@ -96,11 +94,9 @@ def test_ngram_stop_shingle_cut_kills_hot_bucket(spark):
         ],
         "doc_id long, text string",
     )
-    unfiltered = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.0)
+    unfiltered = ngram_jaccard_pairs(docs, threshold=0.0)
     assert unfiltered.count() == n_docs * (n_docs - 1) // 2
-    cut = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.0, max_doc_frac=0.5
-    )
+    cut = ngram_jaccard_pairs(docs, threshold=0.0, max_doc_frac=0.5)
     assert cut.count() == 0
 
 
@@ -136,10 +132,10 @@ def test_minhash_bucket_cap_bounds_candidates(spark):
     )
 
     docs = _dup_heavy_docs(spark)
-    sig = minhash_signatures(docs, "doc_id", "text", n=3, k=32)
-    uncapped = lsh_candidate_pairs(sig, "doc_id").count()
+    sig = minhash_signatures(docs, n=3, k=32)
+    uncapped = lsh_candidate_pairs(sig).count()
     assert uncapped >= 40 * 39 // 2  # the dup cluster alone is quadratic
-    capped = lsh_candidate_pairs(sig, "doc_id", max_bucket=10).count()
+    capped = lsh_candidate_pairs(sig, max_bucket=10).count()
     # hot buckets dropped -> the m^2 cluster never reaches the join
     assert capped <= 8 * 10 * 10  # bands x max_bucket^2 coarse bound
     assert capped < uncapped / 4
@@ -152,7 +148,7 @@ def test_simhash_bucket_cap_bounds_candidates(spark):
     )
 
     docs = _dup_heavy_docs(spark)
-    fp = simhash_fingerprints(docs, "doc_id", "text")
+    fp = simhash_fingerprints(docs)
     uncapped = simhash_hamming_pairs(fp, "doc_id").count()
     assert uncapped >= 40 * 39 // 2
     capped = simhash_hamming_pairs(fp, "doc_id", max_bucket=10).count()
@@ -171,8 +167,8 @@ def test_band_bucket_histogram_exposes_hot_bucket(spark):
     )
 
     docs = _dup_heavy_docs(spark)
-    sig = minhash_signatures(docs, "doc_id", "text", n=3, k=32)
-    banded = minhash_banded(sig, "doc_id", bands=8, rows=4)
+    sig = minhash_signatures(docs, n=3, k=32)
+    banded = minhash_banded(sig, bands=8, rows=4)
     hist = band_bucket_histogram(banded, ["band", "band_hash"]).collect()
     top = hist[0]
     # the dup cluster fills one size-40 bucket in each of the 8 bands;
@@ -284,21 +280,21 @@ def test_wedge_pairs_salted_matches_plain(spark):
         .alias("p"),
         (F.col("id") % 120).alias("c"),
     ).distinct()
-    plain = wedge_pairs(op, "c", "p")
-    salted = wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=4)
+    plain = wedge_pairs(op)
+    salted = wedge_pairs(op, hot_part_threshold=10, n_salts=4)
     assert plain.exceptAll(salted).count() == 0
     assert salted.exceptAll(plain).count() == 0
     # a wider input (extra columns, one named like an output column) gives
     # the same pairs: only (node, part) take part in the self-join
     wide = op.withColumn("w", F.lit(1.0)).withColumn("c2", F.col("c"))
     for kw in ({}, {"hot_part_threshold": 10, "n_salts": 4}):
-        got = wedge_pairs(wide, "c", "p", **kw)
+        got = wedge_pairs(wide, **kw)
         assert plain.exceptAll(got).count() == 0
         assert got.exceptAll(plain).count() == 0
     # no salt bucket would silently drop every hot-part pair: it raises
     for n_salts in (0, -1):
         with pytest.raises(ValueError, match="n_salts"):
-            wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=n_salts)
+            wedge_pairs(op, hot_part_threshold=10, n_salts=n_salts)
     # the hot leg really fired: the hub part's degree exceeds the cut
     deg = op.groupBy("p").count().filter(F.col("count") > 10).count()
     assert deg >= 1

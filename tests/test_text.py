@@ -17,7 +17,7 @@ def test_top_bigram_frac_capped_at_one(spark):
         [(1, "a a a"), (2, "x y x y z")], "doc_id long, text string"
     )
     got = {r.doc_id: r.asDict() for r in
-           repetition_stats(df, "doc_id", "text").collect()}
+           repetition_stats(df).collect()}
     assert got[1]["top_bigram_frac"] == 1.0
     # non-degenerate doc unaffected by the cap: top bigram 'x y' count 2,
     # coverage 2*2/5 = 0.8

@@ -31,13 +31,13 @@ from .conftest import SF_DIR
 load_all_plans()
 
 
-def _ref_em_counts(wc: dict[str, int], logp: dict[str, float], mpl: int = 4):
+def _ref_em_counts(wc: dict[str, int], logp: dict[str, float]):
     """Pure-Python E-step with the identical decimal aggregation: per-word
     expected counts rounded to 12dp, summed exactly."""
     counts: dict[str, Decimal] = {}
     ll = Decimal(0)
     for word, n in wc.items():
-        ec, z = forward_backward(word, logp, mpl)
+        ec, z = forward_backward(word, logp)
         for piece, c in ec.items():
             counts[piece] = counts.get(piece, Decimal(0)) + _round12(
                 c * float(n)
@@ -48,20 +48,18 @@ def _ref_em_counts(wc: dict[str, int], logp: dict[str, float], mpl: int = 4):
 
 def _wc(spark) -> dict[str, int]:
     d = load_table(spark, SF_DIR, "documents")
-    return {r.word: r.n for r in word_counts(d, "text").collect()}
+    return {r.word: r.n for r in word_counts(d).collect()}
 
 
 def test_em_round_matches_pure_python(spark):
     d = load_table(spark, SF_DIR, "documents")
     wc = _wc(spark)
-    seed = seed_pieces(word_counts(d, "text"), 4, 60)
+    seed = seed_pieces(word_counts(d), 4, 60)
     total = sum(c for _, c in seed)
     import math
 
     logp = {p: math.log(c / total) for p, c in seed}
-    got_counts, got_ll = em_expected_counts(
-        word_counts(d, "text"), logp, 4
-    )
+    got_counts, got_ll = em_expected_counts(word_counts(d), logp)
     ref_counts, ref_ll = _ref_em_counts(wc, logp)
     assert got_ll == ref_ll
     assert got_counts == ref_counts  # EXACT — decimal sums, same rounding
@@ -70,13 +68,11 @@ def test_em_round_matches_pure_python(spark):
 def test_full_training_matches_pure_python(spark):
     d = load_table(spark, SF_DIR, "documents")
     wc = _wc(spark)
-    got_logp, got_lls = train_unigram(
-        d, "text", seed_size=60, vocab_size=48, n_iters=3
-    )
+    got_logp, got_lls = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3)
     # reference: replay the IDENTICAL schedule in pure Python
     import math
 
-    seed = seed_pieces(word_counts(d, "text"), 4, 60)
+    seed = seed_pieces(word_counts(d), 4, 60)
     alphabet = {p for p, _ in seed if len(p) == 1}
     total = sum(c for _, c in seed)
     logp = {p: math.log(c / total) for p, c in seed}
@@ -102,7 +98,7 @@ def test_full_training_matches_pure_python(spark):
 
 def test_em_likelihood_monotone(spark):
     d = load_table(spark, SF_DIR, "documents")
-    _, lls = train_unigram(d, "text", seed_size=60, vocab_size=48, n_iters=3)
+    _, lls = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3)
     # the classic EM guarantee over the pre-prune rounds (the last entry
     # is post-prune — a smaller vocabulary may drop likelihood)
     pre = lls[:3]
@@ -111,7 +107,7 @@ def test_em_likelihood_monotone(spark):
 
 def test_viterbi_coverage_and_optimality(spark):
     d = load_table(spark, SF_DIR, "documents")
-    logp, _ = train_unigram(d, "text", seed_size=60, vocab_size=48, n_iters=3)
+    logp, _ = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3)
     wc = _wc(spark)
     import math
 
@@ -134,10 +130,8 @@ def test_viterbi_coverage_and_optimality(spark):
 
 def test_training_partitioning_invariance(spark):
     d = load_table(spark, SF_DIR, "documents")
-    a, _ = train_unigram(d, "text", seed_size=40, vocab_size=40, n_iters=2)
-    b, _ = train_unigram(
-        d.repartition(13), "text", seed_size=40, vocab_size=40, n_iters=2
-    )
+    a, _ = train_unigram(d, seed_size=40, vocab_size=40, n_iters=2)
+    b, _ = train_unigram(d.repartition(13), seed_size=40, vocab_size=40, n_iters=2)
     assert a == b
 
 
@@ -145,10 +139,10 @@ def test_registered_query_rollup(spark):
     """Per-doc rollup consistency: piece counts re-derivable from the
     segmented word table."""
     d = load_table(spark, SF_DIR, "documents")
-    logp, _ = train_unigram(d, "text", seed_size=60, vocab_size=48, n_iters=3)
+    logp, _ = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3)
     seg = {
         r.word: r.n_pieces
-        for r in unigram_segment_words(word_counts(d, "text"), logp).collect()
+        for r in unigram_segment_words(word_counts(d), logp).collect()
     }
     rows = LOCAL_QUERIES["unigram_lm_segment"](spark, SF_DIR).collect()
     docs = {
