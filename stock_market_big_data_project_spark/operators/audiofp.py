@@ -29,8 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..sources.tables import DOC_ID
-from .spread import spread_keys
-
 from .wav import decode_wav, encode_wav
 
 __all__ = [

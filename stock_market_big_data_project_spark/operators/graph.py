@@ -27,9 +27,18 @@ CC_MAX_ITER = 50
 def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component =
     the min node id reachable through the undirected pair graph."""
+    # both directions from ONE read of the pairs plan (a union of the pairs
+    # with their swap would run the pairs plan twice)
     edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
+                    F.struct(F.col("id_b").alias("u"), F.col("id_a").alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .distinct()
         .localCheckpoint()
     )

@@ -19,9 +19,10 @@ a graph algorithm).  Overflow bound: total rank mass stays ~SCALE = 1e12
 Each round is one equi-join (edges ⋈ ranks on src) + one aggregate
 (sum per dst) — the Pregel shape; ``localCheckpoint`` truncates lineage so
 round N's plan does not replay rounds 1..N-1 (same treatment as
-operators/graph.py::connected_components).  Callers must register the
-EDGES plan as the query's EAGER_ITERATIVE audit constituent, since the
-returned frame's own plan is an opaque checkpoint scan.
+operators/graph.py::connected_components).  The returned frame's own
+plan is therefore a checkpoint scan; the plan gate audits the rounds
+through the SQL executions they submit while the query is built
+(plans/audit.py::record_build).
 """
 
 from __future__ import annotations
@@ -51,7 +52,9 @@ def pagerank_fixed_point(
     wrong-PageRank on BOTH engines: the DuckDB oracle unrolls the
     identical join trajectory, so the hash row would still match while
     both sides computed a rank vector that is not PageRank of the input
-    graph. Two cheap anti-join probes raise ValueError up front instead.
+    graph. One 1-row aggregate over the full outer join of the out-degree
+    table with the dst set counts both kinds of offender (and the nodes)
+    and raises ValueError up front instead.
     """
     edges = (
         edges.select(
@@ -67,39 +70,36 @@ def pagerank_fixed_point(
         .withColumnRenamed("src", "node")
         .localCheckpoint()
     )
-    # precondition probe: any dst that never appears as a src is a sink
-    # with outdegree 0 — fail loudly (one bounded boolean job over the
-    # already-checkpointed edges; iteration cost dwarfs it)
-    dangling = (
-        edges.select(F.col("dst").alias("node"))
-        .distinct()
-        .join(deg, "node", "left_anti")
+    # the preconditions and the node count in one query: a dst with no
+    # out-edges is a sink that drops rank mass every round; a src with no
+    # in-edges receives no mail and vanishes from the rank table after
+    # round 1 — wrong-PageRank on both engines, not an oracle mismatch, so
+    # either must fail loudly here. One 1-row collect, same class as the
+    # audited 1-row corpus-count collects.
+    dsts = edges.select(F.col("dst").alias("node")).distinct()
+    check = (
+        deg.join(dsts.withColumn("_in", F.lit(True)), "node", "full")
+        .agg(
+            F.count("deg").alias("n"),
+            F.count_if(F.col("deg").isNull()).alias("no_out"),
+            F.count_if(F.col("_in").isNull()).alias("no_in"),
+        )
+        .collect()[0]
     )
-    if not dangling.isEmpty():
+    if check["no_out"]:
         raise ValueError(
             "pagerank_fixed_point requires outdegree >= 1 for every node "
             "(symmetrize the edge list first); found dst nodes with no "
             "out-edges"
         )
-    # the other direction (same contract, different failure mode): a src
-    # node that never appears as a dst receives no mail and disappears
-    # from the rank table after round 1 — wrong-PageRank on both engines,
-    # not an oracle mismatch, so it must fail loudly here
-    no_mail = deg.join(
-        edges.select(F.col("dst").alias("node")).distinct(),
-        "node",
-        "left_anti",
-    )
-    if not no_mail.isEmpty():
+    if check["no_in"]:
         raise ValueError(
             "pagerank_fixed_point requires indegree >= 1 for every node "
             "(symmetrize the edge list first); found src nodes with no "
             "in-edges — they would vanish from the rank table after "
             "round 1"
         )
-    # one scalar to the driver (bounded: a single long), same class as the
-    # audited 1-row corpus-count collects
-    n_nodes = deg.count()
+    n_nodes = check["n"]
     if n_nodes == 0:
         # empty graph: empty result with the contract schema (guards the
         # base = .../(100*N) division; DuckDB's oracle is vacuously empty

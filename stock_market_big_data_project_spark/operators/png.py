@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 
 from ..sources.tables import DOC_ID
 from .spread import spread_keys
-from pyspark.sql import functions as F
 
 __all__ = [
     "encode_png",

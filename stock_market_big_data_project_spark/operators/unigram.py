@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _NEG_INF = float("-inf")
-# Longest piece, in characters, the seed vocabulary and the EM consider.
+# Longest piece, in characters, the seed vocabulary, the EM and the
+# Viterbi segmentation consider.
 MAX_PIECE_LEN = 4
 
 
@@ -288,9 +289,7 @@ def train_unigram(
     return logp, lls
 
 
-def viterbi_segment(
-    word: str, logp: dict[str, float], max_piece_len: int = 4
-) -> list[str]:
+def viterbi_segment(word: str, logp: dict[str, float]) -> list[str]:
     """Best segmentation under the unigram LM. Deterministic tie-break:
     higher score wins; on an exact float tie, FEWER pieces, then the
     lexicographically smaller piece at the split. Fixed-order DP —
@@ -302,7 +301,7 @@ def viterbi_segment(
     best[0] = (0.0, 0, None)
     for i in range(1, n + 1):
         cand: tuple[float, int, str | None] = (_NEG_INF, 0, None)
-        for l in range(1, min(max_piece_len, i) + 1):
+        for l in range(1, min(MAX_PIECE_LEN, i) + 1):
             piece = word[i - l : i]
             lp = logp.get(piece)
             if lp is None or best[i - l][0] == _NEG_INF:
@@ -328,9 +327,7 @@ def viterbi_segment(
     return list(reversed(out))
 
 
-def unigram_segment_words(
-    words: DataFrame, logp: dict[str, float], max_piece_len: int = 4
-) -> DataFrame:
+def unigram_segment_words(words: DataFrame, logp: dict[str, float]) -> DataFrame:
     """(word, pieces array, n_pieces): Viterbi segmentation of the
     DISTINCT word table — one Arrow pass with the vocab in the closure;
     per-doc assembly joins this vocabulary-bounded table back onto the
@@ -341,9 +338,7 @@ def unigram_segment_words(
         for pdf in batches:
             if pdf.empty:
                 continue
-            segs = [
-                viterbi_segment(w, lp, max_piece_len) for w in pdf["word"]
-            ]
+            segs = [viterbi_segment(w, lp) for w in pdf["word"]]
             yield pd.DataFrame(
                 {
                     "word": pdf["word"],

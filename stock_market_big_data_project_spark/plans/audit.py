@@ -5,14 +5,21 @@ product, an unexpected Python stage, or an exchange blow-up).
 
 The round-2 lesson this encodes: the one query that shipped with a
 quadratic plan (44 s `embedding_near_dup_pairs`) was exactly the one with
-no audited plan. Every name in the registry gets a section and a gate now.
+no audited plan. Every name in the registry gets a section and a gate now,
+and the gate sees every plan a constructor runs: `record_build` returns
+the plans of the SQL executions submitted while the query was built
+(eager checkpoints, trainer rounds, collected scalars) beside the frame it
+returns, so a constructor that executes its heavy work and hands back a
+checkpoint scan is audited on the work itself.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from .registry import QueryFn
 
 # Queries whose *registered callable* executes a streaming job at build
 # time and returns its materialized result (memory-sink rows, or the
@@ -42,17 +49,6 @@ STREAMING_HARNESS = {
     "streaming_cohort_retention_parity",
 }
 
-# Queries whose registered callable EXECUTES an iterative algorithm at
-# build time (connected components — eager localCheckpoints + per-round
-# counts): their returned DataFrame's plan is an opaque checkpoint-RDD
-# scan, so auditing it records 0 joins / 0 exchanges — vacuously clean for
-# exactly the candidate-join family the gate was built to catch. The plan
-# modules register each one's PRE-checkpoint constituent (the pairs plan
-# feeding the clustering) here; the gate and PLANS.md audit THAT instead.
-# The CC iterations themselves are per-round (edges ⋈ labels) equi-joins
-# over the audited pairs — shape-identical every round.
-EAGER_ITERATIVE: dict = {}
-
 # Queries whose plan legitimately contains Arrow/Python stages: every one
 # is an Arrow-batched mapInPandas/applyInPandas where no JVM primitive
 # expresses the semantics (vector matmul prescreens, per-symbol OLS/GBT,
@@ -64,8 +60,8 @@ PYTHON_STAGE_OK = {
                                      # metadata-filtered corpus
     "embedding_near_dup_bruteforce", # matmul candidate prescreen
     "embedding_near_dup_pairs",      # band keys via BLAS matmul
-    "embedding_dedup_clusters",      # same band-key matmul, via its audited
-                                     # pre-checkpoint constituent
+    "embedding_dedup_clusters",      # same band-key matmul, in the
+                                     # build-time pairs execution
     "granger_causality",             # per-symbol OLS over packed series
     "granger_structure",             # projection of the same Granger stage
     "recursive_forecast",            # per-symbol trainer/forecaster
@@ -113,8 +109,8 @@ PYTHON_STAGE_OK = {
                                      # in closure — avoids per-iteration
                                      # codegen recompile)
     "dedup_multi_signal",            # the SemDeDup side's Arrow IVF
-                                     # assignment, via its audited
-                                     # pre-checkpoint pair constituent
+                                     # assignment, in the build-time
+                                     # pairs execution
     "hybrid_rrf_retrieval",          # cosine_topk's matmul candidate
                                      # prescreen inside the semantic leg
     "embedding_pca_project",         # Arrow matmul projection (components
@@ -137,8 +133,7 @@ PYTHON_STAGE_OK = {
     "perceptual_dedup_bundle",       # the image/video/audio perceptual
                                      # legs' audited codec+dHash stages
     "training_prep_bundle",          # sequence_packing_ffd's audited
-                                     # per-shard FFD Arrow pass (via the
-                                     # lazy-leg audit constituent)
+                                     # per-shard FFD Arrow pass
 }
 
 # Queries that deliberately cross-join a ≤1-row (or few-row) broadcast
@@ -222,12 +217,12 @@ WIDE_PLAN_OK = {
     # audited contamination_ngram_overlap width), joined per doc_id
     "corpus_stats_card": 40,
     # the audited text pair chain + the audited SemDeDup pair chain,
-    # unioned (its audited constituent is the pair union; each half is
-    # individually gated via dedup_ngram_jaccard / embedding_semantic_dedup)
+    # unioned (the build-time execution that labels the pair union; each
+    # half is individually gated via dedup_ngram_jaccard /
+    # embedding_semantic_dedup)
     "dedup_multi_signal": 24,
     # the audited exact-Jaccard truth chain + the audited MinHash banding
-    # chain × 2 configs, joined once (audited via its pre-checkpoint
-    # constituent _lsh_recall_plan; each half is individually gated via
+    # chain × 2 configs, joined once (each half is individually gated via
     # dedup_ngram_jaccard / dedup_minhash_lsh)
     "lsh_dedup_recall_eval": 24,
     # six independent expectation checks unioned into ONE report frame:
@@ -250,12 +245,48 @@ WIDE_PLAN_OK = {
 }
 
 
-def plan_facts(df: DataFrame) -> dict:
-    """Counted facts from the FORMATTED explain of a DataFrame."""
-    jvm = df._sc._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    txt = df._jdf.queryExecution().explainString(mode)
+def record_build(
+    spark: SparkSession, fn: QueryFn, sf_dir: str
+) -> tuple[DataFrame, list[str]]:
+    """Call a registered constructor and return its frame together with the
+    physical plan of every SQL execution the call submitted, oldest first
+    (collects, counts, eager checkpoints, writes). The plans come from the
+    session's SQL status store, which is filled with the UI disabled too;
+    RDD jobs such as schema inference are not SQL executions."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        return store.executionsList()
+
+    seen = executions()
+    last = seen.last().executionId() if seen.nonEmpty() else -1
+    df = fn(spark, sf_dir)
+    runs = executions()
+    plans = []
+    for i in reversed(range(runs.size())):
+        run = runs.apply(i)
+        if run.executionId() <= last:
+            break
+        plans.append(run.physicalPlanDescription())
+    return df, plans[::-1]
+
+
+def explain(df: DataFrame) -> str:
+    """The FORMATTED explain of a DataFrame (no execution)."""
+    mode = df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def plan_facts(plan: DataFrame | str) -> dict:
+    """Counted facts from the FORMATTED explain of a DataFrame, or from an
+    execution's plan description as `record_build` returns it. An adaptive
+    execution is audited on its `== Initial Plan ==`: the static plan that
+    an unexecuted DataFrame shows, so every ceiling means the same for both."""
+    txt = explain(plan) if isinstance(plan, DataFrame) else plan
     tree = txt.split("\n\n")[0]
+    tree = tree.split("\n+- == Initial Plan ==\n")[-1]
 
     def n(pat: str) -> int:
         return len(re.findall(rf"\b{pat}\b", tree))

@@ -21,8 +21,9 @@ generated from the SAME per-leg column spec over the leg's registered
 oracle SQL, so the two sides cannot drift independently.
 
 Scale shape: a bundle is a UNION of already-audited plans — no new
-joins, no new shuffles beyond its legs' audited ones.  Bundles with
-eager-iterative legs register audit constituents like their legs do.
+joins, no new shuffles beyond its legs' audited ones.  A leg that runs
+jobs while it is built (the graph and trainer legs) runs them while the
+bundle is built, and the plan gate audits those executions too.
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ from . import (  # noqa: F401
     training,
     warehouse,
 )
-from .audit import EAGER_ITERATIVE
 from .registry import LOCAL_ORACLES, LOCAL_QUERIES, ORACLES, QUERIES, register
 
 _N_DOUBLES = 5
@@ -144,21 +144,15 @@ def _oracle_leg(name: str, leg: str, spec: Spec) -> str:
     )
 
 
-def _union_legs(
-    spark: SparkSession, sf_dir: str, legs: dict[str, Spec]
-) -> DataFrame:
-    out = None
-    for name, spec in legs.items():
-        part = _spark_leg(_leg_fn(name)(spark, sf_dir), name, spec)
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 def _bundle(legs: dict[str, Spec]):
     """(spark_fn, oracle_sql) composing every leg verbatim."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _union_legs(spark, sf_dir, legs)
+        out = None
+        for name, spec in legs.items():
+            part = _spark_leg(_leg_fn(name)(spark, sf_dir), name, spec)
+            out = part if out is None else out.unionByName(part)
+        return out
 
     oracle = "\nUNION ALL\n".join(
         _oracle_leg(name, name, spec) for name, spec in legs.items()
@@ -255,17 +249,6 @@ _register_bundle(
 # --------------------------------------------------------------------------
 # Graph analytics family over the shared co-purchase graph.
 # --------------------------------------------------------------------------
-# the bundle's LAZY leg, defined ONCE: the registration below and the
-# audit constituent both consume this dict (the training_prep_bundle
-# pattern), so the audited union plan can never drift from the shipped
-# one (ADVICE r10)
-_GRAPH_LAZY_LEGS: dict[str, Spec] = {
-    "bipartite_butterfly_stats": [
-        ("n_copurchase_pairs", "i"), ("n_wedges", "i"),
-        ("n_butterflies", "i"), ("max_shared_parts", "i"),
-    ],
-}
-
 _register_bundle(
     "graph_analytics_bundle",
     {
@@ -279,32 +262,16 @@ _register_bundle(
         "label_propagation_communities": [
             ("node_type", "s"), ("key", "i"), ("community", "i"),
         ],
-        **_GRAPH_LAZY_LEGS,
+        "bipartite_butterfly_stats": [
+            ("n_copurchase_pairs", "i"), ("n_wedges", "i"),
+            ("n_butterflies", "i"), ("max_shared_parts", "i"),
+        ],
     },
     """The graph family over the same co-purchase edges as ONE
     hash-checked DAG: integer PageRank (6 damped rounds), BFS hop
     counts, label-propagation communities, and butterfly counts — each
     leg the registered query composed verbatim; the iterative legs'
     unrolled-CTE oracles replay bitwise inside the union.""",
-)
-
-
-def _graph_lazy_constituent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent: the bundle's LAZY leg (butterfly counting)
-    through the SAME _GRAPH_LAZY_LEGS spec and _union_legs machinery the
-    registered bundle ships, so the non-iterative leg and the union
-    projection stay under the exchange/python-stage gate (ADVICE r10 —
-    previously the bundle's audit was redirected entirely to the shared
-    edges plan, leaving this leg's composed form unaudited). The three
-    iterative legs execute eagerly at build time and are audited via
-    their own EAGER_ITERATIVE constituents on their standalone
-    registrations (the shared pre-checkpoint edges plan,
-    plans/linkage.py)."""
-    return _union_legs(spark, sf_dir, _GRAPH_LAZY_LEGS)
-
-
-EAGER_ITERATIVE.update(
-    {"graph_analytics_bundle": _graph_lazy_constituent}
 )
 
 # --------------------------------------------------------------------------
@@ -402,29 +369,22 @@ _register_bundle(
 # Training-prep family: trainer replays (FFD packing, BPE merge trainer,
 # Lloyd k-means) + length-bucketed batching + temperature mixing.
 # --------------------------------------------------------------------------
-# the bundle's LAZY legs, defined ONCE: the registration below and the
-# audit constituent both consume this dict, so the audited plan can
-# never drift from the shipped one (review finding r10)
-_TRAINING_LAZY_LEGS: dict[str, Spec] = {
-    "sequence_packing_ffd": [
-        ("doc_id", "i"), ("len", "i"), ("shard", "i"), ("seq", "i"),
-        ("offset", "i"), ("truncated", "b"),
-    ],
-    "length_bucketed_batches": [
-        ("bucket", "i"), ("shard", "i"), ("batch_id", "i"),
-        ("n_docs", "i"), ("max_len", "i"), ("sum_len", "i"),
-        ("pad_tokens", "i"), ("pad_frac", "d"), ("members_md5", "s"),
-    ],
-    "temperature_sampling_mix": [
-        ("source", "s"), ("n_tokens", "i"), ("weight", "d"),
-        ("alloc_tokens", "i"), ("epochs", "d"),
-    ],
-}
-
 _register_bundle(
     "training_prep_bundle",
     {
-        **_TRAINING_LAZY_LEGS,
+        "sequence_packing_ffd": [
+            ("doc_id", "i"), ("len", "i"), ("shard", "i"), ("seq", "i"),
+            ("offset", "i"), ("truncated", "b"),
+        ],
+        "length_bucketed_batches": [
+            ("bucket", "i"), ("shard", "i"), ("batch_id", "i"),
+            ("n_docs", "i"), ("max_len", "i"), ("sum_len", "i"),
+            ("pad_tokens", "i"), ("pad_frac", "d"), ("members_md5", "s"),
+        ],
+        "temperature_sampling_mix": [
+            ("source", "s"), ("n_tokens", "i"), ("weight", "d"),
+            ("alloc_tokens", "i"), ("epochs", "d"),
+        ],
         "bpe_learn_merges": [
             ("round", "i"), ("pair", "s"), ("merged", "s"), ("total", "i"),
         ],
@@ -439,23 +399,6 @@ _register_bundle(
     the temperature-sampling mix — each leg the registered query
     composed verbatim (the three r9 trainer-replay oracle conversions
     gain their first driver-tier hash coverage here, VERDICT r9 #6).""",
-)
-
-
-def _training_prep_lazy_constituent(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Audit constituent: the bundle's LAZY legs unioned — the SAME
-    _TRAINING_LAZY_LEGS specs and the SAME _union_legs machinery the
-    registered bundle ships, so the audited plan cannot drift from it.
-    The BPE and k-means trainer legs execute eagerly at build time and
-    are audited via their own EAGER_ITERATIVE constituents on their
-    standalone registrations."""
-    return _union_legs(spark, sf_dir, _TRAINING_LAZY_LEGS)
-
-
-EAGER_ITERATIVE.update(
-    {"training_prep_bundle": _training_prep_lazy_constituent}
 )
 
 # --------------------------------------------------------------------------

@@ -30,7 +30,6 @@ from ..operators.symspell import (
     oracle_deletion_keys_depth2_cte,
 )
 from ..sources.tables import load_table
-from .audit import EAGER_ITERATIVE
 from .registry import register, register_local
 
 # One character overwritten with 'X' ('X' never occurs in fixture names,
@@ -114,16 +113,26 @@ _PR_EDGES_CTE = """e0 AS (
 def _symmetrize(e0: DataFrame) -> DataFrame:
     """Directed (src, dst) ∪ (dst, src), deduped — shared by the batch
     edge builder and the streaming edge-maintenance parity so the
-    symmetrization can never drift between the tiers."""
-    return e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    symmetrization can never drift between the tiers. Both directions
+    come from one read of `e0` (a union with its swap would run the
+    e0 plan twice)."""
+    return (
+        e0.select(
+            F.explode(
+                F.array(
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .distinct()
+    )
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audited pre-checkpoint constituent: the symmetrized distinct
-    edge list (one equi-join + one distinct — the per-round Pregel joins
-    are shape-identical equi-joins over this)."""
+    """The symmetrized distinct co-purchase edge list (one equi-join +
+    one distinct) that every graph query iterates over."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (
@@ -164,9 +173,6 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank_scaled",
         "deg",
     )
-
-
-EAGER_ITERATIVE.update({"pagerank_copurchase": _copurchase_edges})
 
 
 # --------------------------------------------------------------------------
@@ -212,9 +218,6 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("node div 2").alias("key"),
         "hops",
     )
-
-
-EAGER_ITERATIVE.update({"bfs_shortest_hops": _copurchase_edges})
 
 
 @register_local(
@@ -305,9 +308,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         F.expr("node div 2").alias("key"),
         F.col("label").alias("community"),
     )
-
-
-EAGER_ITERATIVE.update({"label_propagation_communities": _copurchase_edges})
 
 
 # --------------------------------------------------------------------------

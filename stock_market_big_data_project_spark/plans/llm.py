@@ -63,7 +63,6 @@ from ..operators.text import (
     word_shingles,
 )
 from ..sources.tables import load_table
-from .audit import EAGER_ITERATIVE
 from .registry import register, register_local
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
@@ -292,21 +291,13 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     from ..operators.graph import connected_components
 
-    pairs = _minhash_verified_pairs(spark, sf_dir)
-    return connected_components(pairs).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-
-
-def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of dedup_minhash_verified (candidates →
-    exact rescore) — the plan the red-flag gate audits (audit.py
-    EAGER_ITERATIVE)."""
     docs = _docs(spark, sf_dir)
     sig = minhash_signatures(docs, n=3, k=16)
     cand = lsh_candidate_pairs(sig, bands=4, rows=4)
-    sh = word_shingles(docs, n=3)
-    return jaccard_on_candidates(sh, cand)
+    pairs = jaccard_on_candidates(word_shingles(docs, n=3), cand)
+    return connected_components(pairs).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -1911,16 +1902,10 @@ def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises the same clustering inside the full LSH chain."""
     from ..operators.graph import connected_components
 
-    pairs = _ngram_cluster_pairs(spark, sf_dir)
+    pairs = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
-
-
-def _ngram_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of dedup_clusters_ngram (exact 3-gram
-    Jaccard pairs) — audited in place of the checkpoint scan."""
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
 
 
 _IVF_TOPK_ORACLE = f"""
@@ -2526,18 +2511,11 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     from ..operators.graph import connected_components
 
-    pairs = _embedding_cluster_pairs(spark, sf_dir)
+    pairs = lsh_near_dup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
     cc = connected_components(pairs)
     return cc.select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
-
-
-def _embedding_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of embedding_dedup_clusters (banded
-    hyperplane-LSH candidates → exact decimal rescore) — audited in place
-    of the checkpoint scan."""
-    return lsh_near_dup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
 
 
 # --- SemDeDup: cluster-scoped semantic deduplication (r5) -------------------------
@@ -2617,13 +2595,6 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE fixpoint, so the kept set is hash-checked, not assumed.
     See operators/similarity.py::semantic_dedup."""
     return semantic_dedup(_emb(spark, sf_dir))
-
-
-def _semdedup_pair_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of embedding_semantic_dedup (within-cell
-    prescreened exact-cosine pairs) — audited in place of the checkpoint
-    scan."""
-    return semdedup_pairs(_emb(spark, sf_dir))
 
 
 @register_local("streaming_semdedup_parity", oracle=_SEMDEDUP_ORACLE)
@@ -2733,18 +2704,6 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return replay(spark, _emb(spark, sf_dir), "vec_id", per_batch, finish)
-
-
-# The red-flag gate audits these constituents instead of the eager
-# clustering callables' opaque checkpoint-scan plans (plans/audit.py).
-EAGER_ITERATIVE.update(
-    {
-        "dedup_minhash_verified": _minhash_verified_pairs,
-        "dedup_clusters_ngram": _ngram_cluster_pairs,
-        "embedding_dedup_clusters": _embedding_cluster_pairs,
-        "embedding_semantic_dedup": _semdedup_pair_plan,
-    }
-)
 
 
 # --- fused multi-signal dedup (r6) ---------------------------------------------------
@@ -2862,20 +2821,6 @@ def dedup_multi_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _multi_signal_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of dedup_multi_signal (text ∪ semantic
-    pair union) — audited in place of the checkpoint scan."""
-    text_pairs = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3,
-        max_doc_frac=0.05,
-    ).select("id_a", "id_b")
-    sem_pairs = semdedup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
-    return text_pairs.unionByName(sem_pairs).distinct()
-
-
-EAGER_ITERATIVE.update({"dedup_multi_signal": _multi_signal_pairs})
-
-
 # --- LSH dedup recall evaluation (r7) ---------------------------------------------
 # The dedup twin of ann_recall_eval: the banding parameters (bands × rows)
 # set the LSH S-curve, and a deployment tunes them by measuring candidate
@@ -2983,7 +2928,7 @@ def lsh_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint'd once for their two consumers each (the DSIR staging
     idiom); each staged constituent's relational shape is itself an
     audited query (dedup_ngram_jaccard / dedup_minhash_lsh), and the
-    post-stage join structure is audited via _lsh_recall_plan."""
+    post-stage join structure is this query's returned plan."""
     d = _docs(spark, sf_dir)
     truth = (
         ngram_jaccard_pairs(d, threshold=0.3, max_doc_frac=0.05)
@@ -3015,33 +2960,6 @@ def lsh_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("recall"),
         F.round(F.col("n_hit") / F.col("n_cand"), 9).alias("prec"),
     )
-
-
-def _lsh_recall_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of lsh_dedup_recall_eval: the full relational
-    shape with the two staged tables inlined (no checkpoints) — the
-    registered callable stages truth + signature via localCheckpoint, which
-    would hide the candidate-join structure from the plan gate."""
-    d = _docs(spark, sf_dir)
-    truth = ngram_jaccard_pairs(
-        d, threshold=0.3, max_doc_frac=0.05
-    ).select("id_a", "id_b")
-    sig = minhash_signatures(d, n=3, k=16)
-    cands = None
-    for bands, rows in ((4, 4), (8, 2)):
-        c = lsh_candidate_pairs(sig, bands=bands, rows=rows).select(
-            F.lit(f"{bands}x{rows}").alias("lsh_config"), "id_a", "id_b"
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return cands.join(
-        truth.withColumn("is_true", F.lit(1)), ["id_a", "id_b"], "left"
-    ).groupBy("lsh_config").agg(
-        F.count(F.lit(1)).alias("n_cand"),
-        F.sum(F.coalesce(F.col("is_true"), F.lit(0))).alias("n_hit"),
-    )
-
-
-EAGER_ITERATIVE.update({"lsh_dedup_recall_eval": _lsh_recall_plan})
 
 
 # --- count-min sketch heavy hitters (r7) --------------------------------------------
@@ -3679,19 +3597,6 @@ def _pi_fixed_run(c_q: list[list[int]]):
     return rows, v, s
 
 
-def _power_iteration_cov_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of embedding_power_iteration_fixed: the
-    corpus-sized covariance aggregate it collects (the registered
-    callable returns a driver-literal frame — vacuously clean)."""
-    emb = _emb(spark, sf_dir)
-    return _cov_combine(_cov_moment_cells(emb), _cov_dim_sums(emb))
-
-
-EAGER_ITERATIVE.update(
-    {"embedding_power_iteration_fixed": _power_iteration_cov_plan}
-)
-
-
 # --- fixed-point 2-component PCA projection (r12 — VERDICT r11 #5) ---------------------
 # The deflation extension of the r11 eigensolve: the float
 # embedding_pca_project stays the production path (libm arithmetic,
@@ -3847,19 +3752,6 @@ def embedding_pca_project_fixed(
             "p2_scaled"
         ),
     )
-
-
-def _pca_fixed_cov_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of embedding_pca_project_fixed: the corpus-sized
-    covariance aggregate it collects before the driver eigensolve (the
-    projection half IS the registered callable's returned plan)."""
-    emb = _emb(spark, sf_dir)
-    return _cov_combine(_cov_moment_cells(emb), _cov_dim_sums(emb))
-
-
-EAGER_ITERATIVE.update(
-    {"embedding_pca_project_fixed": _pca_fixed_cov_plan}
-)
 
 
 # --- distribution-drift matrix: two-sample KS across sources (r7) ----------------------

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ..operators.cleaning import (
     dedup_exact,
-    filter_cutoff,
     hour_floor,
     normalize_timestamp,
 )

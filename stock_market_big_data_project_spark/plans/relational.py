@@ -24,7 +24,6 @@ from ..functions.scalar import (
 )
 from ..operators.cleaning import hour_floor
 from ..sources.tables import load_table
-from .audit import EAGER_ITERATIVE
 from .registry import register, register_local
 
 
@@ -1180,58 +1179,10 @@ def zorder_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the per-dimension file-skip asserts above already ran against
         # the on-disk layout; only the aggregate must outlive the temp
         # dir (ADVICE r7: repeated bench runs leaked these dirs). The
-        # REAL pruned-scan plan stays audit-visible via the
-        # EAGER_ITERATIVE constituent below.
+        # plan gate audits the pruned-scan plan this checkpoint executes.
         return out.localCheckpoint()
     finally:
         shutil.rmtree(td, ignore_errors=True)
-
-
-def _zorder_scan_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of zorder_compacted_scan: stage the z-ordered
-    rewrite and return the UN-checkpointed pruned-scan aggregate so the
-    plan gate and PLANS.md see the post-rewrite scan, not the registered
-    query's checkpoint-RDD result (the query cleans its temp dir; this
-    constituent's dir is removed at interpreter exit)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    li = load_table(spark, sf_dir, "lineitem")
-    mx = li.agg(
-        F.max("l_orderkey").alias("mo"), F.max("l_partkey").alias("mp")
-    ).collect()[0]
-    mo, mp = mx["mo"], mx["mp"]
-    grid = 1 << _Z_BITS
-    a = (F.col("l_orderkey") * grid / F.lit(mo + 1)).cast("bigint")
-    b = (F.col("l_partkey") * grid / F.lit(mp + 1)).cast("bigint")
-    td = tempfile.mkdtemp(prefix="zorder_audit_")
-    atexit.register(shutil.rmtree, td, ignore_errors=True)
-    dest = f"{td}/zordered"
-    (
-        li.withColumn("zv", _zvalue(a, b))
-        .repartitionByRange(16, "zv")
-        .sortWithinPartitions("zv")
-        .write.mode("overwrite")
-        .parquet(dest)
-    )
-    zli = spark.read.parquet(dest)
-    return (
-        zli.filter(
-            (F.col("l_orderkey") < mo // 4) & (F.col("l_partkey") < mp // 4)
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            exact_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                "revenue",
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-EAGER_ITERATIVE.update({"zorder_compacted_scan": _zorder_scan_plan})
 
 
 # --------------------------------------------------------------------------
@@ -1323,46 +1274,8 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_quality"),
         )
         # only the rollup must outlive the temp generations (ADVICE r7:
-        # repeated bench runs leaked these dirs); the real mergeSchema
-        # read plan stays audit-visible via the constituent below
+        # repeated bench runs leaked these dirs); the plan gate audits the
+        # mergeSchema read plan this checkpoint executes
         return out.localCheckpoint()
     finally:
         shutil.rmtree(td, ignore_errors=True)
-
-
-def _schema_evolution_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of schema_evolution_read: stage the two write
-    generations and return the UN-checkpointed mergeSchema rollup."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..operators.text import tokens
-
-    d = load_table(spark, sf_dir, "documents")
-    td = tempfile.mkdtemp(prefix="schema_ev_audit_")
-    atexit.register(shutil.rmtree, td, ignore_errors=True)
-    q = F.round(
-        F.least(F.size(tokens(F.col("text"))) / F.lit(50.0), F.lit(1.0))
-        * 0.5,
-        6,
-    )
-    d.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", "text", "source"
-    ).write.mode("overwrite").parquet(f"{td}/gen=0")
-    d.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "text", "source", q.alias("quality")
-    ).write.mode("overwrite").parquet(f"{td}/gen=1")
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        f"{td}/gen=0", f"{td}/gen=1"
-    )
-    return merged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count("quality").alias("n_with_quality"),
-        F.sum(F.col("quality").cast("decimal(18,6)"))
-        .cast("double")
-        .alias("sum_quality"),
-    )
-
-
-EAGER_ITERATIVE.update({"schema_evolution_read": _schema_evolution_plan})

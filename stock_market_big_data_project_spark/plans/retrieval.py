@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from ..operators.similarity import cosine_topk
 from ..operators.text import md5_hash64, oracle_md5_hash64, tokens
 from ..sources.tables import load_table
-from .audit import EAGER_ITERATIVE
 from .llm import _TOKS, _VECS
 from .registry import register, register_local
 
@@ -666,28 +665,6 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_apply_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of bpe_apply_encode: the encode + rollup plan
-    with a fixed 1-merge table (the trainer's own rounds are audited via
-    bpe_learn_merges' constituent)."""
-    from ..operators.bpe import segment_words
-
-    d = _docs(spark, sf_dir)
-    wp = d.select(
-        "doc_id",
-        F.posexplode(tokens(F.col("text"))).alias("pos", "word"),
-    )
-    enc_vocab = segment_words(wp.select("word").distinct(), [("t h", "th")])
-    joined = wp.join(enc_vocab, "word")
-    return joined.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum(F.size("bpe_tokens")).cast("long").alias("n_subword_tokens"),
-    )
-
-
-EAGER_ITERATIVE.update({"bpe_apply_encode": _bpe_apply_plan})
-
-
 # --- hybrid retrieval: reciprocal-rank fusion (r7) -------------------------------------
 # RRF (Cormack et al. 2009): fuse the lexical (BM25) and semantic (exact
 # cosine) rankings per query by score(d) = Σ_lists 1/(C + rank_list(d)),
@@ -922,29 +899,6 @@ def unigram_lm_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("segmentation_md5"),
     )
-
-
-def _unigram_segment_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit constituent of unigram_lm_segment: the segmentation + rollup
-    plan with a FIXED 2-piece LM (the trainer's own EM rounds execute at
-    build time, like the BPE trainer — audited via this constituent)."""
-    from ..operators.unigram import unigram_segment_words, word_counts
-
-    d = _docs(spark, sf_dir)
-    seg = unigram_segment_words(
-        word_counts(d), {"t": -1.0, "h": -2.0}, max_piece_len=2
-    )
-    wp = d.select(
-        "doc_id",
-        F.posexplode(tokens(F.col("text"))).alias("pos", "word"),
-    )
-    return wp.join(seg, "word").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_pieces").cast("long").alias("n_subword_pieces"),
-    )
-
-
-EAGER_ITERATIVE.update({"unigram_lm_segment": _unigram_segment_plan})
 
 
 # --- tokenizer fertility comparison (r7) -----------------------------------------------

@@ -33,7 +33,6 @@ from ..operators.text import (
     tokens,
 )
 from ..sources.tables import load_table
-from .audit import EAGER_ITERATIVE
 from ..operators.text import LANG_MARKERS
 from .llm import _STOP_SQL, _TOKS, _lang_score_sql
 from .retrieval import _bpe_oracle
@@ -313,7 +312,9 @@ def cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     d = _docs(spark, sf_dir)
-    cc = connected_components(_keep_best_pairs(spark, sf_dir))
+    cc = connected_components(
+        ngram_jaccard_pairs(d, threshold=0.3).select("id_a", "id_b")
+    )
     scored = d.select(
         "doc_id", quality_score(F.col("text")).alias("quality_score")
     )
@@ -334,14 +335,6 @@ def cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality_score",
         (F.row_number().over(w) == 1).alias("kept"),
     )
-
-
-def _keep_best_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-clustering constituent of cluster_keep_best (exact 3-gram
-    Jaccard pairs) — audited in place of the checkpoint scan."""
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3
-    ).select("id_a", "id_b")
 
 
 # --- TF-IDF corpus search ----------------------------------------------------------
@@ -1136,33 +1129,6 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summary
 
 
-def _kmeans_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-iteration constituent of embedding_kmeans_train (the exact
-    tier's assign + per-(cell, dim) 9dp-mean aggregate) — audited in
-    place of the eager trainer's output."""
-    from ..operators._planes import hyperplanes
-
-    from ..operators.kmeans import _DEC, _best_exact
-
-    cents = [tuple(c) for c in hyperplanes(8, 64, prefix="ivf:")]
-    return (
-        _emb(spark, sf_dir)
-        .select(
-            _best_exact(cents)["cell"].alias("cell"),
-            F.col("embedding"),
-        )
-        .select("cell", F.posexplode(F.col("embedding")).alias("d", "val"))
-        .groupBy("cell", "d")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("double").cast(_DEC)).cast("double")
-                / F.count(F.lit(1)),
-                9,
-            ).alias("m")
-        )
-    )
-
-
 # --- distributed BPE vocabulary training -------------------------------------------
 # Merge rounds `bpe_learn_merges` learns.
 _LEARN_MERGES = 8
@@ -1204,25 +1170,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import train_bpe
 
     return train_bpe(_docs(spark, sf_dir), n_merges=_LEARN_MERGES)
-
-
-def _bpe_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-round constituent of bpe_learn_merges (word table → pair
-    counts) — audited in place of the eager trainer's output scan."""
-    from ..operators.bpe import pair_counts, word_symbol_table
-
-    return pair_counts(word_symbol_table(_docs(spark, sf_dir)))
-
-
-# The red-flag gate audits these constituents instead of the eager
-# callables' opaque checkpoint/local-collection plans (plans/audit.py).
-EAGER_ITERATIVE.update(
-    {
-        "cluster_keep_best": _keep_best_pairs,
-        "bpe_learn_merges": _bpe_round_plan,
-        "embedding_kmeans_train": _kmeans_round_plan,
-    }
-)
 
 
 # --- DSIR importance weights (r5) ---------------------------------------------------
@@ -1848,36 +1795,6 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(i, float(w[i])) for i in range(len(w))]
     )
     return spark.createDataFrame(rows, "dim int, weight double")
-
-
-def _logreg_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-GD-iteration constituent of quality_classifier_train
-    (featurize → Arrow partial-gradient pass) — audited in place of the
-    eager trainer's LocalTableScan output."""
-    from ..operators.classifier import (
-        N_DIMS,
-        gradient_partials,
-        hashed_dense_features,
-    )
-
-    d = _docs(spark, sf_dir)
-    labeled = d.select(
-        "doc_id",
-        "text",
-        (quality_score(F.col("text")) >= 0.9).cast("int").alias("label"),
-    )
-    feats = hashed_dense_features(labeled).join(
-        labeled.select("doc_id", "label"), "doc_id"
-    )
-    staged = feats.select(
-        F.col("features").alias("x"), F.col("label").cast("double").alias("y")
-    )
-    return gradient_partials(staged, [0.0] * N_DIMS, 0.0)
-
-
-EAGER_ITERATIVE.update(
-    {"quality_classifier_train": _logreg_iteration_plan}
-)
 
 
 # --- overlapping context windows (r6) ------------------------------------------------

@@ -25,7 +25,7 @@ Streaming needs from a source for exactly-once sinks.
 from __future__ import annotations
 
 import hashlib
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 from pyspark.sql.datasource import (
     DataSource,

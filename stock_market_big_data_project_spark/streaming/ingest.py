@@ -171,7 +171,7 @@ def clean_corpus_stream(stream: DataFrame) -> DataFrame:
     which trades duplicates farther apart than the watermark for O(window)
     state — the batch `merge_upsert`/incremental-LSH path then catches
     the long-range stragglers at rest."""
-    from ..operators.text import STOPWORDS, predict_lang, quality_score, tokens
+    from ..operators.text import predict_lang, quality_score, tokens
 
     toks = tokens(F.col("text"))
     scored = stream.select(

@@ -13,9 +13,7 @@ from stock_market_big_data_project_spark.operators.similarity import (
     pca_power_components,
 )
 from stock_market_big_data_project_spark.operators.text import (
-    md5_hash64,
     quality_score,
-    tokens,
 )
 from stock_market_big_data_project_spark.operators.unigram import (
     train_unigram,
@@ -57,7 +55,6 @@ def test_ks_drops_tokenless_docs_and_single_source_pairs(spark):
     # quality_score is NULL for NULL/blank text (try_divide) → filtered;
     # srcA/srcB both keep ≥1 scored doc → exactly one pair row
     from stock_market_big_data_project_spark.plans import (
-        LOCAL_QUERIES,
         get_query,
         load_all_plans,
     )

@@ -16,7 +16,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 
 from stock_market_big_data_project_spark.operators.gbt import (
     Forest,

@@ -18,7 +18,6 @@ from stock_market_big_data_project_spark.operators.dedup import (
     minhash_signatures,
 )
 from stock_market_big_data_project_spark.plans.registry import (
-    LOCAL_QUERIES,
     get_query,
     load_all_plans,
 )

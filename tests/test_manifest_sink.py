@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from stock_market_big_data_project_spark.sources.manifest_sink import (
     read_manifest,
     read_via_manifest,

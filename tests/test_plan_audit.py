@@ -1,8 +1,11 @@
 """Red-flag gate over every registered query's physical plan.
 
 The r02 lesson: the one query that shipped with a quadratic plan was the
-one without an audited plan. This test builds the plan (no execution) for
-every name in both registry tiers and fails on:
+one without an audited plan. This test builds every name in both registry
+tiers (streaming harnesses aside) and audits the plan of the frame each
+constructor returns AND the plan of every SQL execution the constructor
+ran while it was built (eager checkpoints, trainer rounds, collected
+scalars — `plans/audit.py::record_build`). It fails on:
 
 - any CartesianProduct
 - any BroadcastNestedLoopJoin not on the documented tiny-cross allowlist
@@ -10,44 +13,112 @@ every name in both registry tiers and fails on:
 - any Arrow/Python stage outside the documented mapInPandas allowlist
 - exchange count above the audited ceiling
 
-Plan build only — a few seconds per query at the test scale factor; the
-sf0.1 numbers live in PLANS.md via tools/plan_audit.py.
+Most queries only plan; the ones on `_RUN_WHILE_BUILT` execute their
+build-time jobs here for real (135-260 s for all builds at sf0.001 on
+4 vCPU). The sf0.1 numbers live in PLANS.md via tools/plan_audit.py.
 """
 
 from __future__ import annotations
 
+import pytest
+
 from .conftest import SF_DIR
 
+# Non-streaming registered queries whose constructor runs at least one SQL
+# execution while it is built (ROADMAP item 1: constructors build plans,
+# they do not run jobs). Shrink only: a new entry is a new job at build
+# time. Schema-inference RDD jobs are not SQL executions and not counted.
+_RUN_WHILE_BUILT = {
+    "ann_recall_eval", "audio_fingerprint_near_dup", "bfs_shortest_hops",
+    "bipartite_butterfly_stats", "bm25_retrieval_topk", "bpe_apply_encode",
+    "bpe_learn_merges", "bucketed_join_orders_lineitem", "cluster_keep_best",
+    "compacted_scan_pricing", "copurchase_association_rules",
+    "corpus_stats_card", "correlation_matrix", "csv_roundtrip_parity",
+    "dashboard_render_bundle", "dedup_clusters_ngram",
+    "dedup_incremental_minhash", "dedup_minhash_lsh", "dedup_minhash_verified",
+    "dedup_multi_signal", "dsir_importance_weights",
+    "embedding_bruteforce_topk", "embedding_dedup_clusters",
+    "embedding_filtered_topk", "embedding_kmeans_train",
+    "embedding_near_dup_bruteforce", "embedding_pca_project",
+    "embedding_pca_project_fixed", "embedding_power_iteration_fixed",
+    "embedding_semantic_dedup", "graph_analytics_bundle",
+    "grouping_sets_pricing", "hybrid_rrf_retrieval", "image_dhash_near_dup",
+    "io_layout_bundle", "jsonl_roundtrip_parity",
+    "label_propagation_communities", "lsh_dedup_recall_eval",
+    "manifest_export_roundtrip", "orc_roundtrip_parity", "pagerank_copurchase",
+    "perceptual_dedup_bundle", "perplexity_buckets_approx",
+    "perplexity_quality_buckets", "quality_classifier_train",
+    "salted_join_hot_events", "schema_evolution_read",
+    "source_overlap_matrix", "sql_interface_revenue", "time_hierarchy_rollup",
+    "token_shard_packing", "token_weighted_systematic_sample",
+    "tokenizer_fertility_compare", "training_pipeline_e2e",
+    "training_prep_bundle", "two_stage_agg_hot_keys", "unigram_lm_segment",
+    "video_keyframe_near_dup", "zorder_compacted_scan",
+}
 
-def test_no_red_flag_plans(spark):
+
+def _audit(spark, name, fn):
+    """(red flags, SQL executions run) for building `fn` under `name`."""
+    from stock_market_big_data_project_spark.plans.audit import (
+        plan_facts,
+        record_build,
+        red_flags,
+    )
+
+    df, executed = record_build(spark, fn, SF_DIR)
+    flags = red_flags(name, plan_facts(df))
+    for plan in executed:
+        flags += red_flags(name, plan_facts(plan))
+    return flags, len(executed)
+
+
+@pytest.fixture(scope="module")
+def audited(spark):
+    """name -> (red flags, SQL executions run while built) for every
+    non-streaming registered query; built once for the tests below."""
     from stock_market_big_data_project_spark.plans import (
         LOCAL_QUERIES,
         QUERIES,
         load_all_plans,
     )
-    from stock_market_big_data_project_spark.plans.audit import (
-        EAGER_ITERATIVE,
-        STREAMING_HARNESS,
-        plan_facts,
-        red_flags,
-    )
+    from stock_market_big_data_project_spark.plans.audit import STREAMING_HARNESS
 
     load_all_plans()
-    all_queries = {**LOCAL_QUERIES, **QUERIES}
-    flags: list[str] = []
-    audited = 0
-    for name, fn in sorted(all_queries.items()):
-        if name in STREAMING_HARNESS:
-            continue
-        # eager clustering queries: audit the pre-checkpoint constituent —
-        # the registered callable would EXECUTE connected components and
-        # return an opaque checkpoint scan (vacuously clean plan)
-        fn = EAGER_ITERATIVE.get(name, fn)
-        facts = plan_facts(fn(spark, SF_DIR))
-        flags += red_flags(name, facts)
-        audited += 1
-    assert audited >= 50
+    return {
+        name: _audit(spark, name, fn)
+        for name, fn in sorted({**LOCAL_QUERIES, **QUERIES}.items())
+        if name not in STREAMING_HARNESS
+    }
+
+
+def test_no_red_flag_plans(audited):
+    assert len(audited) >= 50
+    flags = [f for found, _ in audited.values() for f in found]
     assert not flags, "\n".join(flags)
+
+
+def test_run_while_built_list_only_shrinks(audited):
+    """ROADMAP item 1 step 2: the queries that submit SQL while they are
+    built are exactly the checked-in list."""
+    found = {name for name, (_, runs) in audited.items() if runs}
+    assert found == _RUN_WHILE_BUILT, (
+        f"new: {sorted(found - _RUN_WHILE_BUILT)}; "
+        f"gone (drop from the list): {sorted(_RUN_WHILE_BUILT - found)}"
+    )
+
+
+def test_gate_audits_what_a_constructor_executes(spark):
+    """A constructor that checkpoints a cross join and returns a clean
+    scan is flagged on the cross join it ran."""
+
+    def planted(spark, sf_dir):
+        a = spark.range(64).withColumnRenamed("id", "a")
+        a.crossJoin(spark.range(64).withColumnRenamed("id", "b")).localCheckpoint()
+        return spark.range(8)
+
+    flags, runs = _audit(spark, "planted_cross_join", planted)
+    assert runs == 1
+    assert flags and all("NestedLoopJoin" in f or "Cartesian" in f for f in flags), flags
 
 
 def test_per_symbol_analysis_is_pack_then_map_in_pandas(spark):
@@ -90,9 +161,7 @@ _OWN_SCRATCH_OR_STREAM = {
     ("market.py", "manifest_export_roundtrip"),
     ("relational.py", "compacted_scan_pricing"),
     ("relational.py", "zorder_compacted_scan"),
-    ("relational.py", "_zorder_scan_plan"),
     ("relational.py", "schema_evolution_read"),
-    ("relational.py", "_schema_evolution_plan"),
 }
 
 
@@ -139,71 +208,6 @@ def test_streaming_harness_list_is_current(spark):
     assert STREAMING_HARNESS <= set(QUERIES) | set(LOCAL_QUERIES)
     for name in STREAMING_HARNESS:
         assert "streaming" in name
-
-
-def test_eager_iterative_list_is_current(spark):
-    """Every name whose audit is redirected to a pre-checkpoint
-    constituent must be a registered iterative query (connected-components
-    clustering or the BPE trainer), and its constituent must build a
-    non-trivial plan (a join/shuffle — i.e. NOT a checkpoint scan)."""
-    from stock_market_big_data_project_spark.plans import (
-        LOCAL_QUERIES,
-        QUERIES,
-        load_all_plans,
-    )
-    from stock_market_big_data_project_spark.plans.audit import (
-        EAGER_ITERATIVE,
-        plan_facts,
-    )
-
-    load_all_plans()
-    registered = {**LOCAL_QUERIES, **QUERIES}
-    assert set(EAGER_ITERATIVE) <= set(registered)
-    iterative_trainers = {
-        "bpe_learn_merges",
-        "bpe_apply_encode",  # trainer-then-apply: the merge list is the
-        # trainer's collected output, shipped into the encode plan
-        "embedding_kmeans_train",
-        "quality_classifier_train",
-        "unigram_lm_segment",  # trainer-then-apply: EM-fitted piece LM,
-        # segmentation audited via the fixed-LM constituent
-        "zorder_compacted_scan",  # write-then-read: the registered query
-        # checkpoints + cleans its temp rewrite (r8 leak fix); the
-        # constituent re-stages it so the pruned scan stays audited
-        "schema_evolution_read",  # same write-then-read shape
-        "embedding_power_iteration_fixed",  # fixed-point eigensolve:
-        # the registered callable collects the dim²-bounded covariance
-        # and iterates driver-side; audited via the covariance-aggregate
-        # constituent it collects
-        "embedding_pca_project_fixed",  # r12 deflation extension: same
-        # collected-covariance shape, plus a lazy projection plan that
-        # IS the registered callable's return (audited directly); the
-        # constituent re-audits the collected covariance aggregate
-        "pagerank_copurchase",  # Pregel power iteration: per-round
-        # equi-joins over the audited symmetrized-edges constituent
-        "bfs_shortest_hops",  # Pregel traversal over the same audited
-        # edges constituent
-        "label_propagation_communities",  # Pregel community detection
-        # over the same audited edges constituent
-        "graph_analytics_bundle",  # r10 family bundle: its three
-        # iterative legs execute at build time (each audited via the
-        # shared symmetrized-edges constituent on its standalone
-        # registration); the bundle's constituent is its LAZY butterfly
-        # leg's composed union (ADVICE r10)
-        "training_prep_bundle",  # r10 family bundle: the BPE/k-means
-        # trainer legs execute at build time (each audited via its own
-        # constituent above); the bundle's constituent is the union of
-        # its three LAZY legs
-    }
-    for name, builder in EAGER_ITERATIVE.items():
-        assert (
-            "cluster" in name
-            or "verified" in name
-            or "dedup" in name  # CC-based dedup (e.g. SemDeDup)
-            or name in iterative_trainers
-        ), name
-        facts = plan_facts(builder(spark, SF_DIR))
-        assert facts["exchanges"] > 0, (name, "constituent plan is trivial")
 
 
 # Engine parameters that every call site sets to one value, kept on

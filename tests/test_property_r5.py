@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F

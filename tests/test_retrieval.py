@@ -350,7 +350,6 @@ def test_fertility_matches_reference_segmenters(spark):
     from stock_market_big_data_project_spark.operators.unigram import (
         train_unigram,
         viterbi_segment,
-        word_counts,
     )
 
     d = _docs_pdf(SF_DIR)

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-import pyspark.sql.functions as F
-
 from stock_market_big_data_project_spark.operators.unigram import (
     _round12,
     em_expected_counts,
@@ -109,7 +107,6 @@ def test_viterbi_coverage_and_optimality(spark):
     d = load_table(spark, SF_DIR, "documents")
     logp, _ = train_unigram(d, seed_size=60, vocab_size=48, n_iters=3)
     wc = _wc(spark)
-    import math
 
     for word in list(wc)[:200]:
         seg = viterbi_segment(word, logp)

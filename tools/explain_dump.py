@@ -10,9 +10,10 @@ optimization round cannot silently overwrite the previous round's
 committed plan artifacts (ADVICE r12). AQE stays ON (the shipped
 configuration): the dump records the initial adaptive plan — join
 strategies, exchanges, pushed filters — exactly what the optimization
-round's before/after claims are about. Queries that execute streams or
-iterative checkpoints at build time dump their audited pre-checkpoint
-constituent when one is registered (same rule as tools/plan_audit.py).
+round's before/after claims are about. A query that runs SQL while it is
+built (eager checkpoints, trainer rounds, collected scalars) also gets the
+plan of each of those executions appended, as tools/plan_audit.py audits
+them.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from stock_market_big_data_project_spark.plans import (
     QUERIES,
     load_all_plans,
 )
-from stock_market_big_data_project_spark.plans.audit import EAGER_ITERATIVE
+from stock_market_big_data_project_spark.plans.audit import explain, record_build
 from stock_market_big_data_project_spark.session import get_spark
 
 OUT_DIR = os.path.join(
@@ -45,13 +46,10 @@ def main() -> int:
     os.makedirs(OUT_DIR, exist_ok=True)
     all_q = {**LOCAL_QUERIES, **QUERIES}
     for name in names:
-        fn = EAGER_ITERATIVE.get(name) or all_q[name]
-        df = fn(spark, sf_dir)
-        jvm = df._sc._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        txt = df._jdf.queryExecution().explainString(mode)
+        df, executed = record_build(spark, all_q[name], sf_dir)
+        txt = explain(df)
+        for i, plan in enumerate(executed, 1):
+            txt += f"\n== SQL execution {i} while built ==\n{plan}"
         path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)

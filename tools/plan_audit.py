@@ -7,7 +7,9 @@ strategies) is visible; production runs AQE on, which can only improve on
 what is shown (coalescing, skew splitting, dynamic broadcast). Red-flag
 enforcement (cartesian / unexpected Python stage / exchange blow-up) lives
 in tests/test_plan_audit.py over the same fact extractor, so a plan that
-regresses fails the suite, not just the doc.
+regresses fails the suite, not just the doc. Each query is built for real
+(`plans/audit.py::record_build`): a constructor that runs SQL while it is
+built runs it here at sf0.1, and those executions are audited too.
 """
 
 from __future__ import annotations
@@ -25,9 +27,9 @@ from stock_market_big_data_project_spark.plans import (
     load_all_plans,
 )
 from stock_market_big_data_project_spark.plans.audit import (
-    EAGER_ITERATIVE,
     STREAMING_HARNESS,
     plan_facts,
+    record_build,
     red_flags,
 )
 
@@ -45,7 +47,10 @@ broadcast vs shuffle joins, and how many whole-stage-codegen spans cover
 the plan. Sections marked *(local tier)* are not driver-exported but are
 oracle-parity-tested; `tests/test_plan_audit.py` fails the suite on any
 red-flag plan (cartesian product, non-allowlisted Python stage or
-nested-loop join, exchange blow-up).
+nested-loop join, exchange blow-up). The facts describe the frame a
+constructor returns; a constructor that runs SQL while it is built (eager
+checkpoints, trainer rounds, collected scalars) also lists those
+executions, and the red flags cover their plans too.
 """
 
 
@@ -58,26 +63,13 @@ def section(spark: SparkSession, name: str, local: bool) -> str:
             "call time and returns the memory-sink table; audited via its "
             "batch twin + tests/test_streaming.py, not a static plan\n"
         )
-    note = ""
-    if name in EAGER_ITERATIVE:
-        # the registered callable executes connected components eagerly and
-        # returns a checkpoint scan; audit the pre-checkpoint pairs plan
-        df = EAGER_ITERATIVE[name](spark, SF)
-        note = (
-            "- eager iterative query: facts below are the per-round "
-            "constituent plan (the registered callable executes the "
-            "iteration — connected-components label propagation or BPE "
-            "merge rounds, each round shape-identical to this plan — and "
-            "returns a checkpoint/local result scan)\n"
-        )
-    else:
-        df = {**LOCAL_QUERIES, **QUERIES}[name](spark, SF)
+    df, executed = record_build(spark, {**LOCAL_QUERIES, **QUERIES}[name], SF)
     f = plan_facts(df)
-    flags = red_flags(name, f)
+    ran = [plan_facts(p) for p in executed]
+    flags = red_flags(name, f) + [x for e in ran for x in red_flags(name, e)]
     lines = [
         f"## {name}{tier}",
         "",
-    ] + ([note.rstrip()] if note else []) + [
         f"- joins: {f['broadcast_hash_joins']} broadcast-hash, "
         f"{f['sort_merge_joins']} sort-merge, "
         f"{f['broadcast_nested_loop_joins']} broadcast-nested-loop, "
@@ -89,6 +81,11 @@ def section(spark: SparkSession, name: str, local: bool) -> str:
         f"{f['pushed_filters'] if f['pushed_filters'] else 'none (full scan by design or filter not pushable)'}",
         f"- scanned columns: {', '.join(f['scanned_columns'])}",
     ]
+    if ran:
+        lines.append(
+            f"- SQL executions while built: {len(ran)}; their exchanges: "
+            f"{[e['exchanges'] for e in ran]}"
+        )
     if flags:
         lines.append(f"- **RED FLAGS**: {flags}")
     lines.append("")
