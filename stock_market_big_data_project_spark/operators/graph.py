@@ -12,21 +12,24 @@ replay rounds 1..N-1.
 
 Not SQL-expressible as one query in Spark — the driver loop IS the
 operator — but DuckDB's recursive CTE computes the identical fixpoint, so
-the result is still oracle-checkable (plans/llm.py::dedup_clusters_ngram).
+the result is still oracle-checkable (`connected_components_oracle_sql`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-# Label-propagation rounds before `connected_components` gives up.
-CC_MAX_ITER = 50
 
 
 def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component =
-    the min node id reachable through the undirected pair graph."""
+    the min node id reachable through the undirected pair graph.
+
+    Runs to the fixpoint, which min-label propagation reaches within
+    diameter + 1 rounds. Each round carries every node's previous label
+    through its aggregate, so the round's own eager checkpoint counts the
+    nodes whose label fell (an `Observation`, no extra job): one SQL
+    execution per round plus one for the edges."""
     # both directions from ONE read of the pairs plan (a union of the pairs
     # with their swap would run the pairs plan twice)
     edges = (
@@ -46,34 +49,51 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
-    for _ in range(CC_MAX_ITER):
-        # each node hears the labels of its neighbors, keeps the min
+    while True:
+        # each node hears the labels of its neighbors, keeps the min; its
+        # own row alone carries the label it had before the round
         msgs = edges.join(
             labels.withColumnRenamed("node", "v"), "v"
         ).select(F.col("u").alias("node"), "label")
-        new_labels = (
-            labels.unionByName(msgs)
+        changed = Observation()
+        labels = (
+            labels.select("node", "label", F.col("label").alias("prev"))
+            .unionByName(msgs, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.max("prev").alias("prev"))
+            .observe(
+                changed,
+                F.count_if(F.col("label") < F.col("prev")).alias("n"),
+            )
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
+        if changed.get["n"] == 0:
+            return labels.select("node", F.col("label").alias("component"))
 
 
-def bfs_hops(edges: DataFrame, seed: int, max_hops: int) -> DataFrame:
-    """(node, hops) — minimum hop count from `seed` through the directed
-    edge list, for every node reachable within `max_hops` rounds.
+def connected_components_oracle_sql(pairs_cte: str) -> str:
+    """DuckDB twin of `connected_components`: CTE definitions to follow
+    `pairs_cte` — an earlier CTE of ``(id_a, id_b)`` rows — inside a
+    ``WITH RECURSIVE``. `reach` walks the undirected pair graph to its
+    fixpoint and ``cc(node, component)`` keeps the min reachable id."""
+    return f"""edges AS (
+      SELECT id_a AS u, id_b AS v FROM {pairs_cte}
+      UNION SELECT id_b, id_a FROM {pairs_cte}
+    ), reach AS (
+      SELECT u AS node, u AS r FROM edges
+      UNION
+      SELECT e.u AS node, reach.r
+      FROM edges e JOIN reach ON reach.node = e.v
+    ), cc AS (
+      SELECT node, min(r) AS component FROM reach GROUP BY node
+    )"""
+
+
+def bfs_hops(edges: DataFrame, max_hops: int) -> DataFrame:
+    """(node, hops) — minimum hop count from the seed min(src) through the
+    directed edge list, for every node reachable within `max_hops` rounds
+    (empty on an empty edge list).
 
     Same Pregel shape as connected_components: each round the frontier's
     neighbors learn `hops + 1`, a min-aggregate folds updates into the
@@ -86,10 +106,11 @@ def bfs_hops(edges: DataFrame, seed: int, max_hops: int) -> DataFrame:
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     ).localCheckpoint()
+    # the seed stays lazy: round 1 reads it from the checkpointed edges
     labels = (
-        edges.sparkSession.createDataFrame(
-            [(int(seed), 0)], "node long, hops int"
-        ).localCheckpoint()
+        edges.agg(F.min("src").alias("node"))
+        .filter(F.col("node").isNotNull())
+        .select("node", F.lit(0).alias("hops"))
     )
     for _ in range(max_hops):
         grown = (
@@ -111,8 +132,8 @@ def bfs_hops(edges: DataFrame, seed: int, max_hops: int) -> DataFrame:
 
 def bfs_oracle_sql(edges_cte: str, max_hops: int) -> str:
     """DuckDB twin of `bfs_hops`: `edges_cte` defines ``sym(src, dst)``;
-    the seed is min(src) over sym (kept in lockstep with callers); the
-    returned SQL unrolls the identical min-hop trajectory."""
+    the seed is min(src) over sym, as in `bfs_hops`; the returned SQL
+    unrolls the identical min-hop trajectory."""
     rounds = []
     prev = "d0"
     for k in range(1, max_hops + 1):
@@ -213,56 +234,16 @@ def label_propagation_oracle_sql(edges_cte: str, rounds: int) -> str:
     """
 
 
-def wedge_pairs(
-    op: DataFrame,
-    hot_part_threshold: int | None = None,
-    n_salts: int = 8,
-) -> DataFrame:
+def wedge_pairs(op: DataFrame) -> DataFrame:
     """(c1, c2, shared): node pairs sharing ≥1 part, with the shared-part
     count — the wedge aggregate of bipartite butterfly counting (one
     part-keyed self-join of the incidence list; wedge space is
-    Σ_p C(deg(p), 2)).
-
-    ``hot_part_threshold`` (r13, guide §2.5 skew — OFF by default) wires
-    the degree-skew cut as a SALTED plan, not a drop: parts with degree
-    above the threshold are self-joined on (part, salt) — the left side
-    salted by hash(c1) % n_salts, the right side exploded n_salts ways —
-    so each hub part's quadratic bucket splits across n_salts partitions
-    while every (c1, c2) pair still meets exactly once (c1's salt picks
-    exactly one replica of c2). Cold parts take the plain self-join; the
-    shared counts merge in the (c1, c2) aggregate. Output is provably
-    row-identical to the unsalted join (tests/test_skew.py); the cost is
-    a degree aggregate + the hot/cold split joins — measured +0.55 s at
-    sf0.1 with an EMPTY hot set, so the threshold should be wired only
-    on corpora whose part-degree tail is real (SCALE.md records the
-    rule; AQE's skew-join split cannot divide a single hub key, which is
-    exactly what the salt does). ``n_salts`` must be ≥ 1 when the
-    threshold is set — with no salt bucket every hot-part pair would be
-    dropped, so that raises ValueError."""
-    if hot_part_threshold is not None and n_salts < 1:
-        raise ValueError(f"wedge_pairs: n_salts must be >= 1, got {n_salts}")
-    p = "p"
-    op = op.select("c", p)
-    a = op.withColumnsRenamed({"c": "c1"})
-    b = op.withColumnsRenamed({"c": "c2"})
-    if hot_part_threshold is None:
-        wpairs = a.join(b, p)
-    else:
-        deg = op.groupBy(p).agg(F.count(F.lit(1)).alias("_d"))
-        hot = deg.filter(F.col("_d") > hot_part_threshold).select(p)
-        a_hot = a.join(F.broadcast(hot), p)
-        b_hot = b.join(F.broadcast(hot), p)
-        a_cold = a.join(F.broadcast(hot), p, "left_anti")
-        b_cold = b.join(F.broadcast(hot), p, "left_anti")
-        sa = a_hot.withColumn("_s", F.pmod(F.xxhash64("c1"), F.lit(n_salts)))
-        sb = b_hot.withColumn(
-            "_s", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        ).withColumn("_s", F.col("_s").cast("bigint"))
-        wpairs = a_cold.join(b_cold, p).unionByName(
-            sa.join(sb, [p, "_s"]).drop("_s")
-        )
+    Σ_p C(deg(p), 2))."""
+    op = op.select("c", "p")
     return (
-        wpairs.filter(F.col("c1") < F.col("c2"))
+        op.withColumnsRenamed({"c": "c1"})
+        .join(op.withColumnsRenamed({"c": "c2"}), "p")
+        .filter(F.col("c1") < F.col("c2"))
         .groupBy("c1", "c2")
         .agg(F.count(F.lit(1)).alias("shared"))
     )

@@ -22,7 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import bfs_oracle_sql, label_propagation_oracle_sql
+from ..operators.graph import (
+    bfs_hops,
+    bfs_oracle_sql,
+    label_propagation,
+    label_propagation_oracle_sql,
+    wedge_pairs,
+)
 from ..operators.pagerank import pagerank_fixed_point, pagerank_oracle_sql
 from ..operators.symspell import (
     fuzzy_join_dist1,
@@ -146,16 +152,30 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _symmetrize(e0)
 
 
-@register_local(
-    "pagerank_copurchase",
-    oracle=f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS node_type,
-           node // 2 AS key,
+def _decode_nodes(df: DataFrame, *cols) -> DataFrame:
+    """(node_type, key, *cols) from the node encoding above."""
+    return df.select(
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("part"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("key"),
+        *cols,
+    )
+
+
+# The oracle twin of `_decode_nodes`.
+_DECODE_NODES_SQL = """CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS node_type,
+           node // 2 AS key"""
+
+_PAGERANK_ORACLE = f"""
+    SELECT {_DECODE_NODES_SQL},
            rank_scaled,
            deg
     FROM ({pagerank_oracle_sql(_PR_EDGES_CTE, _PR_ITERATIONS)})
-    """,
-)
+    """
+
+
+@register_local("pagerank_copurchase", oracle=_PAGERANK_ORACLE)
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six damped integer power rounds over the co-purchase graph; the
     oracle replays the identical trajectory as six unrolled CTE rounds
@@ -165,14 +185,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = pagerank_fixed_point(
         _copurchase_edges(spark, sf_dir), _PR_ITERATIONS
     )
-    return pr.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("part"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("key"),
-        "rank_scaled",
-        "deg",
-    )
+    return _decode_nodes(pr, "rank_scaled", "deg")
 
 
 # --------------------------------------------------------------------------
@@ -186,8 +199,7 @@ _BFS_HOPS = 4
 @register_local(
     "bfs_shortest_hops",
     oracle=f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS node_type,
-           node // 2 AS key,
+    SELECT {_DECODE_NODES_SQL},
            hops
     FROM ({bfs_oracle_sql(_PR_EDGES_CTE, _BFS_HOPS)})
     """,
@@ -196,40 +208,13 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-round Pregel BFS (operators/graph.py::bfs_hops) from the
     lowest customer node; the oracle replays the identical min-hop
     trajectory as unrolled CTE rounds (the PageRank pattern applied to
-    traversal).  The 1-element seed collect is a bounded scalar, the
-    same class as the audited corpus-count collects."""
-    from ..operators.graph import bfs_hops
-
-    # checkpoint BEFORE the seed collect so the lineitem⋈orders edge
-    # build runs ONCE — the seed aggregate and every BFS round then read
-    # the materialized edges (review fix: the lazy frame executed the
-    # join twice, once per consumer)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint()
-    seed = edges.agg(F.min("src").alias("m")).collect()[0]["m"]
-    if seed is None:
-        # empty graph: vacuously empty traversal, same as the oracle's
-        out = spark.createDataFrame([], "node long, hops int")
-    else:
-        out = bfs_hops(edges, seed, _BFS_HOPS)
-    return out.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("part"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("key"),
-        "hops",
+    traversal)."""
+    return _decode_nodes(
+        bfs_hops(_copurchase_edges(spark, sf_dir), _BFS_HOPS), "hops"
     )
 
 
-@register_local(
-    "streaming_pagerank_edges_parity",
-    oracle=f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS node_type,
-           node // 2 AS key,
-           rank_scaled,
-           deg
-    FROM ({pagerank_oracle_sql(_PR_EDGES_CTE, _PR_ITERATIONS)})
-    """,
-)
+@register_local("streaming_pagerank_edges_parity", oracle=_PAGERANK_ORACLE)
 def streaming_pagerank_edges_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase graph maintained on the LIVE lineitem append path —
     the thirteenth streaming parity: each micro-batch joins its delta
@@ -261,14 +246,7 @@ def streaming_pagerank_edges_parity(spark: SparkSession, sf_dir: str) -> DataFra
     def finish(scratch: str) -> DataFrame:
         e0 = spark.read.parquet(f"{scratch}/state_edges").distinct()
         pr = pagerank_fixed_point(_symmetrize(e0), _PR_ITERATIONS)
-        return pr.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("part"))
-            .alias("node_type"),
-            F.expr("node div 2").alias("key"),
-            "rank_scaled",
-            "deg",
-        )
+        return _decode_nodes(pr, "rank_scaled", "deg")
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return replay(spark, li, "l_orderkey", per_batch, finish)
@@ -286,8 +264,7 @@ _LPA_ROUNDS = 4
 @register_local(
     "label_propagation_communities",
     oracle=f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS node_type,
-           node // 2 AS key,
+    SELECT {_DECODE_NODES_SQL},
            label AS community
     FROM ({label_propagation_oracle_sql(_PR_EDGES_CTE, _LPA_ROUNDS)})
     """,
@@ -298,16 +275,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle replays the identical trajectory as unrolled CTE rounds.  At
     100 TB each round is one edge-keyed shuffle + two aggregates; labels
     are node ids so state stays two longs per node."""
-    from ..operators.graph import label_propagation
-
     out = label_propagation(_copurchase_edges(spark, sf_dir), _LPA_ROUNDS)
-    return out.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("part"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("key"),
-        F.col("label").alias("community"),
-    )
+    return _decode_nodes(out, F.col("label").alias("community"))
 
 
 # --------------------------------------------------------------------------
@@ -343,8 +312,6 @@ def bipartite_butterfly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, exactly the stop-shingle rule the Jaccard dedup chain
     uses) bounds the wedge blow-up; the fixture's part degrees are
     single-digit so no cut is applied here."""
-    from ..operators.graph import wedge_pairs
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     op = (
@@ -360,13 +327,6 @@ def bipartite_butterfly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2.37 s → 1.68 s.
         .localCheckpoint(eager=False)
     )
-    # hot_part_threshold/salts are OFF here: the fixture's part degrees
-    # are single-digit, and the r13 A/B measured the hot/cold split
-    # machinery at +0.55 s with an EMPTY hot set (degree agg + two
-    # anti/semi joins + union breadth). The salted path exists for
-    # deployments with hub parts — tests/test_skew.py proves
-    # result-identity on a skewed fixture; SCALE.md records the
-    # decision rule.
     w = wedge_pairs(op)
     return w.agg(
         F.count(F.lit(1)).alias("n_copurchase_pairs"),

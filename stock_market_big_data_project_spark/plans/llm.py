@@ -29,6 +29,7 @@ from ..operators.dedup import (
     simhash_fingerprints,
     simhash_hamming_pairs,
 )
+from ..operators.graph import connected_components, connected_components_oracle_sql
 from ..operators.multimodal import (
     attach_binary_payload,
     attach_bmp_payload,
@@ -266,17 +267,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
       WHERE shared / (sa.n_sh + sb.n_sh - shared) >= 0.3
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    )
-    SELECT node AS doc_id, min(r) AS cluster_id
-    FROM reach GROUP BY node
+    ), {connected_components_oracle_sql('pairs')}
+    SELECT node AS doc_id, component AS cluster_id FROM cc
     """,
 )
 def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,8 +281,6 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical banded candidates and fixpoint with a
     recursive CTE, so the whole chain — candidate recall included — is
     hash-checked."""
-    from ..operators.graph import connected_components
-
     docs = _docs(spark, sf_dir)
     sig = minhash_signatures(docs, n=3, k=16)
     cand = lsh_candidate_pairs(sig, bands=4, rows=4)
@@ -1879,17 +1869,8 @@ def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
       WHERE shared / (sa.n_sh + sb.n_sh - shared) >= 0.3
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    )
-    SELECT node AS doc_id, min(r) AS cluster_id
-    FROM reach GROUP BY node
+    ), {connected_components_oracle_sql('pairs')}
+    SELECT node AS doc_id, component AS cluster_id FROM cc
     """,
 )
 def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1900,8 +1881,6 @@ def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup dedup policy. The oracle computes the same fixpoint with a
     recursive CTE. Local-only: the registered `dedup_minhash_verified`
     exercises the same clustering inside the full LSH chain."""
-    from ..operators.graph import connected_components
-
     pairs = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
@@ -2487,17 +2466,8 @@ def unicode_cleanup_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN norms na ON na.vec_id = id_a
       JOIN norms nb ON nb.vec_id = id_b
       WHERE dot / (sqrt(na.norm2) * sqrt(nb.norm2)) >= 0.4
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    )
-    SELECT node AS vec_id, min(r) AS cluster_id
-    FROM reach GROUP BY node
+    ), {connected_components_oracle_sql('pairs')}
+    SELECT node AS vec_id, component AS cluster_id FROM cc
     """,
 )
 def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2509,8 +2479,6 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the identical pairs and fixpoint with a recursive
     CTE, so candidate recall, rescore, and clustering are all
     hash-checked."""
-    from ..operators.graph import connected_components
-
     pairs = lsh_near_dup_pairs(_emb(spark, sf_dir)).select("id_a", "id_b")
     cc = connected_components(pairs)
     return cc.select(
@@ -2560,20 +2528,10 @@ _SEMDEDUP_ORACLE = f"""
       JOIN norms na ON na.vec_id = id_a
       JOIN norms nb ON nb.vec_id = id_b
       WHERE dot / (sqrt(na.norm2) * sqrt(nb.norm2)) >= 0.35
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    ), comp AS (
-      SELECT node, min(r) AS cluster_id FROM reach GROUP BY node
-    ), lab AS (
+    ), {connected_components_oracle_sql('pairs')}, lab AS (
       SELECT cells.vec_id, cells.cell, round(cells.dot, 9) AS cell_dot,
-             COALESCE(comp.cluster_id, cells.vec_id) AS cluster_id
-      FROM cells LEFT JOIN comp ON comp.node = cells.vec_id
+             COALESCE(cc.component, cells.vec_id) AS cluster_id
+      FROM cells LEFT JOIN cc ON cc.node = cells.vec_id
     )
     SELECT vec_id, cell, cell_dot, cluster_id,
            row_number() OVER (PARTITION BY cluster_id
@@ -2620,7 +2578,6 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-partitioned (the IVF layout), so the probe join is
     partition-pruned to the delta's cells."""
     from ..operators._planes import hyperplanes
-    from ..operators.graph import connected_components
     from ..operators.similarity import (
         _prescreened_exact_cosine,
         ivf_assign,
@@ -2749,26 +2706,16 @@ def streaming_semdedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), upairs AS (
       SELECT id_a, id_b FROM text_pairs
       UNION SELECT id_a, id_b FROM sem_pairs
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM upairs
-      UNION SELECT id_b, id_a FROM upairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    ), comp AS (
-      SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node
-    ), q AS (
+    ), {connected_components_oracle_sql('upairs')}, q AS (
       SELECT doc_id,
              round(LEAST(len({_TOKS}) / 50.0, 1.0) * 0.5
                    + (1.0 - len(list_filter({_TOKS}, x -> x IN ({_STOP_SQL})))
                        / len({_TOKS})) * 0.5, 6) AS quality_score
       FROM documents
     ), lab AS (
-      SELECT q.doc_id, COALESCE(c.cluster_id, q.doc_id) AS cluster_id,
+      SELECT q.doc_id, COALESCE(c.component, q.doc_id) AS cluster_id,
              q.quality_score
-      FROM q LEFT JOIN comp c ON c.doc_id = q.doc_id
+      FROM q LEFT JOIN cc c ON c.node = q.doc_id
     )
     SELECT doc_id, cluster_id, quality_score,
            row_number() OVER (PARTITION BY cluster_id
@@ -2792,7 +2739,6 @@ def dedup_multi_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     union adds one distinct on (id_a, id_b). Full-corpus kept flags,
     oracle-checked including the recursive-CTE fixpoint over the FUSED
     edge set."""
-    from ..operators.graph import connected_components
     from ..operators.text import quality_score
 
     d = _docs(spark, sf_dir)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import MOD, ngram_jaccard_pairs
+from ..operators.graph import connected_components, connected_components_oracle_sql
 from ..operators.text import (
     md5_hash64,
     oracle_md5_hash64,
@@ -272,26 +273,16 @@ def stratified_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
       WHERE shared / (sa.n_sh + sb.n_sh - shared) >= 0.3
-    ), edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM edges
-      UNION
-      SELECT e.u AS node, reach.r
-      FROM edges e JOIN reach ON reach.node = e.v
-    ), comp AS (
-      SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node
-    ), q AS (
+    ), {connected_components_oracle_sql('pairs')}, q AS (
       SELECT doc_id,
              round(LEAST(len({_TOKS}) / 50.0, 1.0) * 0.5
                    + (1.0 - len(list_filter({_TOKS}, x -> x IN ({_STOP_SQL})))
                        / len({_TOKS})) * 0.5, 6) AS quality_score
       FROM documents
     ), a AS (
-      SELECT q.doc_id, COALESCE(c.cluster_id, q.doc_id) AS cluster_id,
+      SELECT q.doc_id, COALESCE(c.component, q.doc_id) AS cluster_id,
              q.quality_score
-      FROM q LEFT JOIN comp c ON c.doc_id = q.doc_id
+      FROM q LEFT JOIN cc c ON c.node = q.doc_id
     )
     SELECT doc_id, cluster_id, quality_score,
            row_number() OVER (PARTITION BY cluster_id
@@ -309,8 +300,6 @@ def cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus with a kept flag. Quality is the same score
     clean_corpus_pipeline thresholds on, a narrow map; the cluster argmax
     is one window over cluster_id."""
-    from ..operators.graph import connected_components
-
     d = _docs(spark, sf_dir)
     cc = connected_components(
         ngram_jaccard_pairs(d, threshold=0.3).select("id_a", "id_b")

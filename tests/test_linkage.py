@@ -296,7 +296,7 @@ class TestBfs:
         )
 
         df = spark.createDataFrame(sym, ["src", "dst"])
-        got = {r.node: r.hops for r in bfs_hops(df, 1, 3).collect()}
+        got = {r.node: r.hops for r in bfs_hops(df, 3).collect()}
         want = _bfs_pure_python(sym, 1, 3)
         assert got == want
         # node 5 is 4 hops out — must NOT appear after 3 rounds
@@ -310,10 +310,10 @@ class TestBfs:
         )
 
         df = spark.createDataFrame(sym, ["src", "dst"])
-        a = {r.node: r.hops for r in bfs_hops(df, 1, 4).collect()}
+        a = {r.node: r.hops for r in bfs_hops(df, 4).collect()}
         b = {
             r.node: r.hops
-            for r in bfs_hops(df.repartition(5, "dst"), 1, 4).collect()
+            for r in bfs_hops(df.repartition(5, "dst"), 4).collect()
         }
         assert a == b
 
@@ -521,5 +521,58 @@ class TestGraphDegenerate:
         )
 
         df = spark.createDataFrame([(7, 7)], ["src", "dst"])
-        got = {r.node: r.hops for r in bfs_hops(df, 7, 3).collect()}
+        got = {r.node: r.hops for r in bfs_hops(df, 3).collect()}
         assert got == {7: 0}
+
+    def test_bfs_empty_graph(self, spark):
+        from stock_market_big_data_project_spark.operators.graph import (
+            bfs_hops,
+        )
+
+        out = bfs_hops(spark.createDataFrame([], "src long, dst long"), 3)
+        assert out.collect() == []
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+            ("node", "bigint"), ("hops", "int"),
+        ]
+
+
+# A path 0 - 1 - ... - 54: min-label propagation needs 54 rounds to carry
+# label 0 to the far end and one more to see nothing change.
+_PATH_NODES = 55
+
+
+@pytest.fixture(scope="module")
+def cc_path(spark):
+    """`connected_components` on the path, built through `record_build`:
+    (frame, plans of the SQL executions run while it was built)."""
+    from stock_market_big_data_project_spark.operators.graph import (
+        connected_components,
+    )
+    from stock_market_big_data_project_spark.plans.audit import record_build
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(_PATH_NODES - 1)], "id_a long, id_b long"
+    )
+    return record_build(spark, lambda s, _: connected_components(pairs), "")
+
+
+class TestConnectedComponents:
+    def test_long_path_is_one_component(self, cc_path):
+        got = {r.node: r.component for r in cc_path[0].collect()}
+        assert got == {i: 0 for i in range(_PATH_NODES)}
+
+    def test_one_execution_per_round(self, cc_path):
+        # the edges checkpoint, then one eager checkpoint per round that
+        # also counts the changed labels: no separate convergence job
+        assert len(cc_path[1]) == 1 + _PATH_NODES
+
+    def test_empty_pairs(self, spark):
+        from stock_market_big_data_project_spark.operators.graph import (
+            connected_components,
+        )
+
+        out = connected_components(
+            spark.createDataFrame([], "id_a long, id_b long")
+        )
+        assert out.collect() == []
+        assert out.columns == ["node", "component"]

@@ -193,6 +193,26 @@ def test_streaming_replays_go_through_one_helper():
     )
 
 
+def test_one_copy_of_the_connected_components_oracle():
+    """No string under plans/ spells out the recursive `reach` CTE: every
+    connected-components oracle takes it from
+    `operators/graph.py::connected_components_oracle_sql`."""
+    import ast
+    from pathlib import Path
+
+    import stock_market_big_data_project_spark as pkg
+
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted((Path(pkg.__file__).parent / "plans").glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "reach AS (" in node.value
+    ]
+    assert not found, found
+
+
 def test_streaming_harness_list_is_current(spark):
     """Every registered query skipped by the audit must actually be a
     streaming-harness query (guards against the skip list rotting into a
